@@ -316,17 +316,13 @@ def q23_cosine_topk(spark, sf):
     return S.cosine_topk(emb, qs, k=3).select("query_id", "neighbor_id", "rank")
 
 
-def q24_minhash_neardup(spark, sf, materialize="auto"):
+def q24_minhash_neardup(spark, sf):
     """Dedup/MinHash-LSH near-duplicate pairs.  Oracle-checked against the
     exact string-level shingle Jaccard (the LSH path is an accelerator with
     ~1 recall at the planted-dup similarity levels, and the 62-bit
-    verification hashes make hashed-set Jaccard equal string-set Jaccard).
-
-    ``materialize="none"`` returns the pure un-checkpointed plan — used by
-    bench.py's plan audit so exchange counts reflect the real shuffle
-    structure instead of the lineage-truncated checkpointed result."""
+    verification hashes make hashed-set Jaccard equal string-set Jaccard)."""
     docs = _t(spark, sf, "documents")
-    return D.minhash_neardup_pairs(docs, jaccard_threshold=0.5, materialize=materialize)
+    return D.minhash_neardup_pairs(docs, jaccard_threshold=0.5)
 
 
 def q25_simhash_neardup(spark, sf):
@@ -624,7 +620,7 @@ def q116_top_supplier(spark, sf):
     ).orderBy("s_suppkey")
 
 
-def q117_incremental_minhash(spark, sf, materialize="auto"):
+def q117_incremental_minhash(spark, sf):
     """Continuous near-dup detection (dedup.minhash_neardup_against_index):
     a stored LSH band index + fingerprint table built from the existing
     corpus (doc_id % 10 != 0) is probed with the new batch (doc_id % 10
@@ -644,7 +640,7 @@ def q117_incremental_minhash(spark, sf, materialize="auto"):
     index = minhash_band_index(old)
     fps = shingle_hash_table(old)
     return minhash_neardup_against_index(
-        new, index, fps, jaccard_threshold=0.5, materialize=materialize
+        new, index, fps, jaccard_threshold=0.5
     )
 
 
@@ -842,7 +838,7 @@ def q130_pmi(spark, sf):
     return C.pmi_cooccurrence(docs, vocab_k=15, min_pairs=5)
 
 
-def q131_prefix_jaccard(spark, sf, materialize="auto"):
+def q131_prefix_jaccard(spark, sf):
     """Scale path for exact set-similarity (dedup.jaccard_prefix_pairs):
     AllPairs/PPJoin prefix filtering under a rarest-first shingle order —
     provably the SAME pairs as the full inverted-index join, with the
@@ -850,12 +846,10 @@ def q131_prefix_jaccard(spark, sf, materialize="auto"):
     oracle recomputes all-pairs Jaccard from scratch (k=4, t=0.6), so the
     hash-match proves the filter loses nothing."""
     docs = _t(spark, sf, "documents")
-    return D.jaccard_prefix_pairs(
-        docs, "doc_id", "text", k=4, threshold=0.6, materialize=materialize
-    )
+    return D.jaccard_prefix_pairs(docs, "doc_id", "text", k=4, threshold=0.6)
 
 
-def q152_positional_prefix(spark, sf, materialize="auto"):
+def q152_positional_prefix(spark, sf):
     """Positional-filter stress (round 8): exact n-gram Jaccard at the
     HARSH threshold 0.4 / k=3, where plain prefix filtering admits the
     densest candidate sets (prefix ≈ 60% of each doc) and the
@@ -864,9 +858,7 @@ def q152_positional_prefix(spark, sf, materialize="auto"):
     the positional refinement loses nothing at a threshold q131 (t=0.6,
     k=4) never reaches."""
     docs = _t(spark, sf, "documents")
-    return D.jaccard_prefix_pairs(
-        docs, "doc_id", "text", k=3, threshold=0.4, materialize=materialize
-    )
+    return D.jaccard_prefix_pairs(docs, "doc_id", "text", k=3, threshold=0.4)
 
 
 def q132_promo_revenue(spark, sf):
@@ -915,7 +907,7 @@ def q133_asof_forward(spark, sf):
     )
 
 
-def q134_mmr_rerank(spark, sf, materialize="auto"):
+def q134_mmr_rerank(spark, sf):
     """Diversified retrieval (similarity.mmr_rerank): greedy
     Maximal-Marginal-Relevance over an 8-candidate shortlist, k=3, λ=0.7.
     The oracle unrolls the same greedy steps in SQL (double-cast cosines,
@@ -923,8 +915,7 @@ def q134_mmr_rerank(spark, sf, materialize="auto"):
     distributed loop equals the textbook sequential algorithm."""
     emb = _t(spark, sf, "embeddings")
     return S.mmr_rerank(
-        emb, emb.where(F.col("vec_id") < 4), k=3, shortlist=8, lam=0.7,
-        materialize=materialize,
+        emb, emb.where(F.col("vec_id") < 4), k=3, shortlist=8, lam=0.7
     )
 
 
@@ -3430,7 +3421,7 @@ def q100_sales_opportunity(spark, sf):
     )
 
 
-def q101_cdc_dup_stats(spark, sf, materialize="auto"):
+def q101_cdc_dup_stats(spark, sf):
     """Content-defined chunking dedup profile (dedup.cdc_dup_stats):
     rolling-hash boundaries → chunk fingerprints → per-doc shared-chunk
     counts.  Shift-robust (an inserted paragraph moves offsets but not the
@@ -3439,7 +3430,7 @@ def q101_cdc_dup_stats(spark, sf, materialize="auto"):
     from eodatadown_spark.operators.dedup import cdc_dup_stats
 
     docs = _t(spark, sf, "documents")
-    return cdc_dup_stats(docs, window=8, divisor=64, materialize=materialize)
+    return cdc_dup_stats(docs, window=8, divisor=64)
 
 
 def q102_table_profile(spark, sf):
@@ -3821,14 +3812,6 @@ def incremental_phases() -> dict[str, tuple[Callable, Callable]]:
 # Displaced entries all have driver-green rows in r01-r08 windows (no
 # driver row has ever regressed); everything still runs in local checks
 # (tools/check_correctness.py covers all entries).
-# ROUND-13 WINDOW (declared below as _R13_WINDOW; queries() serves these
-# 50 first): VERDICT r12 item 3 — rotation by STALENESS.  union(r01-r12)
-# covers the whole registry, so the residual risk is driver-check AGE:
-# the 21 entries last checked in r08 rotate in, then the 29 oldest of the
-# r09 cohort fill 50 (after this window is green, every entry's last
-# driver check is r09+, with only q84/q86/q90/q91/q93/q95 at r09).
-# Displaced entries all have driver-green rows in earlier windows (no
-# driver row has ever regressed) and still run in the local differential.
 _ALL_QUERIES: dict[str, Callable] = {
     "q10_revenue_by_nation": q10_revenue_by_nation,
     "q151_sq8_topk": q151_sq8_topk,
@@ -4016,32 +3999,6 @@ _ALL_QUERIES: dict[str, Callable] = {
     "q26_window_rollup": q26_window_rollup,
 }
 
-_R13_WINDOW = [
-    # VERDICT r12 item 3 — rotate the 21 entries last driver-checked in
-    # r08 (the full stale cohort tools/window_age.py emits) ...
-    "q128_ewma", "q130_pmi", "q131_prefix_jaccard", "q139_phash_neardup",
-    "q147_quantile_sketch_rollup", "q148_theta_setops", "q18_json_filter",
-    "q20_text_profile", "q29_sessionize", "q31_topk_per_group",
-    "q37_cube_rollup", "q40_multimodal_features", "q41_bpe_token_count",
-    "q47_pii_redaction", "q50_neardup_clusters", "q53_contamination",
-    "q59_asof_join", "q61_range_join", "q94_zorder_layout",
-    "q96_sole_late_supplier", "q97_incremental_rollup",
-    # ... then the 29 oldest of the r09 cohort to fill 50 — with these
-    # green the staleness floor moves from r08 to r09 (6 r09 entries
-    # remain: q84, q86, q90, q91, q93, q95 — next round's lead cohort)
-    "q102_table_profile", "q106_split_leakage_gate", "q109_funnel",
-    "q111_sliding_window", "q113_vocab_overlap", "q152_positional_prefix",
-    "q52_frame_sample", "q54_unigram_lm", "q55_stratified_sample",
-    "q56_length_histogram", "q57_topk_tokens", "q60_kl_divergence",
-    "q62_session_window", "q64_perplexity_prune", "q65_bigram_lm",
-    "q67_chunking", "q68_embed_plumbing", "q69_rollup_grouping",
-    "q70_dist_windows", "q73_unpivot", "q74_map_ops", "q75_hll_soundness",
-    "q76_approx_quantile_soundness", "q77_substring_contamination",
-    "q78_prefix_suffix_overlap", "q79_dup_ngram_fraction",
-    "q81_bpe_merge_candidates", "q82_gopher_quality_flags",
-    "q83_sketch_union_soundness",
-]
-
 _R14_WINDOW = [
     # VERDICT r13 item 8 — rotation-by-staleness continues (the standing
     # policy since r11): the 50 stalest entries by last driver-green
@@ -4092,76 +4049,6 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return dict(QUERIES)
-
-
-def plan_only() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Pure-plan variants (no persist/checkpoint/eager job) for the queries
-    whose executable form truncates lineage.  Plan audits (exchange counts,
-    pushed filters) should introspect these; executing them also works but
-    recomputes shared subtrees."""
-    return {
-        "q24_minhash_neardup": lambda spark, sf: q24_minhash_neardup(
-            spark, sf, materialize="none"
-        ),
-        "q101_cdc_dup_stats": lambda spark, sf: q101_cdc_dup_stats(
-            spark, sf, materialize="none"
-        ),
-        # pure-plan q107: fixed cell count (no count job), the Catalyst sql
-        # impl (no plan-build centroid collect), nothing pinned
-        "q117_incremental_minhash": lambda spark, sf: q117_incremental_minhash(
-            spark, sf, materialize="none"
-        ),
-        "q107_semantic_dedup": lambda spark, sf: S.semantic_dedup(
-            _t(spark, sf, "embeddings"), n_clusters=8, threshold=0.42,
-            materialize="none", impl="sql",
-        ),
-        "q131_prefix_jaccard": lambda spark, sf: q131_prefix_jaccard(
-            spark, sf, materialize="none"
-        ),
-        "q152_positional_prefix": lambda spark, sf: q152_positional_prefix(
-            spark, sf, materialize="none"
-        ),
-        "q134_mmr_rerank": lambda spark, sf: q134_mmr_rerank(
-            spark, sf, materialize="none"
-        ),
-        # pure-plan span family: the executable forms pin the window table
-        # (it feeds both the hash agg and the semi-join probe side)
-        "q180_duplicated_spans": lambda spark, sf: D.duplicated_span_stats(
-            _t(spark, sf, "documents"), window=8, materialize="none"
-        ),
-        "q182_span_cut": lambda spark, sf: D.cut_duplicated_spans(
-            _t(spark, sf, "documents"), window=8, materialize="none"
-        ),
-        "q183_char_spans": lambda spark, sf: D.duplicated_span_stats(
-            _t(spark, sf, "documents"), window=50, unit="char",
-            materialize="none",
-        ),
-        "q184_char_span_cut": lambda spark, sf: D.cut_duplicated_spans(
-            _t(spark, sf, "documents"), window=50, unit="char",
-            materialize="none",
-        ),
-        # pure-plan q167/q169: scoring projection / eval aggregate over
-        # unpinned features with placeholder weight literals — the 8
-        # training passes are separate driver-side jobs, invisible to any
-        # single plan; these ARE the real scoring/eval plan shapes
-        "q167_quality_classifier": lambda spark, sf: __import__(
-            "eodatadown_spark.operators.classify", fromlist=["score_documents"]
-        ).score_documents(
-            _t(spark, sf, "documents"), [0.1] * 64 + [0.0], binary=True
-        ),
-        "q169_classifier_eval": lambda spark, sf: (lambda C, T: C.evaluate_gate(
-            C.hashed_features(
-                _t(spark, sf, "documents"), 64,
-                label=T.language_guess(F.col("text")) == "en", binary=True,
-            ),
-            [0.1] * 64 + [0.0],
-        ))(
-            __import__("eodatadown_spark.operators.classify",
-                       fromlist=["evaluate_gate"]),
-            __import__("eodatadown_spark.operators.text",
-                       fromlist=["language_guess"]),
-        ),
-    }
 
 
 def _hyperplane_bucket_sql(vec_expr: str, n_planes: int, dim: int, seed: int = 42) -> str:

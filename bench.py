@@ -17,6 +17,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as E  # noqa: E402
+from eodatadown_spark.plans.audit import recorded  # noqa: E402
 from eodatadown_spark.session import get_spark  # noqa: E402
 
 # Headline set: one per operator family, weighted toward the scale-relevant
@@ -118,72 +119,6 @@ SUSPECT_WARM = {
     "q29_sessionize",
 }
 
-import re as _re  # noqa: E402
-
-_PLAN_OPS = _re.compile(
-    r"\b(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|"
-    r"BroadcastNestedLoopJoin|CartesianProduct|BroadcastExchange|"
-    r"Exchange hashpartitioning|Exchange rangepartitioning|"
-    r"Exchange SinglePartition|AQEShuffleRead)\b"
-)
-
-
-def plan_signature(desc: str) -> str:
-    """Compact operator-count signature of an EXECUTED plan description.
-    Counts join/exchange operators in the final adaptive plan section only
-    (the description repeats the initial plan below '== Initial Plan ==')."""
-    cut = desc.find("== Initial Plan ==")
-    body = desc[:cut] if cut >= 0 else desc
-    counts: dict[str, int] = {}
-    for m in _PLAN_OPS.finditer(body):
-        counts[m.group(1)] = counts.get(m.group(1), 0) + 1
-    return ",".join(f"{k}:{v}" for k, v in sorted(counts.items()))
-
-
-class ExecutionPlanTap:
-    """Post-AQE executed-plan reader via the session's SQL status store
-    (present even with spark.ui.enabled=false).  new_signatures() returns
-    signatures of every SQL execution completed since the last call."""
-
-    def __init__(self, spark):
-        self._store = spark._jsparkSession.sharedState().statusStore()
-        self._seen = self._store.executionsList().size()
-
-    def new_signatures(self) -> list[str]:
-        lst = self._store.executionsList()
-        n = lst.size()
-        sigs = []
-        for i in range(self._seen, n):
-            try:
-                sigs.append(plan_signature(lst.apply(i).physicalPlanDescription()))
-            except Exception:
-                sigs.append("<unreadable>")
-        self._seen = n
-        return sigs
-
-
-class JvmTelemetry:
-    """Driver-JVM GC/heap probes via the management MXBeans (py4j)."""
-
-    def __init__(self, spark):
-        mf = spark._jvm.java.lang.management.ManagementFactory
-        self._gc_beans = mf.getGarbageCollectorMXBeans()
-        self._mem = mf.getMemoryMXBean()
-
-    def gc_totals(self) -> tuple[int, int]:
-        ms = n = 0
-        for i in range(self._gc_beans.size()):
-            b = self._gc_beans.get(i)
-            ms += max(0, b.getCollectionTime())
-            n += max(0, b.getCollectionCount())
-        return ms, n
-
-    def gc_ms(self) -> int:
-        return self.gc_totals()[0]
-
-    def heap_used_mb(self) -> int:
-        return int(self._mem.getHeapMemoryUsage().getUsed()) // 1048576
-
 
 def proc_stat_totals() -> tuple[int, int]:
     """(busy_jiffies, total_jiffies) from the aggregate /proc/stat line —
@@ -205,13 +140,21 @@ class SectionTelemetry:
     sidecar; the final line carries only the overall busy fraction."""
 
     def __init__(self, spark):
-        self._jvm = JvmTelemetry(spark)
+        mf = spark._jvm.java.lang.management.ManagementFactory
+        self._gc_beans = mf.getGarbageCollectorMXBeans()
         self.sections: dict[str, dict] = {}
         self._t0 = self._busy0 = self._tot0 = self._gc0 = 0
 
+    def gc_ms(self) -> int:
+        """Driver-JVM GC time so far (in local[N] the executors share it)."""
+        return sum(
+            max(0, self._gc_beans.get(i).getCollectionTime())
+            for i in range(self._gc_beans.size())
+        )
+
     def start(self) -> None:
         self._busy0, self._tot0 = proc_stat_totals()
-        self._gc0 = self._jvm.gc_ms()
+        self._gc0 = self.gc_ms()
         self._t0 = time.time()
 
     def end(self, name: str) -> None:
@@ -221,7 +164,7 @@ class SectionTelemetry:
             "host_busy_frac": round(
                 (busy1 - self._busy0) / max(1, tot1 - self._tot0), 3
             ),
-            "gc_delta_ms": self._jvm.gc_ms() - self._gc0,
+            "gc_delta_ms": self.gc_ms() - self._gc0,
             "loadavg1": round(os.getloadavg()[0], 2),
         }
 
@@ -310,15 +253,17 @@ def load_prior_extended_warms(here: str, sf=None) -> dict:
     the on-disk copy always predates this run's own measurements — no
     age exclusion needed (and unlike the headline anchors, a same-day
     prior is the BETTER load reference: same tree, same host class).
-    Missing/unparseable → {} and the gate never fires (first run on a
-    fresh tree).  When ``sf`` is given, a sidecar from a DIFFERENT scale
-    factor is rejected too — cross-SF ratios would read as a section-wide
-    inflation (sf0.01 prior vs an sf0.1 run) and requeue the whole
-    section for nothing."""
+    Missing/unparseable/not a JSON object → {} and the gate never fires
+    (first run on a fresh tree).  When ``sf`` is given, a sidecar from a
+    DIFFERENT scale factor is rejected too — cross-SF ratios would read
+    as a section-wide inflation (sf0.01 prior vs an sf0.1 run) and
+    requeue the whole section for nothing."""
     try:
         with open(os.path.join(here, "BENCH_extended_latest.json")) as fh:
             prior = json.load(fh)
-        if sf is not None and prior.get("sf") != sf:
+        if not isinstance(prior, dict) or (
+            sf is not None and prior.get("sf") != sf
+        ):
             return {}
         return prior.get("queries_extended_warm") or {}
     except (OSError, ValueError):
@@ -381,13 +326,18 @@ def free_pinned(spark) -> int:
     return len(jrdds)
 
 
-def e2e_pipeline_sec(spark, sf_dir: str) -> float:
+def e2e_pipeline(spark, sf_dir: str) -> tuple[float, list[dict]]:
     """End-to-end state-machine wall time (VERDICT r5 item 7): the full
     CLI lifecycle — index ingest (chknewscns) → process stage
     (read-modify-write through the versioned catalog) → summary → obs-date
     report — against a landsat-index-shaped view of the orders table, so
     the M1-M6 read-modify-write overhead is tracked round-over-round, not
-    just per-query analytics."""
+    just per-query analytics.
+
+    Each phase runs under :func:`recorded`; returns the summed phase wall
+    seconds (the recorder's own reads are outside them) and the phase
+    records, plan texts dropped."""
+    import contextlib
     import shutil
     import tempfile
 
@@ -426,30 +376,47 @@ def e2e_pipeline_sec(spark, sf_dir: str) -> float:
         F.col("o_totalprice").cast("long").cast("string").alias("total_size"),
         F.concat(F.lit("gs://bench/"), F.col("o_orderkey")).alias("base_url"),
     )
+    phases: list[dict] = []
+
+    @contextlib.contextmanager
+    def phase(label: str):
+        with recorded(spark, label) as rec:
+            yield
+        del rec["plans"]
+        phases.append(rec)
+
     work = tempfile.mkdtemp(prefix="eodd_bench_e2e_")
     try:
-        t0 = time.time()
-        cat = ParquetCatalog(spark, work)
-        sensor = get_sensor_obj("LandsatGOOG", cat)
-        sensor.init_sensor_db()
-        sensor.check_new_scns(landsat_index_scenes(raw))
-        catalog = cat.read_clean("landsat_scenes")
-        pipeline.scenes_need_processing(catalog).count()
-        updates = pipeline.run_scene_tasks(
-            catalog.join(
-                Q.get_scnlist_download(catalog), "pid", "left_semi"
-            ).select("pid"),
-            lambda s: {"pid": s["pid"], "downloaded": True,
-                       "download_path": f"{work}/dl/{s['pid']}"},
-            "pid long, downloaded boolean, download_path string",
-        )
-        cat.write(pipeline.apply_updates(catalog, updates), "landsat_scenes")
-        catalog = cat.read_clean("landsat_scenes")
-        reports.sensor_summary_counts(catalog).first()
-        reports.column_stats(catalog, "total_size", approx=True).first()
-        obs, _bridge = reports.build_obs_date_records(catalog, "LandsatGOOG")
-        reports.get_obs_scns(obs).count()
-        return round(time.time() - t0, 3)
+        with phase("init_sensor_db"):
+            cat = ParquetCatalog(spark, work)
+            sensor = get_sensor_obj("LandsatGOOG", cat)
+            sensor.init_sensor_db()
+        with phase("check_new_scns"):
+            sensor.check_new_scns(landsat_index_scenes(raw))
+        with phase("scenes_need_processing"):
+            catalog = cat.read_clean("landsat_scenes")
+            pipeline.scenes_need_processing(catalog).count()
+        with phase("run_scene_tasks+write"):
+            updates = pipeline.run_scene_tasks(
+                catalog.join(
+                    Q.get_scnlist_download(catalog), "pid", "left_semi"
+                ).select("pid"),
+                lambda s: {"pid": s["pid"], "downloaded": True,
+                           "download_path": f"{work}/dl/{s['pid']}"},
+                "pid long, downloaded boolean, download_path string",
+            )
+            cat.write(pipeline.apply_updates(catalog, updates),
+                      "landsat_scenes")
+        with phase("summary_counts"):
+            catalog = cat.read_clean("landsat_scenes")
+            reports.sensor_summary_counts(catalog).first()
+        with phase("column_stats"):
+            reports.column_stats(catalog, "total_size", approx=True).first()
+        with phase("obs_dates"):
+            obs, _bridge = reports.build_obs_date_records(
+                catalog, "LandsatGOOG")
+            reports.get_obs_scns(obs).count()
+        return round(sum(p["wall_s"] for p in phases), 3), phases
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -464,7 +431,6 @@ def main() -> None:
     queries = E.queries()
     timings: dict[str, float] = {}
     tele = SectionTelemetry(spark)
-    plan_tap = ExecutionPlanTap(spark)
     # JVM/codegen warmup on the smallest table so q01 doesn't absorb startup
     run_once(queries["q27_top1_watermark"](spark, sf_dir))
 
@@ -499,43 +465,42 @@ def main() -> None:
     # for round-over-round comparability.  Three samples per query (five for
     # the SUSPECT_WARM set), reported as median plus [min, max] spread, so a
     # round-over-round delta can be told apart from host noise using the
-    # artifact alone.  For the suspects the EXECUTED (post-AQE) plan
-    # signature of every sample is captured: r12's 1.5-6 s q24 bimodality
+    # artifact alone.  Every sample runs under recorded(): for the suspects
+    # the executed (post-AQE) plan signature — the node counts over all of
+    # the sample's SQL executions — is kept: r12's 1.5-6 s q24 bimodality
     # across same-code runs left "AQE flip or host?" unanswerable from the
     # artifact — now a flip (plan_flipped=true) is recorded evidence, and an
     # unflipped 2x swing indicts the host (see host_load sidecar section).
-    def measure_warm() -> tuple[dict, dict, dict]:
+    # The shuffle exchanges of each query's last sample are the plan facts
+    # (plan_exchanges): the shuffle budget is what extrapolates to cluster
+    # scale, so regressions there matter more than local seconds.
+    def measure_warm() -> tuple[dict, dict, dict, dict]:
         w: dict[str, float] = {}
         w_spread: dict[str, list[float]] = {}
         w_sigs: dict[str, dict] = {}
+        w_exch: dict[str, int] = {}
         for name in HEADLINE:
-            suspect = name in SUSPECT_WARM
-            if suspect:
-                plan_tap.new_signatures()  # drain prior executions
             samples = []
-            sample_sigs = []
-            for _ in range(5 if suspect else 3):
-                t0 = time.time()
-                run_once(queries[name](spark, sf_dir))
-                samples.append(round(time.time() - t0, 3))
-                if suspect:
-                    sample_sigs.append(tuple(plan_tap.new_signatures()))
+            sigs = set()
+            for _ in range(5 if name in SUSPECT_WARM else 3):
+                with recorded(spark, name) as rec:
+                    run_once(queries[name](spark, sf_dir))
+                samples.append(rec["wall_s"])
+                sigs.add(",".join(f"{k}:{v}" for k, v in rec["nodes"].items()))
                 free_pinned(spark)
-                if suspect:
-                    plan_tap.new_signatures()  # drain unpersist-side runs
             samples.sort()
             w[name] = samples[len(samples) // 2]
             w_spread[name] = [samples[0], samples[-1]]
-            if suspect:
-                distinct = sorted({",".join(s) for s in sample_sigs})
+            w_exch[name] = rec["shuffle_exchanges"]
+            if name in SUSPECT_WARM:
                 w_sigs[name] = {
-                    "plan_flipped": len(distinct) > 1,
-                    "distinct_sigs": distinct,
+                    "plan_flipped": len(sigs) > 1,
+                    "distinct_sigs": sorted(sigs),
                 }
-        return w, w_spread, w_sigs
+        return w, w_spread, w_sigs, w_exch
 
     tele.start()
-    warm, warm_spread, warm_plan_sigs = measure_warm()
+    warm, warm_spread, warm_plan_sigs, plan_facts = measure_warm()
     tele.end("headline_warm")
     aqe_flips = sum(1 for v in warm_plan_sigs.values() if v["plan_flipped"])
 
@@ -555,7 +520,7 @@ def main() -> None:
     )
     warm_requeue = None
     if warm_section_contaminated(warm, prior_cal, aqe_flips):
-        draw1 = (warm, warm_spread, warm_plan_sigs)
+        draw1 = (warm, warm_spread, warm_plan_sigs, plan_facts)
         tele.start()
         draw2 = measure_warm()
         tele.end("headline_warm_requeue")
@@ -571,30 +536,13 @@ def main() -> None:
             },
         }
         if sum(draw2[0].values()) < sum(draw1[0].values()):
-            warm, warm_spread, warm_plan_sigs = draw2
+            warm, warm_spread, warm_plan_sigs, plan_facts = draw2
             warm_requeue["reported"] = "draw2"
         else:
             warm_requeue["reported"] = "draw1"
         aqe_flips = sum(
             1 for v in warm_plan_sigs.values() if v["plan_flipped"]
         )
-
-    # plan facts: exchange count per headline query — the shuffle budget is
-    # what extrapolates to cluster scale, so regressions here matter more
-    # than local seconds; recorded per round alongside the timings.
-    # Queries whose executable form checkpoints (lineage truncation would
-    # report 0 exchanges) are audited via their plan_only() pure-plan
-    # variants so counts reflect the real shuffle structure.
-    from eodatadown_spark.plans import audit
-
-    plan_fns = dict(queries)
-    plan_fns.update(getattr(E, "plan_only", dict)())
-    plan_facts = {}
-    for name in HEADLINE:
-        try:
-            plan_facts[name] = audit.exchange_count(plan_fns[name](spark, sf_dir))
-        except Exception:
-            plan_facts[name] = None
 
     # extended (non-headline) section: round-4 operators timed warm-only.
     # Kept OUT of HEADLINE so the headline total stays round-over-round
@@ -801,8 +749,8 @@ def main() -> None:
     # compares round-over-round; the cold one is recorded alongside.
     free_pinned(spark)  # ann section's checkpoints are dead past here
     tele.start()
-    e2e_cold_sec = e2e_pipeline_sec(spark, sf_dir)
-    e2e_sec = e2e_pipeline_sec(spark, sf_dir)
+    e2e_cold_sec, e2e_cold_phases = e2e_pipeline(spark, sf_dir)
+    e2e_sec, e2e_phases = e2e_pipeline(spark, sf_dir)
     tele.end("e2e")
 
     # host-drift calibration (VERDICT r10 item 5): q10's code has been
@@ -935,6 +883,7 @@ def main() -> None:
         "warm_requeue": warm_requeue,
         "ann_recall": ann_recall,
         "sf1_headline": sf1_block,
+        "e2e_phases": {"cold": e2e_cold_phases, "warm": e2e_phases},
         "host_load_sections": tele.sections,
         "sf": sf_val,
     }

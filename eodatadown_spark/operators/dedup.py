@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from eodatadown_spark.plans.audit import PYTHON_EVAL, plan_nodes
+
 MINHASH_PRIME = 2038074743  # 31-bit prime (as in Spark MLlib MinHashLSH)
 # second independent 31-bit prime for the dual rolling hash: shingle identity
 # is tracked as h1*2^31 + h2 (< 2^62, fits a long with no ANSI overflow) so
@@ -87,20 +89,22 @@ def ensure_min_parallelism(df: DataFrame) -> DataFrame:
     the adaptive plan — on a plan with exchanges upstream
     (joins/aggregates) it would EXECUTE those query stages as real jobs
     at plan-build time.  The probe now runs only when the physical plan
-    is exchange-free (a file scan + narrow projections/filters, where
-    finalizing the plan is job-free); an exchange-bearing input is
+    is shuffle-free (a file scan + narrow projections/filters, where
+    finalizing the plan is job-free); a shuffle-bearing input is
     returned untouched — it already has a cluster-wide partitioning from
     its own shuffle, which is exactly the ``floor=False`` posture the
-    contract used to demand by documentation alone.  Callers on hot
-    paths that KNOW their input is derived should still pass
-    ``floor=False`` and skip the (job-free but not cost-free) planning
-    pass."""
+    contract used to demand by documentation alone.  A broadcast join
+    does not repartition its streamed scan, so a scan feeding one still
+    gets the floor; its probe runs the broadcast's one small collect.
+    Callers on hot paths that KNOW their input is derived should still
+    pass ``floor=False`` and skip the (job-free but not cost-free)
+    planning pass."""
     # executedPlan() PREPARES but does not execute (under AQE it is the
     # AdaptiveSparkPlan wrapper whose initial plan still shows every
     # Exchange; query stages only run when the plan is materialized) —
     # no jobs here.  sparkPlan() would miss shuffles entirely: it is the
     # pre-EnsureRequirements plan, before exchanges are inserted.
-    if "Exchange" in df._jdf.queryExecution().executedPlan().toString():
+    if plan_nodes(df._jdf.queryExecution().executedPlan().toString())["Exchange"]:
         return df
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
@@ -1326,14 +1330,20 @@ def update_clusters(
     # the probe operator ALREADY pinned under materialize="auto", so the
     # defensive pin re-materialized a narrow projection of a pinned RDD
     # — one redundant localCheckpoint job per fold.  The pin now runs
-    # only when the pairs plan carries an Exchange (executedPlan()
-    # PREPARES without executing — the ensure_min_parallelism idiom):
-    # a narrow plan over a pinned/scanned leaf re-executes per reference
-    # cheaper than one materialization job, while any join/aggregate-
-    # bearing plan (the case the pin exists for) still pins.  Purely an
+    # only when the pairs plan carries an exchange or a Python UDF
+    # (executedPlan() PREPARES without executing — the
+    # ensure_min_parallelism idiom): a narrow plan over a pinned/scanned
+    # leaf re-executes per reference cheaper than one materialization
+    # job, while any join/aggregate-bearing plan (the case the pin
+    # exists for) or a per-row Python call still pins.  Unlike
+    # ensure_min_parallelism, which asks only about the output's
+    # partitioning (so only a shuffle counts), this asks what a
+    # re-execution costs: a broadcast (or reused) exchange re-runs its
+    # build side, so every kind of exchange counts here.  Purely an
     # execution-strategy choice — rows are identical either way.
     new_pairs = new_pairs.select("id_a", "id_b")
-    if "Exchange" in new_pairs._jdf.queryExecution().executedPlan().toString():
+    nodes = plan_nodes(new_pairs._jdf.queryExecution().executedPlan().toString())
+    if any(k.endswith("Exchange") or k in PYTHON_EVAL for k in nodes):
         new_pairs = _pin(new_pairs)
     touched = new_pairs.select(
         F.explode(F.array("id_a", "id_b")).alias("__tid")

@@ -98,8 +98,8 @@ def test_extended_quarantine_gate():
 
 
 def test_load_prior_extended_warms(tmp_path):
-    """Sidecar loader: reads queries_extended_warm; missing or
-    unparseable files yield {} instead of raising."""
+    """Sidecar loader: reads queries_extended_warm; missing,
+    unparseable or non-object files yield {} instead of raising."""
     import json
 
     from bench import load_prior_extended_warms
@@ -117,3 +117,9 @@ def test_load_prior_extended_warms(tmp_path):
     with open(p, "w", encoding="utf-8") as fh:
         fh.write("not json")
     assert load_prior_extended_warms(d) == {}
+    # valid JSON that is not an object (a list, a scalar) is no prior
+    for not_a_dict in ([{"sf": 0.1}], 3, "text", None):
+        with open(p, "w", encoding="utf-8") as fh:
+            json.dump(not_a_dict, fh)
+        assert load_prior_extended_warms(d) == {}
+        assert load_prior_extended_warms(d, sf=0.1) == {}

@@ -265,6 +265,30 @@ def test_floor_plumbs_through_public_minhash_entry_points(spark):
     assert derived_out == base
 
 
+def test_floor_reaches_a_scan_feeding_a_broadcast_join(spark, tmp_path):
+    """Only a SHUFFLE exempts an input from the floor: a broadcast join
+    keeps its streamed scan's partitioning, so a one-file scan feeding
+    one still rises to defaultParallelism."""
+    from eodatadown_spark.operators.dedup import ensure_min_parallelism
+    from eodatadown_spark.plans.audit import plan_nodes
+
+    path = str(tmp_path / "docs")
+    spark.range(40).selectExpr(
+        "id AS doc_id", "CAST(id AS STRING) AS text"
+    ).coalesce(1).write.parquet(path)
+    tags = spark.createDataFrame(
+        [(i, f"t{i}") for i in range(40)], "doc_id long, tag string"
+    )
+    joined = spark.read.parquet(path).join(F.broadcast(tags), "doc_id")
+    nodes = plan_nodes(joined._jdf.queryExecution().executedPlan().toString())
+    assert nodes["BroadcastExchange"] == 1 and nodes["Exchange"] == 0
+    target = spark.sparkContext.defaultParallelism
+    assert joined.rdd.getNumPartitions() < target
+    floored = ensure_min_parallelism(joined)
+    assert floored.rdd.getNumPartitions() == target
+    assert floored.count() == 40
+
+
 class TestSpanHotKey:
     """VERDICT r13 item 1: a span shared by EVERY document makes its
     window hash the hottest possible key.  The cross-doc distinct-doc

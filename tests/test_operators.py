@@ -2021,6 +2021,34 @@ def test_update_clusters_conditional_pair_pin(spark):
     }
 
 
+def test_update_clusters_pins_python_udf_pairs(spark):
+    """A pair set filtered by a Python UDF carries no exchange, but every
+    reference to an unpinned plan re-runs the UDF: update_clusters pins
+    it, so the UDF runs once per pair row."""
+    from eodatadown_spark.operators.dedup import update_clusters
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def keep(id_a):
+        calls.add(1)
+        return True
+
+    assignments = spark.createDataFrame(
+        [(1, 1, True), (2, 1, False), (9, 9, True)],
+        "doc_id long, cluster_id long, is_canonical boolean",
+    )
+    raw = spark.createDataFrame(
+        [(2, 100), (9, 101), (1, 102)], "id_a long, id_b long"
+    )
+    pairs = raw.where(F.udf(keep, "boolean")("id_a"))
+    got = {
+        (r["doc_id"], r["cluster_id"])
+        for r in update_clusters(assignments, pairs).collect()
+    }
+    assert calls.value == 3
+    assert got == {(1, 1), (2, 1), (100, 1), (102, 1), (9, 9), (101, 9)}
+
+
 def test_neardup_clusters_driver_vs_distributed_identical(spark):
     """Round-8: neardup_clusters' size-gated union-find must match the
     distributed propagation exactly, including a >1-round chain and

@@ -61,12 +61,6 @@ def test_no_duplicate_registry_names():
     assert len(set(window)) == len(window)
 
 
-def test_plan_only_names_resolve():
-    qs = E.queries()
-    missing = [n for n in E.plan_only() if n not in qs]
-    assert not missing, f"plan_only names not in registry: {missing}"
-
-
 def test_incremental_phase_names_resolve():
     qs = E.queries()
     missing = [n for n in E.incremental_phases() if n not in qs]
