@@ -23,9 +23,12 @@ from eodatadown_spark.session import get_spark  # noqa: E402
 # Headline set: one per operator family, weighted toward the scale-relevant
 # ops (joins, window dedup, minhash, similarity, text profile, rollups).
 #
-# NO-REGRESSION RULE (spread-based, VERDICT r8 item 7): a warm median delta
-# for a query counts as a regression only if the [min, max] spreads of the
-# two rounds (queries_warm_spread) do NOT overlap.  At sf0.1 the dimension
+# NO-REGRESSION RULE: the plan structure of every HEADLINE and EXTENDED
+# entry (jobs, SQL actions, shuffle exchanges, shuffle bytes) is gated by
+# tests/test_plans.py against the committed BENCH_structure.json.  Wall
+# time is a single-draw median with its [min, max] spread: a warm median
+# delta counts as a regression only if the spreads of the two runs
+# (queries_warm_spread) do NOT overlap.  At sf0.1 the dimension
 # scans of the small-parquet join family (q10 and kin) land on ≤3 input
 # partitions (SCALING.md "3-partition CPU trap"), so their warm medians move
 # ±0.4 s with host scheduling noise while the plan (4 BHJ, 2 exchanges,
@@ -105,8 +108,6 @@ EXTENDED = [
 ]
 
 
-_BENCH_T0 = time.time()  # set precisely at main() entry
-
 # Warm-variance suspects (VERDICT r12 item 1): the shuffle/window-heavy
 # queries whose warm medians read 1.5-6 s across same-code runs while the
 # light queries agreed within 10%.  These get 5 warm samples (vs 3) AND
@@ -167,137 +168,6 @@ class SectionTelemetry:
             "gc_delta_ms": self.gc_ms() - self._gc0,
             "loadavg1": round(os.getloadavg()[0], 2),
         }
-
-
-def calibration_candidates(here: str) -> list[str]:
-    """Prior-artifact candidates for host calibration, oldest round first.
-
-    The glob is broader than the ``_rNN.json`` naming rule (e.g. a
-    ``BENCH_local_r13_final.json`` closing artifact matches the glob but
-    not the regex); names the round-number parse rejects are dropped, or
-    one stray artifact would crash the whole bench at the ``.group()``
-    in the sort key."""
-    import glob
-    import re
-
-    return sorted(
-        (
-            p
-            for p in glob.glob(os.path.join(here, "BENCH*_r*.json"))
-            + glob.glob(os.path.join(here, "artifacts", "BENCH*_r*.json"))
-            if re.search(r"_r(\d+)\.json$", p)
-        ),
-        key=lambda p: (int(re.search(r"_r(\d+)\.json$", p).group(1)), p),
-    )
-
-
-def load_prior_anchor_warms(here: str) -> dict:
-    """Prior-artifact anchor warm seconds for host calibration (and for
-    the r14 warm-section quarantine gate).  Walks
-    :func:`calibration_candidates` newest-first — excluding a <30-min-old
-    highest-round candidate, which can only be this round's own artifact
-    (ADVICE r11/r12) — until one yields the q10 anchor; exclusions are
-    returned so main() records them in the payload instead of skipping
-    silently."""
-    out: dict = {"artifact": None, "excluded": None, "q10": None, "q24": None}
-    candidates = calibration_candidates(here)
-    if candidates and time.time() - os.path.getmtime(candidates[-1]) < 1800:
-        out["excluded"] = os.path.basename(candidates[-1])
-        candidates = candidates[:-1]
-    for cand in reversed(candidates):
-        try:
-            with open(cand) as fh:
-                prior = json.load(fh)
-            # driver artifacts wrap the bench line under "parsed"
-            prior = prior.get("parsed") or prior
-            pw = (prior.get("queries_warm") or {}).get("q10_revenue_by_nation")
-            if not pw:
-                continue
-            out["artifact"] = cand
-            out["age_h"] = round(
-                (time.time() - os.path.getmtime(cand)) / 3600, 1
-            )
-            out["q10"] = pw
-            out["q24"] = (prior.get("queries_warm") or {}).get(
-                "q24_minhash_neardup"
-            )
-            return out
-        except (OSError, ValueError, KeyError):
-            continue
-    return out
-
-
-def warm_section_contaminated(
-    warm: dict, prior_cal: dict, aqe_flips: int
-) -> bool:
-    """The r14 quarantine gate (VERDICT r13 item 2): BOTH calibration
-    anchors >1.5x their prior-artifact warm values IN LOCKSTEP while no
-    AQE flip was observed — host load by elimination (a plan change
-    flips signatures; a code change cannot move two frozen anchors).  A
-    single inflated anchor is NOT lockstep (e.g. shuffle-path-only
-    contention) and does not requeue."""
-    return bool(
-        prior_cal.get("q10")
-        and prior_cal.get("q24")
-        and aqe_flips == 0
-        and warm["q10_revenue_by_nation"] > 1.5 * prior_cal["q10"]
-        and warm["q24_minhash_neardup"] > 1.5 * prior_cal["q24"]
-    )
-
-
-def load_prior_extended_warms(here: str, sf=None) -> dict:
-    """Prior-run extended warm medians for the extended-section
-    quarantine gate: read from the extended SIDECAR
-    (``BENCH_extended_latest.json``) of the previous bench run.  The
-    sidecar is overwritten only at the END of each run, so during a run
-    the on-disk copy always predates this run's own measurements — no
-    age exclusion needed (and unlike the headline anchors, a same-day
-    prior is the BETTER load reference: same tree, same host class).
-    Missing/unparseable/not a JSON object → {} and the gate never fires
-    (first run on a fresh tree).  When ``sf`` is given, a sidecar from a
-    DIFFERENT scale factor is rejected too — cross-SF ratios would read
-    as a section-wide inflation (sf0.01 prior vs an sf0.1 run) and
-    requeue the whole section for nothing."""
-    try:
-        with open(os.path.join(here, "BENCH_extended_latest.json")) as fh:
-            prior = json.load(fh)
-        if not isinstance(prior, dict) or (
-            sf is not None and prior.get("sf") != sf
-        ):
-            return {}
-        return prior.get("queries_extended_warm") or {}
-    except (OSError, ValueError):
-        return {}
-
-
-def extended_entries_contaminated(
-    extended: dict, prior_ext: dict
-) -> list[str]:
-    """The r14 EXTENDED-section quarantine gate (VERDICT r13 residual:
-    the headline quarantine left the extended section uncovered, and
-    this round's host showed exactly the failure mode — multi-minute
-    stall windows inflating a contiguous swath of entries 3-10x with
-    zero plan changes).  Returns the entries to re-measure.
-
-    Fires only on BROAD LOCKSTEP inflation: at least 8 comparable
-    entries AND at least one third of them read >1.5x their prior-run
-    medians.  A handful of slow entries is a code change or per-entry
-    noise and must surface in the artifact, not be retried away; a
-    third of a 40-entry section moving 1.5x in one run is host load by
-    weight of evidence (the entries share no code path).  Entries whose
-    prior is under a 0.05 s noise floor are not comparable (their
-    ratios are scheduler jitter).  Re-measuring never fabricates: the
-    requeue recomputes from the parquet inputs with the identical
-    methodology, and both draws are recorded in the sidecar."""
-    ratios = {
-        k: extended[k] / prior_ext[k]
-        for k in extended
-        if prior_ext.get(k, 0.0) > 0.05
-    }
-    inflated = [k for k, r in ratios.items() if r > 1.5]
-    if len(inflated) >= 8 and 3 * len(inflated) >= len(ratios):
-        return sorted(inflated)
-    return []
 
 
 def run_once(df) -> None:
@@ -422,8 +292,7 @@ def e2e_pipeline(spark, sf_dir: str) -> tuple[float, list[dict]]:
 
 
 def main() -> None:
-    global _BENCH_T0
-    _BENCH_T0 = time.time()
+    t_start = time.time()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     spark = get_spark("bench")
@@ -463,91 +332,47 @@ def main() -> None:
     # this is the data-proportional steady-state number (the one that
     # extrapolates to cluster scale); the cold pass above stays the headline
     # for round-over-round comparability.  Three samples per query (five for
-    # the SUSPECT_WARM set), reported as median plus [min, max] spread, so a
-    # round-over-round delta can be told apart from host noise using the
-    # artifact alone.  Every sample runs under recorded(): for the suspects
-    # the executed (post-AQE) plan signature — the node counts over all of
-    # the sample's SQL executions — is kept: r12's 1.5-6 s q24 bimodality
-    # across same-code runs left "AQE flip or host?" unanswerable from the
-    # artifact — now a flip (plan_flipped=true) is recorded evidence, and an
-    # unflipped 2x swing indicts the host (see host_load sidecar section).
-    # The shuffle exchanges of each query's last sample are the plan facts
-    # (plan_exchanges): the shuffle budget is what extrapolates to cluster
-    # scale, so regressions there matter more than local seconds.
-    def measure_warm() -> tuple[dict, dict, dict, dict]:
-        w: dict[str, float] = {}
-        w_spread: dict[str, list[float]] = {}
-        w_sigs: dict[str, dict] = {}
-        w_exch: dict[str, int] = {}
-        for name in HEADLINE:
-            samples = []
-            sigs = set()
-            for _ in range(5 if name in SUSPECT_WARM else 3):
-                with recorded(spark, name) as rec:
-                    run_once(queries[name](spark, sf_dir))
-                samples.append(rec["wall_s"])
-                sigs.add(",".join(f"{k}:{v}" for k, v in rec["nodes"].items()))
-                free_pinned(spark)
-            samples.sort()
-            w[name] = samples[len(samples) // 2]
-            w_spread[name] = [samples[0], samples[-1]]
-            w_exch[name] = rec["shuffle_exchanges"]
-            if name in SUSPECT_WARM:
-                w_sigs[name] = {
-                    "plan_flipped": len(sigs) > 1,
-                    "distinct_sigs": sorted(sigs),
-                }
-        return w, w_spread, w_sigs, w_exch
-
+    # the SUSPECT_WARM set) from ONE draw, reported as median plus [min, max]
+    # spread.  Every sample runs under recorded(): for the suspects the
+    # executed (post-AQE) plan signature — the node counts over all of the
+    # sample's SQL executions — is kept, so an AQE flip (plan_flipped=true)
+    # is recorded evidence and an unflipped 2x swing indicts the host.  The
+    # shuffle exchanges of each query's last sample are the plan facts
+    # (plan_exchanges).  Structural regressions are gated by
+    # tests/test_plans.py against BENCH_structure.json, not by wall time.
+    warm: dict[str, float] = {}
+    warm_spread: dict[str, list[float]] = {}
+    warm_plan_sigs: dict[str, dict] = {}
+    plan_facts: dict[str, int] = {}
     tele.start()
-    warm, warm_spread, warm_plan_sigs, plan_facts = measure_warm()
+    for name in HEADLINE:
+        samples = []
+        sigs = set()
+        for _ in range(5 if name in SUSPECT_WARM else 3):
+            with recorded(spark, name) as rec:
+                run_once(queries[name](spark, sf_dir))
+            samples.append(rec["wall_s"])
+            sigs.add(",".join(f"{k}:{v}" for k, v in rec["nodes"].items()))
+            free_pinned(spark)
+        samples.sort()
+        warm[name] = samples[len(samples) // 2]
+        warm_spread[name] = [samples[0], samples[-1]]
+        plan_facts[name] = rec["shuffle_exchanges"]
+        if name in SUSPECT_WARM:
+            warm_plan_sigs[name] = {
+                "plan_flipped": len(sigs) > 1,
+                "distinct_sigs": sorted(sigs),
+            }
     tele.end("headline_warm")
     aqe_flips = sum(1 for v in warm_plan_sigs.values() if v["plan_flipped"])
-
-    # Contaminated-section auto-quarantine (VERDICT r13 item 2): when BOTH
-    # calibration anchors (q10 scan/broadcast path, q24 shuffle path)
-    # inflate >1.5x vs the prior artifact IN LOCKSTEP while zero AQE
-    # flips were observed, the draw is host load, not code — r13's
-    # official artifact recorded exactly such a draw (q24 anchor 2.5x,
-    # zero flips) as the round's number.  Re-run the warm section once,
-    # record BOTH draws in the sidecar, and report the faster draw so the
-    # official artifact stops memorializing the bad draw.  Timed actions
-    # and per-query methodology are unchanged — this only repeats the
-    # same section; nothing is cached between draws (pins are freed
-    # inside measure_warm exactly as before).
-    prior_cal = load_prior_anchor_warms(
-        os.path.dirname(os.path.abspath(__file__))
-    )
-    warm_requeue = None
-    if warm_section_contaminated(warm, prior_cal, aqe_flips):
-        draw1 = (warm, warm_spread, warm_plan_sigs, plan_facts)
-        tele.start()
-        draw2 = measure_warm()
-        tele.end("headline_warm_requeue")
-        warm_requeue = {
-            "reason": "both_anchors_inflated_lockstep_no_aqe_flips",
-            "draw1": {
-                "total_warm": round(sum(draw1[0].values()), 3),
-                "queries_warm": draw1[0],
-            },
-            "draw2": {
-                "total_warm": round(sum(draw2[0].values()), 3),
-                "queries_warm": draw2[0],
-            },
-        }
-        if sum(draw2[0].values()) < sum(draw1[0].values()):
-            warm, warm_spread, warm_plan_sigs, plan_facts = draw2
-            warm_requeue["reported"] = "draw2"
-        else:
-            warm_requeue["reported"] = "draw1"
-        aqe_flips = sum(
-            1 for v in warm_plan_sigs.values() if v["plan_flipped"]
-        )
 
     # extended (non-headline) section: round-4 operators timed warm-only.
     # Kept OUT of HEADLINE so the headline total stays round-over-round
     # comparable; these numbers track the new operators' own trajectory.
-    def measure_extended(name: str) -> tuple[float, list[float]]:
+    extended: dict[str, float] = {}
+    extended_spread: dict[str, list[float]] = {}
+    tele.start()
+    for name in EXTENDED:
         run_once(queries[name](spark, sf_dir))  # warm-up pass
         free_pinned(spark)
         samples = []
@@ -560,45 +385,9 @@ def main() -> None:
             # (and later sections) aren't timed under their pressure
             free_pinned(spark)
         samples.sort()
-        return samples[1], [samples[0], samples[-1]]
-
-    extended: dict[str, float] = {}
-    extended_spread: dict[str, list[float]] = {}
-    tele.start()
-    for name in EXTENDED:
-        extended[name], extended_spread[name] = measure_extended(name)
+        extended[name] = samples[1]
+        extended_spread[name] = [samples[0], samples[-1]]
     tele.end("extended")
-
-    # Extended-section quarantine (r14, the headline quarantine's
-    # counterpart — see extended_entries_contaminated): when a broad
-    # lockstep swath of the section reads >1.5x the prior run's sidecar
-    # medians, re-measure exactly those entries once and report the
-    # faster of the two medians per entry (each reported value is still
-    # a median-of-3 from ONE draw, never mixed across draws).  Both
-    # draws land in the sidecar; the final line carries only a count.
-    extended_requeue = None
-    inflated = extended_entries_contaminated(
-        extended,
-        load_prior_extended_warms(
-            os.path.dirname(os.path.abspath(__file__)),
-            sf=float(sf) if sf.replace(".", "").isdigit() else sf,
-        ),
-    )
-    if inflated:
-        tele.start()
-        requeue_draws = {}
-        for name in inflated:
-            med2, spread2 = measure_extended(name)
-            requeue_draws[name] = [extended[name], med2]
-            if med2 < extended[name]:
-                extended[name] = med2
-                extended_spread[name] = spread2
-        tele.end("extended_requeue")
-        extended_requeue = {
-            "reason": "broad_lockstep_inflation_vs_prior_sidecar",
-            "n_inflated": len(inflated),
-            "draws": requeue_draws,
-        }
 
     # Stored-index build vs per-batch probe (VERDICT r8 item 3): the
     # EXTENDED timings above fuse index construction with the probe, so
@@ -611,10 +400,9 @@ def main() -> None:
     # 5: q167's dense-GD build read 19/21.7/77.6 s across three runs —
     # maximally load-sensitive many-small-jobs loops).  build_sec stays
     # the FIRST (cold) build for r12 comparability — it is the one-shot
-    # cost a real user pays; repeats quantify reproducibility: one repeat
-    # always, a second only when the build is cheap (<8 s) so the section
-    # cannot blow the bench's time budget.  The gate asks whether the
-    # median repeat agrees with the fastest sample within 1.5x.
+    # cost a real user pays; repeats, all kept in build_samples, show its
+    # reproducibility: one repeat always, a second only when the build is
+    # cheap (<8 s) so the section cannot blow the bench's time budget.
     incr_split: dict[str, dict] = {}
     tele.start()
     incr_phases = E.incremental_phases()
@@ -622,7 +410,7 @@ def main() -> None:
     # item 7): the very first build of a bench run pays JVM/JIT warmup
     # for the whole build-job family (~2x the settled repeats, measured
     # r13), and that tax landed on whichever entry happened to run
-    # first, widening its build_spread_ratio.  The warmup state is
+    # first, widening its build spread.  The warmup state is
     # discarded and its pins freed — every TIMED number below still
     # recomputes from the parquet inputs; marked in the sidecar as
     # incremental_methodology.
@@ -649,7 +437,7 @@ def main() -> None:
         # union-find collect) — the first post-build pass still pays
         # leftover codegen/JIT for that job family (measured: 8.2 s first
         # vs 5.2-6.6 s settled over 8 runs), which is exactly the 2x
-        # "spread" r11 flagged.  Settled samples sit inside the 1.5x gate.
+        # "spread" r11 flagged.
         run_once(probe(spark, sf_dir, state))
         run_once(probe(spark, sf_dir, state))
         samples = []
@@ -659,28 +447,11 @@ def main() -> None:
             samples.append(round(time.time() - t0, 3))
         samples.sort()
         free_pinned(spark)  # entry done — its state blocks are dead
-        bsorted = sorted(build_samples)
         incr_split[name] = {
             "build_sec": build_sec,
-            # VERDICT r12 item 5: build reproducibility in-artifact.  The
-            # gate mirrors the probe gate's median/min ≤ 1.5 form over
-            # every build sample (cold first build included — a cold build
-            # 1.5x over the settled repeats is itself the signal q167
-            # showed at 19 vs 77 s).
             "build_samples": build_samples,
-            "build_spread_ratio": round(bsorted[-1] / max(bsorted[0], 1e-9), 2),
-            "build_gate_ok": bsorted[len(bsorted) // 2] <= 1.5 * bsorted[0],
             "probe_sec": samples[1],
             "probe_spread": [samples[0], samples[-1]],
-            # spread gate (VERDICT r11 item 2): the REPORTED stat is the
-            # median, so the gate asks whether the median is reproducible
-            # (median/min ≤ 1.5).  max/min stays recorded as the
-            # informational ratio — a single host-noise outlier sample
-            # widens it without making the reported number wrong (gating
-            # on max/min flapped run-to-run on noisy hosts: same tree,
-            # same hour, 9/9 then 6/9)
-            "spread_ratio": round(samples[-1] / max(samples[0], 1e-9), 2),
-            "spread_gate_ok": samples[1] <= 1.5 * samples[0],
         }
     tele.end("incremental_split")
 
@@ -753,19 +524,10 @@ def main() -> None:
     e2e_sec, e2e_phases = e2e_pipeline(spark, sf_dir)
     tele.end("e2e")
 
-    # host-drift calibration (VERDICT r10 item 5): q10's code has been
-    # untouched since round 7, so its warm median moves only with the host
-    # window, not the tree.  Recording the prior round's value and the
-    # ratio INSIDE the artifact lets any round-over-round comparison
-    # self-normalize (divide deltas by host_ratio_vs_prior) instead of
-    # relitigating host speed from outside evidence.
-    # TWO anchors since r13 (VERDICT r12 item 1b): q10 is a 2-exchange
-    # broadcast join — too cheap to feel shuffle-path contention, so it
-    # normalized the light queries but was blind to whatever moved
-    # q24/q23/q26/q29 2-4x in the r12 driver run.  q24 (7 exchanges,
-    # MinHash band shuffle) is the shuffle-heavy anchor: its code has been
-    # untouched since r7, so ITS ratio-vs-prior isolates shuffle-path host
-    # drift the same way q10's isolates the scan/broadcast path.
+    # calibration anchors: two entries whose code is frozen, so their
+    # times move with the host, not the tree.  q10 (2-exchange broadcast
+    # join) tracks the scan/broadcast path, q24 (MinHash band shuffle) the
+    # shuffle path; both come from this run only.
     cal = {
         "anchor": "q10_revenue_by_nation",
         "cold_sec": timings["q10_revenue_by_nation"],
@@ -776,24 +538,6 @@ def main() -> None:
         "cold_sec": timings["q24_minhash_neardup"],
         "warm_sec": warm["q24_minhash_neardup"],
     }
-    # prior walked ONCE, before the warm section, by
-    # load_prior_anchor_warms (it also feeds the r14 quarantine gate);
-    # the exclusion/fallback semantics are unchanged from r13 — see the
-    # helper's docstring
-    if prior_cal.get("excluded"):
-        cal["prior_excluded"] = prior_cal["excluded"]
-    if prior_cal.get("q10"):
-        cal["prior_artifact"] = os.path.basename(prior_cal["artifact"])
-        cal["prior_artifact_age_h"] = prior_cal["age_h"]
-        cal["prior_warm_sec"] = prior_cal["q10"]
-        cal["host_ratio_vs_prior"] = round(
-            cal["warm_sec"] / prior_cal["q10"], 3
-        )
-        if prior_cal.get("q24"):
-            cal2["prior_warm_sec"] = prior_cal["q24"]
-            cal2["host_ratio_vs_prior"] = round(
-                cal2["warm_sec"] / prior_cal["q24"], 3
-            )
 
     # sf1.0 headline (VERDICT r11 item 6): round-over-round SCALE tracking
     # inside the artifact, not just SCALING.md prose.  Five queries with
@@ -810,7 +554,7 @@ def main() -> None:
         # time-budget guard: the sf1 block is a bonus artifact — on a host
         # slow enough that the sf0.1 sections already took >25 min, skip
         # it rather than risk the whole bench overrunning the driver
-        if time.time() - _BENCH_T0 > 1500:
+        if time.time() - t_start > 1500:
             raise RuntimeError("skipped: sf0.1 sections exceeded 25 min")
         sf1_dir = os.environ.get(
             "SPARK_GRAFT_SF1_DIR",
@@ -874,13 +618,8 @@ def main() -> None:
         "plan_exchanges": plan_facts,
         "queries_extended_warm": extended,
         "queries_extended_warm_spread": extended_spread,
-        "extended_methodology": (
-            "requeue_on_broad_lockstep_inflation_since_r14"
-        ),
-        "extended_requeue": extended_requeue,
         "queries_incremental_split": incr_split,
         "incremental_methodology": "first_build_jit_warmup_since_r14",
-        "warm_requeue": warm_requeue,
         "ann_recall": ann_recall,
         "sf1_headline": sf1_block,
         "e2e_phases": {"cold": e2e_cold_phases, "warm": e2e_phases},
@@ -930,21 +669,7 @@ def main() -> None:
         "e2e_methodology": "warm_second_run_since_r11",
         "bench_methodology": (
             "pins_freed_between_measurements_since_r12;"
-            "warm_requeue_on_lockstep_anchor_inflation_since_r14"
-        ),
-        # present (with the chosen draw) only when the quarantine fired —
-        # both draws live in the sidecar's warm_requeue block
-        **(
-            {"warm_requeued": warm_requeue["reported"]}
-            if warm_requeue
-            else {}
-        ),
-        # count only — the per-entry draws live in the sidecar's
-        # extended_requeue block; absent entirely when the gate held
-        **(
-            {"extended_requeued": extended_requeue["n_inflated"]}
-            if extended_requeue
-            else {}
+            "single_draw_structure_gated"
         ),
         "aqe_flips_detected": aqe_flips,
         "host_busy_frac_warm": overall_busy,

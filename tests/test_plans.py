@@ -3,6 +3,7 @@ the properties that keep these operators viable at 100 TB."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -529,3 +530,47 @@ def test_recorded_counts_every_execution(entry_spark):
     with audit.recorded(entry_spark, "nothing") as rec:
         pass
     assert (rec["jobs"], rec["sql_actions"], rec["nodes"]) == (0, 0, {})
+
+
+STRUCTURE = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "BENCH_structure.json",
+)
+STRUCTURE_FIELDS = ("jobs", "sql_actions", "shuffle_exchanges", "shuffle_bytes")
+
+
+def test_bench_structure_matches_committed(entry_spark):
+    """The bench's structure gate: every HEADLINE and EXTENDED entry runs
+    once at sf0.001 on this session (local[4], 4 shuffle partitions) under
+    ``audit.recorded``, and its jobs, SQL actions, shuffle exchanges and
+    shuffle bytes must equal BENCH_structure.json.  Any difference fails,
+    a drop as well as a rise, so the committed file never goes stale.
+    The failure message ends with the whole observed table in the file's
+    own layout; after checking the differences are intended, refresh the
+    file by copying that table into it."""
+    import bench
+
+    with open(STRUCTURE, encoding="utf-8") as fh:
+        committed = json.load(fh)
+    observed = {}
+    for name in bench.HEADLINE + bench.EXTENDED:
+        with audit.recorded(entry_spark, name) as rec:
+            bench.run_once(E.queries()[name](entry_spark, SF))
+        bench.free_pinned(entry_spark)
+        observed[name] = {field: rec[field] for field in STRUCTURE_FIELDS}
+    diffs = []
+    for name, row in observed.items():
+        for field, value in row.items():
+            old = committed.get(name, {}).get(field)
+            if old != value:
+                diffs.append(f"{name} {field}: committed {old}, observed {value}")
+    diffs += [f"{name}: committed but not a bench entry"
+              for name in committed if name not in observed]
+    table = "{\n" + ",\n".join(
+        f" {json.dumps(name)}: {json.dumps(row)}" for name, row in observed.items()
+    ) + "\n}"
+    assert not diffs, (
+        "\n".join(diffs)
+        + f"\n\nobserved table (copy into {os.path.basename(STRUCTURE)}):\n"
+        + table
+    )

@@ -1,6 +1,6 @@
 """Profile bench entries from one run record each.
 
-    python tools/profile.py [--sf-dir DIR] [--warm N] [--plans DIR] [--e2e] [query ...]
+    python tools/profile_runs.py [--sf-dir DIR] [--warm N] [--plans DIR] [--e2e] [query ...]
 
 Every run (one cold, then ``--warm`` warm runs) executes through the noop
 sink under ``eodatadown_spark.plans.audit.recorded`` and prints one row
@@ -23,10 +23,7 @@ import argparse
 import os
 import sys
 
-# the repo root replaces this script's own directory on the path: this
-# file would otherwise shadow the standard library's ``profile`` module,
-# which pyspark imports
-sys.path[0] = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry  # noqa: E402
 from eodatadown_spark.plans.audit import PYTHON_EVAL, recorded  # noqa: E402
