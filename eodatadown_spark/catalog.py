@@ -63,6 +63,14 @@ def _partition_rel_dir(row, part_cols: list[str]) -> str:
     )
 
 
+def _with_parts(df: DataFrame, part_src: str, part_cols: list[str]) -> DataFrame:
+    """Add the physical partition columns, derived from ``part_src``."""
+    df = df.withColumn("p_year", F.year(F.col(part_src)))
+    if "p_month" in part_cols:
+        df = df.withColumn("p_month", F.month(F.col(part_src)))
+    return df
+
+
 def _partition_match_cond(changed, part_cols: list[str]):
     """Column predicate selecting rows in any of the ``changed`` partitions."""
     cond = F.lit(False)
@@ -129,7 +137,9 @@ class ParquetCatalog:
 
     # -- read/write -------------------------------------------------------
     def read(self, table: str) -> DataFrame:
-        path = self.data_path(table)
+        return self._read_path(table, self.data_path(table))
+
+    def _read_path(self, table: str, path: str) -> DataFrame:
         # an empty partitioned write emits no part files → schema inference
         # fails; ONLY that case falls back to the declared schema (a blanket
         # except would turn transient read errors into silent catalog wipes)
@@ -140,9 +150,10 @@ class ParquetCatalog:
         stored = self._read_schema_sidecar(path)
         if stored is not None:
             # an evolved version mixes hard-linked pre-evolution files with
-            # new-schema files; the sidecar pins the authoritative data-file
-            # schema (absent columns in old files read as NULL) — schema
-            # INFERENCE would nondeterministically pick one footer
+            # new-schema files; the version's own sidecar pins the
+            # authoritative data-file schema (absent columns in old files
+            # read as NULL) — schema INFERENCE would nondeterministically
+            # pick one footer
             return self.spark.read.schema(stored).parquet(path)
         return self.spark.read.parquet(path)
 
@@ -165,20 +176,15 @@ class ParquetCatalog:
         ) as fh:
             json.dump(schema.jsonValue(), fh)
 
-    def _next_version(self, table: str) -> str:
-        old = self._current_version(table)
-        return "v_0" if old is None else f"v_{int(old.split('_')[1]) + 1}"
-
     @contextmanager
     def _commit_lock(self, table: str, timeout: float = 30.0,
                      steal_after: float = 120.0):
         """Exclusive commit section via an atomically-RENAMED claim dir
-        (POSIX-local lock — the deployment shape of this catalog; on object
-        stores use the Delta adapter, whose log IS the commit protocol).
-        The lock dir is created pre-populated with its owner token, so a
-        live lock is never empty and no rename can ever silently replace
-        it.  A lock older than ``steal_after`` is presumed crash debris
-        and stolen (rename-away + freshness re-check)."""
+        (POSIX-local lock — the deployment shape of this catalog).  The
+        lock dir is created pre-populated with its owner token, so a live
+        lock is never empty and no rename can ever silently replace it.  A
+        lock older than ``steal_after`` is presumed crash debris and stolen
+        (rename-away + freshness re-check)."""
         lock = os.path.join(self._table_dir(table), "_COMMIT_LOCK")
         token = f"{os.getpid()}.{time.time_ns()}"
         deadline = time.time() + timeout
@@ -311,7 +317,8 @@ class ParquetCatalog:
         claimed-but-uncommitted dirs are invisible to readers."""
         table_dir = self._table_dir(table)
         os.makedirs(table_dir, exist_ok=True)
-        n = int(self._next_version(table).split("_")[1])
+        old = self._current_version(table)
+        n = 0 if old is None else int(old.split("_")[1]) + 1
         while True:
             version = f"v_{n}"
             out = os.path.join(table_dir, version)
@@ -336,9 +343,7 @@ class ParquetCatalog:
             part_src = PARTITION_SOURCE.get(table)
             writer = df.write.mode("append")
             if partition and part_src is not None and part_src in df.columns:
-                df = df.withColumn("p_year", F.year(F.col(part_src)))
-                if self.partition_monthly:
-                    df = df.withColumn("p_month", F.month(F.col(part_src)))
+                df = _with_parts(df, part_src, self._part_cols)
                 if cluster_partitions:
                     # cluster rows by the partition dirs before the write:
                     # without it every input task emits a file into every
@@ -361,15 +366,111 @@ class ParquetCatalog:
     def _commit_if_base(self, table: str, version: str, out: str,
                         base: str | None) -> bool:
         """Flip the pointer to ``version`` under the commit lock IF the
-        pointer still names ``base`` (optimistic-concurrency check); on a
-        moved pointer the built dir is discarded and False returned so the
-        caller can rebuild from the winner's commit."""
+        pointer still names ``base`` (optimistic-concurrency check) and the
+        built dir still exists; otherwise the built dir is discarded and
+        False returned so the caller can rebuild from the winner's commit."""
         with self._commit_lock(table):
-            if self._current_version(table) != base:
+            # GC runs only under this lock, so these checks cannot race
+            # another commit's cleanup.  The pointer-unmoved requirement
+            # is deliberately stricter than isdir: a concurrent commit's
+            # GC can rmtree our claimed dir MID-JOB and the job still
+            # "succeed" with tasks recommitted into a recreated dir —
+            # isdir passes but the version is silently partial.  Any
+            # pointer movement during our build means our dir sat in a
+            # GC window, so discard and rebuild.
+            if self._current_version(table) != base or not os.path.isdir(out):
                 shutil.rmtree(out, ignore_errors=True)
                 return False
             self._flip_and_gc(table, version)
         return True
+
+    def _commit(self, table: str, op: str, build, occ_retries: int) -> None:
+        """The optimistic commit behind every mutator.
+
+        ``build()`` reads the table, builds the next version into a claimed
+        dir and returns ``(version, out)``.  The base version is captured
+        before it runs, and the pointer flips only if it still names that
+        base (:meth:`_commit_if_base`).  A concurrent commit in the window
+        → the built dir is discarded and ``build`` re-runs against the
+        winner's commit (up to ``occ_retries`` times), so a mutation never
+        flips over a commit it did not build on.
+
+        A build error is re-raised unless the pointer moved meanwhile: then
+        it is conflict fallout (e.g. the winner's GC collected our base or
+        claimed dir) and the build retries.  A ``ValueError`` is a
+        deterministic user/validation error (e.g. merge_into's
+        duplicate-source guard), never conflict fallout, and always
+        surfaces."""
+        last_exc: Exception | None = None
+        for _attempt in range(1 + occ_retries):
+            base = self._current_version(table)
+            try:
+                version, out = build()
+            except Exception as exc:
+                if isinstance(exc, ValueError) or self._current_version(table) == base:
+                    raise
+                # keep the exception so a PERSISTENT build failure that
+                # keeps coinciding with pointer moves stays diagnosable
+                last_exc = exc
+                continue
+            if self._commit_if_base(table, version, out, base):
+                return
+        raise RuntimeError(
+            f"{op} lost the optimistic-commit race {1 + occ_retries} "
+            f"times on table {table!r}"
+        ) from last_exc
+
+    def _layout(self, table: str):
+        """Read ``table`` for a mutation: ``(cur, old_path, part_cols,
+        rewrite)``.
+
+        Partition depth follows the ON-DISK layout, not the constructor
+        flag: a monthly table opened by a yearly-configured process must
+        still merge at month depth (a flag-based depth would hard-link
+        whole changed years as "untouched" and append a conflicting yearly
+        layout — unreadable table).
+
+        A partitioned table with data takes a selective build
+        (:meth:`_write_selective`) and ``rewrite`` is None.  Otherwise
+        ``rewrite(df)`` builds the full replacement, and only an EMPTY
+        table gets (re-)partitioned by it: a table that HAS data but no
+        partition dirs was deliberately written flat — preserve that rather
+        than silently re-partitioning it."""
+        cur = self.read(table)
+        old_path = self.data_path(table)
+        part_cols = [c for c in ("p_year", "p_month") if c in cur.columns]
+        has_data = _has_parquet_files(old_path)
+        if part_cols and has_data:
+            return cur, old_path, part_cols, None
+        return cur, old_path, part_cols, (
+            lambda df: self._write_version(df, table, partition=not has_data)
+        )
+
+    def _write_selective(
+        self, table: str, old_path: str, changed, part_cols: list[str],
+        frames: list[DataFrame], schema=None,
+    ) -> tuple[str, str]:
+        """Build a partition-selective version: hard-link every partition
+        not in ``changed`` (:meth:`_begin_selective_version`), append each
+        of ``frames`` (carrying ``part_cols``) into its partitions and,
+        given a widened ``schema``, pin it in the version's sidecar.  A
+        failed build removes its claimed dir — leaving it would orphan a
+        v_N that survives until a later commit's GC and inflates
+        subsequent claim numbering meanwhile."""
+        version, out = self._begin_selective_version(
+            table, old_path, changed, part_cols
+        )
+        try:
+            for df in frames:
+                df.write.mode("append").partitionBy(*part_cols).parquet(out)
+            if schema is not None:
+                # AFTER _begin_selective_version's prior-sidecar copy, so
+                # the widened schema wins
+                self._write_schema_sidecar(out, schema)
+        except Exception:
+            shutil.rmtree(out, ignore_errors=True)
+            raise
+        return version, out
 
     def write(self, df: DataFrame, table: str, partition: bool = True,
               occ_retries: int = 5, cluster_partitions: bool = True) -> None:
@@ -378,50 +479,21 @@ class ParquetCatalog:
         the flip happens under the commit lock, so a full replace can race
         concurrent merges without clobbering their claimed builds — the
         replace itself is intentionally last-writer-wins (it does not
-        derive from the previous contents, so there is no base to check;
-        replaces that DO derive from the table must use
-        :meth:`replace_derived`).
+        derive from the previous contents; replaces that DO derive from
+        the table must use :meth:`replace_derived`).
 
         Build-vs-GC race (ADVICE r8): a concurrent merge commit GCs dirs
         strictly between ITS base and new pointer as unclaimed debris —
         a window this writer's live claimed dir can fall into.  That
         surfaces either as a parquet IO error mid-build or as a vanished
         dir at flip time; both legs detect the moved pointer / missing dir
-        and re-claim + rebuild instead of surfacing a spurious error."""
-        last_exc: Exception | None = None
-        for _attempt in range(1 + occ_retries):
-            base = self._current_version(table)
-            try:
-                version, out = self._write_version(
-                    df, table, partition, cluster_partitions
-                )
-            except Exception as exc:
-                if self._current_version(table) != base:
-                    # conflict fallout: winner's GC hit our build — but keep
-                    # the exception so a PERSISTENT build failure that keeps
-                    # coinciding with pointer moves stays diagnosable
-                    last_exc = exc
-                    continue
-                raise
-            with self._commit_lock(table):
-                # GC runs only under this lock, so these checks cannot race
-                # another commit's cleanup.  The pointer-unmoved requirement
-                # is deliberately stricter than isdir: a concurrent commit's
-                # GC can rmtree our claimed dir MID-JOB and the job still
-                # "succeed" with tasks recommitted into a recreated dir —
-                # isdir passes but the version is silently partial.  Any
-                # pointer movement during our build means our dir sat in a
-                # GC window, so discard and rebuild (the replace is LWW:
-                # the retry still flips last).
-                if self._current_version(table) == base and os.path.isdir(out):
-                    self._flip_and_gc(table, version)
-                    return
-                shutil.rmtree(out, ignore_errors=True)
-            # conflicting commit landed during our build — rebuild
-        raise RuntimeError(
-            f"write lost the claimed-dir race {1 + occ_retries} times on "
-            f"table {table!r}"
-        ) from last_exc
+        and re-claim + rebuild instead of surfacing a spurious error (the
+        replace is LWW: the retry still flips last)."""
+        self._commit(
+            table, "write",
+            lambda: self._write_version(df, table, partition, cluster_partitions),
+            occ_retries,
+        )
 
     def replace_derived(
         self, table: str, build_fn, partition: bool = True,
@@ -430,8 +502,8 @@ class ParquetCatalog:
         """Read-modify-REPLACE with optimistic concurrency: ``build_fn``
         maps the table's CURRENT contents to the full replacement frame,
         and the pointer flips only if the base version is unchanged — on
-        conflict the loop re-reads, re-derives, and rebuilds, exactly like
-        :meth:`merge_updates`.
+        conflict the commit re-reads, re-derives, and rebuilds, exactly
+        like :meth:`merge_updates`.
 
         This is the correct commit for any replace whose output DERIVES
         from the table's own contents (e.g. the continuous-dedup clusters
@@ -441,24 +513,11 @@ class ParquetCatalog:
         (ADVICE r8).  Non-derived replaces should keep using
         :meth:`write` — re-running ``build_fn`` must be safe and cheap
         (pin batch-derived inputs before calling)."""
-        last_exc: Exception | None = None
-        for _attempt in range(1 + occ_retries):
-            base = self._current_version(table)
-            try:
-                version, out = self._write_version(
-                    build_fn(self.read(table)), table, partition
-                )
-            except Exception as exc:
-                if self._current_version(table) != base:
-                    last_exc = exc  # conflict fallout — kept for diagnosis
-                    continue
-                raise
-            if self._commit_if_base(table, version, out, base):
-                return
-        raise RuntimeError(
-            f"replace_derived lost the optimistic-commit race "
-            f"{1 + occ_retries} times on table {table!r}"
-        ) from last_exc
+        self._commit(
+            table, "replace_derived",
+            lambda: self._write_version(build_fn(self.read(table)), table, partition),
+            occ_retries,
+        )
 
     def merge_updates(
         self, table: str, updates: DataFrame, key: str = "pid",
@@ -474,15 +533,13 @@ class ParquetCatalog:
         State-column updates never move a row across partitions, so the
         partition-source column must not appear in ``updates``.
 
-        CONCURRENCY (optimistic): the base version is captured at read
-        time; the pointer flip happens under :meth:`_commit_lock` only if
-        the pointer still names that base.  A concurrent commit in the
-        window → this writer discards its built version dir and REBUILDS
-        from the new current (up to ``occ_retries`` times), so concurrent
-        merges of different keys serialize with neither update lost —
-        never last-writer-wins.  A build error is re-raised unless the
-        pointer moved meanwhile (then it is conflict fallout — e.g. the
-        winner's GC collected our base or claimed dir — and retries).
+        CONCURRENCY (optimistic, :meth:`_commit`): the base version is
+        captured at read time; the pointer flip happens under
+        :meth:`_commit_lock` only if the pointer still names that base.  A
+        concurrent commit in the window → this writer discards its built
+        version dir and REBUILDS from the new current (up to
+        ``occ_retries`` times), so concurrent merges of different keys
+        serialize with neither update lost.
 
         Unpartitioned tables take a full (non-selective) rewrite but run the
         SAME optimistic protocol — base-checked flip under the commit lock,
@@ -501,69 +558,26 @@ class ParquetCatalog:
             # a patched physical partition column would silently break the
             # p_year/p_month == year/month(date_col) invariant pruning relies on
             raise ValueError("merge_updates cannot patch physical partition columns")
-        for _attempt in range(1 + occ_retries):
-            base = self._current_version(table)
-            old_path = self.data_path(table)
-            cur = self.read(table)
-            # partition depth follows the ON-DISK layout, not the constructor
-            # flag: a monthly table opened by a yearly-configured process must
-            # still merge at month depth (a flag-based depth would hard-link
-            # whole changed years as "untouched" and append a conflicting
-            # yearly layout — unreadable table)
-            part_cols = [c for c in ("p_year", "p_month") if c in cur.columns]
-            if not part_cols or not _has_parquet_files(old_path):
-                # same layout-preservation rule as append(): only an empty
-                # table gets (re-)partitioned by the full write.  This path
-                # still runs the FULL OCC protocol (unlike a plain write()):
-                # the merged frame derives from the base contents, so two
-                # concurrent merges on an unpartitioned table (e.g. the
-                # dedupindex tables) must never both flip over the same base
-                # — the loser rebuilds from the winner's commit.
-                try:
-                    version, out = self._write_version(
-                        apply_updates(self.read_clean(table), updates, key),
-                        table,
-                        partition=not _has_parquet_files(old_path),
-                    )
-                except Exception:
-                    if self._current_version(table) != base:
-                        continue  # conflict fallout, not a real build error
-                    raise
-                if self._commit_if_base(table, version, out, base):
-                    return
-                continue
-            out = None
-            try:
-                changed = (
-                    cur.join(updates.select(key).distinct(), key, "left_semi")
-                    .select(*part_cols)
-                    .distinct()
-                    .collect()
+
+        def build():
+            cur, old_path, part_cols, rewrite = self._layout(table)
+            if rewrite is not None:
+                return rewrite(apply_updates(self.read_clean(table), updates, key))
+            changed = (
+                cur.join(updates.select(key).distinct(), key, "left_semi")
+                .select(*part_cols)
+                .distinct()
+                .collect()
+            )
+            frames = [
+                apply_updates(
+                    cur.where(_partition_match_cond(changed, part_cols)),
+                    updates, key,
                 )
-                version, out = self._begin_selective_version(
-                    table, old_path, changed, part_cols
-                )
-                if changed:
-                    merged = apply_updates(
-                        cur.where(_partition_match_cond(changed, part_cols)),
-                        updates, key,
-                    )
-                    merged.write.mode("append").partitionBy(*part_cols).parquet(out)
-            except Exception:
-                # remove the claimed dir before retrying/raising — leaving it
-                # would orphan a v_N that survives until a later commit's GC
-                # and inflates subsequent claim numbering meanwhile
-                if out is not None:
-                    shutil.rmtree(out, ignore_errors=True)
-                if self._current_version(table) != base:
-                    continue  # conflict fallout, not a real build error
-                raise
-            if self._commit_if_base(table, version, out, base):
-                return
-        raise RuntimeError(
-            f"merge_updates lost the optimistic-commit race {1 + occ_retries} "
-            f"times on table {table!r}"
-        )
+            ] if changed else []
+            return self._write_selective(table, old_path, changed, part_cols, frames)
+
+        self._commit(table, "merge_updates", build, occ_retries)
 
     def _begin_selective_version(
         self, table: str, old_path: str, changed, part_cols: list[str]
@@ -643,15 +657,17 @@ class ParquetCatalog:
         (``when_not_matched_insert=True``) when the source carries columns
         the table lacks: ``"strict"`` (default) rejects them loudly (the
         old behavior dropped them silently); ``"add"`` widens the table
-        first — a zero-row :meth:`append`-style evolution commit (sidecar,
-        hard-linked files, no rewrite) — then merges against the widened
-        schema, so the extras insert for new rows and read as NULL
-        elsewhere.  Explicit insert/update MAPPINGS are untouched either
-        way: there, extra source columns are ordinary expression inputs,
-        not an ambiguity.  ``__``-prefixed source columns are exempt too —
-        the codebase-wide convention for ephemeral bookkeeping (e.g. a CDC
-        ``__op`` marker driving the clause conditions); they are never
-        inserted and never widen the schema.
+        first — a zero-row ``append(..., schema_evolution="add")`` commit
+        (sidecar, hard-linked files, no rewrite) — then merges against the
+        widened schema, so the extras insert for new rows and read as NULL
+        elsewhere.  Every argument is validated before that widening
+        commit, so a rejected call leaves the table untouched.  Explicit
+        insert/update MAPPINGS are untouched either way: there, extra
+        source columns are ordinary expression inputs, not an ambiguity.
+        ``__``-prefixed source columns are exempt too — the codebase-wide
+        convention for ephemeral bookkeeping (e.g. a CDC ``__op`` marker
+        driving the clause conditions); they are never inserted and never
+        widen the schema.
         """
         from eodatadown_spark.operators.merge import merge_into as _merge_df
 
@@ -660,6 +676,13 @@ class ParquetCatalog:
                 f"unknown schema_evolution mode {schema_evolution!r}"
             )
         part_src = PARTITION_SOURCE.get(table)
+        if when_matched_update:
+            forbidden = {part_src, "p_year", "p_month"} & set(when_matched_update)
+            if forbidden:
+                raise ValueError(
+                    f"merge_into cannot update partition-source columns {sorted(forbidden)}; "
+                    "use write() for partition-moving rewrites"
+                )
         if when_not_matched_insert is True:
             cur0 = self.read(table)
             extras = [
@@ -674,8 +697,7 @@ class ParquetCatalog:
                     "dropping would be data loss)"
                 )
             if extras:
-                part0 = [c for c in ("p_year", "p_month") if c in cur0.columns]
-                target0 = [c for c in cur0.columns if c not in part0]
+                target0 = [c for c in cur0.columns if c not in ("p_year", "p_month")]
                 evolve_src = source.limit(0).select(
                     *[
                         F.col(c)
@@ -685,38 +707,16 @@ class ParquetCatalog:
                     ],
                     *[F.col(c) for c in extras],
                 )
-                self._append_evolve(table, evolve_src, extras, occ_retries)
-        if when_matched_update:
-            forbidden = {part_src, "p_year", "p_month"} & set(when_matched_update)
-            if forbidden:
-                raise ValueError(
-                    f"merge_into cannot update partition-source columns {sorted(forbidden)}; "
-                    "use write() for partition-moving rewrites"
-                )
-        for _attempt in range(1 + occ_retries):
-            base = self._current_version(table)
-            cur = self.read(table)
-            part_cols = [c for c in ("p_year", "p_month") if c in cur.columns]
-            old_path = self.data_path(table)
-            if not part_cols or not _has_parquet_files(old_path):
-                merged = _merge_df(
+                self.append(table, evolve_src, occ_retries, schema_evolution="add")
+
+        def build():
+            cur, old_path, part_cols, rewrite = self._layout(table)
+            if rewrite is not None:
+                return rewrite(_merge_df(
                     self.read_clean(table), source, on,
                     when_matched_update, update_condition, when_matched_delete,
                     when_not_matched_insert, insert_condition, validate_unique_source,
-                )
-                try:
-                    # layout-preservation rule shared with append()/merge_updates()
-                    version, out = self._write_version(
-                        merged, table, partition=not _has_parquet_files(old_path)
-                    )
-                except Exception:
-                    if self._current_version(table) != base:
-                        continue  # conflict fallout, not a real build error
-                    raise
-                if self._commit_if_base(table, version, out, base):
-                    return
-                continue
-
+                ))
             target_cols = [c for c in cur.columns if c not in part_cols]
             # validate BEFORE any filesystem work: an abort below this point
             # would leave a fully-built orphan version dir
@@ -725,122 +725,88 @@ class ParquetCatalog:
                     f"cannot derive partitions for inserts: {table!r} has no "
                     "partition-source column; use an unpartitioned table"
                 )
-            out = None
-            try:
-                cur_keys = cur.select(*on).distinct()
-                # split ONCE: matched source drives the partition rewrite,
-                # unmatched source appends — merging only the
-                # changed-partition subset would otherwise misclassify
-                # out-of-subset matches as inserts
-                matched_src = source.join(cur_keys, on, "left_semi")
-                insert_src = source.join(cur_keys, on, "left_anti")
+            cur_keys = cur.select(*on).distinct()
+            # split ONCE: matched source drives the partition rewrite,
+            # unmatched source appends — merging only the
+            # changed-partition subset would otherwise misclassify
+            # out-of-subset matches as inserts
+            matched_src = source.join(cur_keys, on, "left_semi")
+            insert_src = source.join(cur_keys, on, "left_anti")
 
-                has_matched_clause = (
-                    bool(when_matched_update) or when_matched_delete is not None
+            if bool(when_matched_update) or when_matched_delete is not None:
+                changed = (
+                    cur.join(matched_src.select(*on).distinct(), on, "left_semi")
+                    .select(*part_cols)
+                    .distinct()
+                    .collect()
                 )
-                if has_matched_clause:
-                    changed = (
-                        cur.join(matched_src.select(*on).distinct(), on, "left_semi")
-                        .select(*part_cols)
-                        .distinct()
+            else:
+                changed = []
+                if validate_unique_source:
+                    # the matched-partition merge (which carries the
+                    # distributed ANSI guard) is skipped entirely, so check
+                    # here that no target key matches two source rows
+                    dup = (
+                        matched_src.groupBy(*on)
+                        .count()
+                        .where(F.col("count") > 1)
+                        .limit(1)
                         .collect()
                     )
-                else:
-                    changed = []
-                    if validate_unique_source:
-                        # the matched-partition merge (which carries the
-                        # distributed ANSI guard) is skipped entirely, so check
-                        # here that no target key matches two source rows
-                        dup = (
-                            matched_src.groupBy(*on)
-                            .count()
-                            .where(F.col("count") > 1)
-                            .limit(1)
-                            .collect()
+                    if dup:
+                        raise ValueError(
+                            "merge_into: multiple source rows matched target key "
+                            f"({', '.join(str(dup[0][k]) for k in on)})"
                         )
-                        if dup:
-                            raise ValueError(
-                                "merge_into: multiple source rows matched target key "
-                                f"({', '.join(str(dup[0][k]) for k in on)})"
-                            )
 
-                version, out = self._begin_selective_version(
-                    table, old_path, changed, part_cols
+            frames = []
+            if changed:
+                target_sub = cur.where(
+                    _partition_match_cond(changed, part_cols)
+                ).select(*target_cols)
+                merged = _merge_df(
+                    target_sub, matched_src, on,
+                    when_matched_update, update_condition, when_matched_delete,
+                    False, None, validate_unique_source,
                 )
+                frames.append(_with_parts(merged, part_src, part_cols))
 
-                def derive_parts(df: DataFrame) -> DataFrame:
-                    df = df.withColumn("p_year", F.year(F.col(part_src)))
-                    if "p_month" in part_cols:
-                        df = df.withColumn("p_month", F.month(F.col(part_src)))
-                    return df
-
-                if changed:
-                    target_sub = cur.where(
-                        _partition_match_cond(changed, part_cols)
-                    ).select(*target_cols)
-                    merged = _merge_df(
-                        target_sub, matched_src, on,
-                        when_matched_update, update_condition, when_matched_delete,
-                        False, None, validate_unique_source,
-                    )
-                    derive_parts(merged).write.mode("append").partitionBy(
-                        *part_cols
-                    ).parquet(out)
-
-                if when_not_matched_insert:
-                    # evaluate the condition / mapping against a frame that ALSO
-                    # carries the target columns (all NULL) under alias 't', so an
-                    # insert clause referencing t.<col> NULL-evaluates exactly as it
-                    # does against operators.merge.merge_into's full-outer frame —
-                    # without this, the same merge_into call would raise
-                    # AnalysisException only on partitioned layouts.  A left join on
-                    # a False condition against an empty build side is a no-op plan
-                    # (BroadcastNestedLoopJoin with zero build rows).
-                    t_nulls = cur.select(*target_cols).limit(0)
-                    ins = insert_src.alias("s").join(
-                        t_nulls.alias("t"), F.lit(False), "left"
-                    )
-                    if insert_condition is not None:
-                        ins = ins.where(F.coalesce(insert_condition, F.lit(False)))
-                    # column routing mirrors operators.merge.merge_into exactly:
-                    # a mapping is authoritative for non-key columns (absent ones
-                    # become NULL, not source values); key columns always come from
-                    # the source; insert-all mode takes same-named source columns
-                    cols = []
-                    for c in target_cols:
-                        if c in on:
-                            val = F.col(f"s.{c}")
-                        elif isinstance(when_not_matched_insert, Mapping):
-                            val = when_not_matched_insert.get(c)
-                            if val is None:
-                                val = F.lit(None)
-                        elif c in source.columns:
-                            val = F.col(f"s.{c}")
-                        else:
+            if when_not_matched_insert:
+                # evaluate the condition / mapping against a frame that ALSO
+                # carries the target columns (all NULL) under alias 't', so an
+                # insert clause referencing t.<col> NULL-evaluates exactly as it
+                # does against operators.merge.merge_into's full-outer frame —
+                # without this, the same merge_into call would raise
+                # AnalysisException only on partitioned layouts.  A left join on
+                # a False condition against an empty build side is a no-op plan
+                # (BroadcastNestedLoopJoin with zero build rows).
+                t_nulls = cur.select(*target_cols).limit(0)
+                ins = insert_src.alias("s").join(
+                    t_nulls.alias("t"), F.lit(False), "left"
+                )
+                if insert_condition is not None:
+                    ins = ins.where(F.coalesce(insert_condition, F.lit(False)))
+                # column routing mirrors operators.merge.merge_into exactly:
+                # a mapping is authoritative for non-key columns (absent ones
+                # become NULL, not source values); key columns always come from
+                # the source; insert-all mode takes same-named source columns
+                cols = []
+                for c in target_cols:
+                    if c in on:
+                        val = F.col(f"s.{c}")
+                    elif isinstance(when_not_matched_insert, Mapping):
+                        val = when_not_matched_insert.get(c)
+                        if val is None:
                             val = F.lit(None)
-                        cols.append(val.cast(cur.schema[c].dataType).alias(c))
-                    ins = ins.select(*cols)
-                    derive_parts(ins).write.mode("append").partitionBy(
-                        *part_cols
-                    ).parquet(out)
-            except ValueError:
-                # deterministic user/validation error (e.g. the duplicate-
-                # source guard) — never conflict fallout; clean up the claim
-                if out is not None:
-                    shutil.rmtree(out, ignore_errors=True)
-                raise
-            except Exception:
-                if out is not None:
-                    shutil.rmtree(out, ignore_errors=True)
-                if self._current_version(table) != base:
-                    continue  # conflict fallout, not a real build error
-                raise
-            if self._commit_if_base(table, version, out, base):
-                return
-        raise RuntimeError(
-            f"merge_into lost the optimistic-commit race {1 + occ_retries} "
-            f"times on table {table!r}"
-        )
+                    elif c in source.columns:
+                        val = F.col(f"s.{c}")
+                    else:
+                        val = F.lit(None)
+                    cols.append(val.cast(cur.schema[c].dataType).alias(c))
+                frames.append(_with_parts(ins.select(*cols), part_src, part_cols))
+            return self._write_selective(table, old_path, changed, part_cols, frames)
+
+        self._commit(table, "merge_into", build, occ_retries)
 
     def append(self, table: str, rows: DataFrame, occ_retries: int = 5,
                schema_evolution: str = "strict") -> None:
@@ -867,164 +833,58 @@ class ParquetCatalog:
           and a ``_SCHEMA.json`` sidecar in the version dir pins the
           authoritative schema so readers see NULLs for pre-evolution rows
           (the Delta/Iceberg ADD COLUMNS semantics on the versioned-parquet
-          layout — no data rewrite).
+          layout — no data rewrite).  Unpartitioned tables take a full
+          rewrite instead (they are rewritten on every append anyway),
+          which materializes the NULLs so no sidecar is needed.
         """
+        from pyspark.sql import types as T
+
         if schema_evolution not in ("strict", "add"):
             raise ValueError(
                 f"unknown schema_evolution mode {schema_evolution!r}"
             )
-        incoming = rows
-        for _attempt in range(1 + occ_retries):
-            base = self._current_version(table)
-            cur = self.read(table)
-            part_cols = [c for c in ("p_year", "p_month") if c in cur.columns]
-            old_path = self.data_path(table)
-            extras = [c for c in incoming.columns if c not in cur.columns]
+
+        def build():
+            cur, old_path, part_cols, rewrite = self._layout(table)
+            extras = [c for c in rows.columns if c not in cur.columns]
             if extras and schema_evolution == "strict":
                 raise ValueError(
                     f"append: incoming columns {extras} not in table "
                     f"{table!r}; pass schema_evolution='add' to widen the "
                     "schema (silent dropping would be data loss)"
                 )
-            if extras:
-                return self._append_evolve(
-                    table, incoming, extras, occ_retries
-                )
+            target_cols = [c for c in cur.columns if c not in part_cols]
             # cast incoming rows to the table schema up front (as the
             # merge_into insert path does) — appending rows with their
             # incoming dtypes would otherwise put mixed-schema parquet files
             # (int32 next to int64) inside one partition, failing or
             # coercing on later reads
-            rows = incoming.select(
+            new = rows.select(
                 *[F.col(c).cast(cur.schema[c].dataType).alias(c)
-                  for c in cur.columns if c not in part_cols]
+                  for c in target_cols],
+                *[F.col(c) for c in extras],
             )
-            if not part_cols or not _has_parquet_files(old_path):
-                base_df = self.read_clean(table)
-                # an EMPTY table takes the standard layout; a table that HAS
-                # data but no partition dirs was deliberately written flat —
-                # preserve that rather than silently re-partitioning it
-                try:
-                    version, out = self._write_version(
-                        base_df.unionByName(rows.select(*base_df.columns)),
-                        table,
-                        partition=not _has_parquet_files(old_path),
-                    )
-                except Exception:
-                    if self._current_version(table) != base:
-                        continue  # conflict fallout, not a real build error
-                    raise
-                if self._commit_if_base(table, version, out, base):
-                    return
-                continue
+            if rewrite is not None:
+                return rewrite(self.read_clean(table).unionByName(
+                    new, allowMissingColumns=bool(extras)
+                ))
             part_src = PARTITION_SOURCE.get(table)
             if part_src is None:
                 raise ValueError(
                     f"cannot derive partitions for appended rows: {table!r} has "
                     "no partition-source column"
                 )
-            out = None
-            try:
-                version, out = self._begin_selective_version(
-                    table, old_path, [], part_cols
-                )
-                target_cols = [c for c in cur.columns if c not in part_cols]
-                df = rows.select(*target_cols).withColumn(
-                    "p_year", F.year(F.col(part_src))
-                )
-                if "p_month" in part_cols:
-                    df = df.withColumn("p_month", F.month(F.col(part_src)))
-                df.write.mode("append").partitionBy(*part_cols).parquet(out)
-            except Exception:
-                if out is not None:
-                    shutil.rmtree(out, ignore_errors=True)
-                if self._current_version(table) != base:
-                    continue  # conflict fallout, not a real build error
-                raise
-            if self._commit_if_base(table, version, out, base):
-                return
-        raise RuntimeError(
-            f"append lost the optimistic-commit race {1 + occ_retries} "
-            f"times on table {table!r}"
-        )
-
-    def _append_evolve(
-        self, table: str, incoming: DataFrame, extras: list[str],
-        occ_retries: int,
-    ) -> None:
-        """append(schema_evolution='add') body: widen the table schema with
-        ``extras`` (nullable, incoming types) without rewriting any existing
-        file.  Partitioned tables hard-link every partition and pin the
-        widened schema in the version's ``_SCHEMA.json`` sidecar (read()
-        NULL-fills the old files); unpartitioned tables take a full rewrite
-        (they are rewritten on every append anyway), which materializes the
-        NULLs so no sidecar is needed.  Same OCC protocol as append()."""
-        from pyspark.sql import types as T
-
-        for _attempt in range(1 + occ_retries):
-            base = self._current_version(table)
-            cur = self.read(table)
-            part_cols = [c for c in ("p_year", "p_month") if c in cur.columns]
-            old_path = self.data_path(table)
-            target_cols = [c for c in cur.columns if c not in part_cols]
-            rows = incoming.select(
-                *[F.col(c).cast(cur.schema[c].dataType).alias(c)
-                  for c in target_cols],
-                *[F.col(c) for c in extras],
-            )
-            if not part_cols or not _has_parquet_files(old_path):
-                base_df = self.read_clean(table)
-                merged = base_df.unionByName(rows, allowMissingColumns=True)
-                try:
-                    version, out = self._write_version(
-                        merged, table,
-                        partition=not _has_parquet_files(old_path),
-                    )
-                except Exception:
-                    if self._current_version(table) != base:
-                        continue  # conflict fallout, not a real build error
-                    raise
-                if self._commit_if_base(table, version, out, base):
-                    return
-                continue
-            part_src = PARTITION_SOURCE.get(table)
-            if part_src is None:
-                raise ValueError(
-                    f"cannot derive partitions for appended rows: {table!r} "
-                    "has no partition-source column"
-                )
             evolved = T.StructType(
                 [cur.schema[c] for c in target_cols]
-                + [
-                    T.StructField(f.name, f.dataType, True)
-                    for f in rows.schema.fields
-                    if f.name in extras
-                ]
+                + [T.StructField(f.name, f.dataType, True)
+                   for f in new.schema.fields if f.name in extras]
+            ) if extras else None
+            return self._write_selective(
+                table, old_path, [], part_cols,
+                [_with_parts(new, part_src, part_cols)], evolved,
             )
-            out = None
-            try:
-                version, out = self._begin_selective_version(
-                    table, old_path, [], part_cols
-                )
-                df = rows.withColumn("p_year", F.year(F.col(part_src)))
-                if "p_month" in part_cols:
-                    df = df.withColumn("p_month", F.month(F.col(part_src)))
-                df.write.mode("append").partitionBy(*part_cols).parquet(out)
-                # AFTER _begin_selective_version's prior-sidecar copy, so
-                # the widened schema wins
-                self._write_schema_sidecar(out, evolved)
-            except Exception:
-                if out is not None:
-                    shutil.rmtree(out, ignore_errors=True)
-                if self._current_version(table) != base:
-                    continue  # conflict fallout, not a real build error
-                raise
-            if self._commit_if_base(table, version, out, base):
-                return
-        raise RuntimeError(
-            f"append lost the optimistic-commit race {1 + occ_retries} "
-            f"times on table {table!r}"
-        )
+
+        self._commit(table, "append", build, occ_retries)
 
     def changes_since(self, table: str, version: int, keys=("pid",)) -> DataFrame:
         """Change feed: CDC rows (keys + change_type) between a retained
@@ -1062,7 +922,7 @@ class ParquetCatalog:
 
         ``zorder_by=[col, ...]`` additionally CLUSTERS the rewrite on the
         N-dim Morton key of those columns (``OPTIMIZE ... ZORDER BY`` on the
-        plain-parquet catalog, matching the Delta adapter's compact):
+        plain-parquet catalog):
         range-partition on the key + in-partition sort, so each output file
         covers a compact Z-curve interval and parquet min/max stats prune
         scans filtered on ANY subset of the clustered columns.
@@ -1111,8 +971,7 @@ class ParquetCatalog:
 
     def read_clean(self, table: str) -> DataFrame:
         """Read without the physical partition column(s)."""
-        df = self.read(table)
-        return df.drop(*[c for c in ("p_year", "p_month") if c in df.columns])
+        return self.read(table).drop("p_year", "p_month")
 
     # -- time travel (within the retention window) --------------------------
     def list_versions(self, table: str) -> list[int]:
@@ -1152,18 +1011,9 @@ class ParquetCatalog:
                 f"version {version} of {table!r} not readable "
                 f"(retained: {self.list_versions(table)})"
             )
-        path = os.path.join(self._table_dir(table), f"v_{version}")
-        if not _has_parquet_files(path):
-            declared = schemas.ALL_SCHEMAS.get(table)
-            if declared is not None:
-                return self.spark.createDataFrame([], schema=declared)
-        stored = self._read_schema_sidecar(path)
-        if stored is not None:
-            # post-evolution versions mix pre- and post-widening files;
-            # the version's own sidecar NULL-fills the old ones (same rule
-            # as read())
-            return self.spark.read.schema(stored).parquet(path)
-        return self.spark.read.parquet(path)
+        return self._read_path(
+            table, os.path.join(self._table_dir(table), f"v_{version}")
+        )
 
     def file_stats(self, table: str, columns: list[str] | None = None) -> list[dict]:
         """Per-file min/max manifest from the parquet footers — the

@@ -607,130 +607,6 @@ def test_gc_ignores_orphan_versions(spark, landsat_scenes, tmp_path):
     assert cat.read_version("landsat_scenes", 0).count() == 7
 
 
-class TestDeltaAdapter:
-    """DeltaCatalog maps the catalog surface onto Delta Lake.  The clause
-    translation (the piece that could silently diverge from
-    operators.merge.merge_into semantics) needs no Delta install and is
-    tested everywhere; the live half needs delta-spark and auto-skips without it."""
-
-    def test_merge_clause_translation(self, spark):
-        from eodatadown_spark.catalog_delta import delta_merge_clauses
-
-        cond, calls = delta_merge_clauses(
-            ["k", "src"],
-            when_matched_update={"qty": F.col("s.qty")},
-            update_condition=F.col("s.qty") > 0,
-            when_matched_delete=F.col("s.op") == "d",
-            when_not_matched_insert={"qty": F.col("s.qty") * 2},
-        )
-        assert cond == "t.k = s.k AND t.src = s.src"
-        methods = [m for m, _, _ in calls]
-        # delete routes before update — first matching whenMatched clause
-        # wins in Delta, same as the operator's CASE order
-        assert methods == [
-            "whenMatchedDelete", "whenMatchedUpdate", "whenNotMatchedInsert",
-        ]
-        ins = calls[2][2]
-        # key columns defaulted from the source in mapping-insert mode
-        assert set(ins) == {"qty", "k", "src"}
-
-    def test_merge_clause_translation_insert_all_and_errors(self, spark):
-        import pytest as _pytest
-
-        from eodatadown_spark.catalog_delta import delta_merge_clauses
-
-        _, calls = delta_merge_clauses(["k"], when_matched_update={"v": F.lit(1)})
-        assert [m for m, _, _ in calls] == [
-            "whenMatchedUpdate", "whenNotMatchedInsertAll",
-        ]
-        # insert-all WITH target columns expands to a target-schema-governed
-        # mapping (extra source columns ignored, absent ones NULL), exactly
-        # operators.merge.merge_into's insert-all routing
-        _, calls = delta_merge_clauses(
-            ["k"],
-            source_columns=["k", "v", "extra_audit"],
-            target_columns=["k", "v", "w"],
-        )
-        method, _, ins = calls[0]
-        assert method == "whenNotMatchedInsert"
-        assert set(ins) == {"k", "v", "w"}   # extra_audit dropped, w NULLed
-        with _pytest.raises(ValueError, match="WHEN clause"):
-            delta_merge_clauses(["k"], when_not_matched_insert=False)
-        with _pytest.raises(TypeError, match="mapping"):
-            delta_merge_clauses(["k"], when_matched_update=F.lit(1))
-
-    def test_replace_derived_retry_logic(self, spark):
-        """The delta replace_derived retry discriminator (translation test,
-        no Delta install needed): Concurrent*/ProtocolChanged exceptions
-        re-read + re-derive; anything else surfaces."""
-        import pytest as _pytest
-
-        from eodatadown_spark.catalog_delta import DeltaCatalog
-
-        cat = object.__new__(DeltaCatalog)  # bypass _require_delta
-        seen = {"reads": 0, "writes": []}
-
-        class ConcurrentAppendException(Exception):
-            pass
-
-        cat.read = lambda table: f"v{seen['reads']}"
-        def write(df, table, partition=True):
-            seen["reads"] += 1
-            seen["writes"].append(df)
-            if len(seen["writes"]) == 1:
-                raise ConcurrentAppendException("winner committed first")
-        cat.write = write
-        cat.replace_derived("t", lambda cur: cur + "+fold")
-        # loser re-read the winner's state and re-derived
-        assert seen["writes"] == ["v0+fold", "v1+fold"]
-
-        cat.write = lambda df, table, partition=True: (_ for _ in ()).throw(
-            OSError("disk full")
-        )
-        with _pytest.raises(OSError, match="disk full"):
-            cat.replace_derived("t", lambda cur: cur)
-
-    def test_import_error_without_delta(self, spark, tmp_path):
-        import pytest as _pytest
-
-        try:
-            import delta  # noqa: F401
-
-            _pytest.skip("delta-spark installed; live tests cover this")
-        except ImportError:
-            pass
-        from eodatadown_spark.catalog_delta import DeltaCatalog
-
-        with _pytest.raises(ImportError, match="ParquetCatalog"):
-            DeltaCatalog(spark, str(tmp_path))
-
-    def test_live_delta_roundtrip(self, spark, tmp_path):
-        """write → append → merge_into → time travel → changes_since on a
-        real Delta table; runs only where delta-spark + a Delta-enabled
-        session exist (auto-skips in the sandbox)."""
-        import pytest as _pytest
-
-        _pytest.importorskip("delta")
-        from eodatadown_spark.catalog_delta import DeltaCatalog
-
-        cat = DeltaCatalog(spark, str(tmp_path))
-        df = spark.createDataFrame([(1, "a"), (2, "b")], "pid long, v string")
-        cat.write(df, "tbl", partition=False)
-        cat.append("tbl", spark.createDataFrame([(3, "c")], "pid long, v string"))
-        cat.merge_into(
-            "tbl",
-            spark.createDataFrame([(2, "B"), (4, "d")], "pid long, v string"),
-            on=["pid"],
-            when_matched_update={"v": F.col("s.v")},
-        )
-        got = {r["pid"]: r["v"] for r in cat.read("tbl").collect()}
-        assert got == {1: "a", 2: "B", 3: "c", 4: "d"}
-        assert cat.read_version("tbl", 0).count() == 2
-        kinds = {r["pid"]: r["change_type"]
-                 for r in cat.changes_since("tbl", 0).collect()}
-        assert kinds == {2: "update", 3: "insert", 4: "insert"}
-
-
 class TestMergeUpdatesOCC:
     """Concurrent-commit contract (round-5 VERDICT item 6): two concurrent
     merge_updates on one table must serialize with NEITHER update lost —
@@ -968,12 +844,15 @@ class TestRound8ConcurrencyHardening:
         got = {r["pid"]: r["v"] for r in cat.read("flat").collect()}
         assert got == {0: "u0", 1: "u1", 2: "u2", 3: "u3"}
 
+    @pytest.mark.parametrize("schema_evolution", ["strict", "add"])
     def test_append_conflict_rebuilds_not_lost(
-        self, spark, landsat_scenes, tmp_path, monkeypatch
+        self, spark, landsat_scenes, tmp_path, monkeypatch, schema_evolution
     ):
         """append() hard-links the BASE version, so flipping over a pointer
         moved by a concurrent merge would drop that merge — the loser must
-        re-link from the winner's commit instead."""
+        re-link from the winner's commit instead.  The widening append
+        ("add", one extra column) takes the same lost race and must keep
+        its new column through the rebuild."""
         from eodatadown_spark.catalog import ParquetCatalog
 
         cat = ParquetCatalog(spark, str(tmp_path), retain_versions=4)
@@ -998,11 +877,20 @@ class TestRound8ConcurrencyHardening:
         new_row = landsat_scenes.where(F.col("pid") == 1).withColumn(
             "pid", F.lit(99).cast("long")
         )
-        cat.append("landsat_scenes", new_row)
+        if schema_evolution == "add":
+            new_row = new_row.withColumn("quality_score", F.lit(0.9))
+        cat.append("landsat_scenes", new_row, schema_evolution=schema_evolution)
+        assert fired["done"]  # the race really happened
         tbl = cat.read("landsat_scenes")
         assert tbl.where(F.col("pid") == 99).count() == 1  # append landed
         got = tbl.where(F.col("pid") == 1).select("cloud_cover").collect()
         assert got[0][0] == 55.0  # concurrent merge NOT lost
+        if schema_evolution == "add":
+            scores = {
+                r["pid"]: r["quality_score"]
+                for r in tbl.where(F.col("pid").isin(1, 99)).collect()
+            }
+            assert scores == {1: None, 99: 0.9}
 
     def test_merge_into_conflict_rebuilds_not_lost(
         self, spark, landsat_scenes, tmp_path, monkeypatch
@@ -1320,6 +1208,30 @@ class TestSchemaEvolution:
             when_not_matched_insert={"v": F.col("s.v")},
         )
         assert cat.read("flat").where(F.col("pid") == 4).count() == 1
+
+    def test_merge_into_rejected_update_leaves_table_unwidened(
+        self, spark, landsat_scenes, tmp_path
+    ):
+        """A merge_into that widens the schema AND updates a partition
+        column is rejected before the widening commits: after the
+        ValueError, the columns and the version list are unchanged."""
+        from eodatadown_spark.catalog import ParquetCatalog
+
+        cat = ParquetCatalog(spark, str(tmp_path), retain_versions=4)
+        cat.write(landsat_scenes, "landsat_scenes")
+        cols = cat.read("landsat_scenes").columns
+        versions = cat.list_versions("landsat_scenes")
+        src = landsat_scenes.where(F.col("pid") == 1).withColumn(
+            "quality_score", F.lit(0.9)
+        )
+        with pytest.raises(ValueError, match="partition-source"):
+            cat.merge_into(
+                "landsat_scenes", src, on=["pid"],
+                when_matched_update={"p_year": F.lit(1999)},
+                schema_evolution="add",
+            )
+        assert cat.read("landsat_scenes").columns == cols
+        assert cat.list_versions("landsat_scenes") == versions
 
 
 def test_catalog_compact_zorder_clusters_files(spark, landsat_scenes, tmp_path):

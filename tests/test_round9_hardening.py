@@ -193,6 +193,32 @@ class TestReplaceDerived:
         got = {r["pid"]: r["n"] for r in cat.read("flat").collect()}
         assert got == {0: 100, 1: 100, 2: 100, 3: 100}
 
+    def test_value_error_in_build_fn_is_not_retried(self, spark, tmp_path):
+        """A ValueError from build_fn is a validation error, never conflict
+        fallout: it surfaces after ONE call even when the pointer moved
+        during the build."""
+        from eodatadown_spark.catalog import ParquetCatalog
+
+        cat = ParquetCatalog(spark, str(tmp_path), retain_versions=4)
+        cat.write(
+            spark.createDataFrame([(1, "a")], "pid long, v string"),
+            "flat", partition=False,
+        )
+        calls = {"n": 0}
+
+        def build_fn(cur):
+            calls["n"] += 1
+            # a competing commit moves the pointer, then the build rejects
+            ParquetCatalog(spark, str(tmp_path), retain_versions=4).write(
+                spark.createDataFrame([(2, "b")], "pid long, v string"),
+                "flat", partition=False,
+            )
+            raise ValueError("bad fold input")
+
+        with pytest.raises(ValueError, match="bad fold input"):
+            cat.replace_derived("flat", build_fn, partition=False)
+        assert calls["n"] == 1
+
     def test_apply_neardup_batch_routes_clusters_through_occ(
         self, spark, tmp_path, monkeypatch
     ):
