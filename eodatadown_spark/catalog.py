@@ -330,7 +330,6 @@ class ParquetCatalog:
 
     def _write_version(
         self, df: DataFrame, table: str, partition: bool = True,
-        cluster_partitions: bool = True,
     ) -> tuple[str, str]:
         """Materialize ``df`` into a freshly CLAIMED (exclusive) version dir
         without flipping the pointer; the caller commits under
@@ -344,18 +343,14 @@ class ParquetCatalog:
             writer = df.write.mode("append")
             if partition and part_src is not None and part_src in df.columns:
                 df = _with_parts(df, part_src, self._part_cols)
-                if cluster_partitions:
-                    # cluster rows by the partition dirs before the write:
-                    # without it every input task emits a file into every
-                    # p_year(/p_month) dir, so files ~= tasks x partitions
-                    # — the classic small-files write.  REBALANCE (AQE)
-                    # both coalesces small dirs to ~one advisory-sized
-                    # file and SPLITS an oversized year across tasks,
-                    # where a plain repartition would bottleneck a hot
-                    # year on one task.  Callers that size files
-                    # deliberately (compact / z-order rewrites) pass
-                    # cluster_partitions=False to keep their layout.
-                    df = df.hint("rebalance", *self._part_cols)
+                # cluster rows by the partition dirs before the write:
+                # without it every input task emits a file into every
+                # p_year(/p_month) dir, so files ~= tasks x partitions —
+                # the classic small-files write.  REBALANCE (AQE) both
+                # coalesces small dirs to ~one advisory-sized file and
+                # SPLITS an oversized year across tasks, where a plain
+                # repartition would bottleneck a hot year on one task.
+                df = df.hint("rebalance", *self._part_cols)
                 writer = df.write.mode("append").partitionBy(*self._part_cols)
             writer.parquet(out)
         except Exception:
@@ -473,7 +468,7 @@ class ParquetCatalog:
         return version, out
 
     def write(self, df: DataFrame, table: str, partition: bool = True,
-              occ_retries: int = 5, cluster_partitions: bool = True) -> None:
+              occ_retries: int = 5) -> None:
         """Atomically replace `table` with `df` (new version dir + pointer
         flip).  The version dir is claimed exclusively (atomic mkdir) and
         the flip happens under the commit lock, so a full replace can race
@@ -491,7 +486,7 @@ class ParquetCatalog:
         replace is LWW: the retry still flips last)."""
         self._commit(
             table, "write",
-            lambda: self._write_version(df, table, partition, cluster_partitions),
+            lambda: self._write_version(df, table, partition),
             occ_retries,
         )
 
@@ -886,89 +881,6 @@ class ParquetCatalog:
 
         self._commit(table, "append", build, occ_retries)
 
-    def changes_since(self, table: str, version: int, keys=("pid",)) -> DataFrame:
-        """Change feed: CDC rows (keys + change_type) between a retained
-        historical version and the CURRENT table — ``diff_snapshots`` over
-        time travel, so a downstream consumer can ask "what changed since
-        the version I last saw?" instead of re-reading the table.
-
-        Only versions inside the retention window are diffable (raise
-        ``retain_versions`` for longer-lived consumers).
-        """
-        from eodatadown_spark.operators.merge import diff_snapshots
-
-        old = self.read_version(table, version)
-        new = self.read(table)
-        # drop() ignores absent columns, so flat tables pass through
-        return diff_snapshots(
-            old.drop("p_year", "p_month"), new.drop("p_year", "p_month"), list(keys)
-        )
-
-    def compact(
-        self,
-        table: str,
-        target_rows_per_file: int = 1_000_000,
-        zorder_by: list[str] | None = None,
-        zorder_ranges: list[tuple[float, float]] | None = None,
-        zorder_bits: int = 12,
-    ) -> None:
-        """Rewrite `table` with right-sized files — the maintenance pass for
-        catalogs that accumulated small part files from repeated selective
-        merges (each merge_updates append adds files to changed partitions).
-
-        One full versioned write sized by row count per output file; at
-        100 TB run it per-partition on a schedule, exactly like table-format
-        OPTIMIZE jobs.  Safe under the same pointer-flip atomicity as write().
-
-        ``zorder_by=[col, ...]`` additionally CLUSTERS the rewrite on the
-        N-dim Morton key of those columns (``OPTIMIZE ... ZORDER BY`` on the
-        plain-parquet catalog):
-        range-partition on the key + in-partition sort, so each output file
-        covers a compact Z-curve interval and parquet min/max stats prune
-        scans filtered on ANY subset of the clustered columns.
-        ``zorder_ranges`` gives each column's (lo, hi) quantization range;
-        when omitted they are measured with one min/max aggregate.  The key
-        is computed on the fly and never stored — layout, not schema.
-        """
-        df = self.read_clean(table)
-        n = df.count()
-        n_files = max(1, -(-n // target_rows_per_file))
-        if not zorder_by:
-            self.write(
-                df.repartition(n_files), table, cluster_partitions=False
-            )
-            return
-        from eodatadown_spark.spatial import zorder_key_n
-
-        if zorder_ranges is None:
-            row = df.agg(
-                *[F.min(c).cast("double").alias(f"__lo_{i}") for i, c in enumerate(zorder_by)],
-                *[F.max(c).cast("double").alias(f"__hi_{i}") for i, c in enumerate(zorder_by)],
-            ).first()
-            zorder_ranges = [
-                (row[f"__lo_{i}"], row[f"__hi_{i}"])
-                for i in range(len(zorder_by))
-            ]
-            # constant or all-NULL columns measure a degenerate span, which
-            # zorder_key_n rightly refuses — widen to a unit span (every
-            # row lands in cell 0; the other dimensions still cluster)
-            zorder_ranges = [
-                (lo, hi)
-                if lo is not None and hi is not None and hi > lo
-                else ((lo or 0.0), (lo or 0.0) + 1.0)
-                for lo, hi in zorder_ranges
-            ]
-        z = zorder_key_n(
-            [F.col(c).cast("double") for c in zorder_by],
-            zorder_ranges, zorder_bits,
-        )
-        self.write(
-            df.repartitionByRange(n_files, z.alias("__z"))
-            .sortWithinPartitions(z.alias("__z")),
-            table,
-            cluster_partitions=False,
-        )
-
     def read_clean(self, table: str) -> DataFrame:
         """Read without the physical partition column(s)."""
         return self.read(table).drop("p_year", "p_month")
@@ -1015,107 +927,6 @@ class ParquetCatalog:
             table, os.path.join(self._table_dir(table), f"v_{version}")
         )
 
-    def file_stats(self, table: str, columns: list[str] | None = None) -> list[dict]:
-        """Per-file min/max manifest from the parquet footers — the
-        data-skipping index table formats keep in their transaction log,
-        derived here directly from the files (footer reads only, no data
-        scan).  Returns one dict per data file:
-        ``{"path", "rows", "<col>_min", "<col>_max", ...}``; a column with
-        no usable statistics in some file yields None bounds there (the
-        pruner must treat that file as always-matching).
-
-        Footer reads are driver-side by design: a manifest is metadata —
-        O(files), not O(rows) — exactly like reading a Delta log.  At very
-        large file counts, persist the result as a catalog table and
-        refresh it incrementally per commit.
-        """
-        import pyarrow.parquet as pq
-
-        root = self.data_path(table)
-        out = []
-        for dirpath, _dirs, files in os.walk(root):
-            for fname in sorted(files):
-                if not fname.endswith(".parquet"):
-                    continue
-                fpath = os.path.join(dirpath, fname)
-                meta = pq.ParquetFile(fpath).metadata
-                names = [meta.schema.column(i).name for i in range(meta.num_columns)]
-                want = columns if columns is not None else names
-                entry: dict = {"path": fpath, "rows": meta.num_rows}
-                mins: dict = {}
-                maxs: dict = {}
-                for rg in range(meta.num_row_groups):
-                    row_group = meta.row_group(rg)
-                    for ci in range(row_group.num_columns):
-                        name = names[ci]
-                        if name not in want:
-                            continue
-                        st = row_group.column(ci).statistics
-                        if st is None or not st.has_min_max:
-                            mins[name] = maxs[name] = None
-                            continue
-                        if mins.get(name, st.min) is not None:
-                            mins[name] = min(mins.get(name, st.min), st.min)
-                            maxs[name] = max(maxs.get(name, st.max), st.max)
-                for name in want:
-                    if name in names:
-                        entry[f"{name}_min"] = mins.get(name)
-                        entry[f"{name}_max"] = maxs.get(name)
-                out.append(entry)
-        return out
-
-    def read_pruned(self, table: str, bounds: dict[str, tuple]) -> DataFrame:
-        """Manifest-pruned read: keep only files whose per-column [min, max]
-        intervals INTERSECT every requested ``{col: (lo, hi)}`` bound (None
-        end = open), read just those paths, and re-apply the exact range
-        predicate — so the file pruning is a performance fact, never a
-        correctness input.  Files without usable stats for a bounded column
-        are conservatively kept.
-
-        The payoff compounds with :meth:`compact`'s ``zorder_by``: after a
-        Z-order rewrite each file covers a compact key interval, so a
-        selective range predicate keeps a handful of files out of thousands
-        — the scan-level half of data skipping that partition pruning
-        (p_year/p_month) can't express for non-partition columns.
-        """
-        stats = self.file_stats(table, list(bounds))
-        keep = []
-        for entry in stats:
-            ok = True
-            for col, (lo, hi) in bounds.items():
-                fmin = entry.get(f"{col}_min")
-                fmax = entry.get(f"{col}_max")
-                if fmin is None or fmax is None:
-                    continue  # no stats → cannot exclude
-                if (hi is not None and fmin > hi) or (lo is not None and fmax < lo):
-                    ok = False
-                    break
-            if ok:
-                keep.append(entry["path"])
-        if not keep:
-            df = self.read(table).limit(0)
-        else:
-            root = self.data_path(table)
-            stored = self._read_schema_sidecar(root)
-            # basePath keeps the hive partition columns (p_year/p_month)
-            # when reading explicit leaf-file paths, so the pruned frame's
-            # schema matches read()'s and bounds on partition columns apply
-            reader = self.spark.read.option("basePath", root)
-            if stored is not None:
-                reader = reader.schema(stored)
-            df = reader.parquet(*keep)
-        for col, (lo, hi) in bounds.items():
-            if col not in df.columns:
-                raise ValueError(
-                    f"read_pruned bound on unknown column {col!r} "
-                    f"(table {table!r} has {df.columns})"
-                )
-            if lo is not None:
-                df = df.where(F.col(col) >= F.lit(lo))
-            if hi is not None:
-                df = df.where(F.col(col) <= F.lit(hi))
-        return df
-
     def fsck(self, table: str) -> dict:
         """Catalog health report for `table`: pointer validity, orphan
         version dirs (above the pointer — crashed writes), GC candidates
@@ -1157,35 +968,6 @@ class ParquetCatalog:
         }
 
     # -- bucketed tables (scale path: shuffle-free co-located joins) -------
-    def write_bucketed(
-        self,
-        df: DataFrame,
-        table: str,
-        bucket_col: str = "pid",
-        n_buckets: int = 16,
-    ) -> None:
-        """Persist as a bucketed managed table so repeated joins/aggs on
-        `bucket_col` (scene⋈plugin_results, obs-date bridges) need no
-        exchange.  Bucketing requires the table catalog (saveAsTable); the
-        data lands under spark.sql.warehouse.dir.
-        """
-        self.spark.sql(f"DROP TABLE IF EXISTS eodd_{table}")
-        # a stale location without a metastore entry (fresh session, old
-        # warehouse dir) blocks saveAsTable — clear it
-        warehouse = self.spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-        stale = os.path.join(warehouse.removeprefix("file:"), f"eodd_{table}")
-        shutil.rmtree(stale, ignore_errors=True)
-        (
-            df.write.mode("overwrite")
-            .bucketBy(n_buckets, bucket_col)
-            .sortBy(bucket_col)
-            .format("parquet")
-            .saveAsTable(f"eodd_{table}")
-        )
-
-    def read_bucketed(self, table: str) -> DataFrame:
-        return self.spark.table(f"eodd_{table}")
-
     def _bucketed_ident(self, name: str) -> tuple[str, str]:
         """(path, session table name) for an EXTERNAL bucketed snapshot of
         ``name``.  The table name hashes the catalog root so two catalogs
@@ -1205,13 +987,12 @@ class ParquetCatalog:
         n_buckets: int = 16,
     ) -> str:
         """Publish ``df`` as an EXTERNAL bucketed parquet snapshot INSIDE
-        the catalog root (unlike :meth:`write_bucketed`, which lands a
-        managed table in the session warehouse).  External + re-registered
-        per session (:meth:`read_bucketed_snapshot`) is what lets separate
-        CLI processes share the bucket layout without a persistent
-        metastore: Spark encodes the bucket id in each file name, so a
-        fresh session can re-declare ``CLUSTERED BY`` over the same files
-        and get shuffle-free probe joins on the bucket keys.
+        the catalog root, never in the session warehouse.  External +
+        re-registered per session (:meth:`read_bucketed_snapshot`) is
+        what lets separate CLI processes share the bucket layout without
+        a persistent metastore: Spark encodes the bucket id in each file
+        name, so a fresh session can re-declare ``CLUSTERED BY`` over the
+        same files and get shuffle-free probe joins on the bucket keys.
 
         This is a PUBLISH face, not the source of truth — the OCC catalog
         table stays authoritative; republish after every fold.  Replace is
@@ -1232,10 +1013,13 @@ class ParquetCatalog:
         # ignores underscore-prefixed names), so a reader can never apply
         # a stale/wrong bucket spec to these files — declaring the wrong
         # CLUSTERED BY over existing bucket files mis-assigns rows to
-        # buckets and a bucketed join silently LOSES matches
+        # buckets and a bucketed join silently LOSES matches.  The schema
+        # rides along too: an empty frame writes no parquet file, so
+        # there is no footer to infer it from
         with open(os.path.join(path, "_bucket_spec.json"), "w",
                   encoding="utf-8") as fh:
-            json.dump({"bucket_cols": cols, "n_buckets": n_buckets}, fh)
+            json.dump({"bucket_cols": cols, "n_buckets": n_buckets,
+                       "schema": df.schema.jsonValue()}, fh)
         return path
 
     def read_bucketed_snapshot(
@@ -1246,14 +1030,14 @@ class ParquetCatalog:
     ) -> DataFrame:
         """Open a :meth:`publish_bucketed_snapshot` table from ANY session:
         re-register the external bucketed definition over the snapshot path
-        (schema inferred from the parquet footer) and return the table
-        scan, bucketing info intact.
+        and return the table scan, bucketing info intact.
 
         The snapshot's own ``_bucket_spec.json`` is AUTHORITATIVE over the
-        caller's ``bucket_cols``/``n_buckets`` (which serve as the
-        fallback for pre-spec snapshots): declaring a wrong CLUSTERED BY
-        over existing bucket files would mis-assign rows to buckets and a
-        bucketed join would silently LOSE matches.
+        caller's ``bucket_cols``/``n_buckets`` and carries the schema (the
+        caller's args and a parquet-footer schema serve as the fallback
+        for snapshots published before the spec held them): declaring a
+        wrong CLUSTERED BY over existing bucket files would mis-assign rows
+        to buckets and a bucketed join would silently LOSE matches.
 
         The session registration is unconditionally dropped and recreated
         from the CURRENT sidecar + parquet footer on every read (ADVICE
@@ -1261,17 +1045,23 @@ class ParquetCatalog:
         long-lived session reuse a stale old-spec/old-schema registration
         after another process republished the snapshot — the exact silent
         row-loss the spec sidecar exists to prevent.  The registration is
-        metadata-only (external table, schema from one footer read), so
+        metadata-only (external table, schema from the sidecar), so
         recreating per read costs milliseconds, not a scan."""
         cols = [bucket_cols] if isinstance(bucket_cols, str) else list(bucket_cols)
         path, tbl = self._bucketed_ident(name)
         spec_path = os.path.join(path, "_bucket_spec.json")
+        spec = {}
         if os.path.exists(spec_path):
             with open(spec_path, encoding="utf-8") as fh:
                 spec = json.load(fh)
             cols, n_buckets = spec["bucket_cols"], spec["n_buckets"]
         self.spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        sch = self.spark.read.parquet(path).schema
+        if "schema" in spec:
+            from pyspark.sql import types as T
+
+            sch = T.StructType.fromJson(spec["schema"])
+        else:
+            sch = self.spark.read.parquet(path).schema
         ddl = ", ".join(
             f"`{f.name}` {f.dataType.simpleString()}" for f in sch.fields
         )

@@ -28,9 +28,3 @@ def parse_yyyyddd(col: Column | str) -> Column:
     eodatadownGEDIsensor.py:403-417)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.to_date(c.substr(1, 7), "yyyyDDD")
-
-
-def yyyymmdd(col: Column | str) -> Column:
-    """C4: strftime('%Y%m%d') render."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.date_format(c, "yyyyMMdd")

@@ -240,13 +240,6 @@ def shingle_hash_table(
     )
 
 
-def shingle_hashes(shingles: Column) -> Column:
-    """xxhash64 each shingle reduced mod the 31-bit prime → array<bigint>."""
-    return F.transform(
-        shingles, lambda s: F.pmod(F.xxhash64(s), F.lit(MINHASH_PRIME))
-    )
-
-
 def minhash_signature(hashes: Column, num_perm: int = 32, seed: int = 42) -> Column:
     """array<bigint> signature: sig[i] = min over shingle hashes of
     (a_i*(h mod p) + b_i) mod p.  The incoming 62-bit shingle identity is
@@ -1053,65 +1046,6 @@ def substring_contamination(
     )
 
 
-def substring_contamination_multi(
-    corpus: DataFrame,
-    needles: list[tuple[int, str]],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    batch_needles: int = 500,
-) -> DataFrame:
-    """Many-needle variant of :func:`substring_contamination`.
-
-    The BNLJ `contains` path evaluates O(docs × needles) containment checks
-    — right for eval-sized needle sets, wrong for 10⁵+ canary/plagiarism
-    corpora.  This path ships the needle list to executors once (closure
-    broadcast) and screens each document with COMPILED ALTERNATION REGEXES
-    (the stdlib stand-in for an Aho-Corasick automaton), ``batch_needles``
-    per pattern to bound pattern size.  The regex is a PREFILTER only — a
-    batch whose pattern fires verifies each of its needles exactly
-    (alternation alone under-reports overlapping/same-position matches) —
-    so clean documents, the overwhelming majority in decontamination, cost
-    one linear scan per batch instead of n_needles containment checks.
-    Arrow-batched mapInPandas; output matches the BNLJ variant:
-    (doc_id, needle_id) per containment hit.
-    """
-    import re as _re
-
-    import pandas as pd
-
-    # same empty-needle rule as the BNLJ variant: '' matches everything
-    needles = [(nid, s) for nid, s in needles if s]
-    batch_specs = [
-        (
-            needles[i : i + batch_needles],
-            "|".join(
-                _re.escape(s) for _, s in needles[i : i + batch_needles]
-            ),
-        )
-        for i in range(0, len(needles), batch_needles)
-    ]
-
-    def scan(iterator):
-        compiled = [(batch, _re.compile(pat)) for batch, pat in batch_specs]
-        for pdf in iterator:
-            out_doc, out_needle = [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                if text is None:
-                    continue
-                for batch, rx in compiled:
-                    if rx.search(text) is None:
-                        continue
-                    for nid, s in batch:
-                        if s in text:
-                            out_doc.append(did)
-                            out_needle.append(nid)
-            yield pd.DataFrame({"doc_id": out_doc, "needle_id": out_needle})
-
-    return corpus.select(id_col, text_col).mapInPandas(
-        scan, schema="doc_id long, needle_id long"
-    )
-
-
 def decontaminate(
     corpus: DataFrame,
     benchmark: DataFrame,
@@ -1455,20 +1389,6 @@ def _union_find_label_rows(node_ids, edge_rows) -> list[tuple]:
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)  # min-id survives as root
     return [(nid, find(nid)) for nid in node_ids]
-
-
-def _driver_union_find(nodes: DataFrame, pairs: DataFrame) -> DataFrame:
-    """DataFrame face of :func:`_union_find_label_rows` (collects both
-    relations; the r13 fused-collect callers bypass this and feed the
-    core directly)."""
-    node_ids = [r[0] for r in nodes.collect()]
-    rows = _union_find_label_rows(
-        node_ids, ((r[0], r[1]) for r in pairs.collect())
-    )
-    id_type = nodes.schema[0].dataType.simpleString()
-    return nodes.sparkSession.createDataFrame(
-        rows, schema=f"id {id_type}, lbl {id_type}"
-    )
 
 
 def cdc_chunks(
@@ -2869,7 +2789,7 @@ def jaccard_prefix_probe_parts(
     frozen-order prefix rows are exactly what an index maintainer appends
     after the probe (see streaming.incremental.apply_prefix_batch), so
     exposing the pinned relations saves re-shingling and re-ranking the
-    batch a second time per micro-batch."""
+    batch a second time."""
     if materialize not in ("auto", "checkpoint", "local", "none"):
         raise ValueError(f"unknown materialize mode {materialize!r}")
     new_base = _pin_mode(

@@ -1,7 +1,7 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Images/audio/video ride as `binary` columns with a metadata struct; decode /
-feature-extract / resize / frame-sample are Arrow-batched `mapInPandas`
+feature-extract / frame-sample are Arrow-batched `mapInPandas`
 stages.  The image/audio codec libraries are NOT in this container, so the
 format-decode kernels are STUBBED with a deterministic fake (clearly
 marked); the Spark-side plumbing — schema, partitioning, UDF signature,
@@ -86,72 +86,6 @@ def extract_features(media: DataFrame, batch_hint: int | None = None) -> DataFra
     if batch_hint:
         df = df.repartition(batch_hint)
     return ensure_min_parallelism(df).mapInPandas(_run, schema=FEATURE_SCHEMA)
-
-
-def resize_media(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize stage for image rows: Arrow-batched mapInPandas emitting the
-    same MEDIA_SCHEMA shape with rewritten payload + meta.
-
-    The resample kernel is STUBBED (no PIL in this image) as a deterministic
-    byte transform — payload truncated/cycled to width*height bytes — so the
-    contract a real `Image.resize` drop-in must satisfy (payload size =
-    target dims, meta updated, non-image rows pass through untouched) is
-    executable and tested.  Payloads stream executor-side in record batches;
-    nothing passes through the driver.
-    """
-    out_schema = MEDIA_SCHEMA
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        target = width * height
-
-        def _resize_row(row):
-            if row["kind"] != "image" or row["payload"] is None:
-                return row
-            p = bytes(row["payload"])
-            # STUB resample: cycle/truncate to the target byte count
-            row["payload"] = (p * (target // max(len(p), 1) + 1))[:target] if p else b"\x00" * target
-            meta = dict(row["meta"]) if row["meta"] is not None else {}
-            meta["width"], meta["height"] = width, height
-            row["meta"] = meta
-            return row
-
-        for pdf in batches:
-            yield pd.DataFrame([_resize_row(dict(r)) for _, r in pdf.iterrows()])
-
-    return ensure_min_parallelism(media).mapInPandas(_run, schema=out_schema)
-
-
-def audio_windows(
-    media: DataFrame, window_ms: int = 1000, bytes_per_sample: int = 2
-) -> DataFrame:
-    """Windowing plan for audio rows: explode fixed-duration window indices
-    covering the payload (octet_length / (sample_rate·bytes_per_sample)
-    samples) — pure Catalyst arithmetic, the chunking stage an audio
-    feature-extraction pipeline fans out over before per-window decode.
-    """
-    n_samples = F.floor(
-        F.octet_length("payload") / F.lit(bytes_per_sample)
-    ).cast("long")
-    win = F.greatest(
-        (F.col("meta.sample_rate").cast("long") * window_ms / 1000).cast("long"),
-        F.lit(1).cast("long"),
-    )
-    n_win = F.ceil(n_samples.cast("double") / win).cast("long")
-    return (
-        media.where(
-            (F.col("kind") == "audio")
-            # empty/NULL payload or NULL sample_rate has no decodable window:
-            # emit zero rows, never a phantom win_idx=0 over no data
-            & F.col("payload").isNotNull()
-            & (F.octet_length("payload") > 0)
-            & F.col("meta.sample_rate").isNotNull()
-        )
-        .select(
-            "media_id",
-            F.explode(F.sequence(F.lit(0).cast("long"), n_win - 1)).alias("win_idx"),
-            win.alias("win_samples"),
-        )
-    )
 
 
 def sample_frames(media: DataFrame, every_n: int = 10) -> DataFrame:

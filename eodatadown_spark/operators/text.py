@@ -361,22 +361,6 @@ def redact_pii(
     )
 
 
-def profile_documents(documents: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-document metric projection — single narrow pass."""
-    c = F.col(text_col)
-    return documents.select(
-        "doc_id",
-        char_count(c).alias("n_chars"),
-        token_count(c).alias("n_tokens"),
-        F.round(punct_ratio(c), 4).alias("punct_ratio"),
-        F.round(mean_token_len(c), 4).alias("mean_token_len"),
-        stopword_hits(c).alias("stopword_hits"),
-        language_guess(c).alias("lang_guess"),
-        F.round(quality_score(c), 4).alias("quality"),
-        fingerprint(c).alias("fingerprint"),
-    )
-
-
 WINNOW_HEX_LEN = 15  # 60-bit md5-prefix gram hash — the dedup.py convention
 # (identical hex in every engine, so oracles recompute the full scheme)
 

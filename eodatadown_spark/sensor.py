@@ -371,8 +371,19 @@ class SensorBase:
         new_rows = run_plugins(self.scenes(), self.plugin_results(), plugins).persist()
         try:
             n = new_rows.count()  # materialize plugin execution once
-            merged = self.plugin_results().unionByName(new_rows)
-            self.catalog.write(merged, self.plugin_table, partition=False)
+            if not self.catalog.exists(self.plugin_table):
+                # first-ever creation is single-writer, like init_sensor_db
+                self.catalog.write(
+                    self.plugin_results(), self.plugin_table, partition=False
+                )
+            # the union derives from the stored rows, so it commits through
+            # the base-checked flip: a concurrent plugin_results commit makes
+            # this rebuild on top of it instead of flipping a stale union
+            self.catalog.replace_derived(
+                self.plugin_table,
+                lambda cur: cur.unionByName(new_rows),
+                partition=False,
+            )
         finally:
             new_rows.unpersist()
         return n
@@ -380,22 +391,26 @@ class SensorBase:
     # -- bucketed publication (100 TB scheduling path) ---------------------
     def publish_bucketed(self, n_buckets: int = 16) -> None:
         """Publish the scene table (bucketed by ``pid``) and plugin_results
-        (bucketed by ``scene_pid``) as managed bucketed tables so the J2
-        scheduling join — scenes ⋈ plugin_results, ref
+        (bucketed by ``scene_pid``) as external bucketed snapshots inside
+        the catalog root (:meth:`ParquetCatalog.publish_bucketed_snapshot`)
+        so the J2 scheduling join — scenes ⋈ plugin_results, ref
         eodatadownlandsatgoogsensor.py:1611-1646 — and any other pid-keyed
-        join run with zero exchanges.  Re-run after catalog writes that
-        should be visible to bucketed readers (bucketed copies are a
-        publication snapshot, not the transactional catalog)."""
-        self.catalog.write_bucketed(self.scenes(), self.table, "pid", n_buckets)
-        self.catalog.write_bucketed(
+        join run with zero exchanges, from this or any later process.
+        Re-run after catalog writes that should be visible to bucketed
+        readers (bucketed copies are a publication snapshot, not the
+        transactional catalog)."""
+        self.catalog.publish_bucketed_snapshot(
+            self.scenes(), self.table, "pid", n_buckets
+        )
+        self.catalog.publish_bucketed_snapshot(
             self.plugin_results(), self.plugin_table, "scene_pid", n_buckets
         )
 
     def scenes_bucketed(self) -> DataFrame:
-        return self.catalog.read_bucketed(self.table)
+        return self.catalog.read_bucketed_snapshot(self.table, "pid")
 
     def plugin_results_bucketed(self) -> DataFrame:
-        return self.catalog.read_bucketed(self.plugin_table)
+        return self.catalog.read_bucketed_snapshot(self.plugin_table, "scene_pid")
 
     def get_scnlist_usr_analysis_bucketed(self, plugins: Sequence[str]) -> DataFrame:
         """J2 over the bucketed publication: same semantics as

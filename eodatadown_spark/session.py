@@ -52,37 +52,6 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
-def enable_runtime_row_filters(
-    spark: SparkSession,
-    application_side_scan_threshold: str = "10GB",
-    creation_side_threshold: str = "10MB",
-) -> SparkSession:
-    """Turn on Catalyst's runtime BLOOM-FILTER join pruning for shuffle
-    joins: when one join side carries a selective filter, the optimizer
-    injects ``bloom_filter_agg`` over its keys and a ``might_contain``
-    filter on the other side's SCAN — rows that cannot match are dropped
-    before the shuffle instead of after it.  The big-cluster lever for
-    selective fact⋈fact joins that AQE alone cannot pre-filter (broadcast
-    joins don't need it; DPP covers partition columns).
-
-    Thresholds are runtime confs: the application side must be scanning at
-    least ``application_side_scan_threshold`` (pruning tiny scans costs
-    more than it saves) and the creation side must aggregate to at most
-    ``creation_side_threshold`` of bloom state.  Plan-asserted in
-    tests/test_plans.py.
-    """
-    spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-    spark.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-        application_side_scan_threshold,
-    )
-    spark.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-        creation_side_threshold,
-    )
-    return spark
-
-
 def get_spark(
     app_name: str = "eodatadown_spark",
     master: str | None = None,

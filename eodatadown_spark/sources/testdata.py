@@ -36,10 +36,6 @@ TABLES = (
 DEFAULT_SF_DIR = "/root/testdata/sf0.1"
 
 
-def sf_dir_from_env() -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     apply_runtime_confs(spark)
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
@@ -47,9 +43,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view so queries can be written in SQL."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

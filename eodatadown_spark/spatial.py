@@ -39,16 +39,6 @@ def find_sensor_tiles(lut: DataFrame, roi: DataFrame, tile_cols: list[str]) -> D
     return lut.join(roi_b, cond, "left_semi").select(*tile_cols).distinct()
 
 
-def point_in_bbox(lon: F.Column, lat: F.Column, roi_row) -> F.Column:
-    """Exact point-in-rectangle test for ROI membership checks."""
-    return (
-        (lon >= F.lit(roi_row["west_lon"]))
-        & (lon <= F.lit(roi_row["east_lon"]))
-        & (lat >= F.lit(roi_row["south_lat"]))
-        & (lat <= F.lit(roi_row["north_lat"]))
-    )
-
-
 def zorder_key(
     x: F.Column | str,
     y: F.Column | str,

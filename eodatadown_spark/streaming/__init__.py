@@ -1,1 +1,1 @@
-"""Streaming-shaped operators (SURVEY.md §2.9)."""
+"""Incremental and windowed operators (SURVEY.md §2.9)."""

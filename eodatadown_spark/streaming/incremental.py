@@ -1,71 +1,17 @@
-"""Incremental / streaming ingest semantics (T1-T5).
+"""Incremental ingest semantics (T1-T5) and the incremental index folds.
 
-The reference runs batch-on-cron with stored high-watermarks; the same
-semantics are offered two ways:
-
-- batch: :func:`eodatadown_spark.ingest.watermark` +
-  :func:`filter_above_watermark` (T1), dropDuplicates-on-key (T2),
-  keep-latest window (T3);
-- streaming: a Structured Streaming pipeline over a file source with
-  event-time watermarking and keyed dedup, for when the catalog feed is a
-  real stream.
+The reference runs batch-on-cron with stored high-watermarks:
+:func:`eodatadown_spark.ingest.watermark` + :func:`filter_above_watermark`
+(T1), dropDuplicates-on-key (T2), keep-latest window (T3).  This module
+holds the windowed and sessionized rollups (T4/T5), which also accept a
+streaming DataFrame, and the ``apply_*_batch`` cores that fold one batch
+into stored index state (the ``dedupindex``/``spanindex --apply`` CLIs).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def stream_ingest(
-    spark: SparkSession,
-    path: str,
-    schema,
-    ts_col: str,
-    key_cols: list[str],
-    lateness: str = "1 day",
-) -> DataFrame:
-    """readStream → watermark → keyed dedup: T1+T2 as a live stream.
-
-    `dropDuplicates` under a watermark keeps state bounded — late duplicates
-    beyond `lateness` age out of the state store (the streaming analog of the
-    reference's idempotent keyed insert J5).
-    """
-    return (
-        spark.readStream.schema(schema)
-        .parquet(path)
-        .withWatermark(ts_col, lateness)
-        .dropDuplicates([*key_cols, ts_col])
-    )
-
-
-def stream_dedup_fingerprint(
-    spark: SparkSession,
-    path: str,
-    schema,
-    ts_col: str,
-    text_col: str = "text",
-    lateness: str = "1 day",
-) -> DataFrame:
-    """Streaming exact-dedup for a document feed: md5 content fingerprint →
-    ``dropDuplicatesWithinWatermark`` on the fingerprint.
-
-    The training-data dedup pass as a live stream: the first arrival of each
-    content fingerprint survives; re-arrivals within the watermark horizon
-    are dropped, and fingerprint state ages out past `lateness` — bounded
-    state at any corpus rate, unlike a plain dropDuplicates whose key state
-    grows forever.
-    """
-    from eodatadown_spark.operators.text import fingerprint
-
-    return (
-        spark.readStream.schema(schema)
-        .parquet(path)
-        .withColumn("__fp", fingerprint(F.col(text_col)))
-        .withWatermark(ts_col, lateness)
-        .dropDuplicatesWithinWatermark(["__fp"])
-        .drop("__fp")
-    )
 
 
 def windowed_event_counts(
@@ -146,47 +92,6 @@ def sessionize(
     )
 
 
-def stream_interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    key_cols: list[str],
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    min_gap: float = 0.0,
-    max_gap: float = 600.0,
-    lateness: str = "10 minutes",
-) -> DataFrame:
-    """Stream-stream bounded interval join: pairs with equal keys and
-    ``min_gap < right.ts - left.ts <= max_gap`` seconds, as a LIVE join of
-    two streams — the streaming counterpart of
-    :func:`eodatadown_spark.operators.temporal.range_join`.
-
-    Both sides are watermarked and the join condition carries explicit
-    time bounds, which is exactly what lets Spark bound the state store:
-    a buffered left row is droppable once the watermark passes
-    ``left.ts + max_gap``, a right row once it passes ``right.ts - min_gap``
-    — without the range condition the state would grow forever.  Output
-    columns: keys, both timestamps, ``gap_s``.
-
-    Also valid on batch DataFrames (the condition degrades to a plain
-    theta join there — prefer range_join's bucketed form for batch scale).
-    """
-    l = left.withWatermark(left_ts, lateness).alias("l")
-    r = right.withWatermark(right_ts, lateness).alias("r")
-    conds = [f"l.{k} = r.{k}" for k in key_cols] + [
-        f"r.{right_ts} > l.{left_ts} + INTERVAL '{float(min_gap)}' SECOND",
-        f"r.{right_ts} <= l.{left_ts} + INTERVAL '{float(max_gap)}' SECOND",
-    ]
-    joined = l.join(r, F.expr(" AND ".join(conds)))
-    gap = F.col(f"r.{right_ts}").cast("double") - F.col(f"l.{left_ts}").cast("double")
-    return joined.select(
-        *[F.col(f"l.{k}").alias(k) for k in key_cols],
-        F.col(f"l.{left_ts}").alias("left_ts"),
-        F.col(f"r.{right_ts}").alias("right_ts"),
-        F.round(gap, 6).alias("gap_s"),
-    )
-
-
 def session_blocks(usage_log: DataFrame) -> DataFrame:
     """T4: reconstruct start/end blocks from the append-only usage log —
     running count of start_block markers forms the session id (window
@@ -205,95 +110,16 @@ def session_blocks(usage_log: DataFrame) -> DataFrame:
     )
 
 
-def events_file_stream(
-    spark: SparkSession,
-    path: str,
-    schema=None,
-    max_files_per_trigger: int = 1,
-) -> DataFrame:
-    """Rate-limited file-stream source for an events feed (T1's streaming
-    half): ``readStream`` over a directory that files land in, with
-    ``maxFilesPerTrigger`` bounding every micro-batch — the file-drop shape
-    (a downloader writes a file per fetch; the stream drains the directory
-    in bounded batches, oldest first, offsets checkpointed by the sink).
-
-    Feed the result to :func:`stream_merge_into` for continuous upsert into
-    a catalog table, or to the windowed/sessionized aggregations — the
-    source composes with any of them.  ``schema`` comes from the caller or,
-    when omitted, from a one-shot batch probe of the files already present
-    (a directory that starts empty needs the explicit schema).
-    """
-    if schema is None:
-        schema = spark.read.parquet(path).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(path)
-    )
-
-
-def stream_merge_into(
-    catalog,
-    table: str,
-    stream_df: DataFrame,
-    on: list[str],
-    checkpoint_dir: str,
-    dedup_order_col: str | None = None,
-    available_now: bool = True,
-    **merge_kwargs,
-):
-    """Continuous MERGE INTO a catalog table from a stream — the streaming
-    upsert pattern table formats expose as ``foreachBatch`` + MERGE.
-
-    Each micro-batch passes through ``ParquetCatalog.merge_into`` (same
-    clause kwargs), so a live feed keeps a catalog table current with
-    update/delete/insert semantics instead of append-only.  When a batch can
-    carry several rows per key, ``dedup_order_col`` keeps the latest per key
-    first (MERGE requires unique matched source keys).
-
-    Delivery is at-least-once per batch (checkpointed offsets; a crashed
-    batch replays) — merges whose updates set ABSOLUTE values are therefore
-    exactly-once in effect; increment-style updates are not idempotent and
-    don't belong here.
-
-    ``available_now=True`` (default) drains what exists and stops — the
-    cron-shaped catch-up run; pass False for a continuously-running query
-    (micro-batches as data arrives).  Returns the started StreamingQuery;
-    caller owns termination.
-    """
-    from pyspark.sql import Window
-
-    def _apply(batch_df: DataFrame, _batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
-        src = batch_df
-        if dedup_order_col is not None:
-            w = Window.partitionBy(*on).orderBy(F.col(dedup_order_col).desc())
-            src = (
-                src.withColumn("__rn", F.row_number().over(w))
-                .where(F.col("__rn") == 1)
-                .drop("__rn")
-            )
-        catalog.merge_into(table, src, on, **merge_kwargs)
-
-    writer = stream_df.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def _frees_scope_pins(fn):
     """Free the localCheckpoint blocks a fold created, once it commits.
 
     Every ``apply_*_batch`` pins per-batch intermediates (pair sets, delta
     sketches) for the OCC commit, and pinned blocks are NEVER auto-freed —
-    in a continuous stream (foreachBatch calling these once per
-    micro-batch, for days) block-manager memory would ratchet up by one
-    batch's pins per batch until eviction pressure strangles the
-    executors.  The wrapper snapshots the session's persistent-RDD ids at
-    entry and unpersists everything NEW in a finally: the folds return
+    a long-lived session calling these once per batch would ratchet
+    block-manager memory up by one batch's pins per batch until eviction
+    pressure strangles the executors.  The wrapper snapshots the session's
+    persistent-RDD ids at entry and unpersists everything NEW in a
+    finally: the folds return
     plain dicts (counts computed before return) and their durable effects
     are catalog commits, so no caller ever needs the pins afterwards.
 
@@ -338,11 +164,10 @@ def apply_neardup_batch(
     """Fold ONE document batch into the stored continuous-dedup state:
     probe the banded MinHash index (never re-banding the corpus), append
     the batch's index/fingerprint rows, and update the cluster
-    assignments — the shared core of the ``dedupindex --apply`` CLI and
-    :func:`stream_neardup_apply`.
+    assignments — the core of the ``dedupindex --apply`` CLI.
 
-    REPLAY-SAFE by construction, which is what makes it a valid
-    at-least-once streaming sink body: index/fingerprint appends anti-join
+    REPLAY-SAFE by construction, so a crashed apply is repaired by
+    re-running the same batch: index/fingerprint appends anti-join
     out already-stored doc ids (a replayed batch adds nothing), the
     clusters table — the one probes consult for canonical answers —
     commits LAST (a crash mid-apply leaves harmless extra index rows, not
@@ -372,9 +197,9 @@ def apply_neardup_batch(
     )
     catalog.append(fingerprint_table, new_fp_rows)
     # clusters DERIVE from the table's own contents, so the commit is a
-    # base-checked OCC replace (ADVICE r8): two concurrent appliers (a CLI
-    # --apply overlapping a stream batch) serialize — the loser re-reads
-    # the winner's assignments and re-folds its pinned pair set, instead
+    # base-checked OCC replace (ADVICE r8): two concurrent appliers (two
+    # CLI --apply runs) serialize — the loser re-reads the winner's
+    # assignments and re-folds its pinned pair set, instead
     # of last-writer-wins silently dropping one fold
     # both pins go through the _pin policy (ADVICE r9): with
     # SPARK_GRAFT_CHECKPOINT_DIR set they become RELIABLE checkpoints, so
@@ -424,7 +249,7 @@ def apply_prefix_batch(
     fps = catalog.read(fingerprint_table)
     # probe_parts exposes the probe's pinned batch relations so the
     # appends below reuse them — the batch is shingled and frozen-order
-    # ranked ONCE per micro-batch, not twice
+    # ranked ONCE per batch, not twice
     pairs, new_base, new_prefix = D.jaccard_prefix_probe_parts(
         batch, prefix, freq, fps, id_col=id_col, text_col=text_col, k=k,
         threshold=threshold,
@@ -488,294 +313,6 @@ def apply_simhash_batch(
         partition=False,
     )
     return {"batch_docs": batch.count(), "new_pairs": pairs.count()}
-
-
-def stream_neardup_apply(
-    catalog,
-    stream_docs: DataFrame,
-    checkpoint_dir: str,
-    available_now: bool = True,
-    family: str = "minhash",
-    **batch_kwargs,
-):
-    """Continuous near-duplicate maintenance as a Structured Streaming
-    pipeline: each micro-batch of documents runs
-    :func:`apply_neardup_batch` — stored-index probe → index/fingerprint
-    append → touched-component cluster update — so the dedup state stays
-    current as documents land, without ever re-walking the corpus.
-
-    The streaming face of the round-7 continuous-dedup lifecycle
-    (minhash_neardup_against_index + update_clusters): delivery is
-    at-least-once per micro-batch (checkpointed source offsets; a crashed
-    batch replays), and apply_neardup_batch is replay-idempotent, so the
-    stored state converges exactly-once in effect.  Micro-batches run
-    serially (one foreachBatch at a time), so batch N+1's probe always
-    sees batch N's index rows.
-
-    ``stream_docs`` is any streaming DataFrame of (doc_id, text, ...) —
-    typically :func:`events_file_stream`-style ``readStream.parquet`` over
-    a drop directory with ``maxFilesPerTrigger`` bounding batch size.
-    ``available_now=True`` drains what exists and stops (the cron-shaped
-    catch-up); False keeps the query live.  Returns the started
-    StreamingQuery; caller owns termination.
-
-    ``family`` selects the stored-index flavor — all three share the
-    serial-micro-batch and replay-idempotence properties; ``batch_kwargs``
-    must match the chosen core's signature:
-
-    - ``"minhash"`` (default): :func:`apply_neardup_batch`
-      (k / num_perm / bands / jaccard_threshold / table names);
-    - ``"prefix"``: :func:`apply_prefix_batch` — exact Jaccard against
-      the stored prefix index (k / threshold / table names);
-    - ``"simhash"``: :func:`apply_simhash_batch` — Hamming-banded single
-      table (max_hamming / band_bits / n_bits / table names).
-    """
-    families = {
-        "minhash": apply_neardup_batch,
-        "prefix": apply_prefix_batch,
-        "simhash": apply_simhash_batch,
-    }
-    if family not in families:
-        raise ValueError(
-            f"unknown dedup family {family!r}: {'|'.join(families)}"
-        )
-    apply_fn = families[family]
-
-    def _apply(batch_df: DataFrame, _batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
-        apply_fn(catalog, batch_df, **batch_kwargs)
-
-    writer = stream_docs.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_classify_score(
-    weights_path: str,
-    stream_docs: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-    threshold: float | None = None,
-):
-    """Continuous quality scoring as Structured Streaming: each micro-batch
-    is scored with the STORED weights artifact (the ``classify`` CLI's
-    --train output) and lands under ``out_dir``; with ``threshold`` set only
-    rows at/above it survive (the streaming --gate).
-
-    The weights JSON is read once at setup — scoring is a deterministic
-    pure function of the artifact, so retraining + the CLI's atomic rename
-    rotates the model and the next stream start picks it up.  Per-batch
-    feature aggregation is bounded by the micro-batch (foreachBatch), so
-    there is no unbounded streaming-aggregation state to watermark.
-
-    REPLAY IDEMPOTENCE: each batch writes ``out_dir/batch=<id>`` with
-    overwrite — a crashed-and-replayed micro-batch rewrites the same
-    partition with the same deterministic rows instead of appending
-    duplicates, so at-least-once delivery converges exactly-once in
-    effect (the same contract as stream_neardup_apply, without needing
-    the OCC catalog).  Read the result with
-    ``spark.read.parquet(out_dir)``.
-    """
-    import json as _json
-
-    from eodatadown_spark.operators.classify import score_documents
-
-    with open(weights_path, encoding="utf-8") as fh:
-        meta = _json.load(fh)
-
-    def _score(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
-        scored = score_documents(
-            batch_df,
-            meta["weights"],
-            id_col=meta.get("id_col", "doc_id"),
-            text_col=meta.get("text_col", "text"),
-            binary=meta.get("binary", False),
-        )
-        if threshold is not None:
-            scored = scored.where(F.col("prob") >= threshold)
-        scored.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
-
-    writer = stream_docs.writeStream.foreachBatch(_score).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-@_frees_scope_pins
-def apply_count_min_batch(
-    catalog,
-    batch: DataFrame,
-    value_col: str = "token",
-    depth: int = 4,
-    width: int = 512,
-    cms_table: str = "cms_counters",
-    batch_id: int | None = None,
-) -> dict:
-    """Fold ONE value batch into a stored Count-Min state table: sketch
-    the batch (merge.build_count_min), then counter-ADD it into the
-    catalog table through ``replace_derived`` — the base-checked OCC flip,
-    so concurrent appliers serialize and no fold is lost (the same commit
-    discipline as the dedup folds).  The batch sketch is pinned before
-    the OCC loop: a conflict retry re-reads stored state but never
-    re-scans the batch.
-
-    REPLAY IDEMPOTENCE: counter addition is not naturally idempotent (a
-    replayed batch would double-add), so when ``batch_id`` is given a
-    SENTINEL row (``cms_row = -1, cms_bucket = batch_id``) commits in the
-    SAME replace_derived flip as the fold — a replay sees its sentinel in
-    the current state and returns it unchanged.  Sentinels live outside
-    the probe rows (estimates only ever read cms_row 0..depth−1).
-
-    Bootstrap contract: first-ever table creation is single-writer (like
-    ``dedupindex --build``) — concurrent creators race last-writer-wins;
-    streaming micro-batches run serially, so the stream itself is safe.
-
-    Returns {"batch_mass": ..., "table_counters": ..., "applied": bool}.
-    """
-    from eodatadown_spark.operators.dedup import _pin
-    from eodatadown_spark.operators.merge import build_count_min, merge_count_min
-
-    delta = _pin(build_count_min(batch, value_col, depth=depth, width=width))
-    spark = batch.sparkSession
-    sentinel = (
-        None
-        if batch_id is None
-        else spark.createDataFrame(
-            [(-1, int(batch_id), 1)], "cms_row int, cms_bucket bigint, cnt long"
-        )
-    )
-    applied = {"v": True}
-
-    def _fold(current: DataFrame) -> DataFrame:
-        if sentinel is not None and current.where(
-            (F.col("cms_row") == -1) & (F.col("cms_bucket") == int(batch_id))
-        ).take(1):
-            applied["v"] = False
-            return current
-        merged = merge_count_min(current, delta)
-        return merged.unionByName(sentinel) if sentinel is not None else merged
-
-    if catalog.exists(cms_table):
-        catalog.replace_derived(cms_table, _fold, partition=False)
-    else:
-        first = (
-            delta.unionByName(sentinel) if sentinel is not None else delta
-        )
-        catalog.write(first, cms_table, partition=False)
-    stored = catalog.read(cms_table).where(F.col("cms_row") >= 0)
-    mass = delta.agg(F.sum("cnt").alias("m")).first()["m"]
-    return {
-        "batch_mass": int(mass),
-        "table_counters": stored.count(),
-        "applied": applied["v"],
-    }
-
-
-def stream_count_min_apply(
-    catalog,
-    stream_values: DataFrame,
-    checkpoint_dir: str,
-    available_now: bool = True,
-    **batch_kwargs,
-):
-    """Continuous frequency-sketch maintenance as Structured Streaming:
-    each micro-batch counter-adds into the stored CMS through
-    :func:`apply_count_min_batch`.  Because CMS merge is EXACT addition,
-    the drained stream's state equals a one-pass build over everything
-    that flowed through — the test pins that equality, counter for
-    counter.  Micro-batches run serially (one foreachBatch at a time),
-    and the per-batch sentinel (apply_count_min_batch's batch_id) makes
-    replays no-ops, so at-least-once delivery converges exactly-once in
-    effect — the stream_neardup_apply contract."""
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
-        apply_count_min_batch(
-            catalog, batch_df, batch_id=batch_id, **batch_kwargs
-        )
-
-    writer = stream_values.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-@_frees_scope_pins
-def apply_bloom_batch(
-    catalog,
-    batch: DataFrame,
-    value_col: str = "token",
-    n_hashes: int = 4,
-    n_bits: int = 4096,
-    bloom_table: str = "bloom_bits",
-) -> dict:
-    """Fold ONE value batch into a stored Bloom state table: filter the
-    batch (merge.build_bloom), union-distinct it into the catalog table
-    through ``replace_derived`` — the same base-checked OCC flip as the
-    CMS fold, so concurrent appliers serialize and no bit is lost.
-
-    Unlike counter addition, set union is NATURALLY idempotent: a
-    replayed batch re-unions the same positions and leaves the state
-    bit-identical, so no sentinel machinery is needed — at-least-once
-    delivery converges exactly-once in effect by algebra alone.
-
-    Returns {"batch_bits": ..., "table_bits": ...}.
-    """
-    from eodatadown_spark.operators.dedup import _pin
-    from eodatadown_spark.operators.merge import build_bloom, merge_bloom
-
-    delta = _pin(build_bloom(batch, value_col, n_hashes, n_bits))
-
-    def _fold(current: DataFrame) -> DataFrame:
-        return merge_bloom(current, delta)
-
-    if catalog.exists(bloom_table):
-        catalog.replace_derived(bloom_table, _fold, partition=False)
-    else:
-        catalog.write(delta, bloom_table, partition=False)
-    return {
-        "batch_bits": delta.count(),
-        "table_bits": catalog.read(bloom_table).count(),
-    }
-
-
-def stream_bloom_apply(
-    catalog,
-    stream_values: DataFrame,
-    checkpoint_dir: str,
-    available_now: bool = True,
-    **batch_kwargs,
-):
-    """Continuous membership-filter maintenance as Structured Streaming:
-    each micro-batch union-folds into the stored Bloom filter through
-    :func:`apply_bloom_batch`.  Because Bloom merge is exact set union,
-    the drained stream's state equals a one-pass build over everything
-    that flowed through — bit for bit — and replays are no-ops by
-    idempotence of union (no sentinel needed)."""
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
-        apply_bloom_batch(catalog, batch_df, **batch_kwargs)
-
-    writer = stream_values.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 @_frees_scope_pins
@@ -847,33 +384,3 @@ def apply_span_index_batch(
         "table_rows": stored.count(),
         "applied": applied["v"],
     }
-
-
-def stream_span_index_apply(
-    catalog,
-    stream_docs: DataFrame,
-    checkpoint_dir: str,
-    available_now: bool = True,
-    **batch_kwargs,
-):
-    """Continuous span-index maintenance as Structured Streaming: each
-    micro-batch counter-adds into the stored window-hash index through
-    :func:`apply_span_index_batch` — the drained stream's state equals a
-    one-pass span_hash_index over everything that flowed through,
-    counter for counter, and per-batch sentinels make replays no-ops
-    (the stream_count_min_apply contract).  Probing stays batch-side:
-    dedup.duplicated_spans_against_index over the maintained table."""
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
-        apply_span_index_batch(
-            catalog, batch_df, batch_id=batch_id, **batch_kwargs
-        )
-
-    writer = stream_docs.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

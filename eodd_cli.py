@@ -174,9 +174,9 @@ def cmd_dedupindex(args) -> None:
 
     CONCURRENCY CONTRACT: --apply commits are race-safe (index/fingerprint
     appends are OCC + replay-idempotent; the clusters fold commits through
-    replace_derived's base-checked flip), so concurrent --apply runs and
-    stream_neardup_apply batches serialize without losing folds.  --build
-    is a from-scratch SINGLE-WRITER replace of all three state tables: it
+    replace_derived's base-checked flip), so concurrent --apply runs
+    serialize without losing folds.  --build is a from-scratch
+    SINGLE-WRITER replace of all three state tables: it
     must not run concurrently with --apply — an apply landing between
     --build's three writes would fold into state --build is about to
     replace.  Rebuild quiesced, like reindexing any store.
@@ -829,8 +829,9 @@ def cmd_corpusstats(args) -> None:
 
 
 def cmd_bucketize(args) -> None:
-    """Publish scenes + plugin_results as bucketed managed tables so pid-keyed
-    joins (J2 scheduling) run shuffle-free at scale."""
+    """Publish scenes + plugin_results as external bucketed snapshots inside
+    the catalog root so pid-keyed joins (J2 scheduling) run shuffle-free at
+    scale, in this process or any later one."""
     from eodatadown_spark.sensor import get_sensor_obj
 
     cat = _cat(args)

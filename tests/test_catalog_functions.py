@@ -135,36 +135,6 @@ def test_monthly_partitioning_and_month_selective_merge(spark, landsat_scenes, t
     assert "p_month" not in df.columns  # read_clean strips both levels
 
 
-def test_catalog_compact_reduces_files(spark, landsat_scenes, tmp_path):
-    from eodatadown_spark.catalog import ParquetCatalog
-
-    cat = ParquetCatalog(spark, str(tmp_path))
-    # 8 shuffle partitions → up to 8 small part files inside the year dir
-    # (cluster_partitions=False reproduces the pre-r13 fragmented layout a
-    # catalog accumulates from selective merge appends — a normal write()
-    # now REBALANCEs on the partition dirs and wouldn't fragment)
-    cat.write(
-        landsat_scenes.repartition(8), "landsat_scenes",
-        cluster_partitions=False,
-    )
-
-    def parquet_files(path):
-        return [
-            os.path.join(dp, f)
-            for dp, _, fs in os.walk(path)
-            for f in fs
-            if f.endswith(".parquet")
-        ]
-
-    before = len(parquet_files(cat.data_path("landsat_scenes")))
-    assert before > 1
-    cat.compact("landsat_scenes")
-    after = len(parquet_files(cat.data_path("landsat_scenes")))
-    assert after < before
-    df = cat.read_clean("landsat_scenes")
-    assert df.count() == 7  # contents survive the rewrite
-
-
 def test_catalog_write_clusters_partition_dirs(spark, landsat_scenes, tmp_path):
     """A plain write() clusters rows by the partition dirs (REBALANCE):
     a many-task input frame must NOT fan out into files ~= tasks x years
@@ -342,56 +312,6 @@ def test_windowed_event_counts_batch(spark):
     assert out == {(0, "click"): 2, (1, "view"): 1}
 
 
-def test_stream_ingest_dedup(spark, tmp_path):
-    """Structured Streaming path: file source → watermark → keyed dedup →
-    memory sink, driven synchronously."""
-    from eodatadown_spark.streaming.incremental import stream_ingest
-
-    src = str(tmp_path / "stream_src")
-    rows = [
-        (1, dt.datetime(2024, 1, 1, 0, 0), "a"),
-        (1, dt.datetime(2024, 1, 1, 0, 0), "a-dup"),
-        (2, dt.datetime(2024, 1, 1, 0, 5), "b"),
-    ]
-    spark.createDataFrame(rows, "key long, ts timestamp, payload string").write.parquet(src)
-    stream = stream_ingest(
-        spark, src, "key long, ts timestamp, payload string", "ts", ["key"]
-    )
-    q = (stream.writeStream.format("memory").queryName("ingested")
-         .outputMode("append").start())
-    try:
-        q.processAllAvailable()
-        got = spark.sql("SELECT key FROM ingested ORDER BY key").collect()
-        assert [r["key"] for r in got] == [1, 2]
-    finally:
-        q.stop()
-
-
-def test_stream_dedup_fingerprint(spark, tmp_path):
-    """Streaming content-dedup: same text re-arriving (even with a different
-    doc_id) is dropped; distinct content passes."""
-    from eodatadown_spark.streaming.incremental import stream_dedup_fingerprint
-
-    src = str(tmp_path / "doc_stream")
-    rows = [
-        (1, dt.datetime(2024, 1, 1, 0, 0), "Hello, World!"),
-        (2, dt.datetime(2024, 1, 1, 0, 1), "hello world"),   # same fp as 1 (normalized)
-        (3, dt.datetime(2024, 1, 1, 0, 2), "something else"),
-    ]
-    spark.createDataFrame(rows, "doc_id long, ts timestamp, text string").write.parquet(src)
-    stream = stream_dedup_fingerprint(
-        spark, src, "doc_id long, ts timestamp, text string", "ts"
-    )
-    q = (stream.writeStream.format("memory").queryName("docs_deduped")
-         .outputMode("append").start())
-    try:
-        q.processAllAvailable()
-        got = sorted(r["doc_id"] for r in spark.sql("SELECT doc_id FROM docs_deduped").collect())
-        assert len(got) == 2 and 3 in got and (1 in got or 2 in got)
-    finally:
-        q.stop()
-
-
 def test_run_plugins_success_and_error(spark, landsat_scenes, plugin_results_df):
     from eodatadown_spark.plugins import run_plugins
 
@@ -414,31 +334,6 @@ def test_run_plugins_success_and_error(spark, landsat_scenes, plugin_results_df)
     assert okr["success"] and json.loads(okr["extended_info"]) == {"n": 1}
 
 
-def test_multimodal_resize_and_audio_windows(spark):
-    from eodatadown_spark.operators.multimodal import MEDIA_SCHEMA, audio_windows, resize_media
-
-    rows = [
-        {"media_id": 1, "kind": "image", "payload": b"\x01\x02\x03",
-         "meta": {"width": 3, "height": 1, "sample_rate": None, "n_frames": None, "format": "fake"}},
-        {"media_id": 2, "kind": "audio", "payload": b"\x00" * 64000,
-         "meta": {"width": None, "height": None, "sample_rate": 16000, "n_frames": None, "format": "pcm16"}},
-    ]
-    media = spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
-
-    resized = {r["media_id"]: r for r in resize_media(media, 4, 2).collect()}
-    img = resized[1]
-    assert len(img["payload"]) == 8  # width*height bytes
-    assert img["meta"]["width"] == 4 and img["meta"]["height"] == 2
-    assert bytes(img["payload"])[:3] == b"\x01\x02\x03"  # stub cycles source bytes
-    aud = resized[2]
-    assert len(aud["payload"]) == 64000  # non-image rows pass through
-
-    # 64000 bytes @ 2 B/sample = 32000 samples; 1 s windows @16 kHz → 2 windows
-    wins = audio_windows(media, window_ms=1000).collect()
-    assert [r["win_idx"] for r in sorted(wins, key=lambda r: r["win_idx"])] == [0, 1]
-    assert all(r["win_samples"] == 16000 and r["media_id"] == 2 for r in wins)
-
-
 def test_multimodal_feature_extraction(spark):
     from eodatadown_spark.operators.multimodal import MEDIA_SCHEMA, extract_features, sample_frames
 
@@ -454,27 +349,6 @@ def test_multimodal_feature_extraction(spark):
     assert abs(feats[1]["feature"][0] - 0x10 / 255.0) < 1e-6
     frames = [r["frame_idx"] for r in sample_frames(media, every_n=10).collect()]
     assert frames == [0, 10, 20]
-
-
-def test_audio_windows_skip_empty_and_null(spark):
-    from eodatadown_spark.operators.multimodal import MEDIA_SCHEMA, audio_windows
-
-    rows = [
-        {"media_id": 1, "kind": "audio", "payload": b"",
-         "meta": {"width": None, "height": None, "sample_rate": 16000, "n_frames": None, "format": "pcm16"}},
-        {"media_id": 2, "kind": "audio", "payload": None,
-         "meta": {"width": None, "height": None, "sample_rate": 16000, "n_frames": None, "format": "pcm16"}},
-        {"media_id": 3, "kind": "audio", "payload": b"\x00" * 32000,
-         "meta": {"width": None, "height": None, "sample_rate": None, "n_frames": None, "format": "pcm16"}},
-        {"media_id": 4, "kind": "audio", "payload": b"\x00" * 32000,
-         "meta": {"width": None, "height": None, "sample_rate": 16000, "n_frames": None, "format": "pcm16"}},
-    ]
-    media = spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
-    got = audio_windows(media, window_ms=1000).collect()
-    # only media 4 has decodable windows; empty/NULL payload and NULL
-    # sample_rate yield zero rows, never a phantom window
-    assert {r["media_id"] for r in got} == {4}
-    assert [r["win_idx"] for r in got] == [0]
 
 
 def test_merge_updates_crash_retry_and_p_year_guard(spark, landsat_scenes, tmp_path):
@@ -1234,118 +1108,6 @@ class TestSchemaEvolution:
         assert cat.list_versions("landsat_scenes") == versions
 
 
-def test_catalog_compact_zorder_clusters_files(spark, landsat_scenes, tmp_path):
-    """compact(zorder_by=...): the rewrite range-partitions on the Morton
-    key of the named columns and sorts within files, so per-file Z-key
-    intervals are DISJOINT (touching at boundaries at most) — the layout
-    property parquet min/max pruning needs.  Contents must survive
-    unchanged; the key is layout-only, never stored."""
-    from eodatadown_spark.catalog import ParquetCatalog
-    from eodatadown_spark.spatial import zorder_key_n
-
-    cat = ParquetCatalog(spark, str(tmp_path))
-    cat.write(landsat_scenes.repartition(8), "landsat_scenes")
-    cat.compact(
-        "landsat_scenes", target_rows_per_file=3,
-        zorder_by=["west_lon", "south_lat"],
-        zorder_ranges=[(-180.0, 180.0), (-90.0, 90.0)],
-    )
-    df = cat.read_clean("landsat_scenes")
-    assert df.count() == 7
-    assert "__z" not in df.columns and "__zorder" not in df.columns
-    files = [
-        os.path.join(dp, f)
-        for dp, _d, fs in os.walk(cat.data_path("landsat_scenes"))
-        for f in fs if f.endswith(".parquet")
-    ]
-    assert len(files) >= 2
-    z = zorder_key_n(
-        [F.col("west_lon").cast("double"), F.col("south_lat").cast("double")],
-        [(-180.0, 180.0), (-90.0, 90.0)], 12,
-    )
-    spans = []
-    for path in files:
-        row = spark.read.parquet(path).agg(
-            F.min(z).alias("lo"), F.max(z).alias("hi")).first()
-        if row["lo"] is not None:
-            spans.append((row["lo"], row["hi"]))
-    spans.sort()
-    for (lo_a, hi_a), (lo_b, _hi_b) in zip(spans, spans[1:]):
-        assert hi_a <= lo_b  # intervals never interleave
-
-
-class TestFileStatsPruning:
-    """Round-8: footer-derived file-stats manifest + manifest-pruned reads —
-    the scan-level data-skipping half that partition pruning can't express
-    for non-partition columns, compounding with compact(zorder_by=...)."""
-
-    def test_file_stats_min_max(self, spark, landsat_scenes, tmp_path):
-        from eodatadown_spark.catalog import ParquetCatalog
-
-        cat = ParquetCatalog(spark, str(tmp_path))
-        cat.write(landsat_scenes, "landsat_scenes")
-        stats = cat.file_stats("landsat_scenes", ["cloud_cover", "pid"])
-        assert stats and all(e["rows"] > 0 for e in stats)
-        lo = min(e["cloud_cover_min"] for e in stats)
-        hi = max(e["cloud_cover_max"] for e in stats)
-        real = landsat_scenes.agg(
-            F.min("cloud_cover"), F.max("cloud_cover")).first()
-        assert (lo, hi) == (real[0], real[1])
-
-    def test_read_pruned_skips_files_and_matches_full_scan(
-        self, spark, landsat_scenes, tmp_path
-    ):
-        from eodatadown_spark.catalog import ParquetCatalog
-
-        cat = ParquetCatalog(spark, str(tmp_path))
-        cat.write(landsat_scenes.repartition(8), "landsat_scenes")
-        # cluster on cloud_cover so file intervals become disjoint
-        cat.compact(
-            "landsat_scenes", target_rows_per_file=2,
-            zorder_by=["cloud_cover"], zorder_ranges=[(0.0, 100.0)],
-        )
-        n_files = len(cat.file_stats("landsat_scenes"))
-        assert n_files >= 3
-        pruned = cat.read_pruned("landsat_scenes", {"cloud_cover": (0.0, 10.0)})
-        # correctness: pruned read == full-scan filter, column-for-column
-        full = cat.read("landsat_scenes").where(
-            (F.col("cloud_cover") >= 0.0) & (F.col("cloud_cover") <= 10.0)
-        )
-        assert sorted(pruned.columns) == sorted(full.columns)
-        got = {r["pid"] for r in pruned.collect()}
-        want = {r["pid"] for r in full.collect()}
-        assert got == want and got  # non-empty and identical
-        # performance fact: the manifest excluded at least one file
-        stats = cat.file_stats("landsat_scenes", ["cloud_cover"])
-        kept = [
-            e for e in stats
-            if e["cloud_cover_min"] is None or e["cloud_cover_min"] <= 10.0
-        ]
-        assert len(kept) < n_files
-
-    def test_read_pruned_partition_column_bound(
-        self, spark, landsat_scenes, tmp_path
-    ):
-        """Bounds on the derived partition column must survive the
-        explicit-file-path read (basePath) and apply exactly."""
-        import datetime as dt
-
-        from eodatadown_spark.catalog import ParquetCatalog
-
-        two_year = landsat_scenes.withColumn(
-            "date_acquired",
-            F.when(F.col("pid") >= 4, F.lit(dt.date(2020, 3, 1))).otherwise(
-                F.col("date_acquired")
-            ),
-        )
-        cat = ParquetCatalog(spark, str(tmp_path))
-        cat.write(two_year, "landsat_scenes")
-        pruned = cat.read_pruned("landsat_scenes", {"p_year": (2020, 2020)})
-        assert {r["pid"] for r in pruned.collect()} == {4, 5, 6}
-        with pytest.raises(ValueError, match="unknown column"):
-            cat.read_pruned("landsat_scenes", {"nope": (0, 1)})
-
-
 def test_merge_into_insert_all_dunder_columns_exempt(spark, landsat_scenes, tmp_path):
     """__-prefixed source columns (the ephemeral-bookkeeping convention,
     e.g. a CDC __op marker) never trip the insert-all evolution guard and
@@ -1401,6 +1163,20 @@ def test_bucketed_snapshot_spec_is_authoritative(spark, tmp_path):
     detail = spark.sql(f"DESCRIBE TABLE EXTENDED {tbl}").toPandas()
     nb = detail[detail.col_name == "Num Buckets"].data_type.iloc[0]
     assert str(nb).strip() == "8"
+
+
+def test_bucketed_snapshot_of_empty_frame_reads_back(spark, tmp_path):
+    """An empty frame writes no parquet file, so the snapshot must carry
+    its own schema: J2 scheduling publishes plugin_results before any
+    plugin has run."""
+    from eodatadown_spark import schemas
+    from eodatadown_spark.catalog import ParquetCatalog
+
+    cat = ParquetCatalog(spark, str(tmp_path))
+    empty = spark.createDataFrame([], schema=schemas.PLUGIN_RESULTS)
+    cat.publish_bucketed_snapshot(empty, "plugin_results", "scene_pid", 4)
+    got = cat.read_bucketed_snapshot("plugin_results", "scene_pid")
+    assert got.columns == empty.columns and got.count() == 0
 
 
 def test_bucketed_snapshot_rereads_after_matching_republish(spark, tmp_path):

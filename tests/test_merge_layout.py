@@ -357,137 +357,6 @@ class TestCatalogMergeInto:
             )
 
 
-class TestStreamMergeInto:
-    def test_stream_merges_batches_into_catalog(self, spark, tmp_path):
-        from eodatadown_spark.catalog import ParquetCatalog
-        from eodatadown_spark.streaming.incremental import stream_merge_into
-
-        cat = ParquetCatalog(spark, str(tmp_path / "cat"))
-        schema = "k bigint, status string, qty double, seq bigint"
-        cat.write(
-            spark.createDataFrame(
-                [(1, "open", 10.0, 0), (2, "open", 20.0, 0), (3, "open", 30.0, 0)],
-                schema,
-            ),
-            "orders_live",
-            partition=False,
-        )
-        src = str(tmp_path / "feed")
-        # one file per batch; disjoint keys per file so any batch order
-        # converges to the same final state
-        spark.createDataFrame(
-            # key 1 updated twice IN the same batch: dedup_order_col keeps seq 2
-            [(1, "shipped", 11.0, 1), (1, "delivered", 12.0, 2)], schema
-        ).coalesce(1).write.parquet(src)
-        spark.createDataFrame(
-            [(4, "new", 40.0, 1)], schema
-        ).coalesce(1).write.mode("append").parquet(src)
-
-        q = stream_merge_into(
-            cat,
-            "orders_live",
-            spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src),
-            on=["k"],
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            dedup_order_col="seq",
-            when_matched_update={
-                "status": F.col("s.status"),
-                "qty": F.col("s.qty"),
-                "seq": F.col("s.seq"),
-            },
-        )
-        try:
-            q.awaitTermination(120)
-        finally:
-            q.stop()
-        rows = {r["k"]: r for r in cat.read_clean("orders_live").collect()}
-        assert set(rows) == {1, 2, 3, 4}
-        assert rows[1]["status"] == "delivered" and rows[1]["qty"] == 12.0
-        assert rows[2]["qty"] == 20.0
-        assert rows[4]["status"] == "new"
-
-    def test_events_file_stream_multibatch_parity(self, spark, tmp_path):
-        """End-to-end: the rate-limited events_file_stream source drains a
-        file-drop directory in maxFilesPerTrigger-bounded micro-batches
-        through stream_merge_into, and the final catalog state equals a
-        batch keep-latest ingest of the same files — streaming == batch on
-        the driver's real events table, including cross-file key overlaps
-        (later files update earlier rows)."""
-        import os
-        import time as _time
-
-        from eodatadown_spark.catalog import ParquetCatalog
-        from eodatadown_spark.streaming.incremental import (
-            events_file_stream,
-            stream_merge_into,
-        )
-
-        e = (
-            spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-            .select("event_id", "user_id", "event_type", "value")
-        )
-        # three overlapping slices: overlaps become MERGE updates
-        batches = [
-            (e.where("event_id < 400"), 0),
-            (e.where("event_id >= 300 AND event_id < 700")
-              .withColumn("value", F.col("value") + 100), 1),
-            (e.where("event_id >= 600")
-              .withColumn("value", F.col("value") + 200), 2),
-        ]
-        feed = str(tmp_path / "feed")
-        os.makedirs(feed)
-        for df, i in batches:
-            part = str(tmp_path / f"b{i}")
-            df.coalesce(1).write.parquet(part)
-            f = [p for p in os.listdir(part) if p.endswith(".parquet")][0]
-            dst = os.path.join(feed, f"f{i}.parquet")
-            os.rename(os.path.join(part, f), dst)
-            # distinct mtimes: the file source processes oldest-first
-            os.utime(dst, (1_000_000 + i * 60, 1_000_000 + i * 60))
-
-        cat = ParquetCatalog(spark, str(tmp_path / "cat"))
-        cat.write(e.limit(0), "events_live", partition=False)
-        stream = events_file_stream(spark, feed, schema=e.schema)
-        q = stream_merge_into(
-            cat,
-            "events_live",
-            stream,
-            on=["event_id"],
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            when_matched_update={
-                c: F.col(f"s.{c}") for c in e.columns if c != "event_id"
-            },
-        )
-        try:
-            q.awaitTermination(180)
-        finally:
-            q.stop()
-        # rate limiting produced one micro-batch per file
-        data_batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
-        assert len(data_batches) == 3
-
-        # batch-ingest oracle: union all files with their batch index,
-        # keep-latest per key (J4 window) — the same final state
-        from pyspark.sql import Window
-
-        u = None
-        for df, i in batches:
-            tagged = df.withColumn("__b", F.lit(i))
-            u = tagged if u is None else u.unionByName(tagged)
-        w = Window.partitionBy("event_id").orderBy(F.col("__b").desc())
-        expected = (
-            u.withColumn("__rn", F.row_number().over(w))
-            .where("__rn = 1")
-            .drop("__b", "__rn")
-        )
-        got = cat.read_clean("events_live")
-        assert got.count() == 1000
-        assert (
-            got.exceptAll(expected).count() == 0
-            and expected.exceptAll(got).count() == 0
-        )
-
-
 class TestMaintainRollup:
     def test_incremental_equals_full_recompute(self, spark):
         from eodatadown_spark.operators.merge import maintain_rollup
@@ -1039,23 +908,6 @@ class TestClusteredSplit:
         assert b1                           # systematic leak trips the sample
 
 
-def test_catalog_changes_since(spark, tmp_path):
-    from eodatadown_spark.catalog import ParquetCatalog
-
-    cat = ParquetCatalog(spark, str(tmp_path), retain_versions=3)
-    cat.write(
-        spark.createDataFrame([(1, "a"), (2, "b")], "pid bigint, v string"),
-        "tbl", partition=False,
-    )
-    cat.write(
-        spark.createDataFrame([(2, "B"), (3, "c")], "pid bigint, v string"),
-        "tbl", partition=False,
-    )
-    got = {r["pid"]: r["change_type"]
-           for r in cat.changes_since("tbl", 0, keys=("pid",)).collect()}
-    assert got == {1: "delete", 2: "update", 3: "insert"}
-
-
 def _py_zorder_n(vals, bits, ranges):
     n = 1 << bits
     k = len(vals)
@@ -1483,15 +1335,14 @@ class TestThetaSketchSetOps:
 
 class TestStreamNeardupApply:
     def test_streamed_batches_equal_from_scratch_rebuild(self, spark, tmp_path):
-        """Round-8 capstone: the continuous-dedup lifecycle as a Structured
-        Streaming pipeline.  Two document batches drain through
-        stream_neardup_apply (maxFilesPerTrigger=1 → two serial
-        micro-batches, batch 2's probe must see batch 1's index rows);
-        the final stored assignments must equal a from-scratch
-        neardup_clusters rebuild over the whole corpus."""
+        """Round-8 capstone: the continuous-dedup lifecycle.  Two document
+        batches fold through apply_neardup_batch one after the other
+        (batch 2's probe must see batch 1's index rows); the final stored
+        assignments must equal a from-scratch neardup_clusters rebuild
+        over the whole corpus."""
         from eodatadown_spark.catalog import ParquetCatalog
         from eodatadown_spark.operators import dedup as D
-        from eodatadown_spark.streaming.incremental import stream_neardup_apply
+        from eodatadown_spark.streaming.incremental import apply_neardup_batch
 
         base = "the quick brown fox jumps over the lazy dog " * 5
         corpus_rows = [
@@ -1519,21 +1370,8 @@ class TestStreamNeardupApply:
             partition=False,
         )
 
-        feed = str(tmp_path / "feed")
-        spark.createDataFrame(batch1_rows, schema).coalesce(1).write.parquet(feed)
-        spark.createDataFrame(batch2_rows, schema).coalesce(1).write.mode(
-            "append").parquet(feed)
-        q = stream_neardup_apply(
-            cat,
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1").parquet(feed),
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            **params,
-        )
-        try:
-            q.awaitTermination(180)
-        finally:
-            q.stop()
+        for rows in (batch1_rows, batch2_rows):
+            apply_neardup_batch(cat, spark.createDataFrame(rows, schema), **params)
 
         got = {
             r["doc_id"]: (r["cluster_id"], r["is_canonical"])
@@ -1560,13 +1398,13 @@ class TestStreamNeardupApply:
     def test_streamed_prefix_family_equals_from_scratch_rebuild(
         self, spark, tmp_path
     ):
-        """Round-10: the same two-serial-micro-batch drain through the
-        EXACT-Jaccard prefix index (family="prefix") — final stored
+        """Round-10: the same two serial batch folds through the
+        EXACT-Jaccard prefix index (apply_prefix_batch) — final stored
         assignments equal a from-scratch rebuild, and the frozen freq
-        table is untouched by the stream."""
+        table is untouched by the folds."""
         from eodatadown_spark.catalog import ParquetCatalog
         from eodatadown_spark.operators import dedup as D
-        from eodatadown_spark.streaming.incremental import stream_neardup_apply
+        from eodatadown_spark.streaming.incremental import apply_prefix_batch
 
         base = "the quick brown fox jumps over the lazy dog " * 5
         corpus_rows = [
@@ -1596,22 +1434,10 @@ class TestStreamNeardupApply:
             (r["sh"], r["__df"]) for r in cat.read("prefix_freq").collect()
         )
 
-        feed = str(tmp_path / "feed")
-        spark.createDataFrame(batch1_rows, schema).coalesce(1).write.parquet(feed)
-        spark.createDataFrame(batch2_rows, schema).coalesce(1).write.mode(
-            "append").parquet(feed)
-        q = stream_neardup_apply(
-            cat,
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1").parquet(feed),
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            family="prefix",
-            k=3, threshold=0.5,
-        )
-        try:
-            q.awaitTermination(180)
-        finally:
-            q.stop()
+        for rows in (batch1_rows, batch2_rows):
+            apply_prefix_batch(
+                cat, spark.createDataFrame(rows, schema), k=3, threshold=0.5
+            )
 
         got = {
             r["doc_id"]: (r["cluster_id"], r["is_canonical"])
@@ -1627,7 +1453,7 @@ class TestStreamNeardupApply:
         assert got == want
         assert got[200][0] == 1
         assert got[201] == (201, True)
-        # frozen order: the stream never rewrites the frequency table
+        # frozen order: the folds never rewrite the frequency table
         freq_after = sorted(
             (r["sh"], r["__df"]) for r in cat.read("prefix_freq").collect()
         )
@@ -1635,195 +1461,11 @@ class TestStreamNeardupApply:
         assert cat.read("fingerprints_exact").select("id").distinct().count() == 6
 
 
-class TestStreamClassifyScore:
-    def test_streamed_scores_equal_batch_and_replay_is_idempotent(
-        self, spark, tmp_path
-    ):
-        """Streaming face of the learned quality gate: two micro-batches
-        scored with a STORED weights artifact must equal batch scoring of
-        the union; re-running a drained stream with a fresh checkpoint
-        (the worst-case full replay) rewrites the same batch partitions
-        instead of duplicating rows."""
-        import json
-
-        from eodatadown_spark.operators import classify as C
-        from eodatadown_spark.streaming.incremental import stream_classify_score
-
-        schema = "doc_id long, text string"
-        train_rows = [
-            (i, "the quick brown fox jumps over a lazy dog", True)
-            for i in range(6)
-        ] + [
-            (i, "lorem ipsum dolor sit amet consectetur", False)
-            for i in range(6, 12)
-        ]
-        train = spark.createDataFrame(train_rows, schema + ", good boolean")
-        w = C.train_quality_classifier(
-            train, label=F.col("good"), n_features=16, iters=12, lr=8.0,
-            binary=True,
-        )
-        wpath = str(tmp_path / "w.json")
-        with open(wpath, "w") as fh:
-            json.dump({"weights": w, "binary": True, "id_col": "doc_id",
-                       "text_col": "text"}, fh)
-
-        b1 = [(100, "the quick brown fox arrives")]
-        b2 = [(200, "lorem ipsum dolor text"), (201, "a lazy dog sleeps")]
-        feed = str(tmp_path / "feed")
-        spark.createDataFrame(b1, schema).coalesce(1).write.parquet(feed)
-        spark.createDataFrame(b2, schema).coalesce(1).write.mode(
-            "append").parquet(feed)
-        out = str(tmp_path / "scored")
-
-        def drain(ckpt):
-            q = stream_classify_score(
-                wpath,
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", "1").parquet(feed),
-                out_dir=out,
-                checkpoint_dir=str(tmp_path / ckpt),
-            )
-            try:
-                q.awaitTermination(180)
-            finally:
-                q.stop()
-
-        drain("ckpt1")
-        got = {
-            r["doc_id"]: r["prob"] for r in spark.read.parquet(out).collect()
-        }
-        want = {
-            r["doc_id"]: r["prob"]
-            for r in C.score_documents(
-                spark.createDataFrame(b1 + b2, schema), w, binary=True
-            ).collect()
-        }
-        assert got == want
-
-        # full replay (fresh checkpoint): same partitions overwritten,
-        # zero duplicate rows
-        drain("ckpt2")
-        again = spark.read.parquet(out).collect()
-        assert len(again) == 3
-        assert {r["doc_id"]: r["prob"] for r in again} == want
-
-
-class TestStreamCountMinApply:
-    def test_streamed_sketch_equals_one_pass_build(self, spark, tmp_path):
-        """Two micro-batches counter-added into the stored CMS must equal
-        a one-pass build over the union, counter for counter (CMS merge is
-        exact addition — no tolerance)."""
-        from eodatadown_spark.catalog import ParquetCatalog
-        from eodatadown_spark.operators.merge import build_count_min
-        from eodatadown_spark.streaming.incremental import stream_count_min_apply
-
-        schema = "token string"
-        b1 = [("alpha",)] * 4 + [("beta",)] * 2
-        b2 = [("alpha",)] * 3 + [("gamma",)] * 5
-        feed = str(tmp_path / "cms_feed")
-        spark.createDataFrame(b1, schema).coalesce(1).write.parquet(feed)
-        spark.createDataFrame(b2, schema).coalesce(1).write.mode(
-            "append").parquet(feed)
-        cat = ParquetCatalog(spark, str(tmp_path / "cms_cat"))
-
-        q = stream_count_min_apply(
-            cat,
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1").parquet(feed),
-            checkpoint_dir=str(tmp_path / "cms_ckpt"),
-            depth=3,
-            width=32,
-        )
-        try:
-            q.awaitTermination(180)
-        finally:
-            q.stop()
-
-        def counters():
-            return {
-                (r["cms_row"], r["cms_bucket"]): r["cnt"]
-                for r in cat.read("cms_counters")
-                .where("cms_row >= 0")
-                .collect()
-            }
-
-        full = {
-            (r["cms_row"], r["cms_bucket"]): r["cnt"]
-            for r in build_count_min(
-                spark.createDataFrame(b1 + b2, schema), "token", 3, 32
-            ).collect()
-        }
-        assert counters() == full
-
-        # worst-case FULL replay (fresh checkpoint): the per-batch
-        # sentinels make every re-delivered batch a no-op — counters
-        # unchanged, no double-add
-        q2 = stream_count_min_apply(
-            cat,
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1").parquet(feed),
-            checkpoint_dir=str(tmp_path / "cms_ckpt2"),
-            depth=3,
-            width=32,
-        )
-        try:
-            q2.awaitTermination(180)
-        finally:
-            q2.stop()
-        assert counters() == full
-
-
-class TestStreamBloomApply:
-    def test_streamed_filter_equals_one_pass_build(self, spark, tmp_path):
-        """Two micro-batches union-folded into the stored Bloom must equal
-        a one-pass build over the union, bit for bit; a worst-case full
-        replay is a no-op by idempotence of set union (no sentinel)."""
-        from eodatadown_spark.catalog import ParquetCatalog
-        from eodatadown_spark.operators.merge import build_bloom
-        from eodatadown_spark.streaming.incremental import stream_bloom_apply
-
-        schema = "token string"
-        b1 = [("alpha",), ("beta",)]
-        b2 = [("alpha",), ("gamma",), ("delta",)]
-        feed = str(tmp_path / "bloom_feed")
-        spark.createDataFrame(b1, schema).coalesce(1).write.parquet(feed)
-        spark.createDataFrame(b2, schema).coalesce(1).write.mode(
-            "append").parquet(feed)
-        cat = ParquetCatalog(spark, str(tmp_path / "bloom_cat"))
-
-        def drain(ckpt):
-            q = stream_bloom_apply(
-                cat,
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", "1").parquet(feed),
-                checkpoint_dir=str(tmp_path / ckpt),
-                n_hashes=3,
-                n_bits=64,
-            )
-            try:
-                q.awaitTermination(180)
-            finally:
-                q.stop()
-
-        drain("bloom_ckpt")
-        full = {
-            r["bloom_bit"]
-            for r in build_bloom(
-                spark.createDataFrame(b1 + b2, schema), "token", 3, 64
-            ).collect()
-        }
-        bits = {r["bloom_bit"] for r in cat.read("bloom_bits").collect()}
-        assert bits == full
-
-        drain("bloom_ckpt2")  # full replay: union idempotence, unchanged
-        assert {r["bloom_bit"] for r in cat.read("bloom_bits").collect()} == full
-
-
 class TestStreamSpanIndexApply:
     def test_streamed_index_equals_one_pass_build(self, spark, tmp_path):
-        """Micro-batches counter-added into the stored span index must
-        equal a one-pass span_hash_index over the union (exact addition
-        under disjoint doc ids); full replay is a sentinel no-op; the
+        """Batches counter-added into the stored span index must equal a
+        one-pass span_hash_index over the union (exact addition under
+        disjoint doc ids); full replay is a sentinel no-op; the
         maintained table probes identically to a fresh build."""
         from eodatadown_spark.catalog import ParquetCatalog
         from eodatadown_spark.operators.dedup import (
@@ -1831,33 +1473,23 @@ class TestStreamSpanIndexApply:
             span_hash_index,
         )
         from eodatadown_spark.streaming.incremental import (
-            stream_span_index_apply,
+            apply_span_index_batch,
         )
 
         schema = "doc_id long, text string"
         shared = "s0 s1 s2 s3 s4 s5"
         b1 = [(1, shared + " a1 a2")]
         b2 = [(2, "b0 " + shared), (3, "unrelated words entirely here")]
-        feed = str(tmp_path / "span_feed")
-        spark.createDataFrame(b1, schema).coalesce(1).write.parquet(feed)
-        spark.createDataFrame(b2, schema).coalesce(1).write.mode(
-            "append").parquet(feed)
         cat = ParquetCatalog(spark, str(tmp_path / "span_cat"))
 
-        def drain(ckpt):
-            q = stream_span_index_apply(
-                cat,
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", "1").parquet(feed),
-                checkpoint_dir=str(tmp_path / ckpt),
-                window=4,
-            )
-            try:
-                q.awaitTermination(180)
-            finally:
-                q.stop()
+        def drain():
+            for batch_id, rows in enumerate((b1, b2)):
+                apply_span_index_batch(
+                    cat, spark.createDataFrame(rows, schema), window=4,
+                    batch_id=batch_id,
+                )
 
-        drain("span_ckpt")
+        drain()
 
         def counters():
             return {
@@ -1874,7 +1506,7 @@ class TestStreamSpanIndexApply:
         assert counters() == full
 
         # full replay: sentinels make every re-delivered batch a no-op
-        drain("span_ckpt2")
+        drain()
         assert counters() == full
 
         # the maintained table IS a valid probe target: a new batch
@@ -1891,13 +1523,11 @@ class TestStreamSpanIndexApply:
 def test_apply_batch_folds_free_their_pins(spark, tmp_path):
     """Continuous-operation memory contract: every apply_*_batch fold
     unpersists the blocks it pinned once its catalog commits land — a
-    stream calling these per micro-batch for days must not ratchet
+    session calling these once per batch for days must not ratchet
     block-manager memory up by one batch's pins per batch.  (Found via
     the round-12 bench: un-freed pins inflated late sections 3×.)"""
     from eodatadown_spark.catalog import ParquetCatalog
     from eodatadown_spark.streaming.incremental import (
-        apply_bloom_batch,
-        apply_count_min_batch,
         apply_span_index_batch,
     )
 
@@ -1908,14 +1538,10 @@ def test_apply_batch_folds_free_their_pins(spark, tmp_path):
         [(1, "alpha beta gamma delta alpha beta gamma delta")],
         "doc_id long, text string",
     )
-    toks = spark.createDataFrame([("alpha",), ("beta",)], "token string")
     r = apply_span_index_batch(cat, docs, window=4, batch_id=1)
     assert r["table_rows"] >= 1
-    apply_bloom_batch(cat, toks, "token", n_hashes=3, n_bits=64)
-    apply_count_min_batch(cat, toks, "token", depth=2, width=32, batch_id=1)
     after = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
     leaked = after - before
     assert not leaked, f"fold leaked pinned RDDs: {leaked}"
     # and the committed state is still readable (pins freed AFTER commit)
     assert cat.read("span_index").where("wh >= 0").count() >= 1
-    assert cat.read("bloom_bits").count() >= 1

@@ -205,7 +205,15 @@ def test_text_metrics_vs_python(spark):
         [(1, "The cat, and a dog!"), (2, "   "), (3, "xyzzy qwerty")],
         "doc_id long, text string",
     )
-    rows = {r["doc_id"]: r for r in X.profile_documents(df).collect()}
+    c = F.col("text")
+    rows = {r["doc_id"]: r for r in df.select(
+        "doc_id",
+        X.char_count(c).alias("n_chars"),
+        X.token_count(c).alias("n_tokens"),
+        X.punct_ratio(c).alias("punct_ratio"),
+        X.stopword_hits(c).alias("stopword_hits"),
+        X.language_guess(c).alias("lang_guess"),
+    ).collect()}
     assert rows[1]["n_tokens"] == 5
     assert rows[1]["n_chars"] == 19
     assert rows[1]["stopword_hits"] == 3  # 'the', 'and', 'a' ('cat,'/'dog!' carry punct)
@@ -959,30 +967,17 @@ def test_substring_contamination(spark):
     got = {(r["doc_id"], r["needle_id"])
            for r in D.substring_contamination(corpus, needles).collect()}
     assert got == {(1, 100), (3, 100)}
-
-
-def test_substring_contamination_multi_matches_bnlj(spark):
-    """The many-needle mapInPandas path must agree with the BNLJ variant,
-    including overlapping needles that a bare alternation regex misses."""
+    # overlapping needles in one document are each reported
     corpus = spark.createDataFrame(
-        [(1, "xx abcd yy"),        # contains both "abc" and "bcd" (overlap)
-         (2, "only abc here"),
-         (3, "clean row")],
+        [(1, "xx abcd yy"), (2, "only abc here"), (3, "clean row")],
         "doc_id long, text string",
     )
-    needle_rows = [(10, "abc"), (11, "bcd"), (12, "zzz")]
-    needles_df = spark.createDataFrame(needle_rows, "needle_id long, needle string")
-    want = {(r["doc_id"], r["needle_id"])
-            for r in D.substring_contamination(corpus, needles_df).collect()}
+    needles = spark.createDataFrame(
+        [(10, "abc"), (11, "bcd"), (12, "zzz")], "needle_id long, needle string"
+    )
     got = {(r["doc_id"], r["needle_id"])
-           for r in D.substring_contamination_multi(corpus, needle_rows).collect()}
-    assert want == {(1, 10), (1, 11), (2, 10)}
-    assert got == want
-    # batching boundary: 1 needle per regex batch must not change results
-    got_b1 = {(r["doc_id"], r["needle_id"])
-              for r in D.substring_contamination_multi(
-                  corpus, needle_rows, batch_needles=1).collect()}
-    assert got_b1 == want
+           for r in D.substring_contamination(corpus, needles).collect()}
+    assert got == {(1, 10), (1, 11), (2, 10)}
 
 
 def test_prefix_suffix_overlap(spark):
@@ -1056,10 +1051,6 @@ def test_substring_contamination_empty_needle_dropped(spark):
     got = {(r["doc_id"], r["needle_id"])
            for r in D.substring_contamination(corpus, needles).collect()}
     assert got == {(1, 12)}
-    got_m = {(r["doc_id"], r["needle_id"])
-             for r in D.substring_contamination_multi(
-                 corpus, [(10, ""), (12, "any")]).collect()}
-    assert got_m == {(1, 12)}
 
 
 def test_kmeans_centroids_trained_ivf(spark):

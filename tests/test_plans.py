@@ -267,54 +267,6 @@ def test_q103_knn_broadcast_queries(entry_spark):
     assert joins.get("BroadcastNestedLoopJoin", 0) == 1
 
 
-def test_runtime_bloom_filter_injection(entry_spark):
-    """enable_runtime_row_filters makes Catalyst inject a bloom_filter_agg
-    on the selective side of a SHUFFLE join and a might_contain filter on
-    the probe side's scan — fact⋈fact pre-shuffle pruning at scale."""
-    from pyspark.sql import functions as F
-
-    from eodatadown_spark.session import enable_runtime_row_filters
-
-    spark = entry_spark
-    old_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    old_en = spark.conf.get("spark.sql.optimizer.runtime.bloomFilter.enabled")
-    old_app = spark.conf.get(
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold")
-    old_cr = spark.conf.get(
-        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold")
-    try:
-        # force the shuffle join (runtime filters don't apply to broadcast)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        # local test files are tiny — drop the application-side floor so
-        # the injection fires here; cluster callers keep the 10GB default
-        enable_runtime_row_filters(spark, application_side_scan_threshold="0")
-        li = spark.read.parquet(f"{SF}/lineitem.parquet")
-        orders = spark.read.parquet(f"{SF}/orders.parquet").where(
-            F.col("o_totalprice") > 450000
-        )
-        j = (
-            li.join(orders, li.l_orderkey == orders.o_orderkey)
-            .groupBy("l_returnflag")
-            .count()
-        )
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "bloom_filter_agg" in plan
-        assert "might_contain" in plan
-        # the probe-side filter sits on the lineitem key
-        assert any(
-            "might_contain" in ln and "l_orderkey" in ln
-            for ln in plan.splitlines()
-        )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bc)
-        spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", old_en)
-        spark.conf.set(
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-            old_app)
-        spark.conf.set(
-            "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", old_cr)
-
-
 def test_q146_multiprobe_single_bucket_exchange(entry_spark):
     """Multiprobe probe-set generation is pure Catalyst on the broadcast
     query side: the plan carries ONE exchange (the bucket equi-join's

@@ -1070,94 +1070,6 @@ def test_char_spans_match_python_reference(spark, texts, w):
     }, (texts, w)
 
 
-@given(
-    st.lists(
-        st.lists(st.sampled_from(["tok1", "tok2", "tok3", "rare"]),
-                 min_size=1, max_size=6),
-        min_size=1, max_size=4,
-    ),
-    st.integers(min_value=0, max_value=3),
-)
-@settings(max_examples=6, deadline=None)
-def test_bloom_fold_equals_onepass_any_split(spark, batches, replay_at):
-    """Bloom streaming-fold algebra as a theorem: folding ANY batch split
-    through the OCC catalog — with one batch REPLAYED mid-stream — leaves
-    the state table bit-identical to a one-pass build over the
-    concatenation (set union is associative, commutative, idempotent)."""
-    import tempfile
-
-    from eodatadown_spark.catalog import ParquetCatalog
-    from eodatadown_spark.operators.merge import build_bloom
-    from eodatadown_spark.streaming.incremental import apply_bloom_batch
-
-    # a FRESH dir per hypothesis example (tmp_path is function-scoped and
-    # would accumulate state across examples)
-    cat = ParquetCatalog(spark, tempfile.mkdtemp(prefix="bloomcat_"),
-                         retain_versions=3)
-    n_bits = 64
-    for bi, vals in enumerate(batches):
-        b = spark.createDataFrame([(v,) for v in vals], "token string")
-        apply_bloom_batch(cat, b, "token", n_hashes=3, n_bits=n_bits)
-        if bi == min(replay_at, len(batches) - 1):
-            apply_bloom_batch(cat, b, "token", n_hashes=3, n_bits=n_bits)
-    streamed = {
-        r["bloom_bit"] for r in cat.read("bloom_bits").collect()
-    }
-    allvals = [v for vals in batches for v in vals]
-    onepass = {
-        r["bloom_bit"]
-        for r in build_bloom(
-            spark.createDataFrame([(v,) for v in allvals], "token string"),
-            "token", n_hashes=3, n_bits=n_bits,
-        ).collect()
-    }
-    assert streamed == onepass, (batches, replay_at)
-
-
-@given(
-    st.lists(
-        st.lists(st.sampled_from(["tok1", "tok2", "tok3", "rare"]),
-                 min_size=1, max_size=6),
-        min_size=1, max_size=4,
-    ),
-    st.integers(min_value=0, max_value=3),
-)
-@settings(max_examples=6, deadline=None)
-def test_cms_fold_equals_onepass_any_split(spark, batches, replay_at):
-    """CMS streaming-fold algebra as a theorem: counter addition over ANY
-    batch split equals the one-pass counters, AND a replayed batch is a
-    no-op thanks to the per-batch sentinel (counter addition is NOT
-    idempotent — the sentinel is what makes at-least-once exactly-once)."""
-    import tempfile
-
-    from eodatadown_spark.catalog import ParquetCatalog
-    from eodatadown_spark.operators.merge import build_count_min
-    from eodatadown_spark.streaming.incremental import apply_count_min_batch
-
-    cat = ParquetCatalog(spark, tempfile.mkdtemp(prefix="cmscat_"),
-                         retain_versions=3)
-    for bi, vals in enumerate(batches):
-        b = spark.createDataFrame([(v,) for v in vals], "token string")
-        apply_count_min_batch(cat, b, "token", depth=2, width=32, batch_id=bi)
-        if bi == min(replay_at, len(batches) - 1):
-            apply_count_min_batch(
-                cat, b, "token", depth=2, width=32, batch_id=bi
-            )
-    streamed = {
-        (r["cms_row"], r["cms_bucket"]): r["cnt"]
-        for r in cat.read("cms_counters").where("cms_row >= 0").collect()
-    }
-    allvals = [v for vals in batches for v in vals]
-    onepass = {
-        (r["cms_row"], r["cms_bucket"]): r["cnt"]
-        for r in build_count_min(
-            spark.createDataFrame([(v,) for v in allvals], "token string"),
-            "token", depth=2, width=32,
-        ).collect()
-    }
-    assert streamed == onepass, (batches, replay_at)
-
-
 def _py_token_spans(texts: dict, window: int, min_count: int = 2) -> dict:
     """Reference for TOKEN-windowed span stats replaying the engine's hash
     DOMAIN semantics textually: tokens = lowercased \\s+ split, window key

@@ -30,8 +30,8 @@ def test_bucketed_join_no_shuffle(spark, landsat_scenes, plugin_results_df, tmp_
     from eodatadown_spark.catalog import ParquetCatalog
 
     cat = ParquetCatalog(spark, str(tmp_path))
-    cat.write_bucketed(landsat_scenes, "scenes_b", "pid", n_buckets=4)
-    cat.write_bucketed(
+    cat.publish_bucketed_snapshot(landsat_scenes, "scenes_b", "pid", n_buckets=4)
+    cat.publish_bucketed_snapshot(
         plugin_results_df.withColumnRenamed("scene_pid", "pid"), "plugins_b", "pid", 4
     )
     # force the non-broadcast path: at real scale neither side broadcasts —
@@ -39,8 +39,9 @@ def test_bucketed_join_no_shuffle(spark, landsat_scenes, plugin_results_df, tmp_
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        joined = cat.read_bucketed("scenes_b").join(
-            cat.read_bucketed("plugins_b").withColumnRenamed("extended_info", "plg_info"),
+        joined = cat.read_bucketed_snapshot("scenes_b", "pid").join(
+            cat.read_bucketed_snapshot("plugins_b", "pid")
+            .withColumnRenamed("extended_info", "plg_info"),
             "pid",
         )
         plan = audit.physical_plan(joined, "simple")
@@ -85,6 +86,14 @@ def test_monthly_bucketed_state_machine_cycle(spark, tmp_path):
     from eodatadown_spark.catalog import ParquetCatalog
     from eodatadown_spark.sensor import LandsatGoogSensor
 
+    def warehouse_tables():
+        wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+        if not os.path.isdir(wh):
+            return {}
+        return {d: os.stat(os.path.join(wh, d)).st_mtime_ns
+                for d in os.listdir(wh) if d.startswith("eodd_")}
+
+    warehouse_before = warehouse_tables()
     cat = ParquetCatalog(spark, str(tmp_path), partition_monthly=True)
     sensor = LandsatGoogSensor(cat)
     sensor.init_sensor_db()
@@ -150,6 +159,10 @@ def test_monthly_bucketed_state_machine_cycle(spark, tmp_path):
         assert [r["pid"] for r in base.collect()] == [1]
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    # the publication lives in the catalog root: nothing lands in the
+    # session warehouse, which no later process could read back without a
+    # persistent metastore
+    assert warehouse_tables() == warehouse_before
 
 
 def test_usr_analysis_agg_form_matches_anti_join(spark, landsat_scenes, plugin_results_df):

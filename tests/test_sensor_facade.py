@@ -289,3 +289,47 @@ def test_sensor_plugins_roundtrip(spark, sensor):
     assert added == 2  # PlgB for both scenes
     assert sensor.get_scn_obs_date(0) == __import__("datetime").date(2019, 1, 5)
     assert sensor.get_scn_obs_date(999) is None
+
+
+def test_run_usr_analysis_keeps_concurrent_plugin_commit(spark, sensor, monkeypatch):
+    """A plugin_results commit that lands while run_usr_analysis builds its
+    union survives: the union re-derives on top of the winner instead of
+    flipping a stale copy over it."""
+    from eodatadown_spark import schemas
+
+    sensor.check_new_scns(
+        _index(spark, [("A", "2019-01-05", "20190110", 10.0),
+                       ("B", "2019-02-10", "20190215", 20.0)])
+    )
+    sensor.run_stage(sensor.get_scnlist_download(),
+                     lambda s: {"pid": s["pid"], "downloaded": True,
+                                "ardproduct": True},
+                     "pid long, downloaded boolean, ardproduct boolean")
+    cat = sensor.catalog
+    cat.write(spark.createDataFrame([], schema=schemas.PLUGIN_RESULTS),
+              "plugin_results", partition=False)
+    rival = spark.createDataFrame(
+        [{"scene_pid": 99, "plugin_name": "Rival", "completed": True,
+          "success": True, "outputs": False, "start_time": None,
+          "end_time": None, "extended_info": None}],
+        schema=schemas.PLUGIN_RESULTS,
+    )
+
+    orig = ParquetCatalog._write_version
+    fired = {"done": False}
+
+    def hooked(self, df, table, partition=True, *args, **kw):
+        if table == "plugin_results" and not fired["done"]:
+            fired["done"] = True
+            # another process commits a plugin row inside our build window
+            other = ParquetCatalog(spark, cat.root)
+            other.write(other.read_clean("plugin_results").unionByName(rival),
+                        "plugin_results", partition=False)
+        return orig(self, df, table, partition, *args, **kw)
+
+    monkeypatch.setattr(ParquetCatalog, "_write_version", hooked)
+    added = sensor.run_usr_analysis({"PlgA": lambda s: (True, {}, False)})
+    assert fired["done"] and added == 2
+    got = {(r["scene_pid"], r["plugin_name"])
+           for r in cat.read_clean("plugin_results").collect()}
+    assert got == {(99, "Rival"), (0, "PlgA"), (1, "PlgA")}

@@ -1,99 +1,8 @@
-"""Stateful streaming watermark operator + skew-mitigation helpers."""
+"""Windowed, sessionized and anomaly rollups in batch and streaming mode."""
 
 from __future__ import annotations
 
 import datetime as dt
-
-import pytest
-from pyspark.sql import functions as F
-
-
-def test_running_watermark_stream(spark, tmp_path):
-    """Two micro-batches: the second batch's stale rows (≤ stored watermark)
-    are suppressed; fresh rows advance the state."""
-    from eodatadown_spark.streaming.stateful import running_watermark_stream
-
-    src = str(tmp_path / "wm_src")
-    schema = "sensor string, key string, ts timestamp"
-    batch1 = [("LS", "a", dt.datetime(2020, 1, 1)), ("LS", "b", dt.datetime(2020, 1, 3))]
-    # one file per batch → deterministic micro-batch contents under
-    # maxFilesPerTrigger=1 (multi-file batches may process out of order and
-    # legitimately suppress the earlier-ts row)
-    spark.createDataFrame(batch1, schema).coalesce(1).write.parquet(src)
-
-    stream = running_watermark_stream(
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
-    )
-    q = (stream.writeStream.format("memory").queryName("wm_out")
-         .outputMode("append").start())
-    try:
-        q.processAllAvailable()
-        assert spark.sql("SELECT count(*) n FROM wm_out").first()["n"] == 2
-
-        # batch 2: one stale (2020-01-02 ≤ wm 2020-01-03), one fresh
-        batch2 = [("LS", "stale", dt.datetime(2020, 1, 2)),
-                  ("LS", "fresh", dt.datetime(2020, 1, 5))]
-        spark.createDataFrame(batch2, schema).coalesce(1).write.mode("append").parquet(src)
-        q.processAllAvailable()
-        keys = {r["key"] for r in spark.sql("SELECT key FROM wm_out").collect()}
-        assert keys == {"a", "b", "fresh"}  # 'stale' suppressed by state
-    finally:
-        q.stop()
-
-
-def test_salted_count_matches_plain(spark):
-    df = spark.range(10000).select(
-        (F.col("id") % 3).alias("k"), F.col("id").alias("v")
-    )
-    from eodatadown_spark.operators.skew import salted_count
-
-    got = {r["k"]: r["n"] for r in salted_count(df, ["k"]).collect()}
-    want = {r["k"]: r["count"] for r in df.groupBy("k").count().collect()}
-    assert got == want
-
-
-def test_salted_agg_sum_min_max(spark):
-    df = spark.range(5000).select((F.col("id") % 2).alias("k"), F.col("id").alias("v"))
-    from eodatadown_spark.operators.skew import salted_agg
-
-    out = {
-        r["k"]: r
-        for r in salted_agg(
-            df, ["k"],
-            {
-                "total": (F.sum("v"), "sum"),
-                # alias deliberately does NOT start with "min"/"max" — the
-                # explicit combiner must be what decides phase 2
-                "smallest_v": (F.min("v"), "min"),
-                "largest_v": (F.max("v"), "max"),
-            },
-        ).collect()
-    }
-    assert out[0]["total"] == sum(range(0, 5000, 2))
-    assert out[1]["smallest_v"] == 1 and out[1]["largest_v"] == 4999
-
-
-def test_salted_agg_rejects_bare_column(spark):
-    df = spark.range(10).select((F.col("id") % 2).alias("k"), F.col("id").alias("v"))
-    from eodatadown_spark.operators.skew import salted_agg
-
-    with pytest.raises(ValueError, match="combiner"):
-        salted_agg(df, ["k"], {"min_v": F.min("v")})
-    with pytest.raises(ValueError, match="unknown combiner"):
-        salted_agg(df, ["k"], {"min_v": (F.min("v"), "avg")})
-
-
-def test_salted_join_matches_plain(spark):
-    left = spark.range(2000).select((F.col("id") % 5).alias("k"), F.col("id").alias("lv"))
-    right = spark.createDataFrame(
-        [(i, f"r{i}") for i in range(5)], "k long, rv string"
-    )
-    from eodatadown_spark.operators.skew import salted_join
-
-    got = salted_join(left, right, "k")
-    assert got.count() == 2000
-    sample = got.where(F.col("lv") == 7).first()
-    assert sample["rv"] == "r2"
 
 
 def test_windowed_counts_streaming_mode(spark, tmp_path):
@@ -294,46 +203,6 @@ def test_session_window_rollup_streaming_mode(spark, tmp_path):
         q.stop()
 
 
-def test_stream_interval_join_live(spark, tmp_path):
-    """Two live streams interval-joined with watermark-bounded state: clicks
-    within 60 s after a view, per user."""
-    from eodatadown_spark.streaming.incremental import stream_interval_join
-
-    views_src = str(tmp_path / "views_src")
-    clicks_src = str(tmp_path / "clicks_src")
-    t0 = dt.datetime(2024, 1, 1)
-    s = lambda sec: t0 + dt.timedelta(seconds=sec)  # noqa: E731
-    spark.createDataFrame(
-        [(1, s(0)), (1, s(200)), (2, s(0))], "user_id long, ts timestamp"
-    ).coalesce(1).write.parquet(views_src)
-    spark.createDataFrame(
-        # u1: +30s (match to view@0), +230s (match to view@200), +500s (no view within 60s)
-        [(1, s(30)), (1, s(230)), (1, s(500)), (2, s(61))],  # u2 click 61s late -> no match
-        "user_id long, ts timestamp",
-    ).coalesce(1).write.parquet(clicks_src)
-
-    schema = "user_id long, ts timestamp"
-    joined = stream_interval_join(
-        spark.readStream.schema(schema).parquet(views_src),
-        spark.readStream.schema(schema).parquet(clicks_src),
-        ["user_id"],
-        min_gap=0.0,
-        max_gap=60.0,
-        lateness="5 minutes",
-    )
-    q = (joined.writeStream.format("memory").queryName("ij_out")
-         .outputMode("append").start())
-    try:
-        q.processAllAvailable()
-        # exactly two pairs: view@0->click@30 and view@200->click@230
-        rows = spark.sql("SELECT * FROM ij_out").collect()
-        assert len(rows) == 2
-        assert {(r["user_id"], r["left_ts"].second + r["left_ts"].minute * 60,
-                 r["gap_s"]) for r in rows} == {(1, 0, 30.0), (1, 200, 30.0)}
-    finally:
-        q.stop()
-
-
 def test_streaming_quality_filter_stateless(spark, tmp_path):
     """The text quality operators are pure projections, so the same plan
     runs as a Structured Streaming pipeline unchanged — the
@@ -362,331 +231,3 @@ def test_streaming_quality_filter_stateless(spark, tmp_path):
         assert spark.sql("SELECT count(*) FROM quality_out").first()[0] == 2
     finally:
         q.stop()
-
-
-def test_stream_asof_enrich_stateful(spark, tmp_path):
-    """Custom stateful as-of: left events enriched with the latest-known
-    right value per key; state carries across micro-batches and a stale
-    right arrival never regresses it."""
-    from eodatadown_spark.streaming.stateful import stream_asof_enrich
-
-    left_src = str(tmp_path / "asof_left")
-    right_src = str(tmp_path / "asof_right")
-    t0 = dt.datetime(2024, 1, 1)
-    s = lambda sec: t0 + dt.timedelta(seconds=sec)  # noqa: E731
-
-    # batch 1 files
-    spark.createDataFrame(
-        [(1, 100, s(10)), (1, 101, s(40)), (2, 200, s(10))],
-        "user_id long, event_id long, ts timestamp",
-    ).coalesce(1).write.parquet(left_src)
-    spark.createDataFrame(
-        [(1, s(5), 7.0), (1, s(30), 9.0)], "user_id long, ts timestamp, value double"
-    ).coalesce(1).write.parquet(right_src)
-
-    lschema = "user_id long, event_id long, ts timestamp"
-    rschema = "user_id long, ts timestamp, value double"
-    out = stream_asof_enrich(
-        spark.readStream.schema(lschema).option("maxFilesPerTrigger", "1").parquet(left_src),
-        spark.readStream.schema(rschema).option("maxFilesPerTrigger", "1").parquet(right_src),
-    )
-    q = (out.writeStream.format("memory").queryName("asof_out")
-         .outputMode("append").start())
-    try:
-        q.processAllAvailable()
-        got = {r["event_id"]: (r["right_ts"], r["right_value"])
-               for r in spark.sql("SELECT * FROM asof_out").collect()}
-        assert got[100] == (s(5), 7.0)     # only the 05s update known at 10s
-        assert got[101] == (s(30), 9.0)    # 30s update applied in-batch order
-        assert got[200] == (None, None)    # no right row for user 2
-
-        # batch 2: stale right (15s < stored 30s) must not regress state;
-        # new left at 60s still sees the 30s value
-        spark.createDataFrame(
-            [(1, s(15), 1.0)], rschema
-        ).coalesce(1).write.mode("append").parquet(right_src)
-        spark.createDataFrame(
-            [(1, 102, s(60))], lschema
-        ).coalesce(1).write.mode("append").parquet(left_src)
-        q.processAllAvailable()
-        got = {r["event_id"]: (r["right_ts"], r["right_value"])
-               for r in spark.sql("SELECT * FROM asof_out").collect()}
-        assert got[102] == (s(30), 9.0)
-    finally:
-        q.stop()
-
-
-def test_stream_asof_enrich_non_identifier_columns(spark, tmp_path):
-    """Column names that are not valid Python identifiers (e.g. 'event-id')
-    must work — pandas itertuples renames such columns positionally, so the
-    enrich kernel has to read rows by position, not attribute name."""
-    from eodatadown_spark.streaming.stateful import stream_asof_enrich
-
-    left_src = str(tmp_path / "asof_left_h")
-    right_src = str(tmp_path / "asof_right_h")
-    t0 = dt.datetime(2024, 1, 1)
-    s = lambda sec: t0 + dt.timedelta(seconds=sec)  # noqa: E731
-
-    spark.createDataFrame(
-        [(1, 100, s(10))], "`user id` long, `event-id` long, `t s` timestamp"
-    ).coalesce(1).write.parquet(left_src)
-    spark.createDataFrame(
-        [(1, s(5), 7.0)], "`user id` long, `t s` timestamp, value double"
-    ).coalesce(1).write.parquet(right_src)
-
-    out = stream_asof_enrich(
-        spark.readStream.schema("`user id` long, `event-id` long, `t s` timestamp").parquet(left_src),
-        spark.readStream.schema("`user id` long, `t s` timestamp, value double").parquet(right_src),
-        key_col="user id",
-        left_id_col="event-id",
-        ts_col="t s",
-    )
-    q = (out.writeStream.format("memory").queryName("asof_out_h")
-         .outputMode("append").start())
-    try:
-        q.processAllAvailable()
-        rows = spark.sql("SELECT * FROM asof_out_h").collect()
-        assert [(r["event-id"], r["right_ts"], r["right_value"]) for r in rows] == [
-            (100, s(5), 7.0)
-        ]
-    finally:
-        q.stop()
-
-
-def test_stream_sessionize_closes_and_matches_batch(spark, tmp_path):
-    """Sessions close by in-stream gap AND by event-time timeout; the
-    closed set equals a per-(user, session_id) rollup of the batch
-    sessionize operator on the same events."""
-    from eodatadown_spark.streaming.incremental import sessionize
-    from eodatadown_spark.streaming.stateful import stream_sessionize
-
-    src = str(tmp_path / "sess_src")
-    schema = "user_id string, ts timestamp"
-    T = dt.datetime
-    f1 = [("u1", T(2024, 1, 1, 10, 0)), ("u1", T(2024, 1, 1, 10, 5)),
-          ("u2", T(2024, 1, 1, 11, 0))]
-    # u1 10:20 continues (gap 15m ≤ 30m); u2 13:00 splits (gap 2h)
-    f2 = [("u1", T(2024, 1, 1, 10, 20)), ("u2", T(2024, 1, 1, 13, 0))]
-    # sentinel batches: advance the global watermark far past every
-    # last_event+gap, then one more trigger so the timeouts fire
-    f3 = [("u99", T(2024, 1, 2, 0, 0))]
-    f4 = [("u98", T(2024, 1, 3, 0, 0))]
-    spark.createDataFrame(f1, schema).coalesce(1).write.parquet(src)
-
-    # 2h watermark delay: cross-USER event-time skew within a batch (u2's
-    # 11:00 vs u1's next 10:20) must not advance the watermark past rows
-    # still in flight — delay 0 would drop u1's 10:20 as late
-    out = stream_sessionize(
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src),
-        gap="30 minutes",
-        watermark_delay="2 hours",
-    )
-    q = (out.writeStream.format("memory").queryName("sess_out")
-         .outputMode("append").start())
-    try:
-        q.processAllAvailable()
-        for batch in (f2, f3, f4):
-            spark.createDataFrame(batch, schema).coalesce(1).write.mode(
-                "append").parquet(src)
-            q.processAllAvailable()
-        got = {
-            (r["user_id"], str(r["session_start"]), str(r["session_end"]), r["n_events"])
-            for r in spark.sql(
-                "SELECT * FROM sess_out WHERE user_id IN ('u1','u2')"
-            ).collect()
-        }
-    finally:
-        q.stop()
-
-    batch_events = spark.createDataFrame(f1 + f2, schema)
-    want = {
-        (r["user_id"], str(r["session_start"]), str(r["session_end"]), r["n_events"])
-        for r in sessionize(batch_events, ["user_id"], gap_seconds=1800.0)
-        .groupBy("user_id", "session_id")
-        .agg(F.min("ts").alias("session_start"), F.max("ts").alias("session_end"),
-             F.count(F.lit(1)).alias("n_events"))
-        .drop("session_id")
-        .collect()
-    }
-    assert got == want
-    assert ("u1", "2024-01-01 10:00:00", "2024-01-01 10:20:00", 3) in got
-    assert len(got) == 3  # u1×1, u2×2 — every session closed exactly once
-
-
-def test_stream_sessionize_state_survives_restart(spark, tmp_path):
-    """Kill the query mid-session and restart from the same checkpoint:
-    the open-session state must survive, so the session closes as ONE
-    record spanning both runs (state loss would emit two)."""
-    from eodatadown_spark.streaming.stateful import stream_sessionize
-
-    src = str(tmp_path / "sess_src")
-    ckpt = str(tmp_path / "sess_ckpt")
-    schema = "user_id string, ts timestamp"
-    T = dt.datetime
-
-    sink = str(tmp_path / "sess_sink")
-
-    def start_query():
-        out = stream_sessionize(
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1").parquet(src),
-            gap="30 minutes", watermark_delay="2 hours",
-        )
-        # a FILE sink: the memory sink cannot recover from a checkpoint,
-        # which is the whole point of this test
-        return (out.writeStream.format("parquet")
-                .option("path", sink)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append").start())
-
-    spark.createDataFrame([("u1", T(2024, 1, 1, 10, 0))], schema
-                          ).coalesce(1).write.parquet(src)
-    q = start_query()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    # while the query is DOWN: an in-gap continuation + watermark sentinels
-    for batch in ([("u1", T(2024, 1, 1, 10, 10))],
-                  [("u99", T(2024, 1, 2, 0, 0))],
-                  [("u98", T(2024, 1, 3, 0, 0))]):
-        spark.createDataFrame(batch, schema).coalesce(1).write.mode(
-            "append").parquet(src)
-    q = start_query()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    rows = [
-        (r["user_id"], str(r["session_start"]), str(r["session_end"]), r["n_events"])
-        for r in spark.read.parquet(sink).where("user_id = 'u1'").collect()
-    ]
-    assert rows == [("u1", "2024-01-01 10:00:00", "2024-01-01 10:10:00", 2)]
-
-
-def test_stream_sessionize_late_event_extends_backward(spark, tmp_path):
-    """A late in-watermark event EARLIER than the open session's start
-    must extend the session backward (batch parity), not just bump the
-    event count under the stale start."""
-    from eodatadown_spark.streaming.stateful import stream_sessionize
-
-    src = str(tmp_path / "late_src")
-    schema = "user_id string, ts timestamp"
-    T = dt.datetime
-    spark.createDataFrame([("u1", T(2024, 1, 1, 10, 0))], schema
-                          ).coalesce(1).write.parquet(src)
-    out = stream_sessionize(
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src),
-        gap="30 minutes", watermark_delay="2 hours",
-    )
-    q = (out.writeStream.format("memory").queryName("late_out")
-         .outputMode("append").start())
-    try:
-        q.processAllAvailable()
-        for batch in ([("u1", T(2024, 1, 1, 9, 58))],       # late, in-gap
-                      [("u99", T(2024, 1, 2, 0, 0))],        # advance wm
-                      [("u98", T(2024, 1, 3, 0, 0))]):       # fire timeout
-            spark.createDataFrame(batch, schema).coalesce(1).write.mode(
-                "append").parquet(src)
-            q.processAllAvailable()
-        rows = [
-            (str(r["session_start"]), str(r["session_end"]), r["n_events"])
-            for r in spark.sql(
-                "SELECT * FROM late_out WHERE user_id = 'u1'").collect()
-        ]
-    finally:
-        q.stop()
-    assert rows == [("2024-01-01 09:58:00", "2024-01-01 10:00:00", 2)]
-
-
-def test_stream_sessionize_backward_then_split_one_batch(spark, tmp_path):
-    """Round-6 ADVICE (high): a backward extension followed by a forward
-    split in ONE micro-batch.  gap=10m, open session {10:00}; batch
-    [9:45, 9:55, 12:30].  Batch semantics: 9:45–9:55–10:00 chain into one
-    session (each step exactly the gap), 12:30 opens its own.  The old
-    kernel resolved the late block only at end-of-batch against the NEW
-    post-split start (12:30) and emitted {9:45} separately."""
-    from eodatadown_spark.streaming.incremental import sessionize
-    from eodatadown_spark.streaming.stateful import stream_sessionize
-
-    src = str(tmp_path / "bsplit_src")
-    schema = "user_id string, ts timestamp"
-    T = dt.datetime
-    f1 = [("u1", T(2024, 1, 1, 10, 0))]
-    f2 = [("u1", T(2024, 1, 1, 9, 45)), ("u1", T(2024, 1, 1, 9, 55)),
-          ("u1", T(2024, 1, 1, 12, 30))]
-    spark.createDataFrame(f1, schema).coalesce(1).write.parquet(src)
-    out = stream_sessionize(
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src),
-        gap="10 minutes", watermark_delay="6 hours",
-    )
-    q = (out.writeStream.format("memory").queryName("bsplit_out")
-         .outputMode("append").start())
-    try:
-        q.processAllAvailable()
-        for batch in (f2,
-                      [("u99", T(2024, 1, 2, 0, 0))],
-                      [("u98", T(2024, 1, 3, 0, 0))]):
-            spark.createDataFrame(batch, schema).coalesce(1).write.mode(
-                "append").parquet(src)
-            q.processAllAvailable()
-        got = {
-            (str(r["session_start"]), str(r["session_end"]), r["n_events"])
-            for r in spark.sql(
-                "SELECT * FROM bsplit_out WHERE user_id = 'u1'").collect()
-        }
-    finally:
-        q.stop()
-    want = {
-        (str(r["session_start"]), str(r["session_end"]), r["n_events"])
-        for r in sessionize(
-            spark.createDataFrame(f1 + f2, schema), ["user_id"],
-            gap_seconds=600.0)
-        .groupBy("user_id", "session_id")
-        .agg(F.min("ts").alias("session_start"), F.max("ts").alias("session_end"),
-             F.count(F.lit(1)).alias("n_events"))
-        .collect()
-    }
-    assert got == want
-    assert got == {("2024-01-01 09:45:00", "2024-01-01 10:00:00", 3),
-                   ("2024-01-01 12:30:00", "2024-01-01 12:30:00", 1)}
-
-
-def test_stream_sessionize_late_block_bridged_across_batches(spark, tmp_path):
-    """Round-6 ADVICE (medium): a late block must stay ALIVE (unsealed by
-    the watermark) so a later micro-batch can bridge it into the open
-    session.  gap=10m: batch1 {10:00}; batch2 late {9:40} (>gap before
-    the open start — its own block); batch3 {9:50} bridges both into ONE
-    session.  The old kernel emitted {9:40} at batch2's end, making the
-    final result a split record."""
-    from eodatadown_spark.streaming.stateful import stream_sessionize
-
-    src = str(tmp_path / "bridge_src")
-    schema = "user_id string, ts timestamp"
-    T = dt.datetime
-    spark.createDataFrame([("u1", T(2024, 1, 1, 10, 0))], schema
-                          ).coalesce(1).write.parquet(src)
-    out = stream_sessionize(
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src),
-        gap="10 minutes", watermark_delay="6 hours",
-    )
-    q = (out.writeStream.format("memory").queryName("bridge_out")
-         .outputMode("append").start())
-    try:
-        q.processAllAvailable()
-        for batch in ([("u1", T(2024, 1, 1, 9, 40))],
-                      [("u1", T(2024, 1, 1, 9, 50))],
-                      [("u99", T(2024, 1, 2, 0, 0))],
-                      [("u98", T(2024, 1, 3, 0, 0))]):
-            spark.createDataFrame(batch, schema).coalesce(1).write.mode(
-                "append").parquet(src)
-            q.processAllAvailable()
-        rows = [
-            (str(r["session_start"]), str(r["session_end"]), r["n_events"])
-            for r in spark.sql(
-                "SELECT * FROM bridge_out WHERE user_id = 'u1'").collect()
-        ]
-    finally:
-        q.stop()
-    assert rows == [("2024-01-01 09:40:00", "2024-01-01 10:00:00", 3)]

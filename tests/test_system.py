@@ -196,7 +196,7 @@ def test_cli_dataprep_pipeline(spark, tmp_path, capsys):
 
 def test_cli_monthly_bucketize_cycle(spark, tmp_path, capsys):
     """CLI --partition-monthly + bucketize: monthly layout on disk, bucketed
-    managed tables published for shuffle-free pid joins."""
+    snapshots published for shuffle-free pid joins."""
     import datetime as dt
     import os
 
@@ -248,7 +248,9 @@ def test_cli_monthly_bucketize_cycle(spark, tmp_path, capsys):
     assert "published landsat_scenes" in capsys.readouterr().out
     desc = "\n".join(
         f"{r['col_name']}\t{r['data_type']}"
-        for r in spark.sql("DESCRIBE EXTENDED eodd_landsat_scenes").collect()
+        for r in spark.sql(
+            f"DESCRIBE EXTENDED {cat._bucketed_ident('landsat_scenes')[1]}"
+        ).collect()
     )
     assert "Num Buckets\t4" in desc and "Bucket Columns\t[`pid`]" in desc
 
