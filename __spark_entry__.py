@@ -2129,8 +2129,8 @@ def q172_hard_negatives(spark, sf):
     the top-5 most-similar corpus vectors with a DIFFERENT label — the
     near-boundary negatives contrastive/reranker training mines (random
     negatives teach nothing).  Label filter applies BEFORE ranking; scale
-    shape is cosine_topk's (queries broadcast, corpus never shuffles,
-    two_phase reducer fix available).  Oracle ranks the label-mismatched
+    shape is cosine_topk's (queries broadcast, corpus never shuffles).
+    Oracle ranks the label-mismatched
     pair set with the same deterministic tie-break."""
     emb = _t(spark, sf, "embeddings")
     qs = emb.where(F.col("vec_id") < 10).select(

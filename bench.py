@@ -177,7 +177,7 @@ def run_once(df) -> None:
 def free_pinned(spark) -> int:
     """Unpersist every persistent RDD (localCheckpoint blocks included).
 
-    The pinned operators (materialize="auto") localCheckpoint their
+    The pinned operators (``dedup._pin``) localCheckpoint their
     intermediates, and those blocks are NEVER auto-freed — across the
     extended/incremental sections each timed invocation leaves new pins
     behind, so block-manager memory ratchets up and the sections timed

@@ -105,7 +105,6 @@ def hashed_features(
     text_col: str = "text",
     label: Column | None = None,
     binary: bool = False,
-    floor: bool = True,
 ) -> DataFrame:
     """Per-document hashed bag-of-words features: ``d`` double columns
     ``x{j}`` plus ``n_tokens`` — L1-normalized counts
@@ -120,22 +119,20 @@ def hashed_features(
     bucket columns are conditional sums/maxes inside the same aggregate,
     so the whole extraction is a single shuffle regardless of ``d``.
 
-    ``floor=True`` (default) raises a narrow scan to the session's
-    default parallelism first (dedup.ensure_min_parallelism): the
-    explode + the ``d`` map-side conditional partial aggregates all run
-    BEFORE the doc-id shuffle, so a small-file scan's single partition
-    silently serializes the whole extraction onto one core (measured
-    sf0.1 d=64: 7-10 s single-partition vs 1.4-2 s floored — the
-    simhash_sketches rationale).  Since r14 the floor's leaf-scan-only
-    contract is ENFORCED inside ensure_min_parallelism (the partition
-    probe is skipped on exchange-bearing plans), so a derived input
-    under the default costs one extra planning pass, never plan-time
-    jobs; ``floor=False`` still skips even that.
+    A narrow scan is raised to the session's default parallelism first
+    (dedup.ensure_min_parallelism): the explode + the ``d`` map-side
+    conditional partial aggregates all run BEFORE the doc-id shuffle, so a
+    small-file scan's single partition silently serializes the whole
+    extraction onto one core (measured sf0.1 d=64: 7-10 s
+    single-partition vs 1.4-2 s floored — the simhash_sketches
+    rationale).  Since r14 the floor's leaf-scan-only contract is
+    ENFORCED inside ensure_min_parallelism (the partition probe is
+    skipped on exchange-bearing plans), so a derived input costs one
+    extra planning pass, never plan-time jobs.
     """
-    if floor:
-        from eodatadown_spark.operators.dedup import ensure_min_parallelism
+    from eodatadown_spark.operators.dedup import ensure_min_parallelism
 
-        documents = ensure_min_parallelism(documents)
+    documents = ensure_min_parallelism(documents)
     cols = [F.col(id_col).alias("id")]
     if label is not None:
         cols.append(label.cast("double").alias("y"))
@@ -410,7 +407,6 @@ def hashed_feature_sets(
     id_col: str = "doc_id",
     text_col: str = "text",
     label: Column | None = None,
-    floor: bool = True,
 ) -> DataFrame:
     """Sparse twin of :func:`hashed_features` for BINARY-presence features
     at large ``d``: one row per document with the SORTED distinct bucket
@@ -424,13 +420,10 @@ def hashed_feature_sets(
     contribute exactly +0.0 in the dense form — addition of 0.0 is exact,
     so the two z values are bit-identical).
 
-    ``floor`` — the :func:`hashed_features` parallelism-floor contract
-    (default on; pass ``False`` for derived inputs with exchanges
-    upstream)."""
-    if floor:
-        from eodatadown_spark.operators.dedup import ensure_min_parallelism
+    The input gets the :func:`hashed_features` parallelism floor."""
+    from eodatadown_spark.operators.dedup import ensure_min_parallelism
 
-        documents = ensure_min_parallelism(documents)
+    documents = ensure_min_parallelism(documents)
     cols = [F.col(id_col).alias("id")]
     if label is not None:
         cols.append(label.cast("double").alias("y"))

@@ -900,7 +900,6 @@ def bpe_encode_documents(
     merges: list[tuple[str, str]],
     id_col: str = "doc_id",
     text_col: str = "text",
-    materialize: str = "auto",
 ) -> DataFrame:
     """Encode documents to subword TOKEN IDS under a trained BPE merge list
     → ``(doc_id, pos, token, token_id)`` — the tokenizer-application step a
@@ -919,7 +918,7 @@ def bpe_encode_documents(
     posexplode to words, equi-join the word→subwords table (word-keyed,
     broadcastable), and take global positions from one per-doc window.
     """
-    from eodatadown_spark.operators.dedup import _pin_mode
+    from eodatadown_spark.operators.dedup import _pin
 
     words = documents.select(F.explode(token_array(text_col)).alias("w")).distinct()
     syms = F.array_join(F.split(F.col("w"), ""), " ")
@@ -929,9 +928,7 @@ def bpe_encode_documents(
     # referenced by THREE branches (vocab build, the sub_pos join, and the
     # final id join through vocab) — pinned so the distinct-word shuffle +
     # len(merges)-deep regex chain runs once, not per branch
-    word_subs = _pin_mode(
-        words.select("w", F.split(syms, " ").alias("__subs")), materialize
-    )
+    word_subs = _pin(words.select("w", F.split(syms, " ").alias("__subs")))
     vocab = (
         word_subs.select(F.explode("__subs").alias("token"))
         .distinct()

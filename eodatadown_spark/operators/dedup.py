@@ -61,18 +61,6 @@ def _pin(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
-def _pin_mode(df: DataFrame, materialize: str) -> DataFrame:
-    """Apply a ``materialize`` mode ('auto' → :func:`_pin` policy,
-    'checkpoint'/'local' → forced, 'none' → pure plan, untouched)."""
-    if materialize == "auto":
-        return _pin(df)
-    if materialize == "checkpoint":
-        return df.checkpoint(eager=True)
-    if materialize == "local":
-        return df.localCheckpoint(eager=True)
-    return df
-
-
 def ensure_min_parallelism(df: DataFrame) -> DataFrame:
     """Raise a narrow scan's partition count to ``defaultParallelism`` —
     scale UP only, so it is a no-op wherever the input already spans the
@@ -92,13 +80,9 @@ def ensure_min_parallelism(df: DataFrame) -> DataFrame:
     is shuffle-free (a file scan + narrow projections/filters, where
     finalizing the plan is job-free); a shuffle-bearing input is
     returned untouched — it already has a cluster-wide partitioning from
-    its own shuffle, which is exactly the ``floor=False`` posture the
-    contract used to demand by documentation alone.  A broadcast join
-    does not repartition its streamed scan, so a scan feeding one still
-    gets the floor; its probe runs the broadcast's one small collect.
-    Callers on hot paths that KNOW their input is derived should still
-    pass ``floor=False`` and skip the (job-free but not cost-free)
-    planning pass."""
+    its own shuffle.  A broadcast join does not repartition its streamed
+    scan, so a scan feeding one still gets the floor; its probe runs the
+    broadcast's one small collect."""
     # executedPlan() PREPARES but does not execute (under AQE it is the
     # AdaptiveSparkPlan wrapper whose initial plan still shows every
     # Exchange; query stages only run when the plan is materialized) —
@@ -155,11 +139,9 @@ def shingle_hash_table(
     materializing shingle strings.
 
     ``floor=False`` skips the :func:`ensure_min_parallelism` partition
-    floor.  REQUIRED when ``documents`` is a derived relation with
-    exchanges upstream (joins/aggregates): the floor's partition probe
-    finalizes the AQE plan and would execute those stages as real jobs at
-    plan construction, breaking the ``materialize='none'`` pure-plan
-    contract and double-running candidate generation in 'auto' mode.
+    floor and its planning pass, for a derived input whose semi-join may
+    plan as a broadcast over a pinned side, where the exchange guard
+    would still probe.
 
     ``distinct=False`` skips the per-document array_distinct pass and
     returns the raw shingle-hash stream in document order.  Min-wise
@@ -303,7 +285,6 @@ def minhash_band_index(
     num_perm: int = 32,
     bands: int = 8,
     seed: int = 42,
-    floor: bool = True,
 ) -> DataFrame:
     """The persistent half of continuous near-dup detection: the banded
     LSH index rows (id, band_idx, band_hash) for a corpus — bands narrow
@@ -314,10 +295,6 @@ def minhash_band_index(
 
     Parameters (k / num_perm / bands / seed) are part of the index
     identity — probe with the same values or collisions are meaningless.
-
-    ``floor=False`` skips the parallelism-floor probe — REQUIRED when
-    ``documents`` is a derived relation with exchanges upstream (see
-    :func:`shingle_hash_table`); leaf file scans keep the default.
     """
     # signature fold and band structs as JVM-parsed SQL text (r13): the
     # py4j construction of 32 affine permutations + 8 band structs cost
@@ -335,7 +312,7 @@ def minhash_band_index(
         f"(acc,hr)->zip_with(acc,array({perms_sql}),(x,y)->least(x,y)))"
     )
     sig = shingle_hash_table(
-        documents, id_col, text_col, k, distinct=False, floor=floor
+        documents, id_col, text_col, k, distinct=False
     ).withColumn("sig", F.expr(sig_sql))
     rows_per_band = num_perm // bands
     assert rows_per_band * bands == num_perm, "bands must divide num_perm"
@@ -365,8 +342,6 @@ def minhash_neardup_against_index(
     bands: int = 8,
     jaccard_threshold: float = 0.7,
     seed: int = 42,
-    materialize: str = "auto",
-    floor: bool = True,
 ) -> DataFrame:
     """Incremental near-dup detection: pairs (id_a, id_b, jaccard) where at
     least one side is a NEW document — new-vs-corpus and new-vs-new — by
@@ -387,13 +362,8 @@ def minhash_neardup_against_index(
     appends each batch's rows to afterwards.  Parameters must match the
     ones the index was built with.
     """
-    if materialize not in ("auto", "checkpoint", "local", "none"):
-        raise ValueError(f"unknown materialize mode {materialize!r}")
-    new_banded = _pin_mode(
-        minhash_band_index(
-            new_docs, id_col, text_col, k, num_perm, bands, seed, floor=floor
-        ),
-        materialize,
+    new_banded = _pin(
+        minhash_band_index(new_docs, id_col, text_col, k, num_perm, bands, seed)
     )
     all_banded = index.select("id", "band_idx", "band_hash").unionByName(
         new_banded
@@ -403,17 +373,16 @@ def minhash_neardup_against_index(
         .join(all_banded.alias("r"), ["band_idx", "band_hash"])
         .where(F.col("l.id") != F.col("r.id"))
     )
-    pairs = _pin_mode(
+    pairs = _pin(
         raw.select(
             F.least("l.id", "r.id").alias("id_a"),
             F.greatest("l.id", "r.id").alias("id_b"),
-        ).dropDuplicates(["id_a", "id_b"]),
-        materialize,
+        ).dropDuplicates(["id_a", "id_b"])
     )
-    new_fps = shingle_hash_table(new_docs, id_col, text_col, k, floor=floor)
+    new_fps = shingle_hash_table(new_docs, id_col, text_col, k)
     all_fps = fingerprints.select("id", "hashes").unionByName(new_fps)
     out = _exact_jaccard_filter(pairs, all_fps, jaccard_threshold)
-    return _pin_mode(out, materialize)
+    return _pin(out)
 
 
 def _banded_candidate_pairs(
@@ -461,10 +430,8 @@ def minhash_neardup_pairs(
     bands: int = 8,
     jaccard_threshold: float = 0.7,
     seed: int = 42,
-    materialize: str = "auto",
     candidate_salts: int | None = None,
     max_band_bucket: int | None = None,
-    floor: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash-LSH with exact-Jaccard verification.
 
@@ -484,21 +451,9 @@ def minhash_neardup_pairs(
     arrays dwarf executor storage, while the candidate set is bounded by
     LSH bucket collisions.
 
-    ``materialize`` controls how the candidate and verified pair sets are
-    pinned (both are narrow, collision-bounded relations — pinning them
-    keeps the LSH pipeline from re-running per downstream reference):
-
-    - ``"auto"`` (default): a RELIABLE ``checkpoint`` when the session has a
-      checkpoint dir configured (recompute-safe — an executor loss replays
-      from storage), else an eager ``localCheckpoint``.  At cluster scale set
-      ``spark.sparkContext.setCheckpointDir(...)`` — localCheckpoint pins
-      blocks to executors, so losing one kills the job (lineage is gone).
-    - ``"checkpoint"`` / ``"local"``: force one of the above.
-    - ``"none"``: pure plan construction — no persist, no checkpoint, no job.
-      The LSH pipeline recomputes per downstream reference (Catalyst reuses
-      exchanges where plans coincide); lineage stays intact, so plan audits
-      (exchange counts) see the real shuffle structure.  Caller owns any
-      caching.
+    The candidate and verified pair sets are pinned (:func:`_pin`): both
+    are narrow, collision-bounded relations, and pinning them keeps the
+    LSH pipeline from re-running per downstream reference.
 
     Hot-bucket skew (boilerplate-heavy corpora put thousands of docs in one
     band bucket, and the self-join emits |bucket|² candidate pairs through a
@@ -515,8 +470,6 @@ def minhash_neardup_pairs(
     """
     rows_per_band = num_perm // bands
     assert rows_per_band * bands == num_perm, "bands must divide num_perm"
-    if materialize not in ("auto", "checkpoint", "local", "none"):
-        raise ValueError(f"unknown materialize mode {materialize!r}")
 
     # the banded LSH index (band join carries ONLY (band, id) — the
     # shingle-hash arrays re-attach to the deduped candidate pairs
@@ -528,11 +481,8 @@ def minhash_neardup_pairs(
     # at sf0.1.  The index is bands narrow rows per doc (two longs + id),
     # the classic LSH materialization point — the same relation
     # minhash_band_index persists for the incremental path.
-    banded = _pin_mode(
-        minhash_band_index(
-            documents, id_col, text_col, k, num_perm, bands, seed, floor=floor
-        ),
-        materialize,
+    banded = _pin(
+        minhash_band_index(documents, id_col, text_col, k, num_perm, bands, seed)
     )
     if max_band_bucket is not None:
         from pyspark.sql import Window
@@ -550,7 +500,7 @@ def minhash_neardup_pairs(
     # pin the candidate set so (a) the id-set semi-join below replays only
     # the cheap join-over-pinned-index, and (b) downstream references
     # replay verification only, never candidate generation
-    pairs = _pin_mode(pairs, materialize)
+    pairs = _pin(pairs)
     # exact-Jaccard verification over the hashed shingle sets (62-bit dual
     # rolling hashes — ~2^-62 collision odds per shingle pair, genuinely
     # negligible even for 10k+-shingle documents, so this equals the
@@ -567,17 +517,16 @@ def minhash_neardup_pairs(
     cand_docs = documents.join(
         cand_ids, F.col(id_col) == F.col("__cand_id"), "left_semi"
     )
-    # floor=False: cand_docs has a semi-join (and, transitively, the whole
-    # LSH candidate pipeline) upstream — the partition floor's probe would
-    # execute those stages at plan-build time (see shingle_hash_table).
+    # floor=False: cand_docs's semi-join may plan as a broadcast of the
+    # pinned candidate ids, which leaves no Exchange for the partition
+    # floor's guard to see, so its probe would run (see shingle_hash_table).
     # The semi-join output inherits the corpus scan's parallelism anyway.
     subset = shingle_hash_table(cand_docs, id_col, text_col, k, floor=False)
     out = _exact_jaccard_filter(pairs, subset, jaccard_threshold)
     # pin the (small) verified pair set too — candidate generation is
     # already pinned above, so this adds only the cheap verification job
-    # and gives downstream iterative consumers a fully-materialized result;
-    # "auto" shares _pin's checkpoint-dir policy with neardup_clusters
-    return _pin_mode(out, materialize)
+    # and gives downstream iterative consumers a fully-materialized result
+    return _pin(out)
 
 
 def exact_dedup(
@@ -617,17 +566,15 @@ def simhash_sketches(
     k_grams: int = 2,
     n_bits: int = 60,  # 15 md5 hex chars; sketch stays non-negative in a long
     gram_hash: str = "md5",
-    floor: bool = True,
 ) -> DataFrame:
     """60-bit SimHash per document: bit j is the sign of sum over grams of
     (gram_hash bit j ? +1 : -1).
 
-    ``floor=True`` raises the input to the session's default parallelism
-    first: the per-gram md5 + the 60 conditional partial sums all run
-    MAP-side, so a small-file scan's 3 partitions silently serialize the
-    whole sketch computation onto 3 cores (measured 44 s vs 4 s at sf1.0).
-    ``floor=False`` for derived inputs with exchanges upstream (the
-    :func:`shingle_hash_table` rule).
+    The input is raised to the session's default parallelism first
+    (:func:`ensure_min_parallelism`): the per-gram md5 + the 60 conditional
+    partial sums all run MAP-side, so a small-file scan's 3 partitions
+    silently serialize the whole sketch computation onto 3 cores (measured
+    44 s vs 4 s at sf1.0).
 
     ``gram_hash="md5"`` (default) takes the first 15 hex chars of md5: md5
     produces identical hex in every engine, so the FULL sketch is
@@ -650,8 +597,7 @@ def simhash_sketches(
         h = F.shiftrightunsigned(F.xxhash64("g"), 64 - n_bits)
     else:
         raise ValueError(f"unknown gram_hash {gram_hash!r}")
-    if floor:
-        documents = ensure_min_parallelism(documents)
+    documents = ensure_min_parallelism(documents)
     grams = documents.select(
         F.col(id_col).alias("id"),
         F.explode(word_shingles(text_col, k_grams)).alias("g"),
@@ -816,7 +762,6 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     k: int = 3,
     threshold: float = 0.8,
-    materialize: str = "auto",
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup via FULL inverted-index join (no LSH,
     no prefix filter): every shingle is indexed, pairs sharing any shingle
@@ -839,12 +784,8 @@ def ngram_jaccard_pairs(
     # the hash table is referenced FOUR times (both join sides + two size
     # joins); pinned so the self-join plans against known (small) sizes and
     # the rolling-hash front-end runs once — unpinned, the join re-evaluates
-    # it per candidate (measured 40 s vs 0.8 s at sf0.1).  'none' keeps the
-    # pure plan for audits, like the prefix sibling.
-    base = _pin_mode(
-        shingle_hash_table(documents, id_col, text_col, k, distinct=True),
-        materialize,
-    )
+    # it per candidate (measured 40 s vs 0.8 s at sf0.1)
+    base = _pin(shingle_hash_table(documents, id_col, text_col, k, distinct=True))
     sizes = base.select("id", F.size("hashes").alias("sz"))
     inv = base.select("id", F.explode("hashes").alias("sh"))
     inter = (
@@ -881,7 +822,6 @@ def shingle_containment_pairs(
     k: int = 3,
     threshold: float = 0.9,
     max_df: int | None = None,
-    materialize: str = "auto",
 ) -> DataFrame:
     """Asymmetric CONTAINMENT near-dup (Broder 1997's second resemblance
     measure): ``c = |A∩B| / min(|A|, |B|)`` over word-``k``-shingle sets —
@@ -903,10 +843,7 @@ def shingle_containment_pairs(
     capped estimate (a LOWER bound — the safe direction for a dedup gate:
     capping can only under-flag, never false-positive).
     """
-    base = _pin_mode(
-        shingle_hash_table(documents, id_col, text_col, k, distinct=True),
-        materialize,
-    )
+    base = _pin(shingle_hash_table(documents, id_col, text_col, k, distinct=True))
     sizes = base.select("id", F.size("hashes").alias("sz"))
     inv = base.select("id", F.explode("hashes").alias("sh"))
     if max_df is not None:
@@ -952,8 +889,6 @@ def contamination_pairs(
     bench_id_col: str = "doc_id",
     bench_text_col: str = "text",
     max_broadcast_rows: int = 1_000_000,
-    broadcast_benchmark: bool | None = None,
-    floor: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination: corpus docs sharing at least one word
     k-gram with a benchmark/eval doc → (corpus_id, bench_id, n_shared).
@@ -969,22 +904,15 @@ def contamination_pairs(
     ≤ ``max_broadcast_rows`` documents (bounded existence probe, one cheap
     job at plan time).  A misuse with two large corpora falls back to a
     plain shuffle equi-join on the gram instead of OOM-ing every executor
-    on a forced broadcast.  Callers composing plans lazily (or whose
-    benchmark is an expensive derived frame) can pass
-    ``broadcast_benchmark=True/False`` to skip the probe job entirely and
-    keep this function pure plan construction.
+    on a forced broadcast.
 
-    ``floor=True`` raises the corpus side to the session's default
-    parallelism before the k-gram explode: a small-file scan (or a
-    filtered one) can collapse to ONE input partition, silently
+    The corpus side is raised to the session's default parallelism before
+    the k-gram explode (:func:`ensure_min_parallelism`): a small-file scan
+    (or a filtered one) can collapse to ONE input partition, silently
     serializing the CPU-heavy shingling onto a single core (measured 5.7 s
-    single-threaded vs sub-second spread at sf0.1).  Pass ``floor=False``
-    when ``corpus`` is a derived frame with exchanges upstream (the
-    floor's partition probe would execute those stages at plan-build time
-    — the :func:`shingle_hash_table` rule).
+    single-threaded vs sub-second spread at sf0.1).
     """
-    if floor:
-        corpus = ensure_min_parallelism(corpus)
+    corpus = ensure_min_parallelism(corpus)
     c_sh = corpus.select(
         F.col(id_col).alias("corpus_id"),
         F.explode(word_shingles(text_col, k)).alias("sh"),
@@ -993,17 +921,13 @@ def contamination_pairs(
         F.col(bench_id_col).alias("bench_id"),
         F.explode(word_shingles(bench_text_col, k)).alias("sh"),
     )
-    if broadcast_benchmark is not None:
-        small = broadcast_benchmark
-    else:
-        import logging
+    import logging
 
-        logging.getLogger(__name__).info(
-            "contamination_pairs: running a bounded row-count probe on the "
-            "benchmark frame to decide broadcast (re-executes its lineage); "
-            "pass broadcast_benchmark=True/False to skip"
-        )
-        small = benchmark.limit(max_broadcast_rows + 1).count() <= max_broadcast_rows
+    logging.getLogger(__name__).info(
+        "contamination_pairs: running a bounded row-count probe on the "
+        "benchmark frame to decide broadcast (re-executes its lineage)"
+    )
+    small = benchmark.limit(max_broadcast_rows + 1).count() <= max_broadcast_rows
     if small:
         b_sh = F.broadcast(b_sh)
     return (
@@ -1096,8 +1020,8 @@ def neardup_clusters(
     key-partitioned equi-joins + one aggregate, converging in O(component
     diameter) rounds (near-dup components are small and dense), per-round
     lineage truncated via a reliable checkpoint when the session has a
-    checkpoint dir, else localCheckpoint (the
-    :func:`minhash_neardup_pairs` ``materialize="auto"`` posture).
+    checkpoint dir, else localCheckpoint (the :func:`_pin` policy
+    :func:`minhash_neardup_pairs` pins with).
     Labels are min-ids in both strategies — identical, deterministic.
     """
     if pairs is None:
@@ -1261,7 +1185,7 @@ def update_clusters(
     # plan (e.g. a prefix-join pipeline) would re-execute per reference.
     # CONDITIONAL since r14: every production caller (q150/q156, the
     # bench probes, the streaming apply_*_batch folds) passes a pair set
-    # the probe operator ALREADY pinned under materialize="auto", so the
+    # the probe operator ALREADY pinned, so the
     # defensive pin re-materialized a narrow projection of a pinned RDD
     # — one redundant localCheckpoint job per fold.  The pin now runs
     # only when the pairs plan carries an exchange or a Python UDF
@@ -1550,7 +1474,6 @@ def cdc_dup_stats(
     text_col: str = "text",
     window: int = 8,
     divisor: int = 64,
-    materialize: str = "auto",
 ) -> DataFrame:
     """Per-document shared-content profile over CDC chunks: (id, n_chunks,
     n_shared) where a chunk is 'shared' when its fingerprint also appears in
@@ -1573,14 +1496,11 @@ def cdc_dup_stats(
     # never-unpersisted cache entry stays registered in the CacheManager
     # for the life of the session — checkpoint blocks are instead released
     # by the ContextCleaner once unreferenced.  Only the narrow (id, fp)
-    # pair relation is pinned, never chunk text.  ``materialize`` follows
-    # the minhash convention: "none" keeps the pure plan (chunking lineage
-    # recomputes per consumer; plan audits see the real structure).
-    ch = _pin_mode(
+    # pair relation is pinned, never chunk text.
+    ch = _pin(
         cdc_chunks(documents, id_col, text_col, window, divisor).select(
             id_col, "chunk_fp"
-        ),
-        materialize,
+        )
     )
     shared_fps = (
         ch.dropDuplicates([id_col, "chunk_fp"])
@@ -1715,7 +1635,6 @@ def jaccard_prefix_pairs(
     text_col: str = "text",
     k: int = 3,
     threshold: float = 0.8,
-    materialize: str = "auto",
 ) -> DataFrame:
     """Exact n-gram Jaccard pairs via PREFIX FILTERING (AllPairs/PPJoin
     family) — same output contract as :func:`ngram_jaccard_pairs`, much
@@ -1743,7 +1662,7 @@ def jaccard_prefix_pairs(
     # the stored-index probe cannot drift (the helpers are the shared
     # truth; see their docstrings for the hash/order/ε-guard rationale).
     prefix, _freq, base = jaccard_prefix_index(
-        documents, id_col, text_col, k, threshold, materialize
+        documents, id_col, text_col, k, threshold
     )
     return jaccard_prefix_self_pairs(prefix, base, threshold)
 
@@ -1792,7 +1711,6 @@ def duplicated_span_stats(
     min_count: int = 2,
     cross_doc_only: bool = False,
     unit: str = "token",
-    materialize: str = "auto",
 ) -> DataFrame:
     """Exact duplicated-SPAN detection (Lee et al. 2021, "Deduplicating
     Training Data Makes Language Models Better" — the ExactSubstr rule,
@@ -1838,23 +1756,11 @@ def duplicated_span_stats(
 
     Since r13 the marking is ONE window-function pass over the window
     table (see :func:`_marked_spans`), so the table has a single
-    consumer, nothing is pinned, and the default ``materialize="auto"``
-    is pure-lazy — the ADVICE r12 eager-side-effect note no longer
-    applies.  Forced modes ("checkpoint"/"local") are honored on the
-    maximal-span relation (r14, ADVICE r13): a caller that explicitly
-    demands a reliable checkpoint for executor-loss safety gets one, on
-    the subtree every downstream consumer reads.
+    consumer, nothing is pinned, and the operator is pure-lazy — the
+    ADVICE r12 eager-side-effect note no longer applies.
     """
-    if materialize not in ("auto", "checkpoint", "local", "none"):
-        raise ValueError(f"unknown materialize mode {materialize!r}")
     base, wins = _span_windows(documents, window, id_col, text_col, unit)
     spans = _marked_spans(wins, window, min_count, cross_doc_only)
-    # forced modes are HONORED on the maximal-span relation (ADVICE r13:
-    # validating-then-ignoring left callers who explicitly demanded a
-    # reliable checkpoint with a pure-lazy plan and no warning); "auto"
-    # stays pure-lazy — the single-consumer plan needs no pin
-    if materialize in ("checkpoint", "local"):
-        spans = _pin_mode(spans, materialize)
     return _span_stats(base, spans, id_col, unit)
 
 
@@ -2225,7 +2131,6 @@ def span_hash_index(
     window: int = 8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    materialize: str = "auto",
     unit: str = "token",
 ) -> DataFrame:
     """The persistent half of INCREMENTAL duplicated-span detection —
@@ -2252,7 +2157,7 @@ def span_hash_index(
         F.count(F.lit(1)).alias("cnt"),
         F.count_distinct("id").alias("n_docs"),
     )
-    return _pin_mode(idx, materialize)
+    return _pin(idx)
 
 
 def cut_duplicated_spans(
@@ -2263,7 +2168,6 @@ def cut_duplicated_spans(
     min_count: int = 2,
     cross_doc_only: bool = False,
     unit: str = "token",
-    materialize: str = "auto",
 ) -> DataFrame:
     """The ACTION step of ExactSubstr dedup (Lee et al. 2021 apply the
     cut, not just the count): excise every maximal duplicated span found
@@ -2295,19 +2199,11 @@ def cut_duplicated_spans(
     Since r13 the marking is one window-function pass (see
     :func:`_marked_spans`) and BOTH units rebuild via an
     O(spans-per-doc) fold over the per-document span array — nothing is
-    pinned, no per-token explode ever reaches a join, and the default
-    ``materialize="auto"`` is pure-lazy.  Forced modes
-    ("checkpoint"/"local") are honored on the maximal-span relation
-    (r14, ADVICE r13; see :func:`duplicated_span_stats`).
+    pinned, no per-token explode ever reaches a join, and the operator
+    is pure-lazy.
     """
-    if materialize not in ("auto", "checkpoint", "local", "none"):
-        raise ValueError(f"unknown materialize mode {materialize!r}")
     base, wins = _span_windows(documents, window, id_col, text_col, unit)
     spans = _marked_spans(wins, window, min_count, cross_doc_only)
-    # forced modes honored on the span relation (ADVICE r13; see
-    # duplicated_span_stats) — "auto" stays pure-lazy
-    if materialize in ("checkpoint", "local"):
-        spans = _pin_mode(spans, materialize)
     if unit == "char":
         span_arrs = spans.groupBy("id").agg(
             F.array_sort(
@@ -2447,7 +2343,6 @@ def duplicated_spans_against_index(
     min_count: int = 2,
     cross_doc_only: bool = False,
     unit: str = "token",
-    materialize: str = "auto",
 ) -> DataFrame:
     """Probe a NEW batch against a stored :func:`span_hash_index`:
     per-batch-document duplicated-span stats over the UNION corpus
@@ -2465,8 +2360,6 @@ def duplicated_spans_against_index(
     batch's OWN distinct hashes against the stored index (left join —
     the index never shuffles more than the matching keys); island merge
     is per-batch-doc.  The indexed corpus is never re-read."""
-    if materialize not in ("auto", "checkpoint", "local", "none"):
-        raise ValueError(f"unknown materialize mode {materialize!r}")
     base, wins = _span_windows(new_docs, window, id_col, text_col, unit)
     # single-pass marking (r13, the _marked_spans shape): the batch-side
     # count rides a window over ``wh`` and the stored counters attach
@@ -2495,10 +2388,6 @@ def duplicated_spans_against_index(
     )
     marked = joined.where(key >= min_count).select("id", "pos")
     spans = _merge_islands(marked, window)
-    # forced modes honored on the span relation (ADVICE r13; see
-    # duplicated_span_stats) — "auto" stays pure-lazy
-    if materialize in ("checkpoint", "local"):
-        spans = _pin_mode(spans, materialize)
     return _span_stats(base, spans, id_col, unit)
 
 
@@ -2647,8 +2536,6 @@ def jaccard_prefix_index(
     text_col: str = "text",
     k: int = 3,
     threshold: float = 0.8,
-    materialize: str = "auto",
-    floor: bool = True,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """The persistent half of EXACT-Jaccard incremental dedup — the
     prefix-family counterpart of :func:`minhash_band_index`.  Returns the
@@ -2673,11 +2560,10 @@ def jaccard_prefix_index(
     Parameters (k, threshold) are part of the index identity — probe with
     the same values or the prefix lengths are meaningless.
     """
-    base = _pin_mode(
+    base = _pin(
         shingle_hash_table(
-            documents, id_col, text_col, k, distinct=True, floor=floor
-        ).withColumnRenamed("hashes", "shingles"),
-        materialize,
+            documents, id_col, text_col, k, distinct=True
+        ).withColumnRenamed("hashes", "shingles")
     )
     freq = (
         base.select(F.explode("shingles").alias("sh"))
@@ -2739,8 +2625,6 @@ def jaccard_prefix_against_index(
     text_col: str = "text",
     k: int = 3,
     threshold: float = 0.8,
-    materialize: str = "auto",
-    floor: bool = True,
 ) -> DataFrame:
     """Incremental EXACT-Jaccard dedup: pairs (id_a, id_b, jaccard) with at
     least one NEW endpoint — new-vs-corpus and new-vs-new — by probing the
@@ -2766,8 +2650,7 @@ def jaccard_prefix_against_index(
     fingerprints afterwards to keep the index current.
     """
     out, _base, _pref = jaccard_prefix_probe_parts(
-        new_docs, prefix, freq, fingerprints, id_col, text_col, k,
-        threshold, materialize, floor,
+        new_docs, prefix, freq, fingerprints, id_col, text_col, k, threshold
     )
     return out
 
@@ -2781,8 +2664,6 @@ def jaccard_prefix_probe_parts(
     text_col: str = "text",
     k: int = 3,
     threshold: float = 0.8,
-    materialize: str = "auto",
-    floor: bool = True,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """:func:`jaccard_prefix_against_index` plus its intermediates:
     ``(pairs, new_base, new_prefix)`` — the batch's fingerprint sets and
@@ -2790,15 +2671,12 @@ def jaccard_prefix_probe_parts(
     after the probe (see streaming.incremental.apply_prefix_batch), so
     exposing the pinned relations saves re-shingling and re-ranking the
     batch a second time."""
-    if materialize not in ("auto", "checkpoint", "local", "none"):
-        raise ValueError(f"unknown materialize mode {materialize!r}")
-    new_base = _pin_mode(
+    new_base = _pin(
         shingle_hash_table(
-            new_docs, id_col, text_col, k, distinct=True, floor=floor
-        ).withColumnRenamed("hashes", "shingles"),
-        materialize,
+            new_docs, id_col, text_col, k, distinct=True
+        ).withColumnRenamed("hashes", "shingles")
     )
-    new_prefix = _pin_mode(_prefix_rows(new_base, freq, threshold), materialize)
+    new_prefix = _pin(_prefix_rows(new_base, freq, threshold))
     all_prefix = prefix.select("id", "sz", "sh", "__pos").unionByName(new_prefix)
     is_l_a = F.col("l.id") < F.col("r.id")
     matches = (
@@ -2830,4 +2708,4 @@ def jaccard_prefix_probe_parts(
     out = _exact_jaccard_filter(
         cand, all_fps.select("id", F.col("shingles").alias("hashes")), threshold
     )
-    return _pin_mode(out, materialize), new_base, new_prefix
+    return _pin(out), new_base, new_prefix

@@ -60,7 +60,7 @@ def _fake_decode(payload: bytes) -> list[float]:
     return [float(payload[i % len(payload)]) / 255.0 if payload else 0.0 for i in range(8)]
 
 
-def extract_features(media: DataFrame, batch_hint: int | None = None) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Decode + featurize each media row via Arrow-batched mapInPandas.
 
     Partition-parallel: each task streams record batches, decodes rows, and
@@ -82,10 +82,7 @@ def extract_features(media: DataFrame, batch_hint: int | None = None) -> DataFra
                 }
             )
 
-    df = media
-    if batch_hint:
-        df = df.repartition(batch_hint)
-    return ensure_min_parallelism(df).mapInPandas(_run, schema=FEATURE_SCHEMA)
+    return ensure_min_parallelism(media).mapInPandas(_run, schema=FEATURE_SCHEMA)
 
 
 def sample_frames(media: DataFrame, every_n: int = 10) -> DataFrame:

@@ -73,32 +73,13 @@ def _score_pairs(cand: DataFrame) -> DataFrame:
     )
 
 
-def _topk_tail(scored: DataFrame, k: int, two_phase: bool = False) -> DataFrame:
+def _topk_tail(scored: DataFrame, k: int) -> DataFrame:
     """Shared top-k tail: rank per query by (cos_sim desc, neighbor_id asc —
     deterministic tie-break), keep rank <= k.  ONE place to change ranking
-    semantics for the whole similarity family.
-
-    ``two_phase=True`` is the hot-reducer fix for few-queries-huge-corpus:
-    a single window on ``query_id`` funnels EVERY scored pair for a query
-    through one reducer.  Phase 1 windows on (query_id, input partition) —
-    same shuffle volume but reducer parallelism = #queries × #partitions —
-    keeping ≤ k rows per (query, partition); phase 2 runs the global window
-    over that ≤ k × #partitions residue.  Output is provably identical
-    (each query's true top-k survives phase 1: a true top-k row is top-k
-    within any subset containing it)."""
+    semantics for the whole similarity family."""
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id").asc()
     )
-    if two_phase:
-        wp = Window.partitionBy("query_id", "__pt").orderBy(
-            F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-        )
-        scored = (
-            scored.withColumn("__pt", F.spark_partition_id())
-            .withColumn("__pr", F.row_number().over(wp))
-            .where(F.col("__pr") <= k)
-            .drop("__pt", "__pr")
-        )
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
@@ -141,15 +122,12 @@ def cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    two_phase: bool = False,
 ) -> DataFrame:
     """Exact brute-force cosine top-k of each query against the corpus.
 
     Output: (query_id, neighbor_id, rank, cos_sim) — rank 1..k, ties broken
     by neighbor_id ascending for determinism.  Self-matches excluded when a
-    query id equals a corpus id.  ``two_phase=True`` pre-prunes top-k per
-    input partition before the global per-query window (identical output;
-    the 100 TB setting — see :func:`_topk_tail`).
+    query id equals a corpus id.
     """
     # norms precomputed per side: the per-pair work is ONE dot product
     q = F.broadcast(
@@ -160,7 +138,7 @@ def cosine_topk(
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv")
     ).withColumn("__cn", l2_norm(F.col("__cv")))
-    return _topk_tail(_score_pairs(c.crossJoin(q)), k, two_phase=two_phase)
+    return _topk_tail(_score_pairs(c.crossJoin(q)), k)
 
 
 def hard_negatives(
@@ -171,7 +149,6 @@ def hard_negatives(
     vec_col: str = "embedding",
     label_col: str = "label",
     query_id_col: str = "query_id",
-    two_phase: bool = False,
 ) -> DataFrame:
     """Hard-negative mining for contrastive training: per query, the top-k
     MOST-similar corpus vectors carrying a DIFFERENT label — the negatives
@@ -185,8 +162,7 @@ def hard_negatives(
     post-filter of the overall top-k (which could return < k or empty).
 
     Scale shape mirrors :func:`cosine_topk`: queries broadcast, corpus
-    never shuffles, ``two_phase=True`` for the few-queries-huge-corpus
-    reducer funnel.  For corpora past brute-force reach, generate
+    never shuffles.  For corpora past brute-force reach, generate
     candidates with the LSH/IVF buckets first and apply the same
     label-mismatch + rank tail to the shortlist.
     """
@@ -203,7 +179,7 @@ def hard_negatives(
         F.col(label_col).alias("neighbor_label"),
     ).withColumn("__cn", l2_norm(F.col("__cv")))
     cand = c.crossJoin(q).where(F.col("neighbor_label") != F.col("__ql"))
-    ranked = _topk_tail(_score_pairs(cand), k, two_phase=two_phase)
+    ranked = _topk_tail(_score_pairs(cand), k)
     # re-attach the neighbor label (the shared tail projects it away):
     # broadcast the RANKED side — k×|queries| rows — against the
     # corpus-sized label relation, never the reverse
@@ -249,7 +225,6 @@ def lsh_bucket_topk(
     query_id_col: str = "query_id",
     seed: int = 42,
     n_tables: int = 1,
-    two_phase: bool = False,
     n_probe: int = 0,
 ) -> DataFrame:
     """Approximate cosine top-k: candidates share the query's hyperplane
@@ -362,7 +337,7 @@ def lsh_bucket_topk(
         # can only arise across tables — single-table callers skip this
         # shuffle
         cand = cand.dropDuplicates(["query_id", "neighbor_id"])
-    return _topk_tail(_score_pairs(cand), k, two_phase=two_phase)
+    return _topk_tail(_score_pairs(cand), k)
 
 
 def kmeans_centroids(
@@ -444,7 +419,6 @@ def ivf_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     centroids: DataFrame | None = None,
-    two_phase: bool = False,
 ) -> DataFrame:
     """IVF approximate top-k: corpus vectors live in ONE inverted list (their
     nearest centroid); each query probes its ``n_probe`` nearest lists and
@@ -482,7 +456,7 @@ def ivf_topk(
         .join(c, "neighbor_id")
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    return _topk_tail(_score_pairs(cand), k, two_phase=two_phase)
+    return _topk_tail(_score_pairs(cand), k)
 
 
 def _l2sq_lit(vec: Column, lit_vec: list[float]) -> Column:
@@ -870,7 +844,6 @@ def sq8_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    two_phase: bool = False,
 ) -> DataFrame:
     """SQ8-compressed cosine top-k: scan dequantized int8 codes for a
     shortlist, exactly rerank the shortlist with the raw vectors.
@@ -922,7 +895,7 @@ def sq8_topk(
         .where(F.col("__srank") <= shortlist)
         .withColumn("__cn", l2_norm(F.col("__cv")))
     )
-    return _topk_tail(_score_pairs(short), k, two_phase=two_phase)
+    return _topk_tail(_score_pairs(short), k)
 
 
 def sq8_build_codes(
@@ -953,7 +926,6 @@ def sq8_topk_against_codes(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    two_phase: bool = False,
 ) -> DataFrame:
     """SQ8 top-k probing a STORED code table: the shortlist scan reads ONLY
     the 1-byte/dim codes; the raw float column is touched for just the
@@ -1001,7 +973,7 @@ def sq8_topk_against_codes(
     rerank = raw.join(F.broadcast(short), "neighbor_id").withColumn(
         "__cn", l2_norm(F.col("__cv"))
     )
-    return _topk_tail(_score_pairs(rerank), k, two_phase=two_phase)
+    return _topk_tail(_score_pairs(rerank), k)
 
 
 def rrf_fuse(
@@ -1069,7 +1041,6 @@ def semantic_dedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     centroids: DataFrame | None = None,
-    materialize: str = "auto",
     impl: str = "arrow",
 ) -> DataFrame:
     """SemDeDup-style semantic dedup (Abbas et al. 2023, "SemDeDup: data-
@@ -1092,12 +1063,11 @@ def semantic_dedup(
     the :func:`ivf_topk` convention) for cross-engine reproducibility;
     pass :func:`kmeans_centroids` for trained cells (identical plan).
 
-    ``materialize`` (the minhash convention: auto/checkpoint/local/none)
-    pins the (id, cell, vector) assignment before the self-join — the
-    plan references it three times (both join sides and the output), and
-    without pinning each reference replays the centroid scoring.  The
-    pinned relation is input-sized (the SemDeDup index itself); "none"
-    keeps a pure plan for audits.
+    The (id, cell, vector) assignment is pinned (``dedup._pin``) before
+    the self-join — the plan references it three times (both join sides
+    and the output), and without pinning each reference replays the
+    centroid scoring.  The pinned relation is input-sized (the SemDeDup
+    index itself).
 
     ``impl``:
 
@@ -1113,7 +1083,7 @@ def semantic_dedup(
     - ``"sql"``: pure Catalyst expressions (the oracle-mirroring reference
       formulation; zero Python).
     """
-    from eodatadown_spark.operators.dedup import _pin_mode
+    from eodatadown_spark.operators.dedup import _pin
 
     if impl not in ("arrow", "sql"):
         raise ValueError(f"unknown semantic_dedup impl {impl!r}")
@@ -1130,9 +1100,7 @@ def semantic_dedup(
     if centroids is None:
         centroids = corpus.where(F.col(id_col) < n_clusters)
     if impl == "arrow":
-        return _semantic_dedup_arrow(
-            corpus, centroids, threshold, id_col, vec_col, materialize
-        )
+        return _semantic_dedup_arrow(corpus, centroids, threshold, id_col, vec_col)
     cells = ivf_assign_cells(
         corpus, centroids, id_col, vec_col, n_probe=1, centroid_id_col=id_col
     ).select("id", "cell")
@@ -1140,9 +1108,7 @@ def semantic_dedup(
     # norms precompute once per VECTOR here; the pair predicate below then
     # evaluates one higher-order dot per pair instead of three (HOF lambdas
     # run interpreted, not codegen — they are the per-pair unit cost)
-    tagged = _pin_mode(
-        cells.join(v, "id").withColumn("__n", l2_norm(F.col("__v"))), materialize
-    )
+    tagged = _pin(cells.join(v, "id").withColumn("__n", l2_norm(F.col("__v"))))
     # spread the probe side across partitions: the within-cell join's pair
     # generation + scoring parallelism follows the LEFT side's partitioning
     # (a broadcast join preserves it, and a narrow parquet scan can arrive
@@ -1186,7 +1152,6 @@ def _semantic_dedup_arrow(
     threshold: float,
     id_col: str,
     vec_col: str,
-    materialize: str,
 ) -> DataFrame:
     """Vectorized semantic_dedup body: numpy-matmul assignment + per-cell
     row-blocked Gram pairing.  Same contract as the sql path: nearest cell
@@ -1195,7 +1160,7 @@ def _semantic_dedup_arrow(
     no cell and are excluded (as the sql path's null-sim filter does)."""
     import numpy as np
 
-    from eodatadown_spark.operators.dedup import _pin_mode
+    from eodatadown_spark.operators.dedup import _pin
 
     # a coarse-quantizer codebook is small by construction (same bounded
     # collect as pq_train_codebook); rows sorted by cell id so np.argmax's
@@ -1261,9 +1226,8 @@ def _semantic_dedup_arrow(
     src = corpus.select(
         F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("__v")
     )
-    tagged = _pin_mode(
-        src.mapInPandas(assign, f"id {id_type}, cell long, __v array<double>"),
-        materialize,
+    tagged = _pin(
+        src.mapInPandas(assign, f"id {id_type}, cell long, __v array<double>")
     )
 
     block = 1024
@@ -1389,7 +1353,6 @@ def knn_label_vote(
     vec_col: str = "embedding",
     label_col: str = "label",
     query_id_col: str = "query_id",
-    two_phase: bool = False,
 ) -> DataFrame:
     """k-NN majority-vote classification: each query takes the label most
     common among its ``k`` exact cosine neighbors in the labeled corpus →
@@ -1403,15 +1366,15 @@ def knn_label_vote(
 
     Ties break deterministically: more votes → higher summed similarity →
     lexicographically smaller label.  Built on :func:`cosine_topk`, so the
-    scale shape is the broadcast-queries / partition-parallel-corpus scan
-    (``two_phase=True`` for the huge-corpus setting); the vote itself is
+    scale shape is the broadcast-queries / partition-parallel-corpus scan;
+    the vote itself is
     one small aggregation over q×k rows.  For a labeled corpus too big to
     scan per batch, swap the neighbor stage for :func:`ivf_topk` /
     :func:`pq_topk` — the vote tail is identical.
     """
     nn = cosine_topk(
         labeled, queries, k=k, id_col=id_col, vec_col=vec_col,
-        query_id_col=query_id_col, two_phase=two_phase,
+        query_id_col=query_id_col,
     )
     # NULL-labeled corpus rows cannot vote (and Spark's asc = NULLS FIRST
     # would otherwise let a NULL win ties, diverging from SQL's NULLS LAST)
@@ -1447,7 +1410,6 @@ def mmr_rerank(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     candidates: DataFrame | None = None,
-    materialize: str = "auto",
 ) -> DataFrame:
     """Maximal-Marginal-Relevance diversified top-k → (query_id,
     neighbor_id, rank): greedily pick the candidate maximizing
@@ -1470,7 +1432,7 @@ def mmr_rerank(
     would need a true score gap under 1e-6 that also straddles a grid
     boundary.  Output carries ranks only, no float columns.
     """
-    from eodatadown_spark.operators.dedup import _pin_mode
+    from eodatadown_spark.operators.dedup import _pin
 
     dbl = f"cast({vec_col} as array<double>)"
     if candidates is None:
@@ -1499,18 +1461,17 @@ def mmr_rerank(
             .where(F.col("__rk") <= shortlist)
             .select("query_id", "neighbor_id", "rel", "__cv")
         )
-    cand = _pin_mode(candidates, materialize)
+    cand = _pin(candidates)
 
     w1 = Window.partitionBy("query_id").orderBy(
         F.round("rel", 6).desc(), F.col("neighbor_id").asc()
     )
-    selected = _pin_mode(
+    selected = _pin(
         cand.withColumn("__r", F.row_number().over(w1))
         .where(F.col("__r") == 1)
         .select(
             "query_id", "neighbor_id", "__cv", F.lit(1).cast("int").alias("rank")
-        ),
-        materialize,
+        )
     )
     for step in range(2, k + 1):
         rem = cand.join(
@@ -1546,7 +1507,7 @@ def mmr_rerank(
                 F.lit(step).cast("int").alias("rank"),
             )
         )
-        selected = _pin_mode(selected.unionByName(pick), materialize)
+        selected = _pin(selected.unionByName(pick))
     return selected.select("query_id", "neighbor_id", "rank")
 
 
@@ -1588,7 +1549,6 @@ def ivf_topk_against_index(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     centroid_id_col: str = "vec_id",
-    two_phase: bool = False,
 ) -> DataFrame:
     """IVF top-k against STORED inverted lists (:func:`ivf_build_lists`
     output): per query, quantize against the stored centroids, scan only
@@ -1615,4 +1575,4 @@ def ivf_topk_against_index(
         .join(probes, "query_id")
     )
     cand = c.join(q, "cell").dropDuplicates(["query_id", "neighbor_id"])
-    return _topk_tail(_score_pairs(cand), k, two_phase=two_phase)
+    return _topk_tail(_score_pairs(cand), k)

@@ -195,7 +195,6 @@ def run_scene_tasks(
     scenes_todo: DataFrame,
     task_fn: Callable[[dict], dict],
     out_schema: str,
-    n_partitions: int | None = None,
 ) -> DataFrame:
     """P2: distribute per-scene side-effecting work; return state-update rows.
 
@@ -206,10 +205,6 @@ def run_scene_tasks(
     multiprocessing.Pool + per-scene commits (eodatadownrun.py:786-787).
     """
     import pandas as pd
-
-    if n_partitions:
-        scenes_todo = scenes_todo.repartition(n_partitions)
-
     from pyspark.sql.types import StructType
 
     empty_cols = StructType.fromDDL(out_schema).fieldNames()

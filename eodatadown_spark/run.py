@@ -79,7 +79,6 @@ def find_new_downloads(
 def process_scenes_all_steps(
     system: SystemMain,
     runners: Mapping[str, Callable[[dict], dict]] | None = None,
-    n_partitions: int | None = None,
 ) -> dict[str, dict[str, int]]:
     """Advance every sensor through download → ARD → datacube with one
     batched merge per stage (the reference walks scene-by-scene in a

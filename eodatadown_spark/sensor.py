@@ -169,11 +169,16 @@ class SensorBase:
         return n
 
     def rm_scns_intersect(self, roi: DataFrame) -> int:
-        """J3: delete scenes not intersecting the ROI; returns rows removed."""
-        catalog = self.scenes()
-        before = catalog.count()
-        kept = ingest.filter_scenes_roi(catalog, roi, keep_intersecting=True)
-        self._commit(kept)
+        """J3: delete scenes not intersecting the ROI; returns rows removed.
+
+        The trim derives from the stored scenes, so it commits through the
+        base-checked flip: a concurrent commit makes it re-trim on top of
+        the winner instead of flipping a stale frame over it."""
+        before = self.scenes().count()
+        self.catalog.replace_derived(
+            self.table,
+            lambda cur: ingest.filter_scenes_roi(cur, roi, keep_intersecting=True),
+        )
         return before - self.scenes().count()
 
     # -- queries (lazy) ----------------------------------------------------
@@ -331,12 +336,11 @@ class SensorBase:
         todo: DataFrame,
         task_fn: Callable[[dict], dict],
         update_schema: str,
-        select_cols: Sequence[str] = ("pid", "remote_url"),
     ) -> int:
-        """Fan out `task_fn` over the to-do scenes, apply ONE batched state
-        merge, persist; returns scenes updated."""
+        """Fan out `task_fn` over the to-do scenes' (pid, remote_url), apply
+        ONE batched state merge, persist; returns scenes updated."""
         catalog = self.scenes()
-        cols = [c for c in select_cols if c in catalog.columns]
+        cols = [c for c in ("pid", "remote_url") if c in catalog.columns]
         scoped = catalog.join(todo.select("pid"), "pid", "left_semi").select(*cols)
         updates = pipeline.run_scene_tasks(scoped, task_fn, update_schema).persist()
         try:

@@ -74,21 +74,30 @@ def cmd_chknewscns(args) -> None:
     print(f"added {n} scene(s); catalog now has {sensor.scenes().count()}")
 
 
+def _stage_runners(catalog_dir: str) -> dict:
+    """Mock stage runners of the CLI: products land under the catalog dir."""
+    return {
+        "download": lambda s: {"pid": s["pid"], "downloaded": True,
+                               "download_path": f"{catalog_dir}/dl/{s['pid']}"},
+        "con2ard": lambda s: {"pid": s["pid"], "ardproduct": True,
+                              "ardproduct_path": f"{catalog_dir}/ard/{s['pid']}"},
+        "datacube": lambda s: {"pid": s["pid"], "dcloaded": True},
+    }
+
+
 def cmd_process(args) -> None:
-    from eodatadown_spark import pipeline, queries as Q
+    from eodatadown_spark import pipeline, run
+    from eodatadown_spark.sensor import get_sensor_obj
 
     cat = _cat(args)
-    catalog = cat.read_clean("landsat_scenes")
-    todo = pipeline.scenes_need_processing(catalog)
+    sensor = get_sensor_obj("LandsatGOOG", cat)
+    todo = pipeline.scenes_need_processing(sensor.scenes())
     print(f"{todo.count()} scenes need processing")
-    updates = pipeline.run_scene_tasks(
-        catalog.join(Q.get_scnlist_download(catalog), "pid", "left_semi").select("pid"),
-        lambda s: {"pid": s["pid"], "downloaded": True,
-                   "download_path": f"{args.catalog}/dl/{s['pid']}"},
-        "pid long, downloaded boolean, download_path string",
+    sensor.run_stage(
+        sensor.get_scnlist_download(),
+        _stage_runners(args.catalog)["download"],
+        run.STAGES["download"][1],
     )
-    catalog = pipeline.apply_updates(catalog, updates)
-    cat.write(catalog, "landsat_scenes")
     print("download stage complete (mock runner)")
 
 
@@ -708,7 +717,8 @@ def cmd_gencmds(args) -> None:
 
 
 def cmd_roi(args) -> None:
-    from eodatadown_spark import ingest, schemas
+    from eodatadown_spark import schemas
+    from eodatadown_spark.sensor import get_sensor_obj
 
     cat = _cat(args)
     w, s, e, n = (float(x) for x in args.bbox.split(","))
@@ -717,41 +727,29 @@ def cmd_roi(args) -> None:
           "south_lat": s, "north_lat": n, "wkt": None}],
         schema=schemas.ROI_POLYGONS,
     )
-    catalog = cat.read_clean("landsat_scenes")
-    kept = ingest.filter_scenes_roi(catalog, roi, keep_intersecting=True)
-    cat.write(kept, "landsat_scenes")
-    print(f"kept {cat.read_clean('landsat_scenes').count()} scenes inside ROI")
+    sensor = get_sensor_obj("LandsatGOOG", cat)
+    sensor.rm_scns_intersect(roi)
+    print(f"kept {sensor.scenes().count()} scenes inside ROI")
 
 
 def cmd_runscn(args) -> None:
     """eoddrun -p / eoddrunscnmonitoring: drive the state machine for ONE
     scene — each pending stage for that pid advances with a batched
     partition-selective merge (never a whole-catalog rewrite)."""
+    from eodatadown_spark import run
     from eodatadown_spark.sensor import get_sensor_obj
 
     cat = _cat(args)
     sensor = get_sensor_obj(args.sensor, cat)
     sensor.get_scn_record(args.pid)  # F10 .one(): raises if pid unknown
     ran = []
+    runners = _stage_runners(args.catalog)
     # the sensor facade's own stage-list wrappers, so a subclass that
     # customizes them keeps runscn consistent with process/monitoring
-    stages = [
-        ("download", sensor.get_scnlist_download,
-         lambda s: {"pid": s["pid"], "downloaded": True,
-                    "download_path": f"{args.catalog}/dl/{s['pid']}"},
-         "pid long, downloaded boolean, download_path string"),
-        ("con2ard", sensor.get_scnlist_con2ard,
-         lambda s: {"pid": s["pid"], "ardproduct": True,
-                    "ardproduct_path": f"{args.catalog}/ard/{s['pid']}"},
-         "pid long, ardproduct boolean, ardproduct_path string"),
-        ("datacube", sensor.get_scnlist_datacube,
-         lambda s: {"pid": s["pid"], "dcloaded": True},
-         "pid long, dcloaded boolean"),
-    ]
-    for name, todo_fn, task, schema in stages:
-        todo = todo_fn().where(F.col("pid") == args.pid)
+    for name, (getter, ddl, _default) in run.STAGES.items():
+        todo = getattr(sensor, getter)().where(F.col("pid") == args.pid)
         if todo.count():
-            sensor.run_stage(todo, task, schema)
+            sensor.run_stage(todo, runners[name], ddl)
             ran.append(name)
     print(json.dumps({"pid": args.pid, "stages_run": ran}))
 
@@ -873,8 +871,11 @@ def cmd_reset(args) -> None:
 
     cat = _cat(args)
     pids = [int(p) for p in args.pids.split(",")] if args.pids else None
-    catalog = reset_download_state(cat.read_clean("landsat_scenes"), pids)
-    cat.write(catalog, "landsat_scenes")
+    # derived from the stored rows, so it commits through the base-checked
+    # flip (merge_updates coalesces NULLs and could not clear timestamps)
+    cat.replace_derived(
+        "landsat_scenes", lambda cur: reset_download_state(cur, pids)
+    )
     print(f"reset {'all' if pids is None else len(pids)} scene(s)")
 
 

@@ -73,14 +73,8 @@ class TestMinhashSkewEscapes:
         from eodatadown_spark.operators.dedup import minhash_neardup_pairs
 
         docs, n_boiler = _boiler_corpus(spark)
-        base = _pairs_set(
-            minhash_neardup_pairs(docs, materialize="none")
-        )
-        salted = _pairs_set(
-            minhash_neardup_pairs(
-                docs, materialize="none", candidate_salts=8
-            )
-        )
+        base = _pairs_set(minhash_neardup_pairs(docs))
+        salted = _pairs_set(minhash_neardup_pairs(docs, candidate_salts=8))
         assert salted == base
         # the mega-cluster: every boilerplate pair at jaccard 1.0
         boiler = {(a, b, j) for a, b, j in base
@@ -95,12 +89,8 @@ class TestMinhashSkewEscapes:
         from eodatadown_spark.operators.dedup import minhash_neardup_pairs
 
         docs, n_boiler = _boiler_corpus(spark)
-        base = _pairs_set(minhash_neardup_pairs(docs, materialize="none"))
-        capped = _pairs_set(
-            minhash_neardup_pairs(
-                docs, materialize="none", max_band_bucket=20
-            )
-        )
+        base = _pairs_set(minhash_neardup_pairs(docs))
+        capped = _pairs_set(minhash_neardup_pairs(docs, max_band_bucket=20))
         boiler = {(a, b, j) for a, b, j in base
                   if a < n_boiler and b < n_boiler}
         # every boilerplate band bucket has 36 > 20 members → dropped;
@@ -196,8 +186,7 @@ class TestPrefixJaccardBoilerplate:
 
         got = {
             (r["id_a"], r["id_b"]) for r in
-            jaccard_prefix_pairs(docs, threshold=0.8, materialize="none")
-            .collect()
+            jaccard_prefix_pairs(docs, threshold=0.8).collect()
         }
         assert got == {(100 + 2 * p, 101 + 2 * p) for p in range(5)}
 
@@ -224,44 +213,49 @@ def test_scaling_md_quotes_match(spark):
     assert n_boiler == 36 and n_boiler * (n_boiler - 1) // 2 == 630
 
 
-def test_floor_plumbs_through_public_minhash_entry_points(spark):
-    """Round-6 ADVICE (low) + r14 ADVICE r13 (low): the public minhash
-    entry points accept ``floor=False``, and since r14 the floor's
-    LEAF-SCAN-ONLY contract is ENFORCED — ensure_min_parallelism skips
-    the df.rdd partition probe whenever the physical plan carries an
-    Exchange, so plan construction is job-free even when an external
-    caller hands a derived (exchange-bearing) input to a ``floor=True``
-    default.  Asserted directly via job-group tracking, plus output
-    identity."""
-    from eodatadown_spark.operators.dedup import (
-        minhash_band_index,
-        minhash_neardup_pairs,
-    )
+@pytest.mark.parametrize("op", [
+    "dedup.minhash_band_index",
+    "dedup.simhash_sketches",
+    "classify.hashed_features",
+    "classify.hashed_feature_sets",
+])
+def test_parallelism_floor_skips_exchange_bearing_inputs(spark, op):
+    """The lazy operators always apply the parallelism floor, and the
+    floor's LEAF-SCAN-ONLY contract is ENFORCED — ensure_min_parallelism
+    skips the df.rdd partition probe whenever the physical plan carries
+    an Exchange, so building the plan over a derived (exchange-bearing)
+    input launches no job.  Asserted directly via job-group tracking."""
+    import importlib
 
+    mod, name = op.split(".")
+    fn = getattr(
+        importlib.import_module(f"eodatadown_spark.operators.{mod}"), name
+    )
     docs, _ = _boiler_corpus(spark, n_total=40)
     derived = docs.join(docs.select("doc_id"), "doc_id")  # exchange upstream
 
     sc = spark.sparkContext
     tracker = sc.statusTracker()
-    sc.setJobGroup("floor_off_probe", "plan build must be job-free")
-    minhash_band_index(derived, floor=False)              # plan only
-    jobs_off = tracker.getJobIdsForGroup("floor_off_probe")
-    sc.setJobGroup("floor_on_probe", "the exchange guard skips the probe")
-    minhash_band_index(derived)                           # guard: no probe
-    jobs_on = tracker.getJobIdsForGroup("floor_on_probe")
-    sc.setJobGroup(None, None)
-    assert jobs_off == []          # job-free plan construction
-    assert jobs_on == []           # r14: the guard keeps the default
-    #                                job-free on derived inputs too
+    sc.setJobGroup("floor_probe", "the exchange guard skips the probe")
+    try:
+        fn(derived)                                       # plan only
+        jobs = tracker.getJobIdsForGroup("floor_probe")
+    finally:
+        sc.setJobGroup(None, None)
+    assert jobs == []
 
+
+def test_floor_plumbs_through_public_minhash_entry_points(spark):
+    """The floor guard changes no output: near-dup pairs over a derived
+    (exchange-bearing) copy of the corpus equal those over the scan."""
+    from eodatadown_spark.operators.dedup import minhash_neardup_pairs
+
+    docs, _ = _boiler_corpus(spark, n_total=40)
+    derived = docs.join(docs.select("doc_id"), "doc_id")  # exchange upstream
     base = {(r["id_a"], r["id_b"], round(r["jaccard"], 9))
-            for r in minhash_neardup_pairs(docs, materialize="none").collect()}
-    derived_out = {
-        (r["id_a"], r["id_b"], round(r["jaccard"], 9))
-        for r in minhash_neardup_pairs(
-            derived, materialize="none", floor=False
-        ).collect()
-    }
+            for r in minhash_neardup_pairs(docs).collect()}
+    derived_out = {(r["id_a"], r["id_b"], round(r["jaccard"], 9))
+                   for r in minhash_neardup_pairs(derived).collect()}
     assert derived_out == base
 
 
@@ -339,7 +333,7 @@ class TestSpanHotKey:
         docs = self._hot_corpus(spark)
         old = docs.where(F.col("doc_id") < 300)
         new = docs.where(F.col("doc_id") >= 300)
-        idx = span_hash_index(old, window=4, materialize="none")
+        idx = span_hash_index(old, window=4)
         out = duplicated_spans_against_index(
             new, idx, window=4, cross_doc_only=True
         )

@@ -98,9 +98,9 @@ def test_minhash_salted_candidates_identical_output(spark):
     rows = [(i, hot) for i in range(400)]
     rows += [(1000 + i, " ".join(rng.choice(vocab) for _ in range(40))) for i in range(20)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    plain = D.minhash_neardup_pairs(df, jaccard_threshold=0.9, materialize="none")
+    plain = D.minhash_neardup_pairs(df, jaccard_threshold=0.9)
     salted = D.minhash_neardup_pairs(
-        df, jaccard_threshold=0.9, materialize="none", candidate_salts=8
+        df, jaccard_threshold=0.9, candidate_salts=8
     )
     n = 400 * 399 // 2
     assert plain.count() == n
@@ -117,24 +117,13 @@ def test_minhash_band_bucket_cap_drops_mega_cluster(spark):
     rows += [(500, near), (501, near)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     capped = D.minhash_neardup_pairs(
-        df, jaccard_threshold=0.9, materialize="none", max_band_bucket=10
+        df, jaccard_threshold=0.9, max_band_bucket=10
     ).collect()
     got = {(r["id_a"], r["id_b"]) for r in capped}
     # the 50-doc mega-cluster saturates every band bucket → dropped;
     # the 2-doc near-dup bucket is under the cap → kept
     assert (500, 501) in got
     assert all(a >= 500 for a, b in got)
-
-
-def test_minhash_materialize_none_keeps_lineage(docs):
-    from eodatadown_spark.plans import audit
-
-    out = D.minhash_neardup_pairs(docs, jaccard_threshold=0.6, materialize="none")
-    # the pure plan exposes the real shuffle structure (banding + joins),
-    # which the checkpointed form hides behind a Scan ExistingRDD
-    assert audit.exchange_count(out) >= 2
-    with pytest.raises(ValueError, match="materialize"):
-        D.minhash_neardup_pairs(docs, materialize="bogus")
 
 
 def test_ngram_jaccard_exact_pairs(docs):
@@ -1010,37 +999,6 @@ def test_dup_ngram_fraction(spark):
     got = {r["doc_id"]: (r["n_grams"], r["dup_fraction"])
            for r in dup_ngram_fraction(docs, n=5).collect()}
     assert got == {1: (3, 0.3333), 2: (1, 1.0), 3: (2, 0.0)}
-
-
-def test_cosine_topk_two_phase_identical(spark):
-    """Two-phase (partition-pre-pruned) top-k returns byte-identical
-    results to the single-window form."""
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").repartition(7)
-    qs = emb.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    one = S.cosine_topk(emb, qs, k=4).collect()
-    two = S.cosine_topk(emb, qs, k=4, two_phase=True).collect()
-    key = lambda r: (r["query_id"], r["rank"])  # noqa: E731
-    assert sorted(map(tuple, one), key=lambda t: (t[0], t[2])) == \
-           sorted(map(tuple, two), key=lambda t: (t[0], t[2]))
-
-
-def test_lsh_ivf_two_phase_identical(spark):
-    """two_phase on the bucketed paths returns identical results to the
-    single-window form (including across the LSH multi-table dedup and the
-    IVF probe join)."""
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").repartition(5)
-    qs = emb.where(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    lsh1 = S.lsh_bucket_topk(emb, qs, k=3, n_planes=4, dim=64, n_tables=4).collect()
-    lsh2 = S.lsh_bucket_topk(emb, qs, k=3, n_planes=4, dim=64, n_tables=4,
-                             two_phase=True).collect()
-    assert sorted(map(tuple, lsh1)) == sorted(map(tuple, lsh2))
-    ivf1 = S.ivf_topk(emb, qs, k=3, n_centroids=8, n_probe=3).collect()
-    ivf2 = S.ivf_topk(emb, qs, k=3, n_centroids=8, n_probe=3, two_phase=True).collect()
-    assert sorted(map(tuple, ivf1)) == sorted(map(tuple, ivf2))
 
 
 def test_substring_contamination_empty_needle_dropped(spark):
@@ -2770,19 +2728,6 @@ class TestHardNegatives:
         assert [r["neighbor_id"] for r in got] == [3, 4]
         assert all(r["neighbor_label"] != "a" for r in got)
 
-    def test_two_phase_identical(self, spark):
-        from eodatadown_spark.operators.similarity import hard_negatives
-
-        emb = self._emb(spark)
-        q = emb.select(
-            F.col("vec_id").alias("query_id"), "embedding", "label"
-        )
-        a = sorted(map(tuple, hard_negatives(emb, q, k=2).collect()))
-        b = sorted(
-            map(tuple, hard_negatives(emb, q, k=2, two_phase=True).collect())
-        )
-        assert a == b
-
 
 class TestNormalizeText:
     """Pre-dedup text normalization: invisible byte differences must not
@@ -3330,7 +3275,7 @@ class TestSpanCapGuards:
             "doc_id long, text string",
         )
         self._assert_raises_with(
-            D.duplicated_span_stats(docs, window=2, materialize="none"),
+            D.duplicated_span_stats(docs, window=2),
             "token cap",
         )
 
@@ -3342,9 +3287,7 @@ class TestSpanCapGuards:
             [(1, "a" * 40)], "doc_id long, text string"
         )
         self._assert_raises_with(
-            D.duplicated_span_stats(
-                docs, window=10, unit="char", materialize="none"
-            ),
+            D.duplicated_span_stats(docs, window=10, unit="char"),
             "rolling-hash cap",
         )
 
@@ -3357,7 +3300,7 @@ class TestSpanCapGuards:
             "doc_id long, text string",
         )
         self._assert_raises_with(
-            D.duplicated_span_stats(docs, window=2, materialize="none"),
+            D.duplicated_span_stats(docs, window=2),
             "rolling-hash cap",
         )
 
@@ -3377,28 +3320,3 @@ class TestSpanCapGuards:
               for r in D.duplicated_span_stats(
                   docs, window=10, unit="char").collect()}
         assert ch[1] > 0 and ch[2] > 0
-
-
-def test_span_forced_materialize_honored(spark):
-    """r14 (ADVICE r13): materialize="local" on the span family pins the
-    maximal-span relation (executor-loss safety the caller explicitly
-    asked for) — since r13's pure-lazy rebuild the forced modes were
-    validated then silently ignored.  Rows identical either way."""
-    docs = spark.createDataFrame(
-        [(1, "a b c d e f g h a b c d e f g h"),
-         (2, "a b c d e f g h x y z w v u t s")],
-        "doc_id long, text string",
-    )
-    lazy = D.duplicated_span_stats(docs, window=4, materialize="none")
-    forced = D.duplicated_span_stats(docs, window=4, materialize="local")
-    plan_lazy = lazy._jdf.queryExecution().executedPlan().toString()
-    plan_forced = forced._jdf.queryExecution().executedPlan().toString()
-    # the pin truncates the span subtree: the live wh-marking exchange is
-    # in the lazy plan and GONE from the forced plan (replaced by the
-    # pinned spans' ExistingRDD; the createDataFrame input is itself an
-    # ExistingRDD leaf in both, so we assert on the wh exchange instead)
-    assert "hashpartitioning(wh" in plan_lazy
-    assert "hashpartitioning(wh" not in plan_forced
-    assert sorted(map(tuple, forced.collect())) == sorted(
-        map(tuple, lazy.collect())
-    )

@@ -437,6 +437,126 @@ def test_cli_runscn_and_genobsdatecmds(spark, tmp_path, capsys):
     )
 
 
+def _cli_catalog(spark, tmp_path, scenes):
+    """A LandsatGOOG catalog built through the CLI from ``scenes``, a list
+    of (scene_id, date_acquired, west_lon); every bbox is 2 degrees wide.
+    Returns the catalog dir."""
+    import eodd_cli
+
+    idx = str(tmp_path / "idx_pq")
+    spark.createDataFrame(
+        [
+            {
+                "scene_id": sid,
+                "product_id": f"LC08_L1TP_001001_{acq.replace('-', '')}_20190601_01_T1",
+                "spacecraft_id": "LANDSAT_8", "sensor_id": "OLI_TIRS",
+                "date_acquired": acq, "sensing_time": acq + "T10:11:12.000000Z",
+                "collection_number": "01", "collection_category": "T1",
+                "data_type": "L1TP", "wrs_path": "1", "wrs_row": "1",
+                "cloud_cover": "10.0", "north_lat": "52.0", "south_lat": "50.0",
+                "east_lon": str(w + 2.0), "west_lon": str(w), "total_size": "1000",
+                "base_url": f"gs://b/{sid}",
+            }
+            for sid, acq, w in scenes
+        ]
+    ).write.parquet(idx)
+    cat_dir = str(tmp_path / "cat")
+    eodd_cli.main(["init", "--catalog", cat_dir, "--sensors", "LandsatGOOG"])
+    eodd_cli.main(["chknewscns", "--catalog", cat_dir, "--index", idx])
+    return cat_dir
+
+
+def test_cli_process_downloads_every_valid_pending_scene(
+    spark, tmp_path, capsys, monkeypatch
+):
+    """process runs the download stage through the sensor facade: every
+    valid scene not yet downloaded ends up downloaded under <catalog>/dl/,
+    invalid scenes are untouched, and the commit is a merge, so a rival
+    commit landing during the build survives."""
+    import eodd_cli
+    from eodatadown_spark.catalog import ParquetCatalog
+
+    cat_dir = _cli_catalog(spark, tmp_path, [
+        ("A", "2019-01-05", 0.0), ("B", "2019-02-10", 0.0),
+        ("C", "2020-03-15", 0.0), ("D", "2020-04-20", 0.0),
+    ])
+    cat = ParquetCatalog(spark, cat_dir)
+    cat.merge_updates("landsat_scenes", spark.createDataFrame(
+        [(3, True)], "pid long, invalid boolean"))
+    before = {r["pid"]: r for r in cat.read_clean("landsat_scenes").collect()}
+    assert not any(r["downloaded"] for r in before.values())
+    rival = spark.createDataFrame([(1, 99.0)], "pid long, cloud_cover double")
+
+    orig = ParquetCatalog._claim_version
+    fired = {"done": False}
+
+    def hooked(self, table, *args, **kw):
+        if table == "landsat_scenes" and not fired["done"]:
+            fired["done"] = True
+            # another process commits inside the command's build window
+            ParquetCatalog(spark, cat_dir).merge_updates("landsat_scenes", rival)
+        return orig(self, table, *args, **kw)
+
+    monkeypatch.setattr(ParquetCatalog, "_claim_version", hooked)
+    capsys.readouterr()
+    eodd_cli.main(["process", "--catalog", cat_dir])
+    assert capsys.readouterr().out.strip().splitlines() == [
+        "3 scenes need processing", "download stage complete (mock runner)",
+    ]
+    assert fired["done"]
+    rows = {r["pid"]: r for r in cat.read_clean("landsat_scenes").collect()}
+    for pid in (0, 1, 2):
+        assert rows[pid]["downloaded"] is True
+        assert rows[pid]["download_path"] == f"{cat_dir}/dl/{pid}"
+    assert rows[3].asDict() == before[3].asDict()
+    assert rows[1]["cloud_cover"] == 99.0
+
+
+@pytest.mark.parametrize("command", ["reset", "roi"])
+def test_cli_scene_rewrite_keeps_concurrent_commit(
+    spark, tmp_path, capsys, monkeypatch, command
+):
+    """reset and roi derive the scene table from its stored rows; a commit
+    that lands while they build survives (the rewrite re-derives on top
+    of the winner instead of flipping a stale frame over it)."""
+    import eodd_cli
+    from eodatadown_spark.catalog import ParquetCatalog
+
+    cat_dir = _cli_catalog(spark, tmp_path, [
+        ("A", "2019-01-05", 0.0), ("B", "2019-02-10", 0.0),
+        ("OUT", "2020-03-15", 20.0),
+    ])
+    eodd_cli.main(["process", "--catalog", cat_dir])
+    cat = ParquetCatalog(spark, cat_dir)
+    # pid 1 is kept by the ROI and not reset; the rival patches it
+    rival = spark.createDataFrame([(1, 99.0)], "pid long, cloud_cover double")
+
+    orig = ParquetCatalog._write_version
+    fired = {"done": False}
+
+    def hooked(self, df, table, partition=True, *args, **kw):
+        if table == "landsat_scenes" and not fired["done"]:
+            fired["done"] = True
+            ParquetCatalog(spark, cat_dir).merge_updates("landsat_scenes", rival)
+        return orig(self, df, table, partition, *args, **kw)
+
+    monkeypatch.setattr(ParquetCatalog, "_write_version", hooked)
+    if command == "reset":
+        eodd_cli.main(["reset", "--catalog", cat_dir, "--pids", "0"])
+    else:
+        eodd_cli.main(["roi", "--catalog", cat_dir, "--bbox=-5,45,5,55"])
+    assert fired["done"]
+    rows = {r["pid"]: r for r in cat.read_clean("landsat_scenes").collect()}
+    assert rows[1]["cloud_cover"] == 99.0
+    assert rows[1]["downloaded"] is True
+    if command == "reset":
+        assert set(rows) == {0, 1, 2}
+        assert rows[0]["downloaded"] is False and rows[0]["download_path"] == ""
+        assert rows[0]["download_end_date"] is None
+    else:
+        assert set(rows) == {0, 1}
+        assert rows[0]["downloaded"] is True
+
 def test_cli_sample_cdcdiff_zorder(spark, tmp_path, capsys):
     import json
 
