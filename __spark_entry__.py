@@ -16,6 +16,7 @@ Conventions for oracle stability:
 
 from __future__ import annotations
 
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -3778,225 +3779,11 @@ def incremental_phases() -> dict[str, tuple[Callable, Callable]]:
     }
 
 
-# Ordering matters: the grading driver's correctness gate checks the FIRST
-# 50 entries only, so the first 50 are curated for maximal semantic
-# diversity — entries whose oracle duplicates another's shape (q12 vs q11,
-# q16 vs q01, q28 vs q24, q38 vs q01/q37, q43's empty-set gate vs q25's full
-# value oracle; this round also q15's narrow projection, q27's max-row
-# watermark [q04 keeps the family in-window] and q42's rolling fingerprint
-# [q22 keeps the family]) yield their slot to operators with no in-window
-# analog (contamination, range join, temperature resample, incremental
-# dedup, native-ASOF-checked value carry; this round ANSI MERGE q91, the
-# correlated-EXISTS pair q96, and the incremental-rollup differential q97).
-# Round 5 rotates the window again to convert never-driver-checked families
-# into driver-grade evidence: q21/q25/q30/q33/q34/q39/q46 (langid ⊂ q20's
-# text profile, simhash ∥ q24's minhash, running-total ∥ q26's window
-# rollup, asof-prior ∥ q71's value carry, quality-filter ⊂ q20, top-unshipped
-# ∥ q96's join shape, repetition ⊂ q20 — all with driver-green rows already
-# recorded in r1–r4) yield their slots to q59 native asof join, q87
-# INTERSECT/EXCEPT set ops, q89 time-RANGE window frame, q92 snapshot CDC
-# diff, q94 z-order layout, and the q104/q105 samplers.
-# Round 8 rotates q153 (stored-IVF probe) and q154 (incremental SimHash)
-# into the window — both are new stored-index code paths with no in-window
-# analog — displacing q19 (exact dedup; the dedup family stays covered by
-# q24/q121/q150) and q26 (window rollup; covered by q29/q31/q97/q128).
-# Round 9 rotates the window HARD (VERDICT r8 item 1): 42 of the 50 slots
-# go to registry entries that have never had a driver CORRECTNESS row
-# (q151/q152, the new q155 stored-SQ8 probe, the q75/q76/q80/q83 soundness
-# gates, q101/q103/q106/q109/q111/q113, and the q51-q102 families),
-# converting judge-local-only evidence into driver-grade rows.  The 8 kept
-# anchors are the flagships (q10/q24; q01 yields — 8 driver-green rows
-# already) plus every code path this round's catalog/streaming OCC changes
-# touch (q91 merge upsert, q117/q149/q150/q153/q154 stored-index probes)
-# so a regression in the touched paths trips the driver gate.
-# Displaced entries all have driver-green rows in r01-r08 windows (no
-# driver row has ever regressed); everything still runs in local checks
-# (tools/check_correctness.py covers all entries).
+# Every module-level ``q<N>_`` function is a registry entry under its own
+# name, in definition order: defining one registers it.
 _ALL_QUERIES: dict[str, Callable] = {
-    "q10_revenue_by_nation": q10_revenue_by_nation,
-    "q151_sq8_topk": q151_sq8_topk,
-    "q155_sq8_stored_probe": q155_sq8_stored_probe,
-    "q152_positional_prefix": q152_positional_prefix,
-    "q101_cdc_dup_stats": q101_cdc_dup_stats,
-    "q103_knn_label_vote": q103_knn_label_vote,
-    "q106_split_leakage_gate": q106_split_leakage_gate,
-    "q109_funnel": q109_funnel,
-    "q111_sliding_window": q111_sliding_window,
-    "q113_vocab_overlap": q113_vocab_overlap,
-    "q75_hll_soundness": q75_hll_soundness,
-    "q76_approx_quantile_soundness": q76_approx_quantile_soundness,
-    "q80_pq_recall_soundness": q80_pq_recall_soundness,
-    "q83_sketch_union_soundness": q83_sketch_union_soundness,
-    "q24_minhash_neardup": q24_minhash_neardup,
-    "q51_date_bbox_count": q51_date_bbox_count,
-    "q52_frame_sample": q52_frame_sample,
-    "q54_unigram_lm": q54_unigram_lm,
-    "q55_stratified_sample": q55_stratified_sample,
-    "q56_length_histogram": q56_length_histogram,
-    "q57_topk_tokens": q57_topk_tokens,
-    "q58_centroid_distances": q58_centroid_distances,
-    "q60_kl_divergence": q60_kl_divergence,
-    "q62_session_window": q62_session_window,
-    "q64_perplexity_prune": q64_perplexity_prune,
-    "q65_bigram_lm": q65_bigram_lm,
-    "q67_chunking": q67_chunking,
-    "q68_embed_plumbing": q68_embed_plumbing,
-    "q69_rollup_grouping": q69_rollup_grouping,
-    "q70_dist_windows": q70_dist_windows,
-    "q91_merge_upsert": q91_merge_upsert,
-    "q72_variant_props": q72_variant_props,
-    "q73_unpivot": q73_unpivot,
-    "q74_map_ops": q74_map_ops,
-    "q77_substring_contamination": q77_substring_contamination,
-    "q78_prefix_suffix_overlap": q78_prefix_suffix_overlap,
-    "q79_dup_ngram_fraction": q79_dup_ngram_fraction,
-    "q81_bpe_merge_candidates": q81_bpe_merge_candidates,
-    "q82_gopher_quality_flags": q82_gopher_quality_flags,
-    "q84_shipping_priority": q84_shipping_priority,
-    "q86_price_quartiles": q86_price_quartiles,
-    "q90_daily_reconciliation": q90_daily_reconciliation,
-    "q93_weighted_sample": q93_weighted_sample,
-    "q95_event_gaps": q95_event_gaps,
-    "q102_table_profile": q102_table_profile,
-    "q117_incremental_minhash": q117_incremental_minhash,
-    "q149_incremental_phash": q149_incremental_phash,
-    "q150_incremental_clusters": q150_incremental_clusters,
-    "q153_ivf_stored_probe": q153_ivf_stored_probe,
-    "q154_incremental_simhash": q154_incremental_simhash,
-    "q01_pricing_summary": q01_pricing_summary,
-    "q02_date_range_page": q02_date_range_page,
-    "q03_bbox_overlap": q03_bbox_overlap,
-    "q04_watermark_incremental": q04_watermark_incremental,
-    "q05_inlist_month": q05_inlist_month,
-    "q146_lsh_multiprobe": q146_lsh_multiprobe,
-    "q07_keep_latest": q07_keep_latest,
-    "q08_anti_join": q08_anti_join,
-    "q128_ewma": q128_ewma,
-    "q53_contamination": q53_contamination,
-    "q13_summary_stats": q13_summary_stats,
-    "q131_prefix_jaccard": q131_prefix_jaccard,
-    "q61_range_join": q61_range_join,
-    "q17_obs_date_rollup": q17_obs_date_rollup,
-    "q18_json_filter": q18_json_filter,
-    "q20_text_profile": q20_text_profile,
-    "q59_asof_join": q59_asof_join,
-    "q134_mmr_rerank": q134_mmr_rerank,
-    "q23_cosine_topk": q23_cosine_topk,
-    "q148_theta_setops": q148_theta_setops,
-    "q96_sole_late_supplier": q96_sole_late_supplier,
-    "q121_cluster_reps": q121_cluster_reps,
-    "q29_sessionize": q29_sessionize,
-    "q139_phash_neardup": q139_phash_neardup,
-    "q31_topk_per_group": q31_topk_per_group,
-    "q107_semantic_dedup": q107_semantic_dedup,
-    "q94_zorder_layout": q94_zorder_layout,
-    "q147_quantile_sketch_rollup": q147_quantile_sketch_rollup,
-    "q108_rrf_fusion": q108_rrf_fusion,
-    "q37_cube_rollup": q37_cube_rollup,
-    "q122_fuzzy_blocking": q122_fuzzy_blocking,
-    "q104_balanced_sample": q104_balanced_sample,
-    "q40_multimodal_features": q40_multimodal_features,
-    "q41_bpe_token_count": q41_bpe_token_count,
-    "q97_incremental_rollup": q97_incremental_rollup,
-    "q130_pmi": q130_pmi,
-    "q126_transitions": q126_transitions,
-    "q145_sketch_rollup": q145_sketch_rollup,
-    "q47_pii_redaction": q47_pii_redaction,
-    "q120_bm25": q120_bm25,
-    "q49_ivf_topk": q49_ivf_topk,
-    "q50_neardup_clusters": q50_neardup_clusters,
-    "q160_source_dedup_pressure": q160_source_dedup_pressure,
-    "q161_dedup_rate_by_source": q161_dedup_rate_by_source,
-    "q162_ngram_novelty": q162_ngram_novelty,
-    "q163_winnow_fingerprints": q163_winnow_fingerprints,
-    "q164_winnow_similarity": q164_winnow_similarity,
-    "q165_importance_weights": q165_importance_weights,
-    "q166_line_dedup": q166_line_dedup,
-    "q167_quality_classifier": q167_quality_classifier,
-    "q168_entropy_signals": q168_entropy_signals,
-    "q169_classifier_eval": q169_classifier_eval,
-    "q170_sparse_classifier": q170_sparse_classifier,
-    "q171_count_min": q171_count_min,
-    "q172_hard_negatives": q172_hard_negatives,
-    "q173_cms_rollup_gate": q173_cms_rollup_gate,
-    "q174_normalize_text": q174_normalize_text,
-    "q175_template_strip": q175_template_strip,
-    "q176_containment_pairs": q176_containment_pairs,
-    "q177_footer_strip": q177_footer_strip,
-    "q178_keyset_page": q178_keyset_page,
-    "q179_bloom_gate": q179_bloom_gate,
-    "q180_duplicated_spans": q180_duplicated_spans,
-    "q181_span_index_probe": q181_span_index_probe,
-    "q182_span_cut": q182_span_cut,
-    "q183_char_spans": q183_char_spans,
-    "q184_char_span_cut": q184_char_span_cut,
-    "q156_clusters_via_stored_index": q156_clusters_via_stored_index,
-    "q157_bpe_encode": q157_bpe_encode,
-    "q158_bbox_only_page": q158_bbox_only_page,
-    "q159_bpe_train_encode": q159_bpe_train_encode,
-    "q12_distinct_dates": q12_distinct_dates,
-    "q15_derived_columns": q15_derived_columns,
-    "q27_top1_watermark": q27_top1_watermark,
-    "q42_rolling_fingerprint": q42_rolling_fingerprint,
-    "q21_langid": q21_langid,
-    "q16_count_date_range": q16_count_date_range,
-    "q28_ngram_jaccard": q28_ngram_jaccard,
-    "q38_having": q38_having,
-    "q43_simhash_soundness": q43_simhash_soundness,
-    "q85_large_volume_orders": q85_large_volume_orders,
-    "q25_simhash_neardup": q25_simhash_neardup,
-    "q88_above_average_orders": q88_above_average_orders,
-    "q30_running_total": q30_running_total,
-    "q33_asof_prior_event": q33_asof_prior_event,
-    "q34_quality_filter": q34_quality_filter,
-    "q98_volume_shipping": q98_volume_shipping,
-    "q99_market_share": q99_market_share,
-    "q100_sales_opportunity": q100_sales_opportunity,
-    "q39_top_unshipped": q39_top_unshipped,
-    "q46_repetition_ratio": q46_repetition_ratio,
-    "q32_pivot": q32_pivot,
-    "q36_lsh_topk": q36_lsh_topk,
-    "q110_cohort_retention": q110_cohort_retention,
-    "q112_daily_anomaly": q112_daily_anomaly,
-    "q114_zipf_slope": q114_zipf_slope,
-    "q115_small_qty_revenue": q115_small_qty_revenue,
-    "q116_top_supplier": q116_top_supplier,
-    "q44_tfidf_keywords": q44_tfidf_keywords,
-    "q118_langid_eval": q118_langid_eval,
-    "q119_shot_boundaries": q119_shot_boundaries,
-    "q48_sequence_packing": q48_sequence_packing,
-    "q63_temperature_resample": q63_temperature_resample,
-    "q66_incremental_dedup": q66_incremental_dedup,
-    "q123_disjunctive_filter": q123_disjunctive_filter,
-    "q124_nation_share": q124_nation_share,
-    "q125_late_order_priority": q125_late_order_priority,
-    "q127_time_to_conversion": q127_time_to_conversion,
-    "q129_winsorized_stats": q129_winsorized_stats,
-    "q71_asof_value_carry": q71_asof_value_carry,
-    "q132_promo_revenue": q132_promo_revenue,
-    "q133_asof_forward": q133_asof_forward,
-    "q135_volume_trend": q135_volume_trend,
-    "q136_robust_anomaly": q136_robust_anomaly,
-    "q137_gapfilled_counts": q137_gapfilled_counts,
-    "q138_custdist": q138_custdist,
-    "q89_trailing_range_window": q89_trailing_range_window,
-    "q140_asof_nearest": q140_asof_nearest,
-    "q141_wow_revenue": q141_wow_revenue,
-    "q142_rfm_segments": q142_rfm_segments,
-    "q143_ordered_string_agg": q143_ordered_string_agg,
-    "q144_grouped_corr": q144_grouped_corr,
-    "q105_source_mix": q105_source_mix,
-    "q11_distinct_values": q11_distinct_values,
-    "q14_union_distinct": q14_union_distinct,
-    "q22_fingerprint": q22_fingerprint,
-    "q45_hash_split": q45_hash_split,
-    "q06_dup_detect": q06_dup_detect,
-    "q35_embedding_neardup": q35_embedding_neardup,
-    "q87_source_set_ops": q87_source_set_ops,
-    "q92_snapshot_diff": q92_snapshot_diff,
-    "q09_semi_join": q09_semi_join,
-    "q19_exact_dedup": q19_exact_dedup,
-    "q26_window_rollup": q26_window_rollup,
+    name: fn for name, fn in globals().items()
+    if re.match(r"q\d+_", name) and callable(fn)
 }
 
 _R14_WINDOW = [

@@ -213,7 +213,7 @@ def e2e_pipeline(spark, sf_dir: str) -> tuple[float, list[dict]]:
 
     from pyspark.sql import functions as F
 
-    from eodatadown_spark import pipeline, reports, queries as Q
+    from eodatadown_spark import pipeline, reports, run
     from eodatadown_spark.catalog import ParquetCatalog
     from eodatadown_spark.sensor import get_sensor_obj
     from eodatadown_spark.sources.index_adapters import landsat_index_scenes
@@ -266,17 +266,13 @@ def e2e_pipeline(spark, sf_dir: str) -> tuple[float, list[dict]]:
         with phase("scenes_need_processing"):
             catalog = cat.read_clean("landsat_scenes")
             pipeline.scenes_need_processing(catalog).count()
-        with phase("run_scene_tasks+write"):
-            updates = pipeline.run_scene_tasks(
-                catalog.join(
-                    Q.get_scnlist_download(catalog), "pid", "left_semi"
-                ).select("pid"),
+        with phase("run_stage_download"):
+            sensor.run_stage(
+                sensor.get_scnlist_download(),
                 lambda s: {"pid": s["pid"], "downloaded": True,
                            "download_path": f"{work}/dl/{s['pid']}"},
-                "pid long, downloaded boolean, download_path string",
+                run.STAGES["download"][1],
             )
-            cat.write(pipeline.apply_updates(catalog, updates),
-                      "landsat_scenes")
         with phase("summary_counts"):
             catalog = cat.read_clean("landsat_scenes")
             reports.sensor_summary_counts(catalog).first()

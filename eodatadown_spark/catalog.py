@@ -967,112 +967,6 @@ class ParquetCatalog:
             "shared_inodes_newest_prev": shared,
         }
 
-    # -- bucketed tables (scale path: shuffle-free co-located joins) -------
-    def _bucketed_ident(self, name: str) -> tuple[str, str]:
-        """(path, session table name) for an EXTERNAL bucketed snapshot of
-        ``name``.  The table name hashes the catalog root so two catalogs
-        in one session never collide in the shared session catalog."""
-        import hashlib
-
-        path = os.path.join(os.path.abspath(self.root), f"{name}_bucketed")
-        tag = hashlib.md5(path.encode()).hexdigest()[:8]
-        safe = "".join(c if c.isalnum() else "_" for c in name)
-        return path, f"eodd_bkt_{safe}_{tag}"
-
-    def publish_bucketed_snapshot(
-        self,
-        df: DataFrame,
-        name: str,
-        bucket_cols: list[str] | str,
-        n_buckets: int = 16,
-    ) -> str:
-        """Publish ``df`` as an EXTERNAL bucketed parquet snapshot INSIDE
-        the catalog root, never in the session warehouse.  External +
-        re-registered per session (:meth:`read_bucketed_snapshot`) is
-        what lets separate CLI processes share the bucket layout without
-        a persistent metastore: Spark encodes the bucket id in each file
-        name, so a fresh session can re-declare ``CLUSTERED BY`` over the
-        same files and get shuffle-free probe joins on the bucket keys.
-
-        This is a PUBLISH face, not the source of truth — the OCC catalog
-        table stays authoritative; republish after every fold.  Replace is
-        drop+rewrite: single-writer, same contract as an index --build."""
-        cols = [bucket_cols] if isinstance(bucket_cols, str) else list(bucket_cols)
-        path, tbl = self._bucketed_ident(name)
-        self.spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        shutil.rmtree(path, ignore_errors=True)
-        (
-            df.write.mode("overwrite")
-            .bucketBy(n_buckets, cols[0], *cols[1:])
-            .sortBy(cols[0], *cols[1:])
-            .option("path", path)
-            .format("parquet")
-            .saveAsTable(tbl)
-        )
-        # self-describing snapshot: the spec rides WITH the files (Spark
-        # ignores underscore-prefixed names), so a reader can never apply
-        # a stale/wrong bucket spec to these files — declaring the wrong
-        # CLUSTERED BY over existing bucket files mis-assigns rows to
-        # buckets and a bucketed join silently LOSES matches.  The schema
-        # rides along too: an empty frame writes no parquet file, so
-        # there is no footer to infer it from
-        with open(os.path.join(path, "_bucket_spec.json"), "w",
-                  encoding="utf-8") as fh:
-            json.dump({"bucket_cols": cols, "n_buckets": n_buckets,
-                       "schema": df.schema.jsonValue()}, fh)
-        return path
-
-    def read_bucketed_snapshot(
-        self,
-        name: str,
-        bucket_cols: list[str] | str,
-        n_buckets: int = 16,
-    ) -> DataFrame:
-        """Open a :meth:`publish_bucketed_snapshot` table from ANY session:
-        re-register the external bucketed definition over the snapshot path
-        and return the table scan, bucketing info intact.
-
-        The snapshot's own ``_bucket_spec.json`` is AUTHORITATIVE over the
-        caller's ``bucket_cols``/``n_buckets`` and carries the schema (the
-        caller's args and a parquet-footer schema serve as the fallback
-        for snapshots published before the spec held them): declaring a
-        wrong CLUSTERED BY over existing bucket files would mis-assign rows
-        to buckets and a bucketed join would silently LOSE matches.
-
-        The session registration is unconditionally dropped and recreated
-        from the CURRENT sidecar + parquet footer on every read (ADVICE
-        r12): comparing the sidecar against the caller's args alone let a
-        long-lived session reuse a stale old-spec/old-schema registration
-        after another process republished the snapshot — the exact silent
-        row-loss the spec sidecar exists to prevent.  The registration is
-        metadata-only (external table, schema from the sidecar), so
-        recreating per read costs milliseconds, not a scan."""
-        cols = [bucket_cols] if isinstance(bucket_cols, str) else list(bucket_cols)
-        path, tbl = self._bucketed_ident(name)
-        spec_path = os.path.join(path, "_bucket_spec.json")
-        spec = {}
-        if os.path.exists(spec_path):
-            with open(spec_path, encoding="utf-8") as fh:
-                spec = json.load(fh)
-            cols, n_buckets = spec["bucket_cols"], spec["n_buckets"]
-        self.spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        if "schema" in spec:
-            from pyspark.sql import types as T
-
-            sch = T.StructType.fromJson(spec["schema"])
-        else:
-            sch = self.spark.read.parquet(path).schema
-        ddl = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}" for f in sch.fields
-        )
-        quoted = ", ".join(f"`{c}`" for c in cols)
-        self.spark.sql(
-            f"CREATE TABLE {tbl} ({ddl}) USING PARQUET "
-            f"CLUSTERED BY ({quoted}) SORTED BY ({quoted}) "
-            f"INTO {n_buckets} BUCKETS LOCATION '{path}'"
-        )
-        return self.spark.table(tbl)
-
     # -- JSON import/export (S6 / K1; ref eodatadownlandsatgoogsensor.py:2527-2687)
     def export_json(
         self, table: str, out_file: str, max_driver_rows: int = 100_000

@@ -2148,10 +2148,8 @@ def span_hash_index(
 
     State size is bounded by DISTINCT windows (≪ total windows on any
     corpus with duplication) and shrinks further under parquet dictionary
-    encoding; at 100 TB store it bucketed by ``wh`` so probes bucket-join
-    without shuffling the index (the ``dedd spanindex --bucketed`` face
-    does exactly that).  ``unit`` ("token"|"char") is part of the index
-    identity alongside ``window`` — probe with the same pair."""
+    encoding.  ``unit`` ("token"|"char") is part of the index identity
+    alongside ``window`` — probe with the same pair."""
     base, wins = _span_windows(documents, window, id_col, text_col, unit)
     idx = wins.groupBy("wh").agg(
         F.count(F.lit(1)).alias("cnt"),
@@ -2544,8 +2542,6 @@ def jaccard_prefix_index(
     - ``prefix``       (id, sz, sh, __pos): each corpus document's prefix
       entries under the corpus's rarest-first shingle order — the table
       :func:`jaccard_prefix_against_index` equi-joins each batch against.
-      At scale, store it bucketed/sorted by ``sh`` so probes are
-      broadcast- or bucket-joins with NO corpus shuffle.
     - ``freq``         (sh, __df): the corpus document-frequency table
       that DEFINES the order.  The order is FROZEN at build time: probes
       rank batch shingles by this same table (absent → df 1), which keeps

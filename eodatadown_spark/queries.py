@@ -474,41 +474,3 @@ def get_scnlist_usr_analysis(
         .distinct()
         .orderBy("pid")
     )
-
-
-def get_scnlist_usr_analysis_agg(
-    scenes: DataFrame, plugin_results: DataFrame, plugins: Sequence[str]
-) -> DataFrame:
-    """J2, aggregation form: same semantics as
-    :func:`get_scnlist_usr_analysis` — a scene needs analysis iff its count
-    of completed configured plugins is below ``len(plugins)`` (equivalent to
-    the anti-join: (scene_pid, plugin_name) is the composite PK, so completed
-    rows are unique per pair).
-
-    Why it exists: the anti-join form joins on the composite key
-    (pid, plugin_name), which the planner will NOT serve from pid-bucketed
-    tables (it shuffles both sides on the pair).  This form keys every
-    agg/join on pid alone, so on the bucketed publication the whole plan runs
-    exchange-free except the final presentation sort — the 100 TB scheduling
-    path (ref eodatadownlandsatgoogsensor.py:1611-1646).
-    """
-    # dedupe the configured list: countDistinct compares against the number
-    # of DISTINCT names, else a repeated entry would make every scene
-    # perpetually "needing analysis" (the anti-join form is naturally immune)
-    plugin_set = sorted(set(plugins))
-    done = (
-        plugin_results.where(
-            (F.col("completed") == F.lit(True))
-            & F.col("plugin_name").isin(plugin_set)
-        )
-        .groupBy(F.col("scene_pid").alias("pid"))
-        .agg(F.countDistinct("plugin_name").alias("n_done"))
-    )
-    return (
-        scenes.where((F.col("ardproduct") == F.lit(True)) & valid_pred(True))
-        .select("pid")
-        .join(done, "pid", "left")
-        .where(F.coalesce(F.col("n_done"), F.lit(0)) < F.lit(len(plugin_set)))
-        .select("pid")
-        .orderBy("pid")
-    )

@@ -54,42 +54,52 @@ class SensorBase:
     def scenes(self) -> DataFrame:
         return self.catalog.read_clean(self.table)
 
-    def _commit(self, df: DataFrame) -> None:
-        self.catalog.write(df, self.table)
-
     # -- ingest (check_new_scns; SURVEY §3.1) ------------------------------
     def check_new_scns(
         self, normalized_index: DataFrame, check_from_start: bool = False
     ) -> int:
         """Watermark-filtered idempotent ingest + keep-latest dedup; returns
-        the number of newly added scenes."""
-        catalog = self.scenes()
+        the number of newly added scenes.
+
+        The upserted table derives from the stored scenes, so it commits
+        through :meth:`ParquetCatalog.replace_derived`: a concurrent commit
+        makes the build re-run on top of it (fresh stats, pids, watermark
+        and dedup) instead of flipping a table that drops it."""
         incoming = self._complete_state_block(normalized_index)
-        # one fused aggregate replaces three sequential full-catalog
-        # actions (watermark .first(), before .count(), next_pid .first())
-        # — same values, one scan (r13, guide §5 driver-loop hygiene)
-        stats = catalog.agg(
-            F.count("*").alias("__n"),
-            F.max("pid").alias("__mx"),
-            F.max(F.col(self.watermark_col)).alias("__wm"),
-        ).first()
-        before = stats["__n"]
-        base_pid = 0 if stats["__mx"] is None else int(stats["__mx"]) + 1
-        if not check_from_start:
-            if self.watermark_partition_col:
-                incoming = ingest.filter_above_partitioned_watermark(
-                    catalog, incoming, self.watermark_col, self.watermark_partition_col
-                )
-            else:
-                incoming = ingest.filter_above_watermark(
-                    incoming, self.watermark_col, stats["__wm"]
-                )
-        merged = ingest.upsert_new_scenes(
-            catalog, incoming, keys=self.ingest_keys, base_pid=base_pid
-        )
-        if self.dedup_key:
-            merged = ingest.resolve_duplicate_scenes(merged, key=self.dedup_key)
-        self._commit(merged)
+        before = 0
+
+        def build(cur: DataFrame) -> DataFrame:
+            nonlocal before
+            catalog = cur.drop("p_year", "p_month")
+            # one fused aggregate replaces three sequential full-catalog
+            # actions (watermark .first(), before .count(), next_pid
+            # .first()) — same values, one scan
+            stats = catalog.agg(
+                F.count("*").alias("__n"),
+                F.max("pid").alias("__mx"),
+                F.max(F.col(self.watermark_col)).alias("__wm"),
+            ).first()
+            before = stats["__n"]
+            base_pid = 0 if stats["__mx"] is None else int(stats["__mx"]) + 1
+            new = incoming
+            if not check_from_start:
+                if self.watermark_partition_col:
+                    new = ingest.filter_above_partitioned_watermark(
+                        catalog, new, self.watermark_col,
+                        self.watermark_partition_col,
+                    )
+                else:
+                    new = ingest.filter_above_watermark(
+                        new, self.watermark_col, stats["__wm"]
+                    )
+            merged = ingest.upsert_new_scenes(
+                catalog, new, keys=self.ingest_keys, base_pid=base_pid
+            )
+            if self.dedup_key:
+                merged = ingest.resolve_duplicate_scenes(merged, key=self.dedup_key)
+            return merged
+
+        self.catalog.replace_derived(self.table, build)
         return self.scenes().count() - before
 
     def _complete_state_block(self, df: DataFrame) -> DataFrame:
@@ -391,38 +401,6 @@ class SensorBase:
         finally:
             new_rows.unpersist()
         return n
-
-    # -- bucketed publication (100 TB scheduling path) ---------------------
-    def publish_bucketed(self, n_buckets: int = 16) -> None:
-        """Publish the scene table (bucketed by ``pid``) and plugin_results
-        (bucketed by ``scene_pid``) as external bucketed snapshots inside
-        the catalog root (:meth:`ParquetCatalog.publish_bucketed_snapshot`)
-        so the J2 scheduling join — scenes ⋈ plugin_results, ref
-        eodatadownlandsatgoogsensor.py:1611-1646 — and any other pid-keyed
-        join run with zero exchanges, from this or any later process.
-        Re-run after catalog writes that should be visible to bucketed
-        readers (bucketed copies are a publication snapshot, not the
-        transactional catalog)."""
-        self.catalog.publish_bucketed_snapshot(
-            self.scenes(), self.table, "pid", n_buckets
-        )
-        self.catalog.publish_bucketed_snapshot(
-            self.plugin_results(), self.plugin_table, "scene_pid", n_buckets
-        )
-
-    def scenes_bucketed(self) -> DataFrame:
-        return self.catalog.read_bucketed_snapshot(self.table, "pid")
-
-    def plugin_results_bucketed(self) -> DataFrame:
-        return self.catalog.read_bucketed_snapshot(self.plugin_table, "scene_pid")
-
-    def get_scnlist_usr_analysis_bucketed(self, plugins: Sequence[str]) -> DataFrame:
-        """J2 over the bucketed publication: same semantics as
-        :meth:`get_scnlist_usr_analysis`, but via the pid-keyed aggregation
-        form so the join is exchange-free on the bucketed tables."""
-        return Q.get_scnlist_usr_analysis_agg(
-            self.scenes_bucketed(), self.plugin_results_bucketed(), plugins
-        )
 
     def get_scn_usr_analysis_results(self, pid: int) -> DataFrame:
         """Per-scene plugin-result rows (ref get_usr_analysis_results)."""

@@ -13,10 +13,10 @@ reference's bin/ tools so an eodatadown user can run the same workflows:
     eoddsenroi          → roi          (drop scenes outside an ROI bbox)
     eoddpassencode      → passencode   (base64, driver-side)
 
-Engine-only additions: bucketize (shuffle-free pid joins), dataprep
-(quality → dedup → near-dup → temperature → split → chunk), corpusstats
-(KL/length/top-token audits).  Every catalog command takes
---partition-monthly for the month-level physical layout.
+Engine-only additions: dataprep (quality → dedup → near-dup →
+temperature → split → chunk), corpusstats (KL/length/top-token audits).
+Every catalog command takes --partition-monthly for the month-level
+physical layout.
 
 Usage: python eodd_cli.py <command> --catalog DIR [options]
 """
@@ -188,14 +188,7 @@ def cmd_dedupindex(args) -> None:
     SINGLE-WRITER replace of all three state tables: it
     must not run concurrently with --apply — an apply landing between
     --build's three writes would fold into state --build is about to
-    replace.  Rebuild quiesced, like reindexing any store.
-
-    ``--bucketed`` additionally publishes the family's probe-joined index
-    (band_index on (band_idx, band_hash) / simhash_index on (t, band) /
-    prefix_index on sh) as an external bucketed snapshot inside the index
-    dir — probes then join the index with ZERO exchange on the index
-    side; --apply republishes after the fold (the OCC tables stay the
-    source of truth)."""
+    replace.  Rebuild quiesced, like reindexing any store."""
     from eodatadown_spark.catalog import ParquetCatalog
     from eodatadown_spark.operators import dedup as D
     from eodatadown_spark.session import get_spark
@@ -205,12 +198,6 @@ def cmd_dedupindex(args) -> None:
     if args.apply and not args.probe:
         args._parser.error("--apply requires --probe")
 
-    _BUCKET_SPEC = {
-        "minhash": ("band_index", ["band_idx", "band_hash"]),
-        "simhash": ("simhash_index", ["t", "band"]),
-        "prefix": ("prefix_index", ["sh"]),
-    }
-
     spark = get_spark("eodd_cli")
     cat = ParquetCatalog(spark, args.index_dir)
     meta_path = os.path.join(args.index_dir, "dedup_meta.json")
@@ -219,8 +206,6 @@ def cmd_dedupindex(args) -> None:
             "k": args.k, "num_perm": args.num_perm, "bands": args.bands,
             "threshold": args.jaccard, "family": args.family,
         }
-        bucket_meta = {"bucketed": bool(args.bucketed),
-                       "buckets": args.buckets}
         docs = spark.read.parquet(args.build)
         if args.family == "simhash":
             # pigeonhole guarantee requires bands > max_hamming, like
@@ -240,7 +225,6 @@ def cmd_dedupindex(args) -> None:
                 "family": "simhash", "max_hamming": args.max_hamming,
                 "band_bits": args.band_bits, "threshold": None,
             }
-            params.update(bucket_meta)
             index = D.simhash_band_index(
                 docs, band_bits=args.band_bits
             )
@@ -280,12 +264,6 @@ def cmd_dedupindex(args) -> None:
             cat.write(index, "band_index", partition=False)
             cat.write(fps, "fingerprints", partition=False)
         cat.write(clusters, "clusters", partition=False)
-        params.update(bucket_meta)
-        if args.bucketed:
-            tbl, keys = _BUCKET_SPEC[args.family]
-            cat.publish_bucketed_snapshot(
-                cat.read(tbl), tbl, keys, args.buckets
-            )
         os.makedirs(args.index_dir, exist_ok=True)
         with open(meta_path, "w", encoding="utf-8") as fh:
             json.dump(params, fh)
@@ -299,29 +277,21 @@ def cmd_dedupindex(args) -> None:
         params = json.load(fh)
     batch = spark.read.parquet(args.probe)
     family = params.get("family", "minhash")
-
-    def _index_table(tbl: str, keys: list[str]):
-        if params.get("bucketed"):
-            return cat.read_bucketed_snapshot(
-                tbl, keys, params.get("buckets", 16)
-            )
-        return cat.read(tbl)
-
     if family == "simhash":
         pairs = D.simhash_neardup_against_index(
-            batch, _index_table("simhash_index", ["t", "band"]),
+            batch, cat.read("simhash_index"),
             max_hamming=params["max_hamming"], band_bits=params["band_bits"],
         ).localCheckpoint()
     elif family == "prefix":
         pairs = D.jaccard_prefix_against_index(
-            batch, _index_table("prefix_index", ["sh"]),
+            batch, cat.read("prefix_index"),
             cat.read("prefix_freq"),
             cat.read("fingerprints_exact"), k=params["k"],
             threshold=params["threshold"],
         ).localCheckpoint()
     else:
         pairs = D.minhash_neardup_against_index(
-            batch, _index_table("band_index", ["band_idx", "band_hash"]),
+            batch, cat.read("band_index"),
             cat.read("fingerprints"),
             k=params["k"], num_perm=params["num_perm"],
             bands=params["bands"], jaccard_threshold=params["threshold"],
@@ -351,11 +321,6 @@ def cmd_dedupindex(args) -> None:
                 cat, batch, k=params["k"], num_perm=params["num_perm"],
                 bands=params["bands"], jaccard_threshold=params["threshold"],
             )
-        if params.get("bucketed"):
-            tbl, keys = _BUCKET_SPEC[family]
-            cat.publish_bucketed_snapshot(
-                cat.read(tbl), tbl, keys, params.get("buckets", 16)
-            )
         stats["clusters"] = cat.read("clusters").where(
             F.col("is_canonical")).count()
         stats["applied"] = True
@@ -377,11 +342,7 @@ def cmd_spanindex(args) -> None:
 
     ``--unit char`` indexes character windows (Lee et al.'s native
     granularity; unit is index identity alongside window — probes reuse
-    the stored value).  ``--bucketed`` additionally publishes the index
-    as an external bucketed-by-``wh`` snapshot inside the index dir
-    (re-registered per session), so probe joins read the index with ZERO
-    exchange on the index side; --apply republishes the snapshot after
-    the OCC fold (the OCC table stays the source of truth)."""
+    the stored value)."""
     from eodatadown_spark.catalog import ParquetCatalog
     from eodatadown_spark.operators import dedup as D
     from eodatadown_spark.session import get_spark
@@ -397,21 +358,13 @@ def cmd_spanindex(args) -> None:
         docs = spark.read.parquet(args.build)
         idx = D.span_hash_index(docs, window=args.window, unit=args.unit)
         cat.write(idx, "span_index", partition=False)
-        if args.bucketed:
-            cat.publish_bucketed_snapshot(
-                cat.read("span_index"), "span_index", "wh", args.buckets
-            )
         os.makedirs(args.index_dir, exist_ok=True)
         with open(meta_path, "w", encoding="utf-8") as fh:
-            json.dump({
-                "window": args.window, "unit": args.unit,
-                "bucketed": bool(args.bucketed), "buckets": args.buckets,
-            }, fh)
+            json.dump({"window": args.window, "unit": args.unit}, fh)
         print(json.dumps({
             "built": True, "docs": docs.count(),
             "table_rows": cat.read("span_index").count(),
             "window": args.window, "unit": args.unit,
-            "bucketed": bool(args.bucketed),
         }))
         return
     with open(meta_path, encoding="utf-8") as fh:
@@ -419,14 +372,7 @@ def cmd_spanindex(args) -> None:
     unit = params.get("unit", "token")
     dup_col = "dup_chars" if unit == "char" else "dup_tokens"
     batch = spark.read.parquet(args.probe)
-    stored_raw = (
-        cat.read_bucketed_snapshot(
-            "span_index", "wh", params.get("buckets", 16)
-        )
-        if params.get("bucketed")
-        else cat.read("span_index")
-    )
-    stored = stored_raw.where(F.col("wh") >= 0)
+    stored = cat.read("span_index").where(F.col("wh") >= 0)
     stats_df = D.duplicated_spans_against_index(
         batch, stored, window=params["window"], unit=unit
     )
@@ -450,11 +396,6 @@ def cmd_spanindex(args) -> None:
         r = apply_span_index_batch(
             cat, batch, window=params["window"], unit=unit
         )
-        if params.get("bucketed"):
-            cat.publish_bucketed_snapshot(
-                cat.read("span_index"), "span_index", "wh",
-                params.get("buckets", 16),
-            )
         stats["applied"] = True
         stats["table_rows"] = r["table_rows"]
     print(json.dumps(stats))
@@ -485,13 +426,7 @@ def cmd_annindex(args) -> None:
       (safe alongside live queries — only unreferenced dirs go).
 
     One JSON stats line per invocation.  Same single-writer contract as
-    dedupindex: --build replaces the state tables and must not race --add.
-
-    ``--bucketed`` (ivf only) additionally publishes ivf_lists as an
-    external bucketed-by-cell snapshot so --query equi-joins the lists
-    with ZERO exchange on the list side; --add republishes after the
-    append (the OCC table stays the source of truth).  sq8 codes are
-    scanned, not joined — --bucketed with --kind sq8 is an error."""
+    dedupindex: --build replaces the state tables and must not race --add."""
     from eodatadown_spark.catalog import ParquetCatalog
     from eodatadown_spark.operators import similarity as S
     from eodatadown_spark.session import get_spark
@@ -500,10 +435,6 @@ def cmd_annindex(args) -> None:
     if sum(faces) != 1:
         args._parser.error(
             "exactly one of --build / --add / --query / --gc is required")
-    if args.bucketed and args.kind == "sq8":
-        args._parser.error(
-            "--bucketed applies to --kind ivf (sq8 codes are scanned, "
-            "not joined)")
 
     spark = get_spark("eodd_cli")
     cat = ParquetCatalog(spark, args.index_dir)
@@ -650,30 +581,16 @@ def cmd_annindex(args) -> None:
         lists = S.ivf_build_lists(corpus, cents)
         cat.write(cents, "centroids", partition=False)
         cat.write(lists, "ivf_lists", partition=False)
-        if args.bucketed:
-            cat.publish_bucketed_snapshot(
-                cat.read("ivf_lists"), "ivf_lists", "cell", args.buckets
-            )
         os.makedirs(args.index_dir, exist_ok=True)
         with open(meta_path, "w", encoding="utf-8") as fh:
-            json.dump({"n_centroids": args.centroids,
-                       "bucketed": bool(args.bucketed),
-                       "buckets": args.buckets}, fh)
+            json.dump({"n_centroids": args.centroids}, fh)
         print(json.dumps({
             "built": True, "vectors": corpus.count(),
             "n_centroids": args.centroids,
         }))
         return
-    with open(meta_path, encoding="utf-8") as fh:
-        ivf_meta = json.load(fh)
     cents = cat.read("centroids")
-    lists = (
-        cat.read_bucketed_snapshot(
-            "ivf_lists", "cell", ivf_meta.get("buckets", 16)
-        )
-        if ivf_meta.get("bucketed")
-        else cat.read("ivf_lists")
-    )
+    lists = cat.read("ivf_lists")
     if args.add:
         batch = spark.read.parquet(args.add)
         # assign against the STORED centroids (never re-train — a re-trained
@@ -683,11 +600,6 @@ def cmd_annindex(args) -> None:
             lists.select("neighbor_id").distinct(), "neighbor_id", "left_anti"
         )
         cat.append("ivf_lists", new_rows)
-        if ivf_meta.get("bucketed"):
-            cat.publish_bucketed_snapshot(
-                cat.read("ivf_lists"), "ivf_lists", "cell",
-                ivf_meta.get("buckets", 16),
-            )
         print(json.dumps({
             "added": True, "batch_vectors": batch.count(),
             "index_vectors": cat.read("ivf_lists").count(),
@@ -824,20 +736,6 @@ def cmd_corpusstats(args) -> None:
             .collect()
         ]
         print(json.dumps({"heavy_hitters": hh}))
-
-
-def cmd_bucketize(args) -> None:
-    """Publish scenes + plugin_results as external bucketed snapshots inside
-    the catalog root so pid-keyed joins (J2 scheduling) run shuffle-free at
-    scale, in this process or any later one."""
-    from eodatadown_spark.sensor import get_sensor_obj
-
-    cat = _cat(args)
-    sensor = get_sensor_obj(args.sensor, cat)
-    sensor.publish_bucketed(n_buckets=args.buckets)
-    n = sensor.scenes_bucketed().count()
-    print(f"published {sensor.table} + plugin_results bucketed "
-          f"({args.buckets} buckets, {n} scenes)")
 
 
 def cmd_passencode(args) -> None:
@@ -1470,13 +1368,6 @@ def main(argv=None) -> int:
                          "(exact jaccard), or simhash bands (hamming)")
     sp.add_argument("--max-hamming", type=int, default=3, dest="max_hamming")
     sp.add_argument("--band-bits", type=int, default=15, dest="band_bits")
-    sp.add_argument("--bucketed", action="store_true",
-                    help="also publish the family's band/prefix index as "
-                         "an external bucketed snapshot (bucket keys = the "
-                         "probe join keys) so probes join with zero "
-                         "exchange on the index side")
-    sp.add_argument("--buckets", type=int, default=16,
-                    help="bucket count for --bucketed (index identity)")
     sp.set_defaults(fn=cmd_dedupindex, _parser=sp)
     sp = sub.add_parser("spanindex")
     sp.add_argument("--index-dir", required=True, dest="index_dir")
@@ -1489,12 +1380,6 @@ def main(argv=None) -> int:
     sp.add_argument("--unit", choices=("token", "char"), default="token",
                     help="window granularity (index identity; char = Lee "
                          "et al.'s byte-level form, e.g. --window 50)")
-    sp.add_argument("--bucketed", action="store_true",
-                    help="also publish the index as an external bucketed-"
-                         "by-wh snapshot so probes join with zero exchange "
-                         "on the index side")
-    sp.add_argument("--buckets", type=int, default=16,
-                    help="bucket count for --bucketed (index identity)")
     sp.set_defaults(fn=cmd_spanindex, _parser=sp)
     sp = sub.add_parser("annindex")
     sp.add_argument("--index-dir", required=True, dest="index_dir")
@@ -1515,13 +1400,6 @@ def main(argv=None) -> int:
                          "disable when builds are known quiesced")
     sp.add_argument("--gc", action="store_true",
                     help="remove sq8 generations superseded by ann_meta.json")
-    sp.add_argument("--bucketed", action="store_true",
-                    help="ivf only: also publish ivf_lists as an external "
-                         "bucketed-by-cell snapshot so --query reads only "
-                         "the probed cells' buckets with zero exchange on "
-                         "the list side")
-    sp.add_argument("--buckets", type=int, default=16,
-                    help="bucket count for --bucketed (index identity)")
     sp.add_argument("--out", default=None, help="result parquet path")
     sp.set_defaults(fn=cmd_annindex, _parser=sp)
 
@@ -1537,10 +1415,6 @@ def main(argv=None) -> int:
                                    "--out": {"required": True},
                                    "--split": {"type": int, "default": 1}})
     add("roi", cmd_roi, **{"--bbox": {"required": True, "help": "W,S,E,N"}})
-    add("bucketize", cmd_bucketize, **{
-        "--sensor": {"default": "LandsatGOOG"},
-        "--buckets": {"type": int, "default": 16},
-    })
     add("passencode", cmd_passencode, **{"--password": {"required": True}})
     add("bpetrain", cmd_bpetrain, **{
         "--infile": {"required": True, "help": "documents parquet"},

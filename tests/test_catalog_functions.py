@@ -1125,85 +1125,3 @@ def test_merge_into_insert_all_dunder_columns_exempt(spark, landsat_scenes, tmp_
     tbl = cat.read_clean("landsat_scenes")
     assert tbl.where(F.col("pid") == 777).count() == 1
     assert "__op" not in tbl.columns
-
-
-def test_bucketed_snapshot_spec_is_authoritative(spark, tmp_path):
-    """The snapshot's _bucket_spec.json overrides caller args: declaring a
-    wrong CLUSTERED BY over existing bucket files would mis-assign rows
-    to buckets and a bucketed join would silently LOSE matches — the
-    reader must rebuild from the sidecar instead."""
-    from pyspark.sql import functions as F
-
-    from eodatadown_spark.catalog import ParquetCatalog
-
-    cat = ParquetCatalog(spark, str(tmp_path / "specauth"))
-    idx = spark.range(0, 2000).select(
-        F.col("id").alias("wh"), (F.col("id") * 3).alias("cnt")
-    )
-    cat.publish_bucketed_snapshot(idx, "span_index", "wh", 4)
-    # register under the WRONG spec first (stale session state), then a
-    # republish with a different bucket count lands underneath
-    stored = cat.read_bucketed_snapshot("span_index", "wh", 4)
-    assert stored.count() == 2000
-    cat.publish_bucketed_snapshot(idx, "span_index", "wh", 8)
-    # caller still passes the OLD spec — sidecar must win
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        stored2 = cat.read_bucketed_snapshot("span_index", "wh", 4)
-        batch = spark.range(0, 500).select((F.col("id") * 7).alias("wh"))
-        joined = batch.join(stored2, "wh")
-        # every batch wh < 2000 with wh%... -> exact expected match count
-        expected = sum(1 for i in range(500) if i * 7 < 2000)
-        assert joined.count() == expected  # no silently-lost matches
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-    # and the registered definition matches the files (8 buckets)
-    _, tbl = cat._bucketed_ident("span_index")
-    detail = spark.sql(f"DESCRIBE TABLE EXTENDED {tbl}").toPandas()
-    nb = detail[detail.col_name == "Num Buckets"].data_type.iloc[0]
-    assert str(nb).strip() == "8"
-
-
-def test_bucketed_snapshot_of_empty_frame_reads_back(spark, tmp_path):
-    """An empty frame writes no parquet file, so the snapshot must carry
-    its own schema: J2 scheduling publishes plugin_results before any
-    plugin has run."""
-    from eodatadown_spark import schemas
-    from eodatadown_spark.catalog import ParquetCatalog
-
-    cat = ParquetCatalog(spark, str(tmp_path))
-    empty = spark.createDataFrame([], schema=schemas.PLUGIN_RESULTS)
-    cat.publish_bucketed_snapshot(empty, "plugin_results", "scene_pid", 4)
-    got = cat.read_bucketed_snapshot("plugin_results", "scene_pid")
-    assert got.columns == empty.columns and got.count() == 0
-
-
-def test_bucketed_snapshot_rereads_after_matching_republish(spark, tmp_path):
-    """ADVICE r12: a republish with a CHANGED spec followed by a read with
-    the NEW (matching) args must not reuse the old-spec registration from
-    earlier in the session — the sidecar-vs-caller comparison alone could
-    not catch this (caller args match the sidecar), so the registration
-    is unconditionally recreated per read."""
-    from pyspark.sql import functions as F
-
-    from eodatadown_spark.catalog import ParquetCatalog
-
-    cat = ParquetCatalog(spark, str(tmp_path / "respec"))
-    idx = spark.range(0, 1000).select(
-        F.col("id").alias("wh"), (F.col("id") * 3).alias("cnt")
-    )
-    cat.publish_bucketed_snapshot(idx, "span_index", "wh", 4)
-    assert cat.read_bucketed_snapshot("span_index", "wh", 4).count() == 1000
-    # republish under a different layout AND schema (extra column)
-    cat.publish_bucketed_snapshot(
-        idx.withColumn("extra", F.lit(1)), "span_index", "wh", 8
-    )
-    # caller passes the NEW spec — before the fix the stale 4-bucket
-    # old-schema registration was reused because sidecar == caller args
-    stored = cat.read_bucketed_snapshot("span_index", "wh", 8)
-    assert "extra" in stored.columns
-    _, tbl = cat._bucketed_ident("span_index")
-    detail = spark.sql(f"DESCRIBE TABLE EXTENDED {tbl}").toPandas()
-    nb = detail[detail.col_name == "Num Buckets"].data_type.iloc[0]
-    assert str(nb).strip() == "8"

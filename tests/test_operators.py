@@ -1211,16 +1211,14 @@ def test_stratified_sample_rejects_vanishing_rate(spark):
 
 def test_usr_analysis_agg_duplicate_plugin_names(spark, landsat_scenes, plugin_results_df):
     """A duplicated entry in the configured plugin list must not change the
-    result (countDistinct compares against the DISTINCT name count)."""
+    J2 result."""
     from eodatadown_spark import queries as Q
 
     a = [r["pid"] for r in Q.get_scnlist_usr_analysis(
         landsat_scenes, plugin_results_df, ["PlgA", "PlgA"]).collect()]
-    b = [r["pid"] for r in Q.get_scnlist_usr_analysis_agg(
-        landsat_scenes, plugin_results_df, ["PlgA", "PlgA"]).collect()]
-    c = [r["pid"] for r in Q.get_scnlist_usr_analysis_agg(
+    b = [r["pid"] for r in Q.get_scnlist_usr_analysis(
         landsat_scenes, plugin_results_df, ["PlgA"]).collect()]
-    assert a == b == c
+    assert a == b
 
 
 def test_semantic_dedup_arrow_equals_sql(spark):

@@ -296,50 +296,6 @@ def test_q147_sketch_rollup_bounded_exchanges(entry_spark):
     assert audit.exchange_count(df) <= 3
 
 
-def test_bucketed_snapshot_probe_no_index_exchange(entry_spark, tmp_path):
-    """VERDICT r11 item 3: a probe against a bucketed index snapshot must
-    join with ZERO exchange on the index side — the batch side shuffles to
-    the bucket layout, the index never moves.  Broadcast is disabled so
-    the join degrades to the large-large SMJ/SHJ shape this layout exists
-    for (with broadcast on, the small batch broadcasts and neither side
-    shuffles — the trivial case)."""
-    from pyspark.sql import functions as F
-
-    from eodatadown_spark.catalog import ParquetCatalog
-    from eodatadown_spark.operators.dedup import span_hash_index
-
-    spark = entry_spark
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    cat = ParquetCatalog(spark, str(tmp_path / "bktcat"))
-    idx = span_hash_index(docs, window=8)
-    cat.write(idx, "span_index", partition=False)
-    cat.publish_bucketed_snapshot(cat.read("span_index"), "span_index",
-                                  "wh", 8)
-
-    batch = docs.select(
-        "doc_id",
-        F.abs(F.xxhash64("text") % 1000000).alias("wh"),
-    )
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        stored_b = cat.read_bucketed_snapshot("span_index", "wh", 8)
-        j_bucketed = batch.join(stored_b, "wh")
-        plan_b = audit.physical_plan(j_bucketed, "simple")
-        stored_p = cat.read("span_index")
-        j_plain = batch.join(stored_p, "wh")
-        plan_p = audit.physical_plan(j_plain, "simple")
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-
-    # plain: BOTH sides exchange; bucketed: only the batch side does
-    assert plan_b.count("Exchange") == plan_p.count("Exchange") - 1
-    # and the one remaining exchange is NOT above the bucketed scan: the
-    # scan reports its bucket selection
-    assert "Bucketed: true" in audit.physical_plan(j_bucketed) or \
-        "SelectedBucketsCount" in audit.physical_plan(j_bucketed)
-
-
 def test_q120_bm25_single_exchange(entry_spark):
     """r14 (VERDICT r13 item 4): BM25 for a small query bag is one array
     traversal per document + ONE global single-partition aggregate (N,

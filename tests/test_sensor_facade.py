@@ -291,6 +291,38 @@ def test_sensor_plugins_roundtrip(spark, sensor):
     assert sensor.get_scn_obs_date(999) is None
 
 
+def test_check_new_scns_keeps_concurrent_commit(spark, sensor, monkeypatch):
+    """A scene-table commit that lands while check_new_scns builds its
+    upsert survives: the upsert re-derives on top of the winner instead of
+    flipping a table built from the stale scenes over it."""
+    sensor.check_new_scns(
+        _index(spark, [("A", "2019-01-05", "20190110", 10.0),
+                       ("B", "2019-02-10", "20190215", 20.0)])
+    )
+    cat = sensor.catalog
+    rival = spark.createDataFrame([(0, 99.0)], "pid long, cloud_cover double")
+
+    orig = ParquetCatalog._write_version
+    fired = {"done": False}
+
+    def hooked(self, df, table, partition=True, *args, **kw):
+        if table == "landsat_scenes" and not fired["done"]:
+            fired["done"] = True
+            # another process patches pid 0 inside our build window
+            ParquetCatalog(spark, cat.root).merge_updates("landsat_scenes", rival)
+        return orig(self, df, table, partition, *args, **kw)
+
+    monkeypatch.setattr(ParquetCatalog, "_write_version", hooked)
+    added = sensor.check_new_scns(
+        _index(spark, [("C", "2019-03-15", "20190320", 30.0)])
+    )
+    assert fired["done"] and added == 1
+    rows = {r["pid"]: r for r in cat.read_clean("landsat_scenes").collect()}
+    assert set(rows) == {0, 1, 2}
+    assert rows[0]["cloud_cover"] == 99.0
+    assert rows[2]["scene_id"] == "C"
+
+
 def test_run_usr_analysis_keeps_concurrent_plugin_commit(spark, sensor, monkeypatch):
     """A plugin_results commit that lands while run_usr_analysis builds its
     union survives: the union re-derives on top of the winner instead of

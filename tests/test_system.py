@@ -195,8 +195,8 @@ def test_cli_dataprep_pipeline(spark, tmp_path, capsys):
 
 
 def test_cli_monthly_bucketize_cycle(spark, tmp_path, capsys):
-    """CLI --partition-monthly + bucketize: monthly layout on disk, bucketed
-    snapshots published for shuffle-free pid joins."""
+    """CLI --partition-monthly: chknewscns writes the monthly layout on
+    disk."""
     import datetime as dt
     import os
 
@@ -243,16 +243,6 @@ def test_cli_monthly_bucketize_cycle(spark, tmp_path, capsys):
         if any(f.endswith(".parquet") for f in files)
     }
     assert leaves == {"p_year=2019/p_month=1", "p_year=2019/p_month=2"}
-
-    eodd_cli.main(["bucketize", "--catalog", cat_dir, "--buckets", "4"])
-    assert "published landsat_scenes" in capsys.readouterr().out
-    desc = "\n".join(
-        f"{r['col_name']}\t{r['data_type']}"
-        for r in spark.sql(
-            f"DESCRIBE EXTENDED {cat._bucketed_ident('landsat_scenes')[1]}"
-        ).collect()
-    )
-    assert "Num Buckets\t4" in desc and "Bucket Columns\t[`pid`]" in desc
 
 
 def test_cli_summary_approx_and_simhash_dataprep(spark, tmp_path, capsys):
@@ -1480,18 +1470,11 @@ def test_cli_spanindex_arg_validation(spark, tmp_path):
     with pytest.raises(SystemExit) as e:
         eodd_cli.main(["annindex", "--index-dir", idx])
     assert e.value.code == 2
-    with pytest.raises(SystemExit) as e:
-        eodd_cli.main(["annindex", "--index-dir", idx, "--kind", "sq8",
-                       "--build", "x", "--bucketed"])
-    assert e.value.code == 2
 
 
-def test_cli_spanindex_bucketed_char_lifecycle(spark, tmp_path, capsys):
-    """spanindex --bucketed --unit char: the index publishes an external
-    bucketed-by-wh snapshot; probe/apply read it via per-session
-    re-registration and report char-granular stats; the fold republishes.
-    Stats must equal the plain-parquet run (bucketing is layout, not
-    semantics)."""
+def test_cli_spanindex_char_lifecycle(spark, tmp_path, capsys):
+    """spanindex --unit char: build, probe and apply report char-granular
+    stats."""
     import eodd_cli
 
     # caps on EVERY word: lowercasing breaks the run every <=6 chars, so
@@ -1513,35 +1496,34 @@ def test_cli_spanindex_bucketed_char_lifecycle(spark, tmp_path, capsys):
         "doc_id long, text string",
     ).write.parquet(b2)
 
-    for bucketed in (False, True):
-        idx = str(tmp_path / f"cspan_idx_{bucketed}")
-        build_args = ["spanindex", "--index-dir", idx, "--build", corpus,
-                      "--window", "10", "--unit", "char"]
-        if bucketed:
-            build_args += ["--bucketed", "--buckets", "4"]
-        eodd_cli.main(build_args)
-        built = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-        assert built["unit"] == "char" and built["bucketed"] is bucketed
+    idx = str(tmp_path / "cspan_idx")
+    eodd_cli.main(["spanindex", "--index-dir", idx, "--build", corpus,
+                   "--window", "10", "--unit", "char"])
+    built = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert built["unit"] == "char"
 
-        eodd_cli.main(["spanindex", "--index-dir", idx, "--probe", b1])
-        p1 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-        # doc 100 duplicates the corpus's 33-char run; maximal span is the
-        # full 33 chars (windows at offsets 5..28 of "lead <shared>")
-        assert p1["docs_with_spans"] == 1 and p1["dup_chars"] == 33
+    eodd_cli.main(["spanindex", "--index-dir", idx, "--probe", b1])
+    p1 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    # doc 100 duplicates the corpus's 33-char run; maximal span is the
+    # full 33 chars (windows at offsets 5..28 of "lead <shared>")
+    assert p1["docs_with_spans"] == 1 and p1["dup_chars"] == 33
 
-        # apply b1, then b2 (lowercased copy) must NOT mark: char mode is
-        # normalization-free, exact bytes only
-        eodd_cli.main(["spanindex", "--index-dir", idx, "--probe", b1,
-                       "--apply"])
-        capsys.readouterr()
-        eodd_cli.main(["spanindex", "--index-dir", idx, "--probe", b2])
-        p2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-        assert p2["docs_with_spans"] == 0 and p2["dup_chars"] == 0
+    # apply b1, then b2 (lowercased copy) must NOT mark: char mode is
+    # normalization-free, exact bytes only
+    eodd_cli.main(["spanindex", "--index-dir", idx, "--probe", b1,
+                   "--apply"])
+    capsys.readouterr()
+    eodd_cli.main(["spanindex", "--index-dir", idx, "--probe", b2])
+    p2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert p2["docs_with_spans"] == 0 and p2["dup_chars"] == 0
 
 
 def test_cli_dedupindex_bucketed_probe_matches_plain(spark, tmp_path, capsys):
-    """dedupindex --bucketed: probe through the bucketed band-index
-    snapshot returns the same pairs as the plain-parquet path."""
+    """An index dir whose dedup_meta.json still carries the retired
+    ``"bucketed": true`` keys probes the committed band index exactly like
+    the plain dir: the keys are ignored."""
+    import os
+
     import eodd_cli
 
     corpus = str(tmp_path / "bdi_corpus")
@@ -1556,18 +1538,21 @@ def test_cli_dedupindex_bucketed_probe_matches_plain(spark, tmp_path, capsys):
         "doc_id long, text string",
     ).write.parquet(batch)
 
-    stats = {}
-    for bucketed in (False, True):
-        idx = str(tmp_path / f"bdi_idx_{bucketed}")
-        args = ["dedupindex", "--index-dir", idx, "--build", corpus,
-                "--jaccard", "0.8"]
-        if bucketed:
-            args += ["--bucketed", "--buckets", "4"]
-        eodd_cli.main(args)
-        capsys.readouterr()
+    idx = str(tmp_path / "bdi_idx")
+    eodd_cli.main(["dedupindex", "--index-dir", idx, "--build", corpus,
+                   "--jaccard", "0.8"])
+    capsys.readouterr()
+
+    def probe() -> dict:
         eodd_cli.main(["dedupindex", "--index-dir", idx, "--probe", batch])
-        stats[bucketed] = json.loads(
-            capsys.readouterr().out.strip().splitlines()[-1]
-        )
-    assert stats[True] == stats[False]
-    assert stats[True]["new_pairs"] >= 1
+        return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    plain = probe()
+    meta_path = os.path.join(idx, "dedup_meta.json")
+    with open(meta_path, encoding="utf-8") as fh:
+        meta = json.load(fh)
+    meta.update({"bucketed": True, "buckets": 4})
+    with open(meta_path, "w", encoding="utf-8") as fh:
+        json.dump(meta, fh)
+    assert probe() == plain
+    assert plain["new_pairs"] >= 1
