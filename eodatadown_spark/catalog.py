@@ -25,7 +25,6 @@ import os
 import shutil
 import time
 from contextlib import contextmanager
-from typing import Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,7 +32,6 @@ from pyspark.sql import functions as F
 from eodatadown_spark import schemas
 
 _CURRENT = "_CURRENT"
-_SCHEMA_SIDECAR = "_SCHEMA.json"
 
 
 def _has_parquet_files(path: str) -> bool:
@@ -147,34 +145,7 @@ class ParquetCatalog:
             declared = schemas.ALL_SCHEMAS.get(table)
             if declared is not None:
                 return self.spark.createDataFrame([], schema=declared)
-        stored = self._read_schema_sidecar(path)
-        if stored is not None:
-            # an evolved version mixes hard-linked pre-evolution files with
-            # new-schema files; the version's own sidecar pins the
-            # authoritative data-file schema (absent columns in old files
-            # read as NULL) — schema INFERENCE would nondeterministically
-            # pick one footer
-            return self.spark.read.schema(stored).parquet(path)
         return self.spark.read.parquet(path)
-
-    def _read_schema_sidecar(self, version_path: str):
-        sidecar = os.path.join(version_path, _SCHEMA_SIDECAR)
-        if not os.path.exists(sidecar):
-            return None
-        from pyspark.sql import types as T
-
-        with open(sidecar, encoding="utf-8") as fh:
-            return T.StructType.fromJson(json.load(fh))
-
-    def _write_schema_sidecar(self, version_path: str, schema) -> None:
-        """Record the authoritative DATA-FILE schema of a version (no
-        partition columns — Spark appends those from the directory layout).
-        Written before the pointer flip, like everything else in a version
-        dir."""
-        with open(
-            os.path.join(version_path, _SCHEMA_SIDECAR), "w", encoding="utf-8"
-        ) as fh:
-            json.dump(schema.jsonValue(), fh)
 
     @contextmanager
     def _commit_lock(self, table: str, timeout: float = 30.0,
@@ -443,12 +414,11 @@ class ParquetCatalog:
 
     def _write_selective(
         self, table: str, old_path: str, changed, part_cols: list[str],
-        frames: list[DataFrame], schema=None,
+        frames: list[DataFrame],
     ) -> tuple[str, str]:
         """Build a partition-selective version: hard-link every partition
-        not in ``changed`` (:meth:`_begin_selective_version`), append each
-        of ``frames`` (carrying ``part_cols``) into its partitions and,
-        given a widened ``schema``, pin it in the version's sidecar.  A
+        not in ``changed`` (:meth:`_begin_selective_version`) and append
+        each of ``frames`` (carrying ``part_cols``) into its partitions.  A
         failed build removes its claimed dir — leaving it would orphan a
         v_N that survives until a later commit's GC and inflates
         subsequent claim numbering meanwhile."""
@@ -458,10 +428,6 @@ class ParquetCatalog:
         try:
             for df in frames:
                 df.write.mode("append").partitionBy(*part_cols).parquet(out)
-            if schema is not None:
-                # AFTER _begin_selective_version's prior-sidecar copy, so
-                # the widened schema wins
-                self._write_schema_sidecar(out, schema)
         except Exception:
             shutil.rmtree(out, ignore_errors=True)
             raise
@@ -585,14 +551,6 @@ class ParquetCatalog:
         changed_rel = {_partition_rel_dir(r, part_cols) for r in changed}
         version, out = self._claim_version(table)
         try:
-            # a previously-evolved table's sidecar must follow the
-            # hard-linked files into every new version — old files under a
-            # new pointer still need the authoritative schema
-            prev_sidecar = os.path.join(old_path, _SCHEMA_SIDECAR)
-            if os.path.exists(prev_sidecar):
-                shutil.copyfile(
-                    prev_sidecar, os.path.join(out, _SCHEMA_SIDECAR)
-                )
             for dirpath, _dirs, files in os.walk(old_path):
                 relp = os.path.relpath(dirpath, old_path)
                 if relp == "." or not relp.startswith("p_"):
@@ -617,20 +575,22 @@ class ParquetCatalog:
         source: DataFrame,
         on: list[str],
         when_matched_update=None,
-        update_condition=None,
         when_matched_delete=None,
-        when_not_matched_insert=True,
-        insert_condition=None,
-        validate_unique_source: bool = True,
+        when_not_matched_insert: bool = True,
         occ_retries: int = 5,
-        schema_evolution: str = "strict",
     ) -> None:
         """Transactional MERGE INTO the catalog table — the Delta/Iceberg
         MERGE operation on the versioned-parquet layout, partition-selective.
 
-        Clause semantics are operators.merge.merge_into's (update / delete /
-        insert with conditions, ``t``/``s`` aliases, ANSI duplicate-source
-        guard).  Physically:
+        Two clause forms, with operators.merge.merge_into's semantics
+        (``t``/``s`` aliases, ANSI duplicate-source guard):
+
+        - upsert: ``when_matched_update`` (column → Column mapping) plus
+          insert-all of the unmatched source rows;
+        - delete: ``when_matched_delete`` (a Column condition) with
+          ``when_not_matched_insert=False``.
+
+        Physically:
 
         - partitions holding MATCHED keys pass through the merge join and
           are rewritten (skipped entirely when no matched clause is given);
@@ -648,28 +608,15 @@ class ParquetCatalog:
         is base-checked under the commit lock and a lost race rebuilds from
         the winner's commit (up to ``occ_retries`` times).
 
-        ``schema_evolution`` governs INSERT-ALL mode
-        (``when_not_matched_insert=True``) when the source carries columns
-        the table lacks: ``"strict"`` (default) rejects them loudly (the
-        old behavior dropped them silently); ``"add"`` widens the table
-        first — a zero-row ``append(..., schema_evolution="add")`` commit
-        (sidecar, hard-linked files, no rewrite) — then merges against the
-        widened schema, so the extras insert for new rows and read as NULL
-        elsewhere.  Every argument is validated before that widening
-        commit, so a rejected call leaves the table untouched.  Explicit
-        insert/update MAPPINGS are untouched either way: there, extra
-        source columns are ordinary expression inputs, not an ambiguity.
-        ``__``-prefixed source columns are exempt too — the codebase-wide
-        convention for ephemeral bookkeeping (e.g. a CDC ``__op`` marker
-        driving the clause conditions); they are never inserted and never
-        widen the schema.
+        Insert-all takes the source's same-named columns, cast to the
+        table's types (table columns the source lacks insert as NULL).  A
+        source column the table lacks is rejected loudly — silently
+        dropping it would be data loss — except ``__``-prefixed ones, the
+        codebase-wide convention for ephemeral bookkeeping (e.g. a CDC
+        ``__op`` marker), which are never inserted.
         """
         from eodatadown_spark.operators.merge import merge_into as _merge_df
 
-        if schema_evolution not in ("strict", "add"):
-            raise ValueError(
-                f"unknown schema_evolution mode {schema_evolution!r}"
-            )
         part_src = PARTITION_SOURCE.get(table)
         if when_matched_update:
             forbidden = {part_src, "p_year", "p_month"} & set(when_matched_update)
@@ -678,43 +625,28 @@ class ParquetCatalog:
                     f"merge_into cannot update partition-source columns {sorted(forbidden)}; "
                     "use write() for partition-moving rewrites"
                 )
-        if when_not_matched_insert is True:
-            cur0 = self.read(table)
-            extras = [
-                c for c in source.columns
-                if c not in cur0.columns and not c.startswith("__")
-            ]
-            if extras and schema_evolution == "strict":
-                raise ValueError(
-                    f"merge_into insert-all: source columns {extras} not in "
-                    f"table {table!r}; pass schema_evolution='add' to widen "
-                    "the schema, or an explicit insert mapping (silent "
-                    "dropping would be data loss)"
-                )
-            if extras:
-                target0 = [c for c in cur0.columns if c not in ("p_year", "p_month")]
-                evolve_src = source.limit(0).select(
-                    *[
-                        F.col(c)
-                        if c in source.columns
-                        else F.lit(None).cast(cur0.schema[c].dataType).alias(c)
-                        for c in target0
-                    ],
-                    *[F.col(c) for c in extras],
-                )
-                self.append(table, evolve_src, occ_retries, schema_evolution="add")
 
         def build():
             cur, old_path, part_cols, rewrite = self._layout(table)
+            # validate BEFORE any filesystem work: an abort below this point
+            # would leave a fully-built orphan version dir
+            extras = [
+                c for c in source.columns
+                if c not in cur.columns and not c.startswith("__")
+            ]
+            if when_not_matched_insert and extras:
+                raise ValueError(
+                    f"merge_into insert-all: source columns {extras} not in "
+                    f"table {table!r} (silent dropping would be data loss)"
+                )
             if rewrite is not None:
                 return rewrite(_merge_df(
                     self.read_clean(table), source, on,
-                    when_matched_update, update_condition, when_matched_delete,
-                    when_not_matched_insert, insert_condition, validate_unique_source,
+                    when_matched_update=when_matched_update,
+                    when_matched_delete=when_matched_delete,
+                    when_not_matched_insert=when_not_matched_insert,
                 ))
             target_cols = [c for c in cur.columns if c not in part_cols]
-            # validate BEFORE any filesystem work: an abort below this point
-            # would leave a fully-built orphan version dir
             if when_not_matched_insert and (part_src is None or part_src not in target_cols):
                 raise ValueError(
                     f"cannot derive partitions for inserts: {table!r} has no "
@@ -737,22 +669,21 @@ class ParquetCatalog:
                 )
             else:
                 changed = []
-                if validate_unique_source:
-                    # the matched-partition merge (which carries the
-                    # distributed ANSI guard) is skipped entirely, so check
-                    # here that no target key matches two source rows
-                    dup = (
-                        matched_src.groupBy(*on)
-                        .count()
-                        .where(F.col("count") > 1)
-                        .limit(1)
-                        .collect()
+                # the matched-partition merge (which carries the
+                # distributed ANSI guard) is skipped entirely, so check
+                # here that no target key matches two source rows
+                dup = (
+                    matched_src.groupBy(*on)
+                    .count()
+                    .where(F.col("count") > 1)
+                    .limit(1)
+                    .collect()
+                )
+                if dup:
+                    raise ValueError(
+                        "merge_into: multiple source rows matched target key "
+                        f"({', '.join(str(dup[0][k]) for k in on)})"
                     )
-                    if dup:
-                        raise ValueError(
-                            "merge_into: multiple source rows matched target key "
-                            f"({', '.join(str(dup[0][k]) for k in on)})"
-                        )
 
             frames = []
             if changed:
@@ -761,50 +692,24 @@ class ParquetCatalog:
                 ).select(*target_cols)
                 merged = _merge_df(
                     target_sub, matched_src, on,
-                    when_matched_update, update_condition, when_matched_delete,
-                    False, None, validate_unique_source,
+                    when_matched_update=when_matched_update,
+                    when_matched_delete=when_matched_delete,
+                    when_not_matched_insert=False,
                 )
                 frames.append(_with_parts(merged, part_src, part_cols))
 
             if when_not_matched_insert:
-                # evaluate the condition / mapping against a frame that ALSO
-                # carries the target columns (all NULL) under alias 't', so an
-                # insert clause referencing t.<col> NULL-evaluates exactly as it
-                # does against operators.merge.merge_into's full-outer frame —
-                # without this, the same merge_into call would raise
-                # AnalysisException only on partitioned layouts.  A left join on
-                # a False condition against an empty build side is a no-op plan
-                # (BroadcastNestedLoopJoin with zero build rows).
-                t_nulls = cur.select(*target_cols).limit(0)
-                ins = insert_src.alias("s").join(
-                    t_nulls.alias("t"), F.lit(False), "left"
-                )
-                if insert_condition is not None:
-                    ins = ins.where(F.coalesce(insert_condition, F.lit(False)))
-                # column routing mirrors operators.merge.merge_into exactly:
-                # a mapping is authoritative for non-key columns (absent ones
-                # become NULL, not source values); key columns always come from
-                # the source; insert-all mode takes same-named source columns
-                cols = []
-                for c in target_cols:
-                    if c in on:
-                        val = F.col(f"s.{c}")
-                    elif isinstance(when_not_matched_insert, Mapping):
-                        val = when_not_matched_insert.get(c)
-                        if val is None:
-                            val = F.lit(None)
-                    elif c in source.columns:
-                        val = F.col(f"s.{c}")
-                    else:
-                        val = F.lit(None)
-                    cols.append(val.cast(cur.schema[c].dataType).alias(c))
-                frames.append(_with_parts(ins.select(*cols), part_src, part_cols))
+                ins = insert_src.select(*[
+                    (F.col(c) if c in source.columns else F.lit(None))
+                    .cast(cur.schema[c].dataType).alias(c)
+                    for c in target_cols
+                ])
+                frames.append(_with_parts(ins, part_src, part_cols))
             return self._write_selective(table, old_path, changed, part_cols, frames)
 
         self._commit(table, "merge_into", build, occ_retries)
 
-    def append(self, table: str, rows: DataFrame, occ_retries: int = 5,
-               schema_evolution: str = "strict") -> None:
+    def append(self, table: str, rows: DataFrame, occ_retries: int = 5) -> None:
         """Append-only fast path: hard-link EVERY existing partition into a
         new version and add the new rows as extra files in their derived
         partitions — no join, no rewrite, no shuffle of existing data.
@@ -818,35 +723,17 @@ class ParquetCatalog:
         files, so flipping over a concurrently-moved pointer would silently
         drop that commit — instead the loser re-links from the winner.
 
-        ``schema_evolution`` governs incoming columns the table lacks:
-
-        - ``"strict"`` (default) REJECTS them loudly — the pre-round-8
-          behavior silently dropped them, which is data loss wearing a
-          success exit code;
-        - ``"add"`` widens the table: new columns (nullable, incoming
-          types) join the schema, existing files are hard-linked untouched,
-          and a ``_SCHEMA.json`` sidecar in the version dir pins the
-          authoritative schema so readers see NULLs for pre-evolution rows
-          (the Delta/Iceberg ADD COLUMNS semantics on the versioned-parquet
-          layout — no data rewrite).  Unpartitioned tables take a full
-          rewrite instead (they are rewritten on every append anyway),
-          which materializes the NULLs so no sidecar is needed.
+        Incoming columns the table lacks are REJECTED loudly: silently
+        dropping them would be data loss wearing a success exit code.
         """
-        from pyspark.sql import types as T
-
-        if schema_evolution not in ("strict", "add"):
-            raise ValueError(
-                f"unknown schema_evolution mode {schema_evolution!r}"
-            )
 
         def build():
             cur, old_path, part_cols, rewrite = self._layout(table)
             extras = [c for c in rows.columns if c not in cur.columns]
-            if extras and schema_evolution == "strict":
+            if extras:
                 raise ValueError(
                     f"append: incoming columns {extras} not in table "
-                    f"{table!r}; pass schema_evolution='add' to widen the "
-                    "schema (silent dropping would be data loss)"
+                    f"{table!r} (silent dropping would be data loss)"
                 )
             target_cols = [c for c in cur.columns if c not in part_cols]
             # cast incoming rows to the table schema up front (as the
@@ -857,26 +744,18 @@ class ParquetCatalog:
             new = rows.select(
                 *[F.col(c).cast(cur.schema[c].dataType).alias(c)
                   for c in target_cols],
-                *[F.col(c) for c in extras],
             )
             if rewrite is not None:
-                return rewrite(self.read_clean(table).unionByName(
-                    new, allowMissingColumns=bool(extras)
-                ))
+                return rewrite(self.read_clean(table).unionByName(new))
             part_src = PARTITION_SOURCE.get(table)
             if part_src is None:
                 raise ValueError(
                     f"cannot derive partitions for appended rows: {table!r} has "
                     "no partition-source column"
                 )
-            evolved = T.StructType(
-                [cur.schema[c] for c in target_cols]
-                + [T.StructField(f.name, f.dataType, True)
-                   for f in new.schema.fields if f.name in extras]
-            ) if extras else None
             return self._write_selective(
                 table, old_path, [], part_cols,
-                [_with_parts(new, part_src, part_cols)], evolved,
+                [_with_parts(new, part_src, part_cols)],
             )
 
         self._commit(table, "append", build, occ_retries)

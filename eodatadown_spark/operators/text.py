@@ -106,15 +106,6 @@ def punct_ratio(text: Column | str) -> Column:
     )
 
 
-def mean_token_len(text: Column | str) -> Column:
-    c = F.col(text) if isinstance(text, str) else text
-    n_tok = token_count(c)
-    n_nonspace = F.length(F.regexp_replace(c, "\\s", ""))
-    return F.when(n_tok == 0, F.lit(0.0)).otherwise(
-        n_nonspace.cast("double") / n_tok
-    )
-
-
 def stopword_hits(text: Column | str, words=EN_STOPWORDS) -> Column:
     """Number of whitespace-delimited tokens that are exactly a stopword.
 

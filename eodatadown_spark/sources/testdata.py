@@ -20,26 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from eodatadown_spark.session import apply_runtime_confs
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-DEFAULT_SF_DIR = "/root/testdata/sf0.1"
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     apply_runtime_confs(spark)
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}

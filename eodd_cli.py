@@ -402,7 +402,9 @@ def cmd_spanindex(args) -> None:
 
 
 def cmd_annindex(args) -> None:
-    """Persistent ANN-index lifecycle, two families behind one CLI:
+    """Persistent ANN-index lifecycle, two families behind one CLI.
+    ``--kind`` picks the family at --build; --add and --query read it from
+    the committed ann_meta.json.
 
     - ``--kind ivf`` (default): --build trains a k-means coarse quantizer
       and stores centroids + inverted lists (each vector filed under its
@@ -499,7 +501,15 @@ def cmd_annindex(args) -> None:
             "skipped_inflight": skipped_inflight,
         }))
         return
-    if args.kind == "sq8":
+    if args.build:
+        kind = args.kind
+    else:
+        # --add/--query follow the family the committed index was built
+        # as; a meta without "kind" predates the ivf build recording it
+        with open(meta_path, encoding="utf-8") as fh:
+            meta = json.load(fh)
+        kind = meta.get("kind", "ivf")
+    if kind == "sq8":
         if args.build:
             corpus = spark.read.parquet(args.build)
             mins, steps = S.sq8_train(corpus)
@@ -532,8 +542,6 @@ def cmd_annindex(args) -> None:
             print(json.dumps({"built": True, "kind": "sq8",
                               "vectors": corpus.count()}))
             return
-        with open(meta_path, encoding="utf-8") as fh:
-            meta = json.load(fh)
         scalars = (meta["mins"], meta["steps"])
         codes_table = meta.get("codes_table", "sq8_codes")
         vectors_table = meta.get("vectors_table", "vectors")
@@ -583,7 +591,7 @@ def cmd_annindex(args) -> None:
         cat.write(lists, "ivf_lists", partition=False)
         os.makedirs(args.index_dir, exist_ok=True)
         with open(meta_path, "w", encoding="utf-8") as fh:
-            json.dump({"n_centroids": args.centroids}, fh)
+            json.dump({"kind": "ivf", "n_centroids": args.centroids}, fh)
         print(json.dumps({
             "built": True, "vectors": corpus.count(),
             "n_centroids": args.centroids,
@@ -1387,7 +1395,8 @@ def main(argv=None) -> int:
     sp.add_argument("--add", default=None, help="new-batch parquet to fold in")
     sp.add_argument("--query", default=None, help="query-vectors parquet")
     sp.add_argument("--kind", choices=("ivf", "sq8"), default="ivf",
-                    help="index family: IVF inverted lists or SQ8 codes")
+                    help="index family for --build: IVF inverted lists or "
+                         "SQ8 codes (--add/--query use the built family)")
     sp.add_argument("--centroids", type=int, default=8)
     sp.add_argument("--k", type=int, default=5)
     sp.add_argument("--n-probe", type=int, default=2, dest="n_probe")

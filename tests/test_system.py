@@ -1226,6 +1226,44 @@ def test_cli_annindex_sq8_rebuild_and_gc(spark, tmp_path, capsys):
     assert spark.read.parquet(out).count() == 15
 
 
+def test_cli_annindex_add_and_query_follow_the_built_kind(
+    spark, tmp_path, capsys
+):
+    """--kind is read only by --build: --query and --add on an sq8 index
+    given without --kind take the family from ann_meta.json, so their
+    results equal the same calls with --kind sq8."""
+    import eodd_cli
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    corpus = emb.where(F.col("vec_id") % 5 != 0)
+    batch = emb.where((F.col("vec_id") % 5 == 0) & (F.col("vec_id") >= 10))
+    src = str(tmp_path / "corpus"); bsrc = str(tmp_path / "batch")
+    qsrc = str(tmp_path / "queries"); idx = str(tmp_path / "sq8_idx")
+    corpus.write.parquet(src); batch.write.parquet(bsrc)
+    emb.where(F.col("vec_id") < 10).write.parquet(qsrc)
+
+    eodd_cli.main(["annindex", "--kind", "sq8", "--index-dir", idx,
+                   "--build", src])
+    capsys.readouterr()
+
+    def query(name, *kind):
+        out = str(tmp_path / name)
+        eodd_cli.main(["annindex", *kind, "--index-dir", idx, "--query",
+                       qsrc, "--k", "3", "--shortlist", "25", "--out", out])
+        stats = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        assert stats["kind"] == "sq8"
+        return {(r["query_id"], r["rank"]): r["neighbor_id"]
+                for r in spark.read.parquet(out).collect()}
+
+    assert query("plain") == query("sq8", "--kind", "sq8")
+
+    eodd_cli.main(["annindex", "--index-dir", idx, "--add", bsrc])
+    added = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert added["kind"] == "sq8"
+    assert added["index_vectors"] == corpus.count() + batch.count()
+    assert query("plain_added") == query("sq8_added", "--kind", "sq8")
+
+
 def test_cli_classify_lifecycle(spark, tmp_path, capsys):
     """classify CLI: --train persists a self-describing weights JSON;
     --score reproduces in-session scoring from the stored artifact;
