@@ -5,6 +5,10 @@ JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 
 Each query executes to completion through the `noop` DataSourceV2 sink so
 the full plan runs (a bare .count() would let Catalyst prune projections).
+Every timed block runs through :func:`sample`, which reads each run's
+record from `eodatadown_spark.plans.audit.recorded`; the sidecar
+(BENCH_extended_latest.json) keeps each entry's structure row next to
+its wall times.
 """
 
 from __future__ import annotations
@@ -25,16 +29,17 @@ from eodatadown_spark.session import get_spark  # noqa: E402
 #
 # NO-REGRESSION RULE: the plan structure of every HEADLINE and EXTENDED
 # entry (jobs, SQL actions, shuffle exchanges, shuffle bytes) is gated by
-# tests/test_plans.py against the committed BENCH_structure.json.  Wall
-# time is a single-draw median with its [min, max] spread: a warm median
-# delta counts as a regression only if the spreads of the two runs
-# (queries_warm_spread) do NOT overlap.  At sf0.1 the dimension
-# scans of the small-parquet join family (q10 and kin) land on ≤3 input
-# partitions (SCALING.md "3-partition CPU trap"), so their warm medians move
-# ±0.4 s with host scheduling noise while the plan (4 BHJ, 2 exchanges,
-# pushed filters — asserted in tests/test_plans.py::test_q10_dims_broadcast)
-# is already the wanted one; chasing the median inside the spread churns
-# plans for noise.
+# tests/test_plans.py against the committed BENCH_structure.json; each
+# bench run records the same rows at its own scale factor (`structure` in
+# the sidecar).  Wall time is a single-draw median with its [min, max]
+# spread: a warm median delta counts as a regression only if the spreads
+# of the two runs (queries_warm_spread) do NOT overlap.  At sf0.1 the
+# dimension scans of the small-parquet join family (q10 and kin) land on
+# ≤3 input partitions (SCALING.md "3-partition CPU trap"), so their warm
+# medians move ±0.4 s with host scheduling noise while the plan (4 BHJ,
+# 2 exchanges, pushed filters — asserted in
+# tests/test_plans.py::test_q10_dims_broadcast) is already the wanted one;
+# chasing the median inside the spread churns plans for noise.
 HEADLINE = [
     "q01_pricing_summary",
     "q02_date_range_page",
@@ -108,68 +113,6 @@ EXTENDED = [
 ]
 
 
-# Warm-variance suspects (VERDICT r12 item 1): the shuffle/window-heavy
-# queries whose warm medians read 1.5-6 s across same-code runs while the
-# light queries agreed within 10%.  These get 5 warm samples (vs 3) AND
-# per-sample executed-plan signatures so an AQE broadcast flip — if one
-# ever happens — is visible in the artifact instead of argued about.
-SUSPECT_WARM = {
-    "q23_cosine_topk",
-    "q24_minhash_neardup",
-    "q26_window_rollup",
-    "q29_sessionize",
-}
-
-
-def proc_stat_totals() -> tuple[int, int]:
-    """(busy_jiffies, total_jiffies) from the aggregate /proc/stat line —
-    host background load (cause (c) of the r12 warm bimodality) shows up
-    as a busy fraction well above this process's own share."""
-    try:
-        with open("/proc/stat") as fh:
-            parts = fh.readline().split()[1:]
-        vals = [int(x) for x in parts]
-        idle = vals[3] + (vals[4] if len(vals) > 4 else 0)
-        return sum(vals) - idle, sum(vals)
-    except OSError:
-        return 0, 0
-
-
-class SectionTelemetry:
-    """Per-section host/GC load record: wall sec, host busy fraction,
-    GC-time delta, loadavg at section end.  Written to the extended
-    sidecar; the final line carries only the overall busy fraction."""
-
-    def __init__(self, spark):
-        mf = spark._jvm.java.lang.management.ManagementFactory
-        self._gc_beans = mf.getGarbageCollectorMXBeans()
-        self.sections: dict[str, dict] = {}
-        self._t0 = self._busy0 = self._tot0 = self._gc0 = 0
-
-    def gc_ms(self) -> int:
-        """Driver-JVM GC time so far (in local[N] the executors share it)."""
-        return sum(
-            max(0, self._gc_beans.get(i).getCollectionTime())
-            for i in range(self._gc_beans.size())
-        )
-
-    def start(self) -> None:
-        self._busy0, self._tot0 = proc_stat_totals()
-        self._gc0 = self.gc_ms()
-        self._t0 = time.time()
-
-    def end(self, name: str) -> None:
-        busy1, tot1 = proc_stat_totals()
-        self.sections[name] = {
-            "wall_sec": round(time.time() - self._t0, 3),
-            "host_busy_frac": round(
-                (busy1 - self._busy0) / max(1, tot1 - self._tot0), 3
-            ),
-            "gc_delta_ms": self.gc_ms() - self._gc0,
-            "loadavg1": round(os.getloadavg()[0], 2),
-        }
-
-
 def run_once(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
@@ -194,6 +137,39 @@ def free_pinned(spark) -> int:
         # timed measurement — pay the cleanup here, between timings
         jrdd.unpersist(True)
     return len(jrdds)
+
+
+# the load-independent plan facts of one run record: the bench sidecar's
+# `structure` rows and the committed BENCH_structure.json share them
+STRUCTURE_FIELDS = (
+    "jobs", "sql_actions", "shuffle_exchanges", "shuffle_bytes",
+)
+
+
+def sample(spark, label: str, fn, n: int = 1, free: bool = True) -> dict:
+    """The bench's one sampling path: run ``fn()`` ``n`` times, each run
+    under :func:`recorded` and followed by :func:`free_pinned` unless
+    ``free`` is False (inside an incremental entry, whose state must keep
+    its blocks).  Returns the median ``wall_s``, the ``[min, max]``
+    ``spread``, the last run's ``structure`` row and ``plan``: the
+    distinct executed-plan node counts of the runs and whether they
+    differ (``plan_flipped``, an AQE flip), so a wall swing under one
+    signature is the host's, not the plan's."""
+    walls, sigs = [], set()
+    for _ in range(n):
+        with recorded(spark, label) as rec:
+            fn()
+        if free:
+            free_pinned(spark)
+        walls.append(rec["wall_s"])
+        sigs.add(",".join(f"{k}:{v}" for k, v in rec["nodes"].items()))
+    walls.sort()
+    return {
+        "wall_s": walls[len(walls) // 2],
+        "spread": [walls[0], walls[-1]],
+        "structure": {field: rec[field] for field in STRUCTURE_FIELDS},
+        "plan": {"plan_flipped": len(sigs) > 1, "distinct_sigs": sorted(sigs)},
+    }
 
 
 def e2e_pipeline(spark, sf_dir: str) -> tuple[float, list[dict]]:
@@ -294,96 +270,70 @@ def main() -> None:
     spark = get_spark("bench")
 
     queries = E.queries()
-    timings: dict[str, float] = {}
-    tele = SectionTelemetry(spark)
+
+    def query(name: str, at: str = sf_dir):
+        return lambda: run_once(queries[name](spark, at))
+
     # JVM/codegen warmup on the smallest table so q01 doesn't absorb startup
     run_once(queries["q27_top1_watermark"](spark, sf_dir))
 
-    # per-job fixed floor at local[N]: median of trivial noop jobs — reported
-    # so round-over-round per-query regressions aren't masked by scheduler
-    # overhead (~0.1-0.5 s/job that has nothing to do with the plans)
-    floor_samples = []
-    for _ in range(5):
-        t0 = time.time()
-        spark.range(1).write.format("noop").mode("overwrite").save()
-        floor_samples.append(time.time() - t0)
-    overhead = round(sorted(floor_samples)[len(floor_samples) // 2], 3)
+    # wall seconds per bench section, each timed from the end of the last
+    section_wall: dict[str, float] = {}
+    mark = time.perf_counter()
 
-    tele.start()
+    def end_section(name: str) -> None:
+        nonlocal mark
+        now = time.perf_counter()
+        section_wall[name] = round(now - mark, 3)
+        mark = now
+
+    # pins freed between measurements since r12 (see free_pinned):
+    # carrying a pinned query's blocks into the next measurement
+    # contaminated it (8x on the sf1 block, 3x on e2e); flagged in the
+    # payload as bench_methodology for round-over-round reads.  The cold
+    # pass gives each entry's structure row.
+    timings: dict[str, float] = {}
+    structure: dict[str, dict] = {}
     for name in HEADLINE:
-        t0 = time.time()
-        run_once(queries[name](spark, sf_dir))
-        timings[name] = round(time.time() - t0, 3)
-        # pins freed between measurements since r12 (see free_pinned):
-        # carrying a pinned query's blocks into the next measurement
-        # contaminated it (8x on the sf1 block, 3x on e2e); flagged in
-        # the payload as bench_methodology for round-over-round reads
-        free_pinned(spark)
-    tele.end("headline_cold")
-
+        cold = sample(spark, name, query(name))
+        timings[name] = cold["wall_s"]
+        structure[name] = cold["structure"]
+    end_section("headline_cold")
     total = round(sum(timings.values()), 3)
-    net = {k: round(max(0.0, v - overhead), 3) for k, v in timings.items()}
 
     # warm passes: same plans re-executed — codegen/compile cost is gone, so
     # this is the data-proportional steady-state number (the one that
     # extrapolates to cluster scale); the cold pass above stays the headline
-    # for round-over-round comparability.  Three samples per query (five for
-    # the SUSPECT_WARM set) from ONE draw, reported as median plus [min, max]
-    # spread.  Every sample runs under recorded(): for the suspects the
-    # executed (post-AQE) plan signature — the node counts over all of the
-    # sample's SQL executions — is kept, so an AQE flip (plan_flipped=true)
-    # is recorded evidence and an unflipped 2x swing indicts the host.  The
-    # shuffle exchanges of each query's last sample are the plan facts
-    # (plan_exchanges).  Structural regressions are gated by
+    # for round-over-round comparability.  Three samples per query from ONE
+    # draw, reported as median plus [min, max] spread, with the executed
+    # (post-AQE) plan signatures of the samples, so an AQE flip
+    # (plan_flipped=true) is recorded evidence and an unflipped 2x swing
+    # indicts the host.  Structural regressions are gated by
     # tests/test_plans.py against BENCH_structure.json, not by wall time.
     warm: dict[str, float] = {}
     warm_spread: dict[str, list[float]] = {}
-    warm_plan_sigs: dict[str, dict] = {}
-    plan_facts: dict[str, int] = {}
-    tele.start()
+    plan_sigs: dict[str, dict] = {}
     for name in HEADLINE:
-        samples = []
-        sigs = set()
-        for _ in range(5 if name in SUSPECT_WARM else 3):
-            with recorded(spark, name) as rec:
-                run_once(queries[name](spark, sf_dir))
-            samples.append(rec["wall_s"])
-            sigs.add(",".join(f"{k}:{v}" for k, v in rec["nodes"].items()))
-            free_pinned(spark)
-        samples.sort()
-        warm[name] = samples[len(samples) // 2]
-        warm_spread[name] = [samples[0], samples[-1]]
-        plan_facts[name] = rec["shuffle_exchanges"]
-        if name in SUSPECT_WARM:
-            warm_plan_sigs[name] = {
-                "plan_flipped": len(sigs) > 1,
-                "distinct_sigs": sorted(sigs),
-            }
-    tele.end("headline_warm")
-    aqe_flips = sum(1 for v in warm_plan_sigs.values() if v["plan_flipped"])
+        res = sample(spark, name, query(name), 3)
+        warm[name] = res["wall_s"]
+        warm_spread[name] = res["spread"]
+        plan_sigs[name] = res["plan"]
+    end_section("headline_warm")
 
     # extended (non-headline) section: round-4 operators timed warm-only.
     # Kept OUT of HEADLINE so the headline total stays round-over-round
     # comparable; these numbers track the new operators' own trajectory.
     extended: dict[str, float] = {}
     extended_spread: dict[str, list[float]] = {}
-    tele.start()
     for name in EXTENDED:
         run_once(queries[name](spark, sf_dir))  # warm-up pass
         free_pinned(spark)
-        samples = []
-        for _ in range(3):
-            t0 = time.time()
-            run_once(queries[name](spark, sf_dir))
-            samples.append(round(time.time() - t0, 3))
-            # each invocation of a pinned query leaves fresh
-            # localCheckpoint blocks behind; free them so the next sample
-            # (and later sections) aren't timed under their pressure
-            free_pinned(spark)
-        samples.sort()
-        extended[name] = samples[1]
-        extended_spread[name] = [samples[0], samples[-1]]
-    tele.end("extended")
+        res = sample(spark, name, query(name), 3)
+        extended[name] = res["wall_s"]
+        extended_spread[name] = res["spread"]
+        structure[name] = res["structure"]
+        plan_sigs[name] = res["plan"]
+    end_section("extended")
 
     # Stored-index build vs per-batch probe (VERDICT r8 item 3): the
     # EXTENDED timings above fuse index construction with the probe, so
@@ -400,7 +350,6 @@ def main() -> None:
     # reproducibility: one repeat always, a second only when the build is
     # cheap (<8 s) so the section cannot blow the bench's time budget.
     incr_split: dict[str, dict] = {}
-    tele.start()
     incr_phases = E.incremental_phases()
     # ONE untimed warmup build before the first timed entry (VERDICT r13
     # item 7): the very first build of a bench run pays JVM/JIT warmup
@@ -414,20 +363,21 @@ def main() -> None:
         next(iter(incr_phases.values()))[0](spark, sf_dir)
         free_pinned(spark)
     for name, (build, probe) in incr_phases.items():
-        t0 = time.time()
-        state = build(spark, sf_dir)
-        build_sec = round(time.time() - t0, 3)
-        build_samples = [build_sec]
-        n_repeats = 2 if build_sec < 8.0 else 1
-        for _ in range(n_repeats):
-            # discard the previous build's state and free its pinned
-            # blocks FIRST — repeats must not be timed under (or leave
-            # the probes under) a prior build's block-manager pressure
-            state = None
+        box: dict = {}
+
+        def build_once():
+            box["state"] = build(spark, sf_dir)
+
+        first = sample(spark, name, build_once, free=False)
+        build_samples = [first["wall_s"]]
+        for _ in range(2 if first["wall_s"] < 8.0 else 1):
+            # free the previous build's pinned blocks FIRST — repeats must
+            # not be timed under (or leave the probes under) a prior
+            # build's block-manager pressure
             free_pinned(spark)
-            t0 = time.time()
-            state = build(spark, sf_dir)
-            build_samples.append(round(time.time() - t0, 3))
+            build_samples.append(
+                sample(spark, name, build_once, free=False)["wall_s"])
+        state = box["state"]
         # TWO warm-up passes (VERDICT r11 item 2, root-caused): probes
         # like q150's are multi-ACTION plans (pins, counts, a driver
         # union-find collect) — the first post-build pass still pays
@@ -436,20 +386,22 @@ def main() -> None:
         # "spread" r11 flagged.
         run_once(probe(spark, sf_dir, state))
         run_once(probe(spark, sf_dir, state))
-        samples = []
-        for _ in range(3):
-            t0 = time.time()
-            run_once(probe(spark, sf_dir, state))
-            samples.append(round(time.time() - t0, 3))
-        samples.sort()
+        res = sample(
+            spark, name, lambda: run_once(probe(spark, sf_dir, state)), 3,
+            free=False,
+        )
         free_pinned(spark)  # entry done — its state blocks are dead
+        plan_sigs[f"{name}:probe"] = res["plan"]
         incr_split[name] = {
-            "build_sec": build_sec,
+            "build_sec": build_samples[0],
             "build_samples": build_samples,
-            "probe_sec": samples[1],
-            "probe_spread": [samples[0], samples[-1]],
+            "build_structure": first["structure"],
+            "probe_sec": res["wall_s"],
+            "probe_spread": res["spread"],
+            "probe_structure": res["structure"],
         }
-    tele.end("incremental_split")
+    end_section("incremental_split")
+    aqe_flips = sum(1 for v in plan_sigs.values() if v["plan_flipped"])
 
     # ANN retrieval quality at the bench scale factor: recall@10 vs exact
     # cosine for each approximate index (same configs the pytest floors
@@ -458,7 +410,6 @@ def main() -> None:
     import eodatadown_spark.operators.similarity as S
     from pyspark.sql import functions as F
 
-    tele.start()
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").localCheckpoint()
     qvecs = emb.where(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -506,8 +457,7 @@ def main() -> None:
             ann_exact,
         ), 3),
     }
-
-    tele.end("ann_recall")
+    end_section("ann_recall")
 
     # e2e is measured twice and the SECOND run is the headline: the first
     # pass pays cold page-cache/tempdir costs that swing 2-3x with host
@@ -515,25 +465,9 @@ def main() -> None:
     # r10 and r11 trees) — the steady-state number is the one that
     # compares round-over-round; the cold one is recorded alongside.
     free_pinned(spark)  # ann section's checkpoints are dead past here
-    tele.start()
     e2e_cold_sec, e2e_cold_phases = e2e_pipeline(spark, sf_dir)
     e2e_sec, e2e_phases = e2e_pipeline(spark, sf_dir)
-    tele.end("e2e")
-
-    # calibration anchors: two entries whose code is frozen, so their
-    # times move with the host, not the tree.  q10 (2-exchange broadcast
-    # join) tracks the scan/broadcast path, q24 (MinHash band shuffle) the
-    # shuffle path; both come from this run only.
-    cal = {
-        "anchor": "q10_revenue_by_nation",
-        "cold_sec": timings["q10_revenue_by_nation"],
-        "warm_sec": warm["q10_revenue_by_nation"],
-    }
-    cal2 = {
-        "anchor": "q24_minhash_neardup",
-        "cold_sec": timings["q24_minhash_neardup"],
-        "warm_sec": warm["q24_minhash_neardup"],
-    }
+    end_section("e2e")
 
     # sf1.0 headline (VERDICT r11 item 6): round-over-round SCALE tracking
     # inside the artifact, not just SCALING.md prose.  Five queries with
@@ -542,8 +476,6 @@ def main() -> None:
     # tools/gen_scale_data.py into .cache/sf1; ~2 min, then reused every
     # round).  Fail-safe: any error leaves the block null rather than
     # killing the bench.
-    sf1_block = None
-    tele.start()
     try:
         if os.environ.get("SPARK_GRAFT_SKIP_SF1"):
             raise RuntimeError("skipped: SPARK_GRAFT_SKIP_SF1 set")
@@ -578,40 +510,25 @@ def main() -> None:
         # enough that carrying them across queries contaminated the next
         # measurements 8x (measured: q24 warm 22 s with q23's blocks live
         # vs 2.6 s freed)
-        for name in sf1_queries:
-            t0 = time.time()
-            run_once(queries[name](spark, sf1_dir))
-            sf1_cold[name] = round(time.time() - t0, 3)
-            free_pinned(spark)
-        for name in sf1_queries:
-            t0 = time.time()
-            run_once(queries[name](spark, sf1_dir))
-            sf1_warm[name] = round(time.time() - t0, 3)
-            free_pinned(spark)
+        for times in (sf1_cold, sf1_warm):
+            for name in sf1_queries:
+                times[name] = sample(
+                    spark, name, query(name, sf1_dir))["wall_s"]
         sf1_block = {
             "queries_cold": sf1_cold,
             "queries_warm": sf1_warm,
             "total_warm": round(sum(sf1_warm.values()), 3),
-            # same calibration anchor as the sf0.1 block: q10 warm at sf1
-            # divided by the sf0.1 anchor isolates the data-scale exponent
-            # from host drift (both measured in THIS process)
-            "anchor_scale_ratio": round(
-                sf1_warm["q10_revenue_by_nation"]
-                / max(cal["warm_sec"], 1e-9), 2,
-            ),
         }
     except Exception as exc:  # noqa: BLE001 — never kill the bench for sf1
         sf1_block = {"error": str(exc)[:200]}
-    tele.end("sf1")
+    end_section("sf1")
 
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
     extended_payload = {
         "metric": "headline_queries_extended",
-        "queries_net": net,
-        "total_net": round(sum(net.values()), 3),
         "queries_warm_spread": warm_spread,
-        "warm_plan_signatures": warm_plan_sigs,
-        "plan_exchanges": plan_facts,
+        "warm_plan_signatures": plan_sigs,
+        "structure": structure,
         "queries_extended_warm": extended,
         "queries_extended_warm_spread": extended_spread,
         "queries_incremental_split": incr_split,
@@ -619,7 +536,7 @@ def main() -> None:
         "ann_recall": ann_recall,
         "sf1_headline": sf1_block,
         "e2e_phases": {"cold": e2e_cold_phases, "warm": e2e_phases},
-        "host_load_sections": tele.sections,
+        "section_wall_s": section_wall,
         "sf": sf_val,
     }
     # extended sections go FIRST (and to a sidecar file): the driver's
@@ -637,25 +554,20 @@ def main() -> None:
         pass
     # Final line (VERDICT r12 item 2: BENCH_r12 recorded "parsed": null
     # because this line outgrew the driver's 2000-char tail buffer).
-    # Budget: headline cold+warm per-query numbers, both calibration
-    # anchors, compact sf1 summary, methodology markers, host-load
-    # summary.  Everything bulky (ann_recall, incremental splits, spreads,
-    # plan signatures, sf1 per-query detail) lives in the sidecar above.
-    # A hard length guard drops optional keys rather than ever again
-    # emitting an unparseable official artifact.
-    overall_busy = tele.sections.get("headline_warm", {}).get("host_busy_frac")
+    # Budget: headline cold+warm per-query numbers, compact sf1 summary,
+    # methodology markers.  Everything bulky (ann_recall, incremental
+    # splits, spreads, structure rows, plan signatures, sf1 per-query
+    # detail) lives in the sidecar above.  A hard length guard drops
+    # optional keys rather than ever again emitting an unparseable
+    # official artifact.
     sf1_compact = sf1_block
-    if isinstance(sf1_block, dict) and "queries_warm" in sf1_block:
-        sf1_compact = {
-            "total_warm": sf1_block["total_warm"],
-            "anchor_scale_ratio": sf1_block["anchor_scale_ratio"],
-        }
+    if "total_warm" in sf1_block:
+        sf1_compact = {"total_warm": sf1_block["total_warm"]}
     final_payload = {
         "metric": "headline_queries_total",
         "value": total,
         "unit": "sec",
         "queries": timings,
-        "overhead_sec": overhead,
         "queries_warm": warm,
         "total_warm": round(sum(warm.values()), 3),
         "e2e_pipeline_sec": e2e_sec,
@@ -668,17 +580,13 @@ def main() -> None:
             "single_draw_structure_gated"
         ),
         "aqe_flips_detected": aqe_flips,
-        "host_busy_frac_warm": overall_busy,
-        "calibration": cal,
-        "calibration2": cal2,
         "sf1_headline": sf1_compact,
         "sf": sf_val,
     }
     # guard: the driver tail keeps 2000 chars — stay under 1900 with the
     # newline, shedding the least-essential keys first (all duplicated in
     # the sidecar or derivable from it)
-    for drop in ("sf1_headline", "e2e_pipeline_cold_sec", "calibration2",
-                 "queries_warm"):
+    for drop in ("sf1_headline", "e2e_pipeline_cold_sec", "queries_warm"):
         if len(json.dumps(final_payload)) <= 1900:
             break
         final_payload.pop(drop, None)

@@ -24,11 +24,6 @@ from pyspark.sql import functions as F
 
 from eodatadown_spark import queries as Q
 
-# Stage order matters for U1 parity: the reference unions plugin-analysis,
-# quicklook, tilecache, con2ard, download lists in that sequence with
-# `scn not in` dedup (eodatadownrun.py:809-845).
-STAGES = ("usr_analysis", "quicklook", "tilecache", "con2ard", "download")
-
 
 def scenes_need_processing(
     scenes: DataFrame,

@@ -119,7 +119,11 @@ class SensorBase:
             else:
                 default = F.lit(None).cast(field.dataType)
             out = out.withColumn(field.name, default)
-        return out.select(*[f.name for f in schema.fields])
+        # cast to the declared types: an index frame's own types (a long
+        # wrs_path) would otherwise be what the committed version stores
+        return out.select(
+            *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
+        )
 
     def dwnlds_archived(
         self,

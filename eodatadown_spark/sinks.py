@@ -243,8 +243,9 @@ def datacube_dataset_docs(scenes: DataFrame) -> DataFrame:
 def append_usage_log(
     catalog, sensor: str, description: str, flags: dict[str, bool] | None = None
 ) -> None:
-    """K5: append one audit row (ref eodatadownusagedb.py:86-114) — append-
-    mode write, no read-modify-write needed."""
+    """K5: append one audit row (ref eodatadownusagedb.py:86-114).  The
+    first row creates the table; later rows commit a new version through
+    :meth:`ParquetCatalog.append`, so a committed version never changes."""
     import datetime as dt
 
     from eodatadown_spark import schemas
@@ -262,9 +263,7 @@ def append_usage_log(
     for k, v in (flags or {}).items():
         row[k] = v
     df = spark.createDataFrame([row], schema=schemas.USAGE_LOG)
-    table_dir = os.path.join(catalog.root, "usage_log")
     if catalog.exists("usage_log"):
-        df.write.mode("append").parquet(catalog.data_path("usage_log"))
+        catalog.append("usage_log", df)
     else:
-        os.makedirs(table_dir, exist_ok=True)
         catalog.write(df, "usage_log", partition=False)

@@ -277,6 +277,36 @@ def cmd_dedupindex(args) -> None:
         params = json.load(fh)
     batch = spark.read.parquet(args.probe)
     family = params.get("family", "minhash")
+    if args.apply:
+        # shared replay-safe cores (streaming/incremental), which probe the
+        # batch themselves and return its stats: idempotent
+        # index/fingerprint appends first, clusters commit LAST — a crash
+        # between the catalog commits is repaired by re-running the batch
+        from eodatadown_spark.streaming.incremental import (
+            apply_neardup_batch,
+            apply_prefix_batch,
+            apply_simhash_batch,
+        )
+
+        if family == "simhash":
+            stats = apply_simhash_batch(
+                cat, batch, max_hamming=params["max_hamming"],
+                band_bits=params["band_bits"],
+            )
+        elif family == "prefix":
+            stats = apply_prefix_batch(
+                cat, batch, k=params["k"], threshold=params["threshold"]
+            )
+        else:
+            stats = apply_neardup_batch(
+                cat, batch, k=params["k"], num_perm=params["num_perm"],
+                bands=params["bands"], jaccard_threshold=params["threshold"],
+            )
+        stats["clusters"] = cat.read("clusters").where(
+            F.col("is_canonical")).count()
+        stats["applied"] = True
+        print(json.dumps(stats))
+        return
     if family == "simhash":
         pairs = D.simhash_neardup_against_index(
             batch, cat.read("simhash_index"),
@@ -296,35 +326,7 @@ def cmd_dedupindex(args) -> None:
             k=params["k"], num_perm=params["num_perm"],
             bands=params["bands"], jaccard_threshold=params["threshold"],
         ).localCheckpoint()
-    stats = {"batch_docs": batch.count(), "new_pairs": pairs.count()}
-    if args.apply:
-        # shared replay-safe cores (streaming/incremental): idempotent
-        # index/fingerprint appends first, clusters commit LAST — a crash
-        # between the catalog commits is repaired by re-running the batch
-        from eodatadown_spark.streaming.incremental import (
-            apply_neardup_batch,
-            apply_prefix_batch,
-            apply_simhash_batch,
-        )
-
-        if params.get("family", "minhash") == "simhash":
-            apply_simhash_batch(
-                cat, batch, max_hamming=params["max_hamming"],
-                band_bits=params["band_bits"],
-            )
-        elif params.get("family", "minhash") == "prefix":
-            apply_prefix_batch(
-                cat, batch, k=params["k"], threshold=params["threshold"]
-            )
-        else:
-            apply_neardup_batch(
-                cat, batch, k=params["k"], num_perm=params["num_perm"],
-                bands=params["bands"], jaccard_threshold=params["threshold"],
-            )
-        stats["clusters"] = cat.read("clusters").where(
-            F.col("is_canonical")).count()
-        stats["applied"] = True
-    print(json.dumps(stats))
+    print(json.dumps({"batch_docs": batch.count(), "new_pairs": pairs.count()}))
 
 
 def cmd_spanindex(args) -> None:

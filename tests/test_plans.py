@@ -444,7 +444,6 @@ STRUCTURE = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     "BENCH_structure.json",
 )
-STRUCTURE_FIELDS = ("jobs", "sql_actions", "shuffle_exchanges", "shuffle_bytes")
 
 
 def test_bench_structure_matches_committed(entry_spark):
@@ -465,7 +464,7 @@ def test_bench_structure_matches_committed(entry_spark):
         with audit.recorded(entry_spark, name) as rec:
             bench.run_once(E.queries()[name](entry_spark, SF))
         bench.free_pinned(entry_spark)
-        observed[name] = {field: rec[field] for field in STRUCTURE_FIELDS}
+        observed[name] = {field: rec[field] for field in bench.STRUCTURE_FIELDS}
     diffs = []
     for name, row in observed.items():
         for field, value in row.items():

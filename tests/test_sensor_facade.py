@@ -239,6 +239,23 @@ def test_sensor_check_from_start_dedups(spark, sensor):
     assert len(rows) == 1 and "20190601" in rows[0]["product_id"]
 
 
+def test_check_new_scns_commits_declared_types(spark, sensor):
+    """An index frame's own column types (a long wrs_path) are cast to the
+    declared schema before the ingest commits, so the stored version's
+    types are those of schemas.LANDSAT_SCENES."""
+    from eodatadown_spark import schemas
+
+    idx = _index(spark, [("A", "2019-01-05", "20190110", 10.0)])
+    assert idx.schema["wrs_path"].dataType.simpleString() == "bigint"
+    sensor.check_new_scns(idx)
+    stored = spark.read.parquet(
+        sensor.catalog.data_path("landsat_scenes")
+    ).drop("p_year")
+    assert stored.dtypes == [
+        (f.name, f.dataType.simpleString()) for f in schemas.LANDSAT_SCENES.fields
+    ]
+
+
 def test_sensor_dispatch_and_unknown(spark, tmp_path):
     cat = ParquetCatalog(spark, str(tmp_path))
     s1 = get_sensor_obj("Sentinel1ASF", cat)

@@ -224,6 +224,18 @@ def test_usage_log_append(spark, tmp_path):
     assert df.where(F.col("found_new_scns") == True).count() == 1  # noqa: E712
 
 
+def test_usage_log_append_keeps_committed_version(spark, tmp_path):
+    """A later audit row commits a new version: the first version still
+    reads back as it was committed, with its one row."""
+    from eodatadown_spark.catalog import ParquetCatalog
+
+    cat = ParquetCatalog(spark, str(tmp_path))
+    sinks.append_usage_log(cat, "LandsatGOOG", "first")
+    sinks.append_usage_log(cat, "LandsatGOOG", "second")
+    assert cat.read_version("usage_log", 0).count() == 1
+    assert cat.read("usage_log").count() == 2
+
+
 def test_events_ts_type_canary(spark):
     """Canary: the driver's nanos-parquet events.ts must read as
     TIMESTAMP_NTZ on this Spark build, and the NTZ→LTZ→double cast chain the
